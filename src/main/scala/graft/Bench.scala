@@ -391,6 +391,11 @@ object Bench {
       case None =>
         if (System.console() == null) Some(DefaultDeadlineSec) else None
     }
+  /** True when the implicit non-interactive default, not the env knob,
+    * set the deadline — written into every JSON line so budget-governed
+    * artifacts are told apart from unbounded ones. */
+  private lazy val deadlineDefault: Boolean =
+    deadlineSec.isDefined && !sys.env.contains("SPARK_GRAFT_BENCH_DEADLINE_SEC")
   /** Budget slice the shed decision keeps aside so the stability pass
     * (the load/spread/history remeasures — what rescued q209-style
     * poisoned medians every round it ran) survives under a deadline:
@@ -439,7 +444,7 @@ object Bench {
         p > 0 && r.med > HistRatio * p && r.med - p > HistMinExcessSec) =>
         "\"" + short(k) + "\""
     }.take(8).mkString("[", ",", "]")
-    val head = s"""{"metric":"total","value":${f3(total)},"unit":"sec","partial":true,"qn_done":${done.size},"qn":$qn,"suspect":$suspect,"sf":"$sfDir","queries":"""
+    val head = s"""{"metric":"total","value":${f3(total)},"unit":"sec","partial":true,"deadline_default":$deadlineDefault,"qn_done":${done.size},"qn":$qn,"suspect":$suspect,"sf":"$sfDir","queries":"""
     var budget = 1800 - head.length - 1
     val kept = scala.collection.mutable.ListBuffer.empty[String]
     done.sortBy(-_._2.med).foreach { case (k, r) =>
@@ -800,7 +805,7 @@ object Bench {
       case (n, r) if isolated(n) && r.spread >= 0 => r.spread }
     val spreadMax = if (isoSpreads.isEmpty) -1.0 else isoSpreads.max
     val loadSummary =
-      s""""loadmax":${f2(loadMax)},"iso_spreadmax":${f3(spreadMax)},"quiet":$quietBoxRegime,"quiet_waited_sec":$quietWaitedSec,"shed":$shedChildren,"remeasured":${remeasured.map(n => "\"" + short(n) + "\"").mkString("[", ",", "]")},"""
+      s""""loadmax":${f2(loadMax)},"iso_spreadmax":${f3(spreadMax)},"quiet":$quietBoxRegime,"quiet_waited_sec":$quietWaitedSec,"deadline_default":$deadlineDefault,"shed":$shedChildren,"remeasured":${remeasured.map(n => "\"" + short(n) + "\"").mkString("[", ",", "]")},"""
     def line(qs: String, extra: String): String =
       s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,$extra$loadSummary"reps":$reps,"iso":"$isoMode","inv":"$inv","sf":"$sfDir"}"""
     // FULL artifact — every median + total + inv — goes to a FILE the

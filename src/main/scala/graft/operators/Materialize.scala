@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Scoped materialization for intermediate relations read by more than one
   * downstream consumer — the repo's sanctioned persist pattern.
@@ -36,6 +37,16 @@ object Materialize {
     cached.count() // eager fill — concurrent consumers must not stampede
     try body(cached) finally cached.unpersist()
   }
+
+  /** Releases the blocks of one eager `localCheckpoint()` result by its
+    * handle, once nothing reads it any more. Only the caller's own blocks
+    * go — a sweep over `getPersistentRDDs` would also free relations
+    * other threads still read. */
+  def release(ckpt: DataFrame): Unit =
+    ckpt.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 
   /** Two-relation variant (nested scopes, released inner-first). */
   def withMaterialized2[A](df1: DataFrame, df2: DataFrame)(

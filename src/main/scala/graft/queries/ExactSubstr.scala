@@ -32,9 +32,10 @@ import graft.functions.Text
   * a 100-TB training-data pipeline cannot ship without.
   *
   * Scale shape: the rank build is [[SuffixArray.corpusRanks]]' radix
-  * seed + ONE doubling round for L=16 (seed packs 4-char prefixes map-
-  * side; the single round is one doc-keyed window + one range-
-  * partitioned global sort-rank with bounded driver traffic). Dup
+  * seed alone for L=16 — two 8-char base-128 packed longs per suffix,
+  * ranked by ONE range-partitioned global pair sort with bounded driver
+  * traffic, no doubling round (non-ASCII corpora take the code-point
+  * seed plus three doubling rounds). Dup
   * detection is one window over the rank groups (count + min-key —
   * group sizes are content-bounded, a hot boilerplate gram costs its
   * occurrence count, never a pair set). Span assembly is the q88

@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.operators.Materialize
 
 /** Suffix-array construction by prefix doubling (Manber & Myers,
   * SODA'90; distributed formulation after Flick & Aluru, SC'15) and the
@@ -165,260 +166,71 @@ object SuffixArray {
        |SELECT doc_id, pos, r AS rk FROM s$SaRounds
        |ORDER BY doc_id, pos""".stripMargin
 
-  final case class SfxG(pid: Int, doc_id: Long, pos: Long, pk: Long)
-
+  /** One row of the pair-rank kernel's range-sorted checkpoint; `pid` is
+    * the row's range partition. */
   final case class SfxP(pid: Int, doc_id: Long, pos: Long, a: Long, b: Long)
 
-  final case class SfxR(doc_id: Long, pos: Long, r: Long)
-
-  /** Driver-correction cap for [[denseFromHeads]]: above this many
-    * multi-member groups the conversion falls back to the
-    * bounded-driver-traffic global sort-rank ([[globalDenseRank]]). */
-  private val DenseCorrMaxGroups = 1L << 21
-
-  /** HEAD ranks → DENSE ranks without a global sort, when the final
-    * multi-member groups fit the driver: dense(x) = head(x) − Σ(m_g − 1)
-    * over groups g with head(g) < head(x) (each group of size m occupies
-    * m consecutive global row indices but only ONE dense value, so every
-    * earlier group overcounts head ranks by m − 1; singletons contribute
-    * nothing). The correction table is exactly the surviving active set
-    * grouped by rank — the duplicated-suffix values, tiny at the gate
-    * scale — sorted once on the driver and binary-searched in a single
-    * map pass over the standing relation. Falls back to
-    * [[globalDenseRank]] when the group count exceeds
-    * [[DenseCorrMaxGroups]] (driver-residency cap; the sort path's
-    * driver traffic is one row per partition regardless of data). */
-  private def denseFromHeads(s: SparkSession, full: DataFrame,
-                             groups: DataFrame): DataFrame = {
-    import s.implicits._
-    val nGroups = groups.count()
-    if (nGroups > DenseCorrMaxGroups) {
-      val (dense, _) = globalDenseRank(s,
-        full.select(col("doc_id"), col("pos"), col("r").as("pk")))
-      dense.withColumnRenamed("nr", "r")
-    } else {
-      val gs = groups.select(col("r"), col("m"))
-        .as[(Long, Long)].collect().sortBy(_._1)
-      val heads = gs.map(_._1)
-      val cum = new Array[Long](gs.length)
-      var acc = 0L
-      var i = 0
-      while (i < gs.length) {
-        acc += gs(i)._2 - 1L
-        cum(i) = acc
-        i += 1
-      }
-      val bHeads = s.sparkContext.broadcast(heads)
-      val bCum = s.sparkContext.broadcast(cum)
-      full.select(col("doc_id"), col("pos"), col("r")).as[SfxR]
-        .mapPartitions { it =>
-          val hs = bHeads.value
-          val cs = bCum.value
-          it.map { x =>
-            // largest index with head < r (strict): every group AT r is
-            // x's own group and must not correct x
-            var lo = 0
-            var hi = hs.length - 1
-            var idx = -1
-            while (lo <= hi) {
-              val mid = (lo + hi) >>> 1
-              if (hs(mid) < x.r) { idx = mid; lo = mid + 1 }
-              else hi = mid - 1
-            }
-            (x.doc_id, x.pos, if (idx < 0) x.r else x.r - cs(idx))
-          }
-        }.toDF("doc_id", "pos", "r")
-    }
-  }
-
-  /** Distributed GLOBAL dense rank of the packed pair column `pk` — the
-    * piece the corpus-level suffix array needs and a per-doc window
-    * cannot give: `repartitionByRange` on pk (equal keys land in one
-    * partition by construction), sort within partitions, then a bounded
-    * per-partition distinct count (32 rows to the driver) turns into
-    * offsets and a single ordered map pass assigns offset + local dense
-    * index. No global single-partition window anywhere — this is how a
-    * 1000-executor sort-rank runs. The assigned ranks are independent
-    * of where the sampled range boundaries fall, so the result is
-    * deterministic even though the partitioner samples. Returns (ranked
-    * relation, total distinct pair count) — the count rides along free
-    * from the offsets pass, so the caller's fixed-point check costs no
-    * extra job. */
-  private def globalDenseRank(s: SparkSession,
-                              df: DataFrame): (DataFrame, Long) = {
-    import s.implicits._
-    val dbg = sys.env.contains("SPARK_GRAFT_SA_DEBUG")
-    var t0 = System.nanoTime()
-    def lap(tag: String): Unit = if (dbg) {
-      System.err.println(
-        f"SA-PROBE   gdr.$tag ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      t0 = System.nanoTime()
-    }
-    val n = s.sparkContext.defaultParallelism
-    // repartitionByRange runs a SAMPLING job before the shuffle — without
-    // this barrier the upstream window-lead computes twice per round
-    val dfM = df.localCheckpoint()
-    lap("window+pack checkpoint")
-    val sorted = dfM.repartitionByRange(n, col("pk"))
-      .sortWithinPartitions(col("pk"))
-      .select(spark_partition_id().as("pid"), col("doc_id"), col("pos"),
-        col("pk"))
-      .as[SfxG]
-      .localCheckpoint()
-    lap("range-sort checkpoint")
-    // per-partition distinct-key counts: one sequential scan of the
-    // sorted checkpoint — no distinct shuffle
-    val counts = sorted.mapPartitions { it =>
-      var pid = -1
-      var c = 0L
-      var pr = 0L
-      it.foreach { x =>
-        if (pid < 0) pid = x.pid
-        if (c == 0L || x.pk != pr) { c += 1; pr = x.pk }
-      }
-      if (pid < 0) Iterator.empty else Iterator((pid, c))
-    }.collect().toMap // bounded: one row per partition
-    lap("counts collect")
-    val offsets: Map[Int, Long] = counts.keys.map { p =>
-      p -> counts.filter(_._1 < p).values.sum
-    }.toMap
-    val ranked = sorted.mapPartitions { it =>
-      var local = 0L
-      var off = 0L
-      var pr = 0L; var first = true
-      it.map { x =>
-        if (first) { off = offsets.getOrElse(x.pid, 0L); first = false }
-        if (local == 0L || x.pk != pr) { local += 1; pr = x.pk }
-        (x.doc_id, x.pos, off + local)
-      }
-    }
-    (ranked.toDF("doc_id", "pos", "nr"), counts.values.sum)
-  }
-
-  /** Distributed GLOBAL HEAD ranks + group sizes of the pair (a, b): the
-    * head rank of a row is the 1-based GLOBAL ROW INDEX of its equal-pair
-    * group's first row in (a, b) order — NOT the dense rank. Head ranks
-    * are what make singleton FREEZING sound (round-18, the r17 "does not
-    * compose with global dense-rank renumbering" objection resolved): a
-    * doubling round splits a group of size m into subgroups that renumber
-    * WITHIN the group's index interval [r, r+m−1], so every other
-    * suffix's rank — and in particular every singleton's — is final the
-    * moment its group reaches size 1. Head ranks are order-isomorphic to
-    * dense ranks level by level (both monotone relabelings of the same
-    * pair order), so rank EQUALITY and rank ORDER — all any consumer or
-    * doubling round uses — are identical; [[corpusRanks]] converts to
-    * dense ranks once at the very end (total callers only).
+  /** The pair-rank kernel: the GLOBAL dense rank of (a, b) over a
+    * (doc_id, pos, a, b) relation, plus the distinct-pair count — the
+    * piece a corpus-level suffix array needs and a per-doc window cannot
+    * give.
     *
-    * Structure: range-partition on (a, b) (equal pairs land in one
-    * partition by construction), sort within partitions, per-partition
-    * ROW counts collected as offsets (head rank is a position in the
-    * global row order, so offsets are partition SIZES — no distinct
-    * scan), then one ordered pass assigns rank = group-head global index
-    * + 1 and cnt = group size. One group buffers in memory at a time —
-    * group sizes are content-bounded (a gram group costs its occurrence
-    * count), the same single-partition bound the range sort already
-    * imposes on equal keys. Assigned ranks are independent of where the
-    * sampled range boundaries fall. Returns (doc_id, pos, r, cnt). */
-  private def globalHeadRank(s: SparkSession, df: DataFrame): DataFrame = {
+    *  1. A barrier checkpoint: `repartitionByRange` runs a sampling job
+    *     before its shuffle, and without the barrier the upstream (the
+    *     seed's explode+pack or a round's window lead) computes twice.
+    *  2. `repartitionByRange` + `sortWithinPartitions` on (a, b), then a
+    *     checkpoint. Equal pairs land in one partition by construction.
+    *  3. Per-partition distinct counts (one row per partition to the
+    *     driver) turn into offsets.
+    *  4. One ordered map pass assigns offset + local dense index.
+    *
+    * No single-partition window anywhere, and the ranks do not depend on
+    * where the sampled range bounds fall. The barrier is released as soon
+    * as the sorted checkpoint exists. Returns (doc_id, pos, r) — lazy
+    * over the sorted checkpoint — the distinct count, and that
+    * checkpoint's handle, which the caller releases once the ranks are
+    * consumed. */
+  private def pairRank(s: SparkSession,
+                       df: DataFrame): (DataFrame, Long, DataFrame) = {
     import s.implicits._
-    val dbg = sys.env.contains("SPARK_GRAFT_SA_DEBUG")
-    var t0 = System.nanoTime()
-    def lap(tag: String): Unit = if (dbg) {
-      System.err.println(
-        f"SA-PROBE   ghr.$tag ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      t0 = System.nanoTime()
-    }
-    val n = s.sparkContext.defaultParallelism
-    // repartitionByRange runs a SAMPLING job before the shuffle — the
-    // barrier keeps the pack map from computing twice (measured: the
-    // barrier-free variant re-ran the explode+substring map in both the
-    // sampling pass and the sort, +1.3 s at sf0.1)
-    val dfM = df.localCheckpoint()
-    lap("pair checkpoint")
-    val sorted = dfM.repartitionByRange(n, col("a"), col("b"))
+    val barrier = df.localCheckpoint()
+    val sorted = barrier
+      .repartitionByRange(s.sparkContext.defaultParallelism,
+        col("a"), col("b"))
       .sortWithinPartitions(col("a"), col("b"))
       .select(spark_partition_id().as("pid"), col("doc_id"), col("pos"),
         col("a"), col("b"))
-      .as[SfxP]
       .localCheckpoint()
-    lap("range-sort checkpoint")
-    val sizes = sorted.mapPartitions { it =>
+    Materialize.release(barrier)
+    val rows = sorted.as[SfxP]
+    val counts = rows.mapPartitions { it =>
       var pid = -1
       var c = 0L
-      it.foreach { x => if (pid < 0) pid = x.pid; c += 1 }
-      if (pid < 0) Iterator.empty else Iterator((pid, c))
-    }.collect().toMap // bounded: one row per partition
-    lap("sizes collect")
-    val offsets: Map[Int, Long] = sizes.keys.map { p =>
-      p -> sizes.filter(_._1 < p).values.sum
-    }.toMap
-    val ranked = sorted.mapPartitions { it =>
-      val buf = it.buffered
-      new Iterator[(Long, Long, Long, Long)] {
-        private var off = -1L // global row index of the next unread row
-        private var pending: Iterator[(Long, Long, Long, Long)] =
-          Iterator.empty
-        def hasNext: Boolean = pending.hasNext || buf.hasNext
-        def next(): (Long, Long, Long, Long) = {
-          if (!pending.hasNext) {
-            val h = buf.head
-            if (off < 0) off = offsets.getOrElse(h.pid, 0L)
-            val (a0, b0) = (h.a, h.b)
-            val g = scala.collection.mutable.ArrayBuffer.empty[SfxP]
-            while (buf.hasNext && buf.head.a == a0 && buf.head.b == b0)
-              g += buf.next()
-            val r = off + 1L
-            val m = g.length.toLong
-            off += m
-            pending = g.iterator.map(x => (x.doc_id, x.pos, r, m))
-          }
-          pending.next()
-        }
+      var pa = 0L; var pb = 0L
+      it.foreach { x =>
+        pid = x.pid
+        if (c == 0L || x.a != pa || x.b != pb) { c += 1; pa = x.a; pb = x.b }
       }
-    }
-    ranked.toDF("doc_id", "pos", "r", "cnt")
+      if (c == 0L) Iterator.empty else Iterator((pid, c))
+    }.collect().toMap
+    val offsets: Map[Int, Long] = counts.keys.map { p =>
+      p -> counts.filter(_._1 < p).values.sum
+    }.toMap
+    val ranked = rows.mapPartitions { it =>
+      var off = -1L
+      var local = 0L
+      var pa = 0L; var pb = 0L
+      it.map { x =>
+        if (off < 0) off = offsets(x.pid)
+        if (local == 0L || x.a != pa || x.b != pb) {
+          local += 1; pa = x.a; pb = x.b
+        }
+        (x.doc_id, x.pos, off + local)
+      }
+    }.toDF("doc_id", "pos", "r")
+    (ranked, counts.values.sum, sorted)
   }
 
-  /** Corpus-level rank levels by radix-seeded prefix doubling over an
-    * arbitrary (doc_id, text) relation: returns (doc_id, pos, r) where
-    * equal r ⟺ equal 2^`uptoLevel`-prefix (corpus-wide, end-padding
-    * distinct) and r is order-correct in lexicographic prefix order.
-    * With `total = true` the round count is DERIVED from the measured
-    * max document length (ceil-log2), equal final ranks mean equal whole
-    * suffixes at ANY document length, and r is additionally the global
-    * DENSE rank (the oracle's g[[SaRounds]] relation) — there is no
-    * capacity cap. For `total = false` callers r is the group HEAD rank
-    * (order-isomorphic to the dense rank; every consumer uses only rank
-    * equality/order, which the two agree on) — skipping the dense
-    * renumbering saves a full global sort.
-    *
-    * Round-18 structure (the r17 "rounds are balanced, leave q209
-    * alone" rejection re-measured and overturned — see
-    * OPTIMIZATION_r18.md):
-    *
-    *  - 16-CHAR SEED: for pure-ASCII corpora the initial ranking pairs
-    *    TWO 8-char base-128 packed longs — one global pair sort yields
-    *    level-4 head ranks map-side, replacing the 4-char seed plus two
-    *    full-relation doubling rounds. Non-ASCII corpora pair raw code
-    *    points (level 1), never a refusal.
-    *  - FROZEN DOUBLING: [[globalHeadRank]] head-rank semantics make a
-    *    singleton's rank FINAL, so each round processes only the ACTIVE
-    *    suffixes (groups of size ≥ 2 — the dedupable mass, which decays
-    *    fast), looks the 2^k neighbor's rank up by a shuffled-hash join
-    *    that STREAMS the standing full relation in place (hash(doc_id)
-    *    partitioning established once and preserved through the
-    *    checkpoints — zero full-relation Exchange or sort per round,
-    *    where the r12–r17 shape paid one doc-keyed window sort plus one
-    *    global range sort of the FULL relation every round), and
-    *    renumbers GROUP-LOCALLY: a group splitting by (r, r2) assigns
-    *    subgroup head ranks r + |{members with smaller r2}| — two
-    *    windows sharing one active-sized hash(r) exchange, no global
-    *    sort.
-    *  - ONE final dense conversion (total callers): the existing
-    *    single-column [[globalDenseRank]] over the final head ranks.
-    *
-    * The per-round fixed point is unchanged in meaning: a round that
-    * splits no group leaves every later round the identity map. */
   /** Which seed the LAST [[corpusRanks]] call chose: Some(true) = the
     * packed base-128 radix seed (pure-ASCII corpus), Some(false) = the
     * code-point fallback (non-ASCII input — more doubling rounds, never
@@ -426,6 +238,32 @@ object SuffixArray {
     * seed actually ran on non-ASCII fixtures. */
   @volatile private[graft] var lastSeedOk: Option[Boolean] = None
 
+  /** Corpus-level rank levels by prefix doubling over an arbitrary
+    * (doc_id, text) relation: returns (doc_id, pos, r) where r is the
+    * global DENSE rank of the suffix's 2^L-char prefix (corpus-wide,
+    * end padding sorting first), L = `uptoLevel`. With `total = true`, L
+    * is derived from the measured max document length (ceil-log2), so r
+    * is the dense rank of the whole suffix at any document length — the
+    * oracle's g[[SaRounds]] relation. There is no capacity cap.
+    *
+    * Every level is one call of the [[pairRank]] kernel:
+    *
+    *  - SEED: for a pure-ASCII corpus (codes in [1, 127]; 0 is the end
+    *    padding) the pair is two base-128 packed longs of up to 8 chars
+    *    each, so the seed reaches level 4 (16 chars) directly. Otherwise
+    *    the pair is two code points (level 1). The seed never exceeds the
+    *    target level.
+    *  - ROUND: level k → k+1 ranks (r, lead(r, 2^k) within the doc, 0
+    *    beyond its end). Ranks are ≥ 1, so the padding sorts first.
+    *  - STOP at the target level, or as soon as a round leaves the
+    *    distinct count unchanged: no group split, so every later round
+    *    is the identity. Non-total callers land exactly on their level.
+    *
+    * Block ownership: each round releases the previous round's sorted
+    * checkpoint once its own barrier has consumed it; the result is
+    * checkpointed before return and the last round's blocks released,
+    * so the result's checkpoint is the only block the call leaves
+    * behind. No `persist()`, no session-conf writes. */
   private[graft] def corpusRanks(s: SparkSession, docs0: DataFrame,
                                  uptoLevel: Int,
                                  total: Boolean = false): DataFrame = {
@@ -445,24 +283,18 @@ object SuffixArray {
     if (st.isNullAt(0)) // empty corpus: zero suffix rows, zero rounds
       return docs.select(col("doc_id"), lit(0L).as("pos"), lit(0L).as("r"))
     val maxLen = st.getInt(0)
-    val maxChar = st.getInt(1)
-    val minChar = st.getInt(2)
-    // the radix seed needs codes in [1, 127] (0 is the end-padding
-    // sentinel); anything else falls back to the code-point pair seed
-    val seedOk = minChar >= 1 && maxChar < 128
+    val seedOk = st.getInt(2) >= 1 && st.getInt(1) < 128
     lastSeedOk = Some(seedOk) // spec probe: which seed path ran
     // target level: equal ranks at level L ⟺ equal 2^L-prefixes
     val lvl =
       if (total) math.max(1, ceilLog2(maxLen.toLong))
       else math.max(1, uptoLevel)
-    // seed PAIR level j: the initial global pair sort ranks level j+1.
-    // ASCII packs w = 2^j ≤ 8 chars per long (7 bits/char, j ≤ 3);
-    // non-ASCII pairs single code points (j = 0). Never exceed the
-    // target level — a caller asking for level 2 must not get level-4
-    // equality classes.
+    // seed PAIR level j: the seed ranks level j+1. ASCII packs w = 2^j ≤ 8
+    // chars per long (7 bits/char, j ≤ 3); non-ASCII pairs single code
+    // points (j = 0)
     val j = if (seedOk) math.min(3, lvl - 1) else 0
     val w = 1 << j
-    def packAt(off: Int): org.apache.spark.sql.Column =
+    def packAt(off: Int): Column =
       (0 until w).map { i =>
         ascii(expr(s"substring(text, CAST(pos + ${off + i + 1} AS INT), 1)"))
           .cast("long") * lit(1L << (7 * (w - 1 - i)))
@@ -475,197 +307,44 @@ object SuffixArray {
         expr("CASE WHEN pos + 1 < length(text) THEN " +
           "ascii(substring(text, CAST(pos + 2 AS INT), 1)) + 1 " +
           "ELSE 0 END").cast("long"))
-    val dbg = sys.env.contains("SPARK_GRAFT_SA_DEBUG")
-    var t0 = System.nanoTime()
-    def lap(tag: String): Unit = if (dbg) {
-      System.err.println(f"SA-PROBE $tag ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      t0 = System.nanoTime()
-    }
     val pairs = docs
       .select(col("doc_id"),
         explode(sequence(lit(0L), length(col("text")).cast("long") - 1L))
           .as("pos"),
         col("text"))
       .select(col("doc_id"), col("pos"), aCol.as("a"), bCol.as("b"))
-    val ranked0 = globalHeadRank(s, pairs)
-    lap(s"initial rank (seedOk=$seedOk level=${j + 1} lvl=$lvl)")
-    if (lvl <= j + 1) {
-      // the initial ranking already reaches the target level (the
-      // uptoLevel = 4 ExactSubstr callers with the 16-char seed): no
-      // rounds, no doc-clustered base — one global pair sort IS the
-      // whole rank build
-      val out = ranked0.select(col("doc_id"), col("pos"), col("r"))
-      return if (!total) out
-      else {
-        val dense = denseFromHeads(s, out,
-          ranked0.filter(col("cnt") >= 2)
-            .groupBy(col("r")).agg(count(lit(1)).as("m")))
-        lap("dense conversion")
-        dense
-      }
-    }
-    val n = s.sparkContext.defaultParallelism
-    // the standing BASE relation: level-(j+1) head ranks, hash(doc_id)-
-    // clustered ONCE and never rewritten — later rounds' rank changes
-    // live in a small PATCH relation (latest rank per changed position),
-    // so the per-round storage work is active-sized, never O(corpus).
-    // A full-relation rewrite per round was measured at a ~1 s/round
-    // floor at sf0.1 regardless of how few ranks changed.
-    //
-    // persist(), NOT localCheckpoint: a local checkpoint erases the
-    // plan's partitioning (LogicalRDD reports UnknownPartitioning —
-    // measured on this Spark), and the whole point of clustering the
-    // base is that every round's lookup join streams it IN PLACE. The
-    // persist is scoped: [[corpusRanks]]' callers (bench/Verify) retire
-    // blocks between runs, and the base never outlives the query's
-    // lineage. Subset-key co-partitioning (hash(doc_id) serving a
-    // (doc_id, pos) join) additionally needs
-    // spark.sql.requireAllClusterKeysForCoPartition=false — scoped
-    // save/set/restore around the rounds, the q214/q216 conf-scoping
-    // precedent; it unlocks a planner capability at ANY scale, it is
-    // not a local-mode tune.
-    val fullBase = ranked0.select(col("doc_id"), col("pos"), col("r"))
-      .repartition(n, col("doc_id")).persist()
-    fullBase.count()
-    lap("base persist")
-    // current ranks = base overridden by the patch (stream base, build
-    // patch — base keeps its clustering through the join)
-    def currentRanks(patch: Option[DataFrame]): DataFrame = patch match {
-      case None => fullBase
-      case Some(p) =>
-        fullBase.join(p.hint("shuffle_hash"), Seq("doc_id", "pos"), "left")
-          .select(col("doc_id"), col("pos"),
-            coalesce(col("__pr"), col("r")).as("r"))
-    }
-    var patch: Option[DataFrame] = None
-    // the active set starts as a cheap view over the initial ranking's
-    // sorted checkpoint; each round's is a view over that round's
-    // checkpoint
-    var active = ranked0.filter(col("cnt") >= 2)
-      .select(col("doc_id"), col("pos"), col("r"))
-    // matched-prefix length the current ranks certify; the target is the
-    // first power of two ≥ maxLen (total) or 2^uptoLevel
-    var P = 1L << (j + 1)
-    val targetP = 1L << lvl
+    var (ranked, distinct, sorted) = pairRank(s, pairs)
+    var level = j + 1
     var fixed = false
-    var activeCnt = -1L // unknown until the first round's control read
-    val coPartKey = "spark.sql.requireAllClusterKeysForCoPartition"
-    val savedCoPart = s.conf.getOption(coPartKey)
-    s.conf.set(coPartKey, "false")
-    try {
-    while (P < targetP && !fixed && activeCnt != 0L) {
-      // QUADRUPLING round (r18): ranks certifying P chars + lookups at
-      // pos+P, pos+2P, pos+3P certify 4P — halving the round count a
-      // doubling walk needs (each lookup stride ≤ P keeps the standard
-      // prefix-doubling composition argument intact). Non-total callers
-      // must land EXACTLY on the target level (over-refining would
-      // change the equality classes consumers group by), so the last
-      // round shrinks its stride: m = min(4, target/P) ∈ {2, 4}.
-      val m = math.min(4L, targetP / P)
-      // the neighbors' CURRENT ranks (frozen ranks are final; active
-      // ones come off the patch) — build sides are the patch and the
-      // active set, the base only streams, and the pivot back to one
-      // row per active suffix needs no exchange (hash(doc_id) already
-      // satisfies the grouping). Beyond-end positions match nothing →
-      // rank 0, below every real head rank (≥ 1), the same order the
-      // −1 sentinel gave the chain.
-      val cand = currentRanks(patch)
-        .select(col("doc_id"), col("pos"), col("r").as("__r2"))
-        .withColumn("__off", explode(array((1L until m).map(lit): _*)))
-        .select(col("doc_id"), (col("pos") - col("__off") * P).as("pos"),
-          col("__off"), col("__r2"))
-      def pivotAt(i: Long): org.apache.spark.sql.Column =
-        coalesce(max(when(col("__off") === i, col("__r2"))), lit(0L))
-      val piv = active.hint("shuffle_hash")
-        .join(cand, Seq("doc_id", "pos"), "left")
-        .groupBy(col("doc_id"), col("pos"), col("r"))
-        .agg(pivotAt(1L).as("__ra"), pivotAt(2L).as("__rb"),
-          pivotAt(3L).as("__rc"))
-      val ord = Seq(col("__ra"), col("__rb"), col("__rc"))
-      val wOrd = Window.partitionBy(col("r")).orderBy(ord: _*)
-      val wEq = Window.partitionBy(col("r") +: ord: _*)
-      // group-local head-rank renumber: r + |{smaller lookup tuple in
-      // the group}| = rank() − 1 (min-rank ties). rank() is 32-bit —
-      // exact while no single rank group exceeds 2^31 members, the same
-      // hot-gram occupancy bound the range sort's equal-keys-in-one-
-      // partition property already imposes.
-      val stepped0 = piv
-        .withColumn("__lt", rank().over(wOrd).cast("long") - 1L)
-        .withColumn("__cnt", count(lit(1)).over(wEq))
-        .select(col("doc_id"), col("pos"),
-          (col("r") + col("__lt")).as("r"),
-          col("__cnt"), (col("__lt") > 0L).as("__chg"))
-      if (sys.env.contains("SPARK_GRAFT_SA_PLAN"))
-        System.err.println(s"SA-PLAN round P=$P:\n" +
-          stepped0.queryExecution.executedPlan.toString.linesIterator
-            .filter(l => l.contains("Exchange") || l.contains("Join") ||
-              l.contains("Window") || l.contains("Scan") ||
-              l.contains("Aggregate"))
-            .map(_.trim.take(140)).mkString("\n"))
-      val stepped = stepped0.localCheckpoint()
-      lap(s"  round P=$P stepped-ckpt")
-      // one bounded action reads both loop controls off the checkpoint
-      val ctl = stepped.agg(
-        sum(when(col("__chg"), 1L).otherwise(0L)),
-        sum(when(col("__cnt") >= 2, 1L).otherwise(0L))).collect()(0)
-      lap(s"  round P=$P ctl")
-      val changed = if (ctl.isNullAt(0)) 0L else ctl.getLong(0)
-      activeCnt = if (ctl.isNullAt(1)) 0L else ctl.getLong(1)
-      if (changed == 0L) fixed = true
-      else {
-        // latest-wins fold of this round's changed ranks into the patch
-        // (all patch-sized; the base never rewrites). Checkpointed: a
-        // lazy chain re-evaluated the whole anti-join stack inside
-        // every later round's lookup and measured WORSE than the
-        // ~0.1-0.4 s/round materialization it saved.
-        val upd = stepped.filter(col("__chg"))
-          .select(col("doc_id"), col("pos"), col("r").as("__pr"))
-        patch = Some((patch match {
-          case None => upd
-          case Some(p) => upd.unionByName(
-            p.join(upd.select(col("doc_id"), col("pos")),
-              Seq("doc_id", "pos"), "left_anti"))
-        }).localCheckpoint())
-        lap(s"  round P=$P patch-ckpt")
-        active = stepped.filter(col("__cnt") >= 2)
-          .select(col("doc_id"), col("pos"), col("r"))
-      }
-      lap(s"round P=$P m=$m active=$activeCnt changed=$changed")
-      P *= m
+    val wLead = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
+    while (level < lvl && !fixed) {
+      val (nRanked, nDistinct, nSorted) = pairRank(s,
+        ranked.select(col("doc_id"), col("pos"), col("r").as("a"),
+          coalesce(lead(col("r"), 1 << level).over(wLead), lit(0L)).as("b")))
+      Materialize.release(sorted)
+      fixed = nDistinct == distinct
+      ranked = nRanked; distinct = nDistinct; sorted = nSorted
+      level += 1
     }
-    if (!total) currentRanks(patch)
-    else {
-      // head → dense via the driver-corrected map pass (the surviving
-      // multi-member groups ARE the active set at exit)
-      val dense = denseFromHeads(s, currentRanks(patch),
-        active.groupBy(col("r")).agg(count(lit(1)).as("m")))
-      lap("dense conversion")
-      dense
-    }
-    } finally savedCoPart match {
-      case Some(v) => s.conf.set(coPartKey, v)
-      case None => s.conf.unset(coPartKey)
-    }
+    val out = ranked.localCheckpoint()
+    Materialize.release(sorted)
+    out
   }
 
-  /** q209 — CORPUS-LEVEL suffix ranks: the same doubling rounds as
-    * q206 but ranked across the whole corpus (the index shape
-    * ExactSubstr dedup actually builds — cross-document repeats sort
-    * adjacent). Identical string suffixes from different documents keep
-    * equal ranks forever (dense rank, semantically correct); rounds
-    * stop at the exact fixed point — when a round splits no rank group,
-    * every later round is the identity in both engines, so the fixed
+  /** q209 — CORPUS-LEVEL suffix ranks: the suffix order of q206 taken
+    * across the whole corpus (the index shape ExactSubstr dedup builds —
+    * cross-document repeats sort adjacent). Identical suffixes from
+    * different documents keep equal ranks (dense rank). The engine stops
+    * at the exact fixed point — once a round splits no rank group, every
+    * later round is the identity in both engines — so the fixed
     * [[SaRounds]]-round oracle agrees.
     *
-    * Scale shape: per round, one doc-keyed window (the 2^k neighbor
-    * rank) packed into one long + one range-partitioned global
-    * sort-rank ([[globalDenseRank]] — bounded driver traffic, no
-    * single-partition window). The radix seed replaces the first
-    * [[SeedLevel]] rounds with a map-side packed prefix, so the round
-    * count (and with it the checkpoint-storage term the round-11 sf1
-    * probe flagged) drops from 10 to ≤ 8, each round ~25% slimmer.
-    * This is the 100-TB path the per-doc q206 scaladoc names: a
-    * corpus-level SA over N documents is log(maxlen) range sorts. */
+    * Scale shape: [[corpusRanks]] — a radix seed that reaches level 4
+    * map-side on ASCII corpora, then one doc-keyed window (the 2^k
+    * neighbor's rank) and one range-partitioned global pair sort
+    * ([[pairRank]]) per doubling round. This is the 100-TB path the
+    * per-doc q206 scaladoc names: a corpus-level SA over N documents is
+    * log(maxlen) range sorts with bounded driver traffic. */
   def q209CorpusSuffixRank(s: SparkSession, dir: String): DataFrame =
     corpusRanks(s, Tables.documents(s, dir), SaRounds, total = true)
       .select(col("doc_id"), col("pos"), col("r").as("rk"))

@@ -147,8 +147,15 @@ object StreamExactSubstr {
     * only uncommitted batches). Compaction's overwrite is the one
     * non-idempotent window; production schedules it as its own job
     * between batches (the merged relation is eagerly checkpointed
-    * before the overwrite — the round-4 DROP-TABLE lesson). */
-  /** @param pruneStateOverBytes delta-prune the state read
+    * before the overwrite — the round-4 DROP-TABLE lesson).
+    *
+    * Flush contract: compaction runs on a background thread, and a
+    * failed fold surfaces only at the next fence. Every caller must call
+    * [[flush]] before it abandons the instance — before the process
+    * exits, and before a fresh incarnation takes over the same (table,
+    * path). Skipping it drops the last queued compaction and its error.
+    *
+    * @param pruneStateOverBytes delta-prune the state read
     *   ([[resolvedFor]]) only once the standing state's on-disk size
     *   exceeds this. The pruning costs one bounded driver round-trip
     *   per batch (the delta's gram min/max) plus the delta's distinct
@@ -340,7 +347,7 @@ object StreamExactSubstr {
         // awaitCompact() before any later table read (and by flush()
         // at incarnation handoff)
         compactF = Some(tailExec.submit(new Runnable {
-          def run(): Unit = { compact(s, gen); mark("compact") }
+          def run(): Unit = compact(s, gen)
         }))
         genMeta = Some((gen, 1L))
       }

@@ -64,6 +64,9 @@ object Probe216 {
         f"  resolved-state=$resolvedNow%8d  state-rows-into-merge:" +
         f" full=$standing%8d pruned=$pruned%8d")
     }
+    // settle any queued compaction (and surface its error) before the
+    // probe reads the table and the process exits
+    a.flush()
     val perGen = spark.table(table).groupBy(col("gen"))
       .agg(count(lit(1)).as("rows")).orderBy(col("gen"))
       .as[(Long, Long)].collect()

@@ -171,8 +171,7 @@ class ExactSubstrSpec extends AnyFunSuite {
   // ---------------------------------------------------------------------
   // Capacity-lift pins (round 13): documents LONGER than the oracle's
   // PosCap/2^SaRounds bound must dedup exactly — struct(doc_id, pos)
-  // keep-first keys (no scalar encode), data-derived doubling rounds,
-  // and the packed-pair fast path must agree with the wide two-long path.
+  // keep-first keys (no scalar encode) and data-derived doubling rounds.
 
   /** Long-doc fixture: planted 80-char duplicate across three docs (one
     * twice), placed so the RETIRED scalar keeper encode (doc·1024+pos)
@@ -274,41 +273,34 @@ class ExactSubstrSpec extends AnyFunSuite {
     assert(wantRows.exists(_._4 > 0), "fixture removed nothing — vacuous")
   }
 
-  test("long docs: total corpus ranks equal brute suffix order; " +
-      "non-total head ranks share brute equality classes") {
+  test("long docs: total and level-4 corpus ranks equal brute dense ranks") {
     import spark.implicits._
     import graft.queries.SuffixArray
-    val got = SuffixArray.corpusRanks(spark, longDocsDf,
-        SuffixArray.SaRounds, total = true)
-      .select(col("doc_id"), col("pos"), col("r"))
-      .as[(Long, Long, Long)].collect().sortBy(x => (x._1, x._2))
-    // brute: dense rank of each suffix among DISTINCT suffix strings
+    def ranks(level: Int, total: Boolean) =
+      SuffixArray.corpusRanks(spark, longDocsDf, level, total)
+        .select(col("doc_id"), col("pos"), col("r"))
+        .as[(Long, Long, Long)].collect()
     val sufs = longDocs.toSeq.flatMap { case (d, t) =>
       (0 until t.length).map(p => ((d, p.toLong), t.substring(p)))
     }
-    val rankOf = sufs.map(_._2).distinct.sorted.zipWithIndex
-      .map { case (s, i) => s -> (i + 1L) }.toMap
-    val want = sufs.map { case (k, s) => k -> rankOf(s) }.toMap
-    assert(got.forall { case (d, p, r) => want((d, p)) == r },
+    // brute: dense rank of each key among the DISTINCT keys, in string
+    // order (a shorter key sorts before its extensions — the end padding)
+    def bruteDense(key: String => String): Map[(Long, Long), Long] = {
+      val rankOf = sufs.map(x => key(x._2)).distinct.sorted.zipWithIndex
+        .map { case (s, i) => s -> (i + 1L) }.toMap
+      sufs.map { case (k, s) => k -> rankOf(key(s)) }.toMap
+    }
+    val wantTotal = bruteDense(identity)
+    val got = ranks(SuffixArray.SaRounds, total = true)
+    assert(got.length == sufs.length && got.forall { case (d, p, r) =>
+      wantTotal((d, p)) == r },
       "corpus suffix ranks diverge from brute-force suffix sort")
-    // non-total callers get HEAD ranks (r18): values are group
-    // representatives, but equality classes AND order must match the
-    // brute 16-gram prefix classes — all any consumer uses
-    val lvl4 = SuffixArray.corpusRanks(spark, longDocsDf, 4)
-      .select(col("doc_id"), col("pos"), col("r"))
-      .as[(Long, Long, Long)].collect()
-    val pfx16 = sufs.toMap.map { case (k, s) => k -> s.take(16) }
-    val byRank = lvl4.groupBy(_._3)
-    assert(byRank.values.forall(g =>
-      g.map(x => pfx16((x._1, x._2))).distinct.length == 1),
-      "a level-4 head-rank group mixes distinct 16-char prefixes")
-    val rankToPfx = byRank.map { case (r, g) =>
-      r -> pfx16((g.head._1, g.head._2)) }
-    assert(rankToPfx.values.toSeq.distinct.size == rankToPfx.size,
-      "two level-4 head ranks share one 16-char prefix")
-    assert(rankToPfx.toSeq.sortBy(_._1).map(_._2) ==
-      rankToPfx.values.toSeq.sorted,
-      "level-4 head-rank order diverges from 16-char prefix order")
+    // level 4: dense rank of each suffix's 16-char prefix
+    val want16 = bruteDense(_.take(16))
+    val lvl4 = ranks(4, total = false)
+    assert(lvl4.length == sufs.length && lvl4.forall { case (d, p, r) =>
+      want16((d, p)) == r },
+      "level-4 ranks diverge from the brute dense rank of 16-char prefixes")
   }
 
   test("reassembly conserves chars: kept_len + dup_chars == doc_len") {
