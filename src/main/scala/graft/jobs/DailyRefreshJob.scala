@@ -62,7 +62,7 @@ object DailyRefreshJob {
 
   /** Run the derived-analytics chain over a testdata snapshot dir,
     * publishing each stage under `outRoot/<stage>/v=<version>`.
-    * `afterStage` observes each completed stage — [[runLocked]] hangs
+    * `afterStage` observes each completed stage — [[runClaimed]] hangs
     * the lease heartbeat there. */
   def run(spark: SparkSession, sfDir: String, outRoot: String,
           version: String,
@@ -140,27 +140,6 @@ object DailyRefreshJob {
     }
   }
 
-  /** The chain under a TTL job lease ([[graft.sources.JobLock]] — the
-    * reference's double-start prevention around the whole refresh DAG,
-    * `job-lock.ts` + the cron route's 409): acquire before any stage,
-    * HEARTBEAT after every stage (a chain longer than the TTL must not
-    * lose its lease mid-run — the reference extends inside long jobs),
-    * release on every exit path. A held lease rejects the run before
-    * any compute starts. */
-  def runLocked(spark: SparkSession, lock: graft.sources.JobLock,
-                sfDir: String, outRoot: String, version: String,
-                jobName: String = "daily_refresh",
-                ttlSeconds: Long = 600L,
-                stages: Option[Seq[(String, () => DataFrame)]] = None)
-      : Either[String, Seq[StageResult]] =
-    lock.acquire(jobName, ttlSeconds) match {
-      case Left(reason) => Left(reason)
-      case Right(token) =>
-        try Right(run(spark, sfDir, outRoot, version, stages,
-          afterStage = _ => lock.extend(jobName, token, ttlSeconds)))
-        finally lock.release(jobName, token)
-    }
-
   /** Derived stages that read the LANDING table [[LandingJob]]
     * publishes — the reference's cron-A post-steps read exactly the
     * tables the fetch loop just wrote (`cron-a-direct.ts:115-147`
@@ -169,14 +148,11 @@ object DailyRefreshJob {
     * table is date-partitioned), so a daily refresh touches O(day)
     * input regardless of table history. */
   def landingStages(spark: SparkSession, landingRoot: String,
-                    targetDate: String,
-                    dataset: String = ""): Seq[(String, () => DataFrame)] = {
+                    targetDate: String, ds: LandingJob.Dataset)
+      : Seq[(String, () => DataFrame)] = {
     import org.apache.spark.sql.functions._
-    // named fallback: a generic Dataset sharing the config's dataset
-    // name lands under data_<name>; its covered dates must refresh,
-    // not error on the legacy bare-`data` path
-    def landed = LandingJob.readLandingNamed(spark, landingRoot, dataset)
-      .getOrElse(sys.error(s"no landing table under $landingRoot"))
+    def landed = LandingJob.readLanding(spark, landingRoot, ds)
+      .getOrElse(sys.error(s"no landed ${ds.name} table under $landingRoot"))
       .filter(col("target_date") === to_date(lit(targetDate)))
     Seq(
       "landing_daily_stats" -> (() =>
@@ -222,7 +198,7 @@ object DailyRefreshJob {
     * is FAILED or absent blocks the refresh VIA THE CLAIM: the blocked
     * attempt is recorded as a failed run in the shared ledger (visible
     * to monitoring, reclaimable once the landing heals via
-    * [[LandingJob.catchUpDates]] → re-land → re-refresh), and no stage
+    * [[LandingJob.scheduleCatchUp]] → re-land → re-refresh), and no stage
     * runs or publishes. Both jobs write their run rows to the SAME
     * [[graft.sources.RunLedger]], so the ledger shows the full
     * land(D) → refresh(D) lifecycle per date. */
@@ -230,6 +206,7 @@ object DailyRefreshJob {
                               lock: graft.sources.JobLock,
                               runs: graft.sources.RunLedger,
                               landingCfg: LandingJob.Config,
+                              ds: LandingJob.Dataset,
                               targetDate: String, outRoot: String,
                               version: String,
                               jobName: String = "daily_refresh",
@@ -239,10 +216,9 @@ object DailyRefreshJob {
                               retainVersions: Option[Int] = None)
       : Either[String, Seq[StageResult]] =
     runRefreshIfCovered(spark, lock, runs, landingCfg, targetDate,
-      Seq(landingCfg.dataset), outRoot, version, jobName, ttlSeconds,
+      Seq(ds.name), outRoot, version, jobName, ttlSeconds,
       runningStaleAfterSec,
-      landingStages(spark, landingCfg.landingRoot, targetDate,
-        landingCfg.dataset),
+      landingStages(spark, landingCfg.landingRoot, targetDate, ds),
       retainVersions)
 
   /** The PRODUCTION refresh DAG over LANDED tables: the real derived

@@ -19,13 +19,16 @@ import graft.sources.Ingest.Retry
   * (`00085_create_dataset_coverage.sql`: FAILED placeholder at claim,
   * SUCCESS with the saved row count at commit).
   *
-  * SCHEMA-GENERIC: the job is parameterized over a [[Dataset]] spec —
-  * schema, within-partition key columns, per-dataset chunk size, and a
-  * row transform — the reference's per-endpoint registry shape
-  * (`src/lib/utils/batch.ts:12-30` `BATCH_SIZES` + the endpoint mapping
-  * modules, e.g. the ~50-column fins cleanse of
-  * `src/lib/jquants/endpoints/fins-summary.ts:77-163`). Landing a new
-  * business table means writing a Dataset row, not editing the job.
+  * ONE ENTRY, ONE LAYOUT: every landing goes through [[runSchedule]] —
+  * a priority-ordered list of [[Scheduled]] entries, each a [[Dataset]]
+  * spec (schema, within-partition key columns, chunk size, row
+  * transform) with its page fetch — the reference's per-endpoint
+  * registry (`src/lib/utils/batch.ts:12-30` `BATCH_SIZES` + the endpoint
+  * mapping modules, e.g. the ~50-column fins cleanse of
+  * `src/lib/jquants/endpoints/fins-summary.ts:77-163`). A single-dataset
+  * job is a one-entry schedule. Each dataset lands under its own root,
+  * `<landingRoot>/data_<name>`, which [[readLanding]] reads. Landing a
+  * new business table means writing a Dataset row, not editing the job.
   *
   * CHUNKED: pages are flushed to an attempt-scoped parquet staging dir
   * every `batchSize` rows (the reference upserts per 500–2000-row chunk,
@@ -34,8 +37,7 @@ import graft.sources.Ingest.Retry
   * still written ONCE per landed date (chunk-wise partition rewrites
   * would be O(chunks²) on an object store — staging-then-one-merge keeps
   * the day write O(day)). A date small enough to fit one chunk never
-  * touches staging at all — the common daily case stays at the r15
-  * action count.
+  * touches staging at all.
   *
   * Spark-first split: the network discipline (bucket/retry/pagination)
   * and control state (lock, run ledger) are DRIVER-side — a fetch loop
@@ -60,9 +62,9 @@ import graft.sources.Ingest.Retry
   * Failure semantics follow the reference's continue-on-error chain:
   * a date whose fetch ultimately fails records a FAILED manifest row
   * and a failed run, and the job moves to the next date — the
-  * coverage-driven catch-up ([[Coverage.catchUpTargets]]) retries it
-  * on the next scheduled run. A crash mid-date (even mid-chunk) leaves
-  * the manifest FAILED and at worst an attempt-scoped staging dir; the
+  * coverage-driven catch-up ([[scheduleCatchUp]]) retries it on the
+  * next scheduled run. A crash mid-date (even mid-chunk) leaves the
+  * manifest FAILED and at worst an attempt-scoped staging dir; the
   * healing re-land re-fetches and re-merges the whole date, converging
   * on the same partition content. A date already successfully run is
   * skipped by the claim (`already_executed`). The job heartbeats the
@@ -71,17 +73,10 @@ import graft.sources.Ingest.Retry
   * any work happens (the reference's 409). */
 object LandingJob {
 
-  /** One page-fetch response: HTTP-ish status, rows, next cursor. */
-  type Fetch = (String, Option[String]) => (Int, Seq[ApiRow], Option[String])
-
-  /** Schema-generic page fetch: rows are [[Row]]s matching the
-    * dataset's [[Dataset.schema]]. */
+  /** One page-fetch response: HTTP-ish status, rows matching the
+    * dataset's [[Dataset.schema]], next cursor. */
   type RowFetch =
     (String, Option[String]) => (Int, Seq[Row], Option[String])
-
-  /** The landing row shape for the gate: (id, target_date, value) —
-    * id is the upsert key, target_date ties the row to its manifest. */
-  final case class ApiRow(id: Long, target_date: String, value: Double)
 
   /** Per-dataset landing spec — the reference's endpoint registry row:
     * fetch-row schema (must contain a `target_date` column; string is
@@ -94,8 +89,7 @@ object LandingJob {
                            schema: StructType,
                            keyCols: Seq[String],
                            batchSize: Int = 1000,
-                           transform: DataFrame => DataFrame = identity,
-                           legacyLayout: Boolean = false) {
+                           transform: DataFrame => DataFrame = identity) {
     require(schema.fieldNames.contains("target_date"),
       s"dataset $name schema must carry target_date")
     require(keyCols.nonEmpty && keyCols.forall(schema.fieldNames.contains),
@@ -112,14 +106,6 @@ object LandingJob {
 
   final case class DateResult(date: String, status: String, rows: Long,
                               pages: Int, error: Option[String])
-
-  private val apiRowSchema: StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("target_date", StringType, nullable = false),
-      StructField("value", DoubleType, nullable = false)))
-  }
 
   private def readLedger(s: SparkSession, root: String): DataFrame =
     Upsert.resolvePublished(root)
@@ -227,61 +213,17 @@ object LandingJob {
         java.util.UUID.randomUUID().toString)
       syncedVer = Upsert.resolvePublished(cfg.coverageRoot)
         .map(p => new java.io.File(p).getName)
-      // two publishes per date would otherwise grow version dirs forever;
-      // sparing the JUST-superseded version BY NAME (mtimes can tie at
-      // publish rates below the fs timestamp granularity) leaves it for
-      // readers that resolved the old pointer right before this flip
-      // (q218-style catch-up planners in other processes)
-      Upsert.pruneSnapshots(cfg.coverageRoot, spare = prevVer.toSet)
-    }
-  }
-
-  /** Run the landing job over `targetDates` (oldest first — the
-    * forward-fill order). Returns Left(reason) when the lease is held
-    * (double start) — nothing is claimed, fetched, or written.
-    * Legacy single-shape entry: the gate/probe row [[ApiRow]] via the
-    * generic path (key = id, one chunk — the pre-chunking behavior). */
-  def run(s: SparkSession, lock: JobLock, runs: RunLedger, cfg: Config,
-          targetDates: Seq[String], fetch: Fetch,
-          bucket: Ingest.TokenBucket,
-          retrySleepMs: Long => Unit = Thread.sleep(_),
-          uniform: () => Double = () => 0.0,
-          nowMs: () => Long = () => System.currentTimeMillis())
-      : Either[String, Seq[DateResult]] = {
-    val ds = Dataset(cfg.dataset, apiRowSchema, Seq("id"),
-      batchSize = Int.MaxValue, legacyLayout = true)
-    val rowFetch: RowFetch = (date, cursor) => {
-      val (status, rows, next) = fetch(date, cursor)
-      (status, rows.map(r => Row(r.id, r.target_date, r.value)), next)
-    }
-    runDataset(s, lock, runs, cfg, ds, targetDates, rowFetch, bucket,
-      retrySleepMs, uniform, nowMs)
-  }
-
-  /** The schema-generic landing run: one [[Dataset]] over
-    * `targetDates` under the lease, one claim + manifest row per date. */
-  def runDataset(s: SparkSession, lock: JobLock, runs: RunLedger,
-                 cfg: Config, ds: Dataset, targetDates: Seq[String],
-                 fetch: RowFetch, bucket: Ingest.TokenBucket,
-                 retrySleepMs: Long => Unit = Thread.sleep(_),
-                 uniform: () => Double = () => 0.0,
-                 nowMs: () => Long = () => System.currentTimeMillis())
-      : Either[String, Seq[DateResult]] = {
-    lock.acquire(cfg.jobName, cfg.ttlSeconds) match {
-      case Left(reason) => Left(reason)
-      case Right(token) =>
-        try {
-          val ledger = new LedgerBuf(s, cfg, Set(ds.name),
-            targetDates.toSet)
-          Right(targetDates.map { date =>
-            val r = runOneDate(s, runs, cfg, ds, date, fetch, bucket,
-              retrySleepMs, uniform, nowMs, ledger)
-            // heartbeat: a long backfill must outlive the initial TTL
-            lock.extend(cfg.jobName, token, cfg.ttlSeconds)
-            r
-          })
-        }
-        finally lock.release(cfg.jobName, token)
+      // two publishes per date would otherwise grow version dirs forever.
+      // Spared: the JUST-superseded version BY NAME (mtimes can tie at
+      // publish rates below the fs timestamp granularity), for readers
+      // that resolved the old pointer right before this flip (q218-style
+      // catch-up planners in other processes); and, via graceKeep = 1,
+      // the most recent other version — a foreign publisher sharing this
+      // coverageRoot writes its v= dir BEFORE flipping the pointer, and
+      // pruning that written-but-unflipped dir would leave its flip
+      // pointing at a deleted snapshot
+      Upsert.pruneSnapshots(cfg.coverageRoot, graceKeep = 1,
+        spare = prevVer.toSet)
     }
   }
 
@@ -292,10 +234,10 @@ object LandingJob {
                          uniform: () => Double,
                          nowMs: () => Long,
                          ledger: LedgerBuf): DateResult = {
-    // ledger key: the bare job name when the job IS the dataset (the
-    // single-dataset legacy contract the specs and q219 pin); a
-    // multi-dataset job claims per (job, dataset) so one dataset's
-    // failed date never blocks another's claim
+    // ledger key: the bare job name for the config's own dataset (the
+    // single-dataset job key); every other dataset of a schedule claims
+    // per (job, dataset) so one dataset's failed date never blocks
+    // another's claim
     val claimJob = if (ds.name == cfg.dataset) cfg.jobName
                    else s"${cfg.jobName}:${ds.name}"
     val claim = runs.claim(claimJob, date,
@@ -445,61 +387,21 @@ object LandingJob {
     }
   }
 
-  /** The landing table's data root for `ds` — a parquet layout
-    * partitioned by `target_date`, one root per dataset. ONLY the legacy
-    * single-dataset `run()` wrapper keeps the bare `data` dir, via the
-    * explicit [[Dataset.legacyLayout]] marker (r16 ADVICE: dispatching on
-    * structural schema equality routed any generic dataset that happened
-    * to use the 3-column ApiRow shape to the SHARED bare dir — two such
-    * datasets would silently mix tables while coverage stayed per-name). */
-  private[graft] def landingDataPath(root: String): String = s"$root/data"
-  private[graft] def landingDataPath(root: String, ds: Dataset): String =
-    if (ds.legacyLayout) landingDataPath(root)
-    else s"$root/data_${ds.name}"
+  /** The landing table's data root for `ds`: `<root>/data_<name>`, a
+    * parquet layout partitioned by `target_date`, one root per dataset. */
+  private def landingDataPath(root: String, ds: Dataset): String =
+    s"$root/data_${ds.name}"
 
-  /** The published landing table (None until the first date lands).
-    * Emptiness ignores Spark metadata entries (`_temporary`,
-    * `_SUCCESS`, dotfiles): a writer that crashed mid-first-write
-    * leaves only `_temporary` behind, and treating that as a published
-    * table would wedge every subsequent land() on a schema-inference
-    * error — the partition dirs (`target_date=...`) are the signal. */
-  def readLanding(s: SparkSession, root: String): Option[DataFrame] =
-    readLandingPath(s, landingDataPath(root))
-
-  /** The published landing table for one [[Dataset]]. */
+  /** The published landing table for one [[Dataset]] (None until its
+    * first date lands). Emptiness ignores Spark metadata entries
+    * (`_temporary`, `_SUCCESS`, dotfiles): a writer that crashed
+    * mid-first-write leaves only `_temporary` behind, and treating that
+    * as a published table would wedge every subsequent land() on a
+    * schema-inference error — the partition dirs (`target_date=...`)
+    * are the signal. */
   def readLanding(s: SparkSession, root: String,
-                  ds: Dataset): Option[DataFrame] =
-    readLandingPath(s, landingDataPath(root, ds))
-
-  /** The published landing table for a dataset known only BY NAME
-    * (the refresh side holds a [[Config]], not the [[Dataset]]): the
-    * generic `data_<name>` root when present, else the legacy bare
-    * `data` layout (r16 ADVICE: preferring the legacy dir meant a
-    * dataset migrated from the ApiRow shape to a generic schema under
-    * the same name would silently refresh from the STALE legacy table;
-    * generic-first means a migrated dataset always reads its new
-    * layout, and pure-legacy jobs — which never create `data_<name>` —
-    * still resolve the bare dir). */
-  def readLandingNamed(s: SparkSession, root: String,
-                       name: String): Option[DataFrame] = {
-    val generic = readLandingPath(s, s"$root/data_$name")
-    val legacy = readLandingPath(s, landingDataPath(root))
-    // migration tripwire (ADVICE r17): a dataset that landed under the
-    // ApiRow shape has history in the shared bare dir; once it migrates
-    // to the generic layout the new dir SHADOWS those rows for every
-    // reader — surface that instead of silently serving a partial table
-    if (generic.isDefined && legacy.isDefined)
-      System.err.println(s"LandingJob: dataset '$name' has both the " +
-        s"generic layout ($root/data_$name) and rows in the legacy bare " +
-        s"dir ($root/data); reading the generic layout — if those legacy " +
-        s"rows belong to '$name', migrate its target_date=* partitions " +
-        s"into $root/data_$name or they stay shadowed")
-    generic.orElse(legacy)
-  }
-
-  private def readLandingPath(s: SparkSession,
-                              path: String): Option[DataFrame] = {
-    val p = new java.io.File(path)
+                  ds: Dataset): Option[DataFrame] = {
+    val p = new java.io.File(landingDataPath(root, ds))
     val real = Option(p.listFiles()).getOrElse(Array())
       .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
     if (real.nonEmpty) Some(s.read.parquet(p.toString)) else None
@@ -574,7 +476,7 @@ object LandingJob {
     merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("target_date")
-      .parquet(landingDataPath(cfg.landingRoot, ds))
+      .parquet(dataPath)
     landedCount
   }
 
@@ -591,32 +493,26 @@ object LandingJob {
     p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** Plan the next run's dates from the published coverage ledger —
-    * the composition the round-13 verdict asked for: catch-up reads
-    * COVERAGE, not output presence. */
-  def catchUpDates(s: SparkSession, cfg: Config, calendar: DataFrame,
-                   calDateCol: String, today: java.sql.Date,
-                   lookbackDays: Int, maxDays: Int): Seq[String] =
-    catchUpDatesFor(s, cfg, cfg.dataset, calendar, calDateCol, today,
-      lookbackDays, maxDays)
-
-  /** One multi-dataset schedule entry: a dataset, its endpoint, and
+  /** One schedule entry: a dataset, its endpoint, and
     * the dates to land — listed in PRIORITY order (the reference's
     * cron-A dataset loop runs endpoints in a fixed priority order with
     * continue-on-error, `cron-a-direct.ts:115-147`). */
   final case class Scheduled(ds: Dataset, fetch: RowFetch,
                              dates: Seq[String])
 
-  /** The MULTI-DATASET scheduler pass: land every entry's dates, in
-    * entry (priority) order, under ONE lease and ONE shared run
-    * ledger/coverage root. Failure isolation is two-level, matching
-    * the reference's continue-on-error chain: a failed DATE moves to
-    * the dataset's next date (runOneDate already records the failed
-    * claim + FAILED manifest), and a fully-failing DATASET moves to
-    * the next dataset — one broken endpoint never blocks the others.
+  /** The landing entry: land every entry's dates, in entry (priority)
+    * order, under ONE lease and ONE shared run ledger/coverage root (a
+    * single-dataset job passes one entry). Failure isolation is
+    * two-level, matching the reference's continue-on-error chain: a
+    * failed DATE moves to the dataset's next date (runOneDate already
+    * records the failed claim + FAILED manifest), and a fully-failing
+    * DATASET moves to the next dataset — one broken endpoint never
+    * blocks the others.
     * The lease heartbeats after every date, so an N-dataset backfill
     * never loses its lock mid-pass. Returns (dataset, result) per
-    * attempted date, in execution order. */
+    * attempted date, in execution order, or Left(reason) when the lease
+    * is held (double start) — then nothing is claimed, fetched or
+    * written. */
   def runSchedule(s: SparkSession, lock: JobLock, runs: RunLedger,
                   cfg: Config, entries: Seq[Scheduled],
                   bucket: Ingest.TokenBucket,
@@ -657,7 +553,8 @@ object LandingJob {
         calDateCol, today, lookbackDays, maxDays))
       .filter(_._2.nonEmpty)
 
-  /** Per-dataset catch-up planning over the shared coverage root. */
+  /** Per-dataset catch-up planning over the shared coverage root: the
+    * plan reads COVERAGE, not output presence. */
   def catchUpDatesFor(s: SparkSession, cfg: Config, dataset: String,
                       calendar: DataFrame, calDateCol: String,
                       today: java.sql.Date, lookbackDays: Int,

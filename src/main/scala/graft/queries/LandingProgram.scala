@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.Tables
 import graft.jobs.{DailyRefreshJob, LandingJob}
-import graft.jobs.LandingJob.ApiRow
 import graft.sources.{Ingest, JobLock, RunLedger}
 
 /** q219 — the LANDING PIPELINE, oracle-gated end to end: the full
@@ -32,21 +32,41 @@ import graft.sources.{Ingest, JobLock, RunLedger}
   * below 2^53), so sums are order-free and bit-exact in both engines.
   *
   * Scale shape: the landing write is dynamic partition overwrite per
-  * target_date (O(day) I/O per landed date — `tools/ProbeLanding`
-  * measures the flat per-date write volume); the manifest is one row
-  * per (dataset, day); the final aggregation groups the landed table
-  * by its partition column. */
+  * target_date (O(day) I/O per landed date — LandingJobSpec "landing
+  * write is partition-scoped…" pins that other partitions stay
+  * byte-identical, PlanShapeSpec "landed-table refresh stages prune to
+  * the ONE target_date partition" pins the O(day) refresh read); the
+  * manifest is one row per (dataset, day); the final aggregation groups
+  * the landed table by its partition column. */
 object LandingProgram {
+
+  /** One gate's landing control plane on a scratch root: a fake clock
+    * shared by the token bucket, the retry sleeps and the run ledger,
+    * plus the lease dir. [[land]] runs one [[LandingJob.runSchedule]]
+    * pass and fails the gate if the lease rejects it. */
+  private final class Plane(s: SparkSession, tmp: java.nio.file.Path,
+                            cfg: LandingJob.Config) {
+    var now = 0L
+    val bucket = new Ingest.TokenBucket(requestsPerMinute = 60,
+      minIntervalMs = 1000L, nowMs = () => now, sleepMs = now += _)
+    val lock = new JobLock(tmp.resolve("locks"))
+    val runs = new RunLedger(nowMs = () => now)
+    def land(entries: Seq[LandingJob.Scheduled])
+        : Seq[(String, LandingJob.DateResult)] =
+      LandingJob.runSchedule(s, lock, runs, cfg, entries, bucket,
+        retrySleepMs = now += _, nowMs = () => now)
+        .fold(r => sys.error(s"landing rejected: $r"), identity)
+  }
+
+  /** q219's landing row: (id, target_date, value) — id is the upsert
+    * key, value the order's cents. */
+  private val q219Schema = StructType(Seq(
+    StructField("id", LongType, nullable = false),
+    StructField("target_date", StringType, nullable = false),
+    StructField("value", DoubleType, nullable = false)))
 
   def q219LandingPipeline(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val dbg = sys.env.contains("SPARK_GRAFT_Q219_DEBUG")
-    var tDbg = System.nanoTime()
-    def mark(m: String): Unit = if (dbg) {
-      System.err.println(
-        f"Q219-PROBE $m ${(System.nanoTime() - tDbg) / 1e9}%.2f s")
-      tDbg = System.nanoTime()
-    }
     val o = Tables.orders(s, dir)
       .select(col("o_orderkey").cast("long").as("id"),
         to_date(col("o_orderdate")).as("d"),
@@ -61,13 +81,13 @@ object LandingProgram {
       .limit(6).as[java.sql.Date].collect().toSeq.map(_.toString)
     // the deterministic "API": days × page-sized — the fetch transport,
     // bounded by the date window, not the fact table
-    val byDate: Map[String, IndexedSeq[ApiRow]] = o
+    val byDate: Map[String, IndexedSeq[Row]] = o
       .filter(col("d").isin(dates: _*))
       .select(col("id"), col("d").cast("string"), col("cents"))
       .as[(Long, String, Long)].collect().toIndexedSeq
-      .map { case (id, d, c) => ApiRow(id, d, c.toDouble) }
-      .groupBy(_.target_date).map { case (k, v) =>
-        k -> v.sortBy(_.id) }
+      .groupBy(_._2).map { case (k, v) =>
+        k -> v.sortBy(_._1).map { case (id, d, c) =>
+          Row(id, d, c.toDouble) } }
     val PageSize = 25
     // dates at index % 3 == 2 fail their FIRST pass hard (401 —
     // non-retryable), then heal: the catch-up pass must find exactly
@@ -75,7 +95,7 @@ object LandingProgram {
     val plantedFail = dates.zipWithIndex
       .collect { case (d, i) if i % 3 == 2 => d }.toSet
     @volatile var healed = false
-    val fetch: LandingJob.Fetch = (date, cursor) => {
+    val fetch: LandingJob.RowFetch = (date, cursor) => {
       if (!healed && plantedFail(date)) (401, Nil, None)
       else {
         val rows = byDate.getOrElse(date, IndexedSeq.empty)
@@ -90,50 +110,34 @@ object LandingProgram {
     // gate many reps per round — leaked landing/coverage dirs would
     // accumulate in /tmp exactly like the ExactSubstr scratch used to)
     val tmp = java.nio.file.Files.createTempDirectory("graft_q219")
-    try q219Body(s, tmp, dates, fetch, () => healed = true, mark)
+    try q219Body(s, tmp, dates, fetch, () => healed = true)
     finally graft.operators.Upsert.rmTree(tmp.toFile)
   }
 
   private def q219Body(s: SparkSession, tmp: java.nio.file.Path,
-                       dates: Seq[String], fetch: LandingJob.Fetch,
-                       heal: () => Unit, mark: String => Unit): DataFrame = {
+                       dates: Seq[String], fetch: LandingJob.RowFetch,
+                       heal: () => Unit): DataFrame = {
     import s.implicits._
     val cfg = LandingJob.Config("landing_q219", "orders",
       s"$tmp/landing", s"$tmp/coverage")
-    var now = 0L
-    val bucket = new Ingest.TokenBucket(requestsPerMinute = 60,
-      minIntervalMs = 1000L, nowMs = () => now, sleepMs = now += _)
-    val lock = new JobLock(tmp.resolve("locks"))
-    val runs = new RunLedger(nowMs = () => now)
-    def pass(ds: Seq[String]): Unit =
-      LandingJob.run(s, lock, runs, cfg, ds, fetch, bucket,
-        retrySleepMs = now += _, nowMs = () => now)
-        .fold(r => sys.error(s"landing rejected: $r"), identity)
-    // the control plane's relations are day-sized (pages, manifests,
-    // one partition per land) — scope the shuffle width down around the
-    // pipeline run like the streaming gates do, so ~30 metadata-sized
-    // publish cycles don't each schedule 32-partition shuffles
-    mark("collect-source")
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      pass(dates) // first pass: planted dates record FAILED manifests
-      mark("pass1")
-      heal()
-      // catch-up reads the MANIFEST over the target-date calendar and
-      // plans exactly the failed dates, oldest first
-      val calendar = dates.map(java.sql.Date.valueOf).toDF("day")
-        .withColumn("is_business_day", lit(true))
-      val plan = LandingJob.catchUpDates(s, cfg, calendar, "day",
-        java.sql.Date.valueOf(dates.last), lookbackDays = 10000,
-        maxDays = 100)
-      val planted = dates.zipWithIndex
-        .collect { case (d, i) if i % 3 == 2 => d }
-      require(plan == planted,
-        s"catch-up planned $plan, expected the planted failures")
-      pass(plan) // heal
-      mark("pass2")
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    val ds = LandingJob.Dataset(cfg.dataset, q219Schema, Seq("id"))
+    val plane = new Plane(s, tmp, cfg)
+    def pass(dd: Seq[String]): Unit =
+      plane.land(Seq(LandingJob.Scheduled(ds, fetch, dd)))
+    pass(dates) // first pass: planted dates record FAILED manifests
+    heal()
+    // catch-up reads the MANIFEST over the target-date calendar and
+    // plans exactly the failed dates, oldest first
+    val calendar = dates.map(java.sql.Date.valueOf).toDF("day")
+      .withColumn("is_business_day", lit(true))
+    val plan = LandingJob.catchUpDatesFor(s, cfg, ds.name, calendar, "day",
+      java.sql.Date.valueOf(dates.last), lookbackDays = 10000,
+      maxDays = 100)
+    val planted = dates.zipWithIndex
+      .collect { case (d, i) if i % 3 == 2 => d }
+    require(plan == planted,
+      s"catch-up planned $plan, expected the planted failures")
+    pass(plan) // heal
     // the gate output: per-date aggregates over the LANDED table joined
     // with the manifest's terminal status — every date covered, every
     // source row present exactly once
@@ -142,7 +146,7 @@ object LandingProgram {
       .select(col("target_date"), col("status"))
     // checkpoint: the caller's action runs AFTER the finally deletes the
     // scratch root, so the 6-row result must be materialized here
-    LandingJob.readLanding(s, cfg.landingRoot).get
+    LandingJob.readLanding(s, cfg.landingRoot, ds).get
       .groupBy(col("target_date"))
       .agg(count(lit(1)).as("n_rows"),
         sum(col("value")).cast("long").as("sum_cents"),
@@ -159,23 +163,19 @@ object LandingProgram {
     * endpoint (`src/lib/jquants/endpoints/fins-summary.ts:77-163` lands
     * a ~50-field financial-statement row with a ""→null cleanse). Key
     * (target_date, id); 46 derived value columns + 2 strings. */
-  private[graft] val wideSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(
-      Seq(StructField("id", LongType, nullable = false),
-        StructField("target_date", StringType, nullable = false),
-        StructField("note", StringType, nullable = true),
-        StructField("code", StringType, nullable = false)) ++
-        (1 to 46).map(k =>
-          StructField(f"v$k%02d", LongType, nullable = false)))
-  }
+  private[graft] val wideSchema: StructType = StructType(
+    Seq(StructField("id", LongType, nullable = false),
+      StructField("target_date", StringType, nullable = false),
+      StructField("note", StringType, nullable = true),
+      StructField("code", StringType, nullable = false)) ++
+      (1 to 46).map(k =>
+        StructField(f"v$k%02d", LongType, nullable = false)))
 
   /** One wide "API" row from an (id, cents) source pair: deterministic
     * integer derivations both engines can replay exactly. `note` is
     * empty-string for id % 7 == 0 — the cleanse target. */
-  private[graft] def wideRow(id: Long, date: String,
-                             cents: Long): org.apache.spark.sql.Row =
-    org.apache.spark.sql.Row.fromSeq(
+  private[graft] def wideRow(id: Long, date: String, cents: Long): Row =
+    Row.fromSeq(
       Seq(id, date,
         if (id % 7 == 0) "" else "n" + (id % 97),
         "c" + (id % 1000)) ++
@@ -191,7 +191,7 @@ object LandingProgram {
   /** q220 — SCHEMA-GENERIC landing, oracle-gated: the SAME composed
     * control plane as q219 (lease → claim → rate-limited paginated
     * fetch → partition-scoped land → manifest → coverage-driven
-    * catch-up → heal) but run through [[LandingJob.runDataset]] with a
+    * catch-up → heal) with a
     * 50-column fins-shaped [[LandingJob.Dataset]] — per-dataset key
     * spec, per-dataset batch size (pages spool through the chunked
     * staging path once a date outgrows one chunk, e.g. at sf0.1), and
@@ -251,29 +251,19 @@ object LandingProgram {
     // date) — the same query exercises both write paths across SFs
     val ds = LandingJob.Dataset("fins", wideSchema, Seq("id"),
       batchSize = 48, transform = wideCleanse)
-    var now = 0L
-    val bucket = new Ingest.TokenBucket(requestsPerMinute = 60,
-      minIntervalMs = 1000L, nowMs = () => now, sleepMs = now += _)
-    val lock = new JobLock(tmp.resolve("locks"))
-    val runs = new RunLedger(nowMs = () => now)
+    val plane = new Plane(s, tmp, cfg)
     def pass(dd: Seq[String]): Unit =
-      LandingJob.runDataset(s, lock, runs, cfg, ds, dd, fetch, bucket,
-        retrySleepMs = now += _, nowMs = () => now)
-        .fold(r => sys.error(s"landing rejected: $r"), identity)
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      pass(dates)
-      heal()
-      val calendar = dates.map(java.sql.Date.valueOf).toDF("day")
-        .withColumn("is_business_day", lit(true))
-      val plan = LandingJob.catchUpDatesFor(s, cfg, ds.name, calendar,
-        "day", java.sql.Date.valueOf(dates.last), lookbackDays = 10000,
-        maxDays = 100)
-      require(plan == Seq(plantedFail),
-        s"catch-up planned $plan, expected Seq($plantedFail)")
-      pass(plan)
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      plane.land(Seq(LandingJob.Scheduled(ds, fetch, dd)))
+    pass(dates)
+    heal()
+    val calendar = dates.map(java.sql.Date.valueOf).toDF("day")
+      .withColumn("is_business_day", lit(true))
+    val plan = LandingJob.catchUpDatesFor(s, cfg, ds.name, calendar,
+      "day", java.sql.Date.valueOf(dates.last), lookbackDays = 10000,
+      maxDays = 100)
+    require(plan == Seq(plantedFail),
+      s"catch-up planned $plan, expected Seq($plantedFail)")
+    pass(plan)
     val manifest = s.read.parquet(
       graft.operators.Upsert.resolvePublished(cfg.coverageRoot).get)
       .select(col("target_date"), col("status"))
@@ -317,8 +307,6 @@ object LandingProgram {
       |ORDER BY 1""".stripMargin
 
   // ---------------------------------------------------------------- q221
-
-  import org.apache.spark.sql.types._
 
   /** The four business-table landing schemas the production DAG reads —
     * the reference lands ~11 real endpoints (`fins-summary.ts`,
@@ -385,14 +373,6 @@ object LandingProgram {
     * fact-table-sized. */
   def q221ScheduledRefresh(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.Row
-    val dbg = sys.env.contains("SPARK_GRAFT_Q221_DEBUG")
-    var tDbg = System.nanoTime()
-    def mark(m: String): Unit = if (dbg) {
-      System.err.println(
-        f"Q221-PROBE $m ${(System.nanoTime() - tDbg) / 1e9}%.2f s")
-      tDbg = System.nanoTime()
-    }
     val o = Tables.orders(s, dir)
       .select(col("o_orderkey").cast("long"), col("o_custkey").cast("long"),
         col("o_totalprice").cast("double"),
@@ -464,13 +444,13 @@ object LandingProgram {
         (200, page, next)
       }
     val tmp = java.nio.file.Files.createTempDirectory("graft_q221")
-    try q221Body(s, tmp, D, fetchFor, () => healed = true, mark)
+    try q221Body(s, tmp, D, fetchFor, () => healed = true)
     finally graft.operators.Upsert.rmTree(tmp.toFile)
   }
 
   private def q221Body(s: SparkSession, tmp: java.nio.file.Path, D: String,
                        fetchFor: String => LandingJob.RowFetch,
-                       heal: () => Unit, mark: String => Unit): DataFrame = {
+                       heal: () => Unit): DataFrame = {
     import s.implicits._
     val cfg = LandingJob.Config("landing_q221", "orders",
       s"$tmp/landing", s"$tmp/coverage")
@@ -479,51 +459,34 @@ object LandingProgram {
     val dsC = LandingJob.Dataset("customer", q221CustomerSchema, Seq("c_custkey"))
     val dsE = LandingJob.Dataset("events", q221EventsSchema, Seq("event_id"))
     val all = Seq(dsO, dsL, dsC, dsE)
-    var now = 0L
-    val bucket = new Ingest.TokenBucket(requestsPerMinute = 60,
-      minIntervalMs = 1000L, nowMs = () => now, sleepMs = now += _)
-    val lock = new JobLock(tmp.resolve("locks"))
-    val runs = new RunLedger(nowMs = () => now)
-    def schedule(entries: Seq[(LandingJob.Dataset, Seq[String])]): Unit = {
-      val out = LandingJob.runSchedule(s, lock, runs, cfg,
-        entries.map { case (ds, dd) =>
-          LandingJob.Scheduled(ds, fetchFor(ds.name), dd) },
-        bucket, retrySleepMs = now += _, nowMs = () => now)
-        .fold(r => sys.error(s"schedule rejected: $r"), identity)
-      require(out.nonEmpty, "schedule ran nothing")
-    }
+    val plane = new Plane(s, tmp, cfg)
+    def schedule(entries: Seq[(LandingJob.Dataset, Seq[String])]): Unit =
+      require(plane.land(entries.map { case (ds, dd) =>
+        LandingJob.Scheduled(ds, fetchFor(ds.name), dd) }).nonEmpty,
+        "schedule ran nothing")
     val outRoot = s"$tmp/refresh"
     def refresh(version: String) =
-      DailyRefreshJob.runProductionRefresh(s, lock, runs, cfg,
+      DailyRefreshJob.runProductionRefresh(s, plane.lock, plane.runs, cfg,
         dsO, dsL, dsC, dsE, D, outRoot, version)
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      mark("collect-source")
-      // pass 1: lineitem 401s; the other three land anyway
-      schedule(all.map(_ -> Seq(D)))
-      mark("pass1")
-      // the production refresh must BLOCK on the uncovered input
-      require(refresh("vb").isLeft,
-        "refresh must block while an input dataset is unlanded")
-      mark("blocked-refresh")
-      // cross-dataset catch-up plans EXACTLY the lineitem heal
-      val calendar = Seq(D).map(java.sql.Date.valueOf).toDF("day")
-        .withColumn("is_business_day", lit(true))
-      val plan = LandingJob.scheduleCatchUp(s, cfg, all.map(_.name),
-        calendar, "day", java.sql.Date.valueOf(D), 10000, 100)
-      require(plan == Seq("lineitem" -> Seq(D)),
-        s"catch-up planned $plan, expected the lineitem heal")
-      heal()
-      schedule(plan.map { case (n, dd) =>
-        all.find(_.name == n).get -> dd })
-      mark("heal")
-      // the blocked refresh reclaims and runs the REAL derived chain
-      val out = refresh("vh")
-        .fold(r => sys.error(s"healed refresh rejected: $r"), identity)
-      require(out.forall(_.error.isEmpty), out.toString)
-      mark("refresh")
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    // pass 1: lineitem 401s; the other three land anyway
+    schedule(all.map(_ -> Seq(D)))
+    // the production refresh must BLOCK on the uncovered input
+    require(refresh("vb").isLeft,
+      "refresh must block while an input dataset is unlanded")
+    // cross-dataset catch-up plans EXACTLY the lineitem heal
+    val calendar = Seq(D).map(java.sql.Date.valueOf).toDF("day")
+      .withColumn("is_business_day", lit(true))
+    val plan = LandingJob.scheduleCatchUp(s, cfg, all.map(_.name),
+      calendar, "day", java.sql.Date.valueOf(D), 10000, 100)
+    require(plan == Seq("lineitem" -> Seq(D)),
+      s"catch-up planned $plan, expected the lineitem heal")
+    heal()
+    schedule(plan.map { case (n, dd) =>
+      all.find(_.name == n).get -> dd })
+    // the blocked refresh reclaims and runs the REAL derived chain
+    val out = refresh("vh")
+      .fold(r => sys.error(s"healed refresh rejected: $r"), identity)
+    require(out.forall(_.error.isEmpty), out.toString)
     // the gate output: the PUBLISHED flagship snapshot (scratch is
     // deleted in the caller's finally — materialize before returning)
     s.read.parquet(graft.operators.Upsert
@@ -568,7 +531,6 @@ object LandingProgram {
     * or a success day that refused its re-pull all break equality. */
   def q222CorrectionsWindow(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.Row
     val o = Tables.orders(s, dir)
       .select(col("o_orderkey").cast("long").as("id"),
         to_date(col("o_orderdate")).as("d"),
@@ -620,30 +582,21 @@ object LandingProgram {
     // published_date rides IN the key: the correction is a sibling row
     val ds = LandingJob.Dataset("corrections", q222Schema,
       Seq("id", "published_date"))
-    var now = 0L
-    val bucket = new Ingest.TokenBucket(requestsPerMinute = 60,
-      minIntervalMs = 1000L, nowMs = () => now, sleepMs = now += _)
-    val lock = new JobLock(tmp.resolve("locks"))
-    val runs = new RunLedger(nowMs = () => now)
-    def pull(windowDates: Seq[String]): Unit =
-      LandingJob.runDataset(s, lock, runs, cfg, ds, windowDates, fetch,
-        bucket, retrySleepMs = now += _, nowMs = () => now)
-        .fold(r => sys.error(s"window pull rejected: $r"), rs =>
-          require(rs.forall(_.status == "success"), rs.toString))
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      setBase(3)
-      pull(dates.slice(0, 4)) // window [d1..d4]
-      // visibility invariant: nothing published after d4 may be on disk
-      val early = LandingJob.readLanding(s, cfg.landingRoot, ds).get
-        .filter(col("published_date") > lit(dates(3))).count()
-      require(early == 0L,
-        s"pass 1 landed $early rows published after its base date")
-      now += 10_000L // past the success-stale threshold: re-pull allowed
-      setBase(5)
-      pull(dates.slice(2, 6)) // the SLID window [d3..d6]
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    val plane = new Plane(s, tmp, cfg)
+    def pull(windowDates: Seq[String]): Unit = {
+      val rs = plane.land(Seq(LandingJob.Scheduled(ds, fetch, windowDates)))
+      require(rs.forall(_._2.status == "success"), rs.toString)
+    }
+    setBase(3)
+    pull(dates.slice(0, 4)) // window [d1..d4]
+    // visibility invariant: nothing published after d4 may be on disk
+    val early = LandingJob.readLanding(s, cfg.landingRoot, ds).get
+      .filter(col("published_date") > lit(dates(3))).count()
+    require(early == 0L,
+      s"pass 1 landed $early rows published after its base date")
+    plane.now += 10_000L // past the success-stale threshold: re-pull allowed
+    setBase(5)
+    pull(dates.slice(2, 6)) // the SLID window [d3..d6]
     val manifest = s.read.parquet(
       graft.operators.Upsert.resolvePublished(cfg.coverageRoot).get)
       .select(col("target_date"), col("status"))

@@ -1,10 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.jobs.{DailyRefreshJob, LandingJob}
-import graft.jobs.LandingJob.ApiRow
 import graft.operators.Upsert
 import graft.sources.{Ingest, JobLock, RunLedger}
 
@@ -29,6 +30,10 @@ class ComposedPipelineSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("graft_pipeline")
     val cfg = LandingJob.Config("landing_orders", "orders",
       s"$tmp/landing", s"$tmp/coverage")
+    val ds = LandingJob.Dataset(cfg.dataset, StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("target_date", StringType, nullable = false),
+      StructField("value", DoubleType, nullable = false))), Seq("id"))
     val refreshRoot = s"$tmp/refresh"
     var now = 0L
     val bucket = new Ingest.TokenBucket(requestsPerMinute = 60,
@@ -39,20 +44,21 @@ class ComposedPipelineSpec extends AnyFunSuite {
     val runs = new RunLedger(nowMs = () => now,
       persistTo = Some(tmp.resolve("runs.tsv")))
     @volatile var day5Ok = false
-    val fetch: LandingJob.Fetch = (date, _) => date match {
+    val fetch: LandingJob.RowFetch = (date, _) => date match {
       case "2024-06-03" =>
-        (200, Seq(ApiRow(1L, date, 10.0), ApiRow(2L, date, 30.0)), None)
+        (200, Seq(Row(1L, date, 10.0), Row(2L, date, 30.0)), None)
       case "2024-06-04" => (200, Nil, None) // checked-empty day
       case "2024-06-05" =>
-        if (day5Ok) (200, Seq(ApiRow(3L, date, 7.0)), None)
+        if (day5Ok) (200, Seq(Row(3L, date, 7.0)), None)
         else (500, Nil, None)
       case other => fail(s"unexpected fetch date: $other")
     }
     def land(dates: Seq[String]) =
-      LandingJob.run(spark, lock, runs, cfg, dates, fetch, bucket,
-        retrySleepMs = now += _, nowMs = () => now).toOption.get
+      LandingJob.runSchedule(spark, lock, runs, cfg,
+        Seq(LandingJob.Scheduled(ds, fetch, dates)), bucket,
+        retrySleepMs = now += _, nowMs = () => now).toOption.get.map(_._2)
     def refresh(date: String, version: String) =
-      DailyRefreshJob.runRefreshForLandedDate(spark, lock, runs, cfg,
+      DailyRefreshJob.runRefreshForLandedDate(spark, lock, runs, cfg, ds,
         date, refreshRoot, version)
   }
 
@@ -112,8 +118,9 @@ class ComposedPipelineSpec extends AnyFunSuite {
         lit(java.sql.Date.valueOf("2024-06-03")),
         lit(java.sql.Date.valueOf("2024-06-05")))).as("day"))
       .withColumn("is_business_day", lit(true))
-    val plan = LandingJob.catchUpDates(spark, h.cfg, calendar, "day",
-      java.sql.Date.valueOf("2024-06-05"), lookbackDays = 10, maxDays = 10)
+    val plan = LandingJob.catchUpDatesFor(spark, h.cfg, h.ds.name, calendar,
+      "day", java.sql.Date.valueOf("2024-06-05"), lookbackDays = 10,
+      maxDays = 10)
     assert(plan == Seq("2024-06-05"))
     assert(h.land(plan).map(_.status) == Seq("success"))
     assert(h.refresh("2024-06-05", "v4").isRight,

@@ -58,6 +58,16 @@ class GenericLandingSpec extends AnyFunSuite {
     (tmp, bucket, lock, runs, (d: Long) => now += d, () => now)
   }
 
+  /** One landing pass of one dataset (a one-entry schedule). */
+  private def landOne(lock: JobLock, runs: RunLedger, cfg: Config,
+                      ds: Dataset, dates: Seq[String],
+                      fetch: LandingJob.RowFetch,
+                      bucket: Ingest.TokenBucket, sleep: Long => Unit,
+                      now: () => Long): Seq[LandingJob.DateResult] =
+    LandingJob.runSchedule(spark, lock, runs, cfg,
+      Seq(LandingJob.Scheduled(ds, fetch, dates)), bucket, sleep,
+      nowMs = now).toOption.get.map(_._2)
+
   test("two different-schema datasets land under one coverage root") {
     val (tmp, bucket, lock, runs, sleep, now) = mkHarness()
     val cfg = Config("landing_multi", "multi",
@@ -71,12 +81,10 @@ class GenericLandingSpec extends AnyFunSuite {
     val finsFetch: LandingJob.RowFetch = (d, _) =>
       (200, Seq(finsRow("7203", d, "", 10L),
         finsRow("6758", d, "ok", 20L)), None)
-    assert(LandingJob.runDataset(spark, lock, runs, cfg, bars,
-      Seq("2024-06-03"), barsFetch, bucket, sleep, nowMs = now)
-      .toOption.get.map(_.status) == Seq("success"))
-    assert(LandingJob.runDataset(spark, lock, runs, cfg, fins,
-      Seq("2024-06-03"), finsFetch, bucket, sleep, nowMs = now)
-      .toOption.get.map(_.status) == Seq("success"))
+    assert(landOne(lock, runs, cfg, bars, Seq("2024-06-03"), barsFetch,
+      bucket, sleep, now).map(_.status) == Seq("success"))
+    assert(landOne(lock, runs, cfg, fins, Seq("2024-06-03"), finsFetch,
+      bucket, sleep, now).map(_.status) == Seq("success"))
 
     // each dataset's table has its own root, schema, and rows
     val barsT = LandingJob.readLanding(spark, cfg.landingRoot, bars).get
@@ -137,9 +145,8 @@ class GenericLandingSpec extends AnyFunSuite {
         (200, Seq(Row("7203", d, 101.0)), None)
       case other => fail(s"unexpected cursor $other")
     }
-    val out = LandingJob.runDataset(spark, lock, runs, cfg, ds,
-      Seq("2024-06-03"), fetch, bucket, sleep, nowMs = now)
-      .toOption.get.head
+    val out = landOne(lock, runs, cfg, ds, Seq("2024-06-03"), fetch,
+      bucket, sleep, now).head
     assert(out.status == "success")
     assert(out.rows == 2, "manifest must count the DEDUPED figure")
     val t = LandingJob.readLanding(spark, cfg.landingRoot, ds).get
@@ -216,9 +223,8 @@ class GenericLandingSpec extends AnyFunSuite {
         s"$tmp/$sub/landing", s"$tmp/$sub/coverage")
       val ds = Dataset("bars", barsSchema, Seq("code"),
         batchSize = batchSize, transform = dropOdd)
-      val out = LandingJob.runDataset(spark, lock, runs, cfg, ds,
-        Seq("2024-06-03"), fetch, bucket, sleep, nowMs = now)
-        .toOption.get.head
+      val out = landOne(lock, runs, cfg, ds, Seq("2024-06-03"), fetch,
+        bucket, sleep, now).head
       val landed = LandingJob.readLanding(spark, cfg.landingRoot, ds).get
         .select(col("code"), col("close"))
         .collect().map(r => (r.getString(0), r.getDouble(1))).toSet
@@ -235,10 +241,9 @@ class GenericLandingSpec extends AnyFunSuite {
     Upsert.rmTree(tmp.toFile)
   }
 
-  test("a generic dataset named like the config refreshes via the data_<name> fallback") {
-    // the round-16 review footgun: coverage gating is keyed by NAME but
-    // the legacy refresh read the bare data dir — a generic dataset
-    // sharing cfg.dataset passed the gate then failed every stage
+  test("a generic dataset named like the config lands and refreshes under data_<name>") {
+    // coverage gating is keyed by the dataset NAME; the refresh must read
+    // the same dataset's data_<name> table the gate vouched for
     val (tmp, bucket, lock, runs, sleep, now) = mkHarness()
     val cfg = Config("landing_fb", "rows",
       s"$tmp/landing", s"$tmp/coverage")
@@ -250,13 +255,15 @@ class GenericLandingSpec extends AnyFunSuite {
     val ds = Dataset(cfg.dataset, schema, Seq("id"))
     val fetch: LandingJob.RowFetch = (d, _) =>
       (200, Seq(Row(1L, d, 10.0, "x"), Row(2L, d, 30.0, null)), None)
-    assert(LandingJob.runDataset(spark, lock, runs, cfg, ds,
-      Seq("2024-06-03"), fetch, bucket, sleep, nowMs = now)
-      .toOption.get.head.status == "success")
-    // the landed table sits under data_rows, NOT the legacy data dir
-    assert(!new java.io.File(s"${cfg.landingRoot}/data").exists())
+    assert(landOne(lock, runs, cfg, ds, Seq("2024-06-03"), fetch, bucket,
+      sleep, now).head.status == "success")
+    // the landed table sits under data_rows, and nothing else is written
+    // beside it but the staging root
+    assert(new java.io.File(s"${cfg.landingRoot}/data_rows").isDirectory)
+    assert(new java.io.File(cfg.landingRoot).list().toSet
+      .subsetOf(Set("data_rows", "stage")))
     val out = graft.jobs.DailyRefreshJob.runRefreshForLandedDate(
-      spark, lock, runs, cfg, "2024-06-03", s"$tmp/refresh", "v1")
+      spark, lock, runs, cfg, ds, "2024-06-03", s"$tmp/refresh", "v1")
     val stages = out.fold(e => fail(s"refresh blocked: $e"), identity)
     assert(stages.forall(_.error.isEmpty), stages.toString)
     import spark.implicits._
@@ -287,9 +294,8 @@ class GenericLandingSpec extends AnyFunSuite {
         (200, page, next)
       }
     }
-    val first = LandingJob.runDataset(spark, lock, runs, cfg, ds,
-      Seq("2024-06-03"), fetch, bucket, sleep, nowMs = now)
-      .toOption.get.head
+    val first = landOne(lock, runs, cfg, ds, Seq("2024-06-03"), fetch,
+      bucket, sleep, now).head
     assert(first.status == "failed")
     // the failed attempt left no staging behind and no landed partition
     assert(!new java.io.File(s"${cfg.landingRoot}/stage/bars").exists() ||
@@ -306,8 +312,8 @@ class GenericLandingSpec extends AnyFunSuite {
     val plan = LandingJob.catchUpDatesFor(spark, cfg, "bars", cal, "day",
       java.sql.Date.valueOf("2024-06-03"), 10, 10)
     assert(plan == Seq("2024-06-03"))
-    val second = LandingJob.runDataset(spark, lock, runs, cfg, ds,
-      plan, fetch, bucket, sleep, nowMs = now).toOption.get.head
+    val second = landOne(lock, runs, cfg, ds, plan, fetch, bucket, sleep,
+      now).head
     assert(second.status == "success" && second.rows == 30)
     val rows = LandingJob.readLanding(spark, cfg.landingRoot, ds).get
       .select("code", "close").collect()

@@ -69,7 +69,8 @@ class JobsSpec extends AnyFunSuite {
       now += 8000L // stage runtime: would outlive the original TTL by s3
       Seq((name, 1L)).toDF("k", "v")
     }
-    val out = DailyRefreshJob.runLocked(spark, lock,
+    val out = DailyRefreshJob.runClaimed(spark, lock,
+      new RunLedger(nowMs = () => now), "2024-06-03",
       "/root/testdata/sf0.001", root, "v1", ttlSeconds = ttl,
       stages = Some(Seq(stage("s1"), stage("s2"), stage("s3"), stage("s4"))))
     // s4 starts at t=24s — the t=0 acquire's lease (until 10s) is long
@@ -86,16 +87,19 @@ class JobsSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("refresh_lock2").toFile.getAbsolutePath
     val lock = new graft.sources.JobLock(
       Files.createTempDirectory("refresh_locks2"))
+    val runs = new RunLedger()
     val token = lock.acquire("daily_refresh").toOption.get
     var ran = false
-    val out = DailyRefreshJob.runLocked(spark, lock,
+    val out = DailyRefreshJob.runClaimed(spark, lock, runs, "2024-06-03",
       "/root/testdata/sf0.001", root, "v1",
       stages = Some(Seq("s1" -> { () => ran = true; Seq(1).toDF("x") })))
     assert(out.isLeft && !ran, "a held lease must reject before any stage")
+    assert(runs.run("daily_refresh", "2024-06-03").isEmpty,
+      "a rejected start must not claim the date")
     lock.release("daily_refresh", token)
     // stage failures are continue-on-error StageResults, and the lease
     // is still released afterwards
-    val out2 = DailyRefreshJob.runLocked(spark, lock,
+    val out2 = DailyRefreshJob.runClaimed(spark, lock, runs, "2024-06-04",
       "/root/testdata/sf0.001", root, "v1",
       stages = Some(Seq("boom" -> { () => sys.error("stage exploded") })))
     assert(out2.isRight && out2.toOption.get.head.error.isDefined)
@@ -170,6 +174,31 @@ class JobsSpec extends AnyFunSuite {
     // the hijacker (current attempt) completes normally
     val b = hijack.get
     assert(runs.complete(b.runId, b.attemptId.get, "success"))
+  }
+
+  test("claimed refresh: retainVersions pins version dirs at retain+2 over a daily cadence") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("refresh_retain").toFile.getAbsolutePath
+    val lock = new graft.sources.JobLock(
+      Files.createTempDirectory("refresh_retain_locks"))
+    val runs = new RunLedger()
+    val days = (3 to 8).map(d => f"2024-06-$d%02d")
+    days.foreach { d =>
+      // a custom chain reads no snapshot dir: sfDir is unused
+      val out = DailyRefreshJob.runClaimed(spark, lock, runs, d,
+        sfDir = "", outRoot = root, version = s"d$d",
+        stages = Some(Seq("s" -> (() => Seq(d).toDF("day")))),
+        retainVersions = Some(1))
+      assert(out.isRight && out.toOption.get.forall(_.error.isEmpty))
+    }
+    // current + the name-pinned spared previous + 1 superseded
+    val vDirs = new java.io.File(s"$root/s").listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("v=")).map(_.getName)
+    assert(vDirs.length == 3, vDirs.mkString(","))
+    assert(vDirs.contains(s"v=d${days.last}") &&
+      vDirs.contains(s"v=d${days(days.length - 2)}"))
+    assert(graft.operators.Upsert.resolvePublished(s"$root/s")
+      .exists(_.endsWith(s"v=d${days.last}")))
   }
 
   test("pruneSnapshots graceKeep retains the N most recent superseded versions") {

@@ -1,10 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.jobs.LandingJob
-import graft.jobs.LandingJob.ApiRow
 import graft.operators.Upsert
 import graft.sources.{Coverage, Ingest, JobLock, RunLedger}
 
@@ -28,6 +29,12 @@ import graft.sources.{Coverage, Ingest, JobLock, RunLedger}
 class LandingJobSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
+  /** The landed row shape: (id, target_date, value), keyed on id. */
+  private val ds = LandingJob.Dataset("orders", StructType(Seq(
+    StructField("id", LongType, nullable = false),
+    StructField("target_date", StringType, nullable = false),
+    StructField("value", DoubleType, nullable = false))), Seq("id"))
+
   /** Deterministic fake paginated endpoint: 06-03 has three pages whose
     * second page fails 429 then 503 ONCE EACH (globally); 06-04 is a
     * genuinely empty day; 06-05 is a hard 500 until `day5Ok`. */
@@ -37,23 +44,23 @@ class LandingJobSpec extends AnyFunSuite {
     val calls = scala.collection.mutable.ArrayBuffer
       .empty[(String, Option[String])]
     def fetch(date: String, cursor: Option[String])
-        : (Int, Seq[ApiRow], Option[String]) = {
+        : (Int, Seq[Row], Option[String]) = {
       calls += ((date, cursor))
       (date, cursor) match {
         case ("2024-06-03", None) =>
-          (200, Seq(ApiRow(1L, date, 1.5), ApiRow(2L, date, 3.0)),
+          (200, Seq(Row(1L, date, 1.5), Row(2L, date, 3.0)),
             Some("p2"))
         case ("2024-06-03", Some("p2")) => p2fails match {
           case h :: t => p2fails = t; (h, Nil, None)
           case Nil =>
-            (200, Seq(ApiRow(3L, date, 4.5), ApiRow(4L, date, 6.0)),
+            (200, Seq(Row(3L, date, 4.5), Row(4L, date, 6.0)),
               Some("p3"))
         }
         case ("2024-06-03", Some("p3")) =>
-          (200, Seq(ApiRow(5L, date, 7.5)), None)
+          (200, Seq(Row(5L, date, 7.5)), None)
         case ("2024-06-04", None) => (200, Nil, None) // checked-empty day
         case ("2024-06-05", None) =>
-          if (day5Ok) (200, Seq(ApiRow(6L, date, 9.0)), None)
+          if (day5Ok) (200, Seq(Row(6L, date, 9.0)), None)
           else (500, Nil, None)
         case other => fail(s"unexpected fetch: $other")
       }
@@ -75,9 +82,19 @@ class LandingJobSpec extends AnyFunSuite {
       (d: Long) => { schedule += (("retry", d)); now += d })
   }
 
+  /** One landing pass of `ds` over `dates` (a one-entry schedule). */
+  private def land(lock: JobLock, runs: RunLedger, cfg: LandingJob.Config,
+                   dates: Seq[String], fetch: LandingJob.RowFetch,
+                   bucket: Ingest.TokenBucket, retrySleep: Long => Unit,
+                   nowF: () => Long)
+      : Either[String, Seq[LandingJob.DateResult]] =
+    LandingJob.runSchedule(spark, lock, runs, cfg,
+      Seq(LandingJob.Scheduled(ds, fetch, dates)), bucket,
+      retrySleepMs = retrySleep, nowMs = nowF).map(_.map(_._2))
+
   private def landingRows(cfg: LandingJob.Config): Seq[(Long, String, Double)] = {
     import spark.implicits._
-    LandingJob.readLanding(spark, cfg.landingRoot) match {
+    LandingJob.readLanding(spark, cfg.landingRoot, ds) match {
       case None => Seq.empty
       case Some(t) => t
         .select(col("id"), col("target_date").cast("string"), col("value"))
@@ -89,7 +106,7 @@ class LandingJobSpec extends AnyFunSuite {
   private def partitionFiles(cfg: LandingJob.Config, date: String)
       : Map[String, (Long, String)] = {
     val dir = new java.io.File(
-      s"${cfg.landingRoot}/data/target_date=$date")
+      s"${cfg.landingRoot}/data_${ds.name}/target_date=$date")
     Option(dir.listFiles()).getOrElse(Array())
       .filter(f => f.isFile && !f.getName.startsWith("_")
         && !f.getName.startsWith("."))
@@ -116,8 +133,8 @@ class LandingJobSpec extends AnyFunSuite {
     val (cfg, bucket, lock, schedule, nowF, retrySleep) = mkHarness()
     val ep = new Endpoint
     val runs = new RunLedger(nowMs = nowF)
-    val out = LandingJob.run(spark, lock, runs, cfg, dates, ep.fetch,
-      bucket, retrySleepMs = retrySleep, nowMs = nowF)
+    val out = land(lock, runs, cfg, dates, ep.fetch, bucket, retrySleep,
+      nowF)
     val results = out.toOption.get
     assert(results.map(r => (r.date, r.status, r.rows, r.pages)) == Seq(
       ("2024-06-03", "success", 5L, 3),
@@ -164,8 +181,9 @@ class LandingJobSpec extends AnyFunSuite {
         lit(java.sql.Date.valueOf("2024-06-03")),
         lit(java.sql.Date.valueOf("2024-06-05")))).as("day"))
       .withColumn("is_business_day", lit(true))
-    val plan = LandingJob.catchUpDates(spark, cfg, calendar, "day",
-      java.sql.Date.valueOf("2024-06-05"), lookbackDays = 10, maxDays = 10)
+    val plan = LandingJob.catchUpDatesFor(spark, cfg, ds.name, calendar,
+      "day", java.sql.Date.valueOf("2024-06-05"), lookbackDays = 10,
+      maxDays = 10)
     assert(plan == Seq("2024-06-05"),
       "checked-empty 06-04 must be covered; failed 06-05 must retry")
   }
@@ -174,15 +192,14 @@ class LandingJobSpec extends AnyFunSuite {
     val (cfg, bucket, lock, schedule, nowF, retrySleep) = mkHarness()
     val ep = new Endpoint
     val runs = new RunLedger(nowMs = nowF)
-    LandingJob.run(spark, lock, runs, cfg, dates, ep.fetch, bucket,
-      retrySleepMs = retrySleep, nowMs = nowF)
+    land(lock, runs, cfg, dates, ep.fetch, bucket, retrySleep, nowF)
     val before = landingRows(cfg)
     val callsBefore = ep.calls.size
 
     // (a) SAME ledger: successful dates skip via already_executed —
     // only the failed date re-fetches (and fails again)
-    val out2 = LandingJob.run(spark, lock, runs, cfg, dates, ep.fetch,
-      bucket, retrySleepMs = retrySleep, nowMs = nowF).toOption.get
+    val out2 = land(lock, runs, cfg, dates, ep.fetch, bucket, retrySleep,
+      nowF).toOption.get
     assert(out2.map(r => (r.date, r.status)) == Seq(
       ("2024-06-03", "skipped"), ("2024-06-04", "skipped"),
       ("2024-06-05", "failed")))
@@ -193,9 +210,8 @@ class LandingJobSpec extends AnyFunSuite {
 
     // (b) FRESH ledger (the stale-success re-refresh shape): everything
     // re-fetches through the keyed upsert; landing content is IDENTICAL
-    val out3 = LandingJob.run(spark, lock, new RunLedger(nowMs = nowF),
-      cfg, dates, ep.fetch, bucket, retrySleepMs = retrySleep,
-      nowMs = nowF).toOption.get
+    val out3 = land(lock, new RunLedger(nowMs = nowF), cfg, dates,
+      ep.fetch, bucket, retrySleep, nowF).toOption.get
     assert(out3.map(_.status) == Seq("success", "success", "failed"))
     assert(landingRows(cfg) == before,
       "full re-fetch re-run changed the landing table — upsert not idempotent")
@@ -203,8 +219,8 @@ class LandingJobSpec extends AnyFunSuite {
     // (c) source heals: the SAME ledger reclaims the failed day
     // (reason=failed), lands its row, and catch-up drains to empty
     ep.day5Ok = true
-    val out4 = LandingJob.run(spark, lock, runs, cfg, dates, ep.fetch,
-      bucket, retrySleepMs = retrySleep, nowMs = nowF).toOption.get
+    val out4 = land(lock, runs, cfg, dates, ep.fetch, bucket, retrySleep,
+      nowF).toOption.get
     assert(out4.map(r => (r.date, r.status)) == Seq(
       ("2024-06-03", "skipped"), ("2024-06-04", "skipped"),
       ("2024-06-05", "success")))
@@ -214,7 +230,7 @@ class LandingJobSpec extends AnyFunSuite {
         lit(java.sql.Date.valueOf("2024-06-03")),
         lit(java.sql.Date.valueOf("2024-06-05")))).as("day"))
       .withColumn("is_business_day", lit(true))
-    assert(LandingJob.catchUpDates(spark, cfg, calendar, "day",
+    assert(LandingJob.catchUpDatesFor(spark, cfg, ds.name, calendar, "day",
       java.sql.Date.valueOf("2024-06-05"), 10, 10).isEmpty)
   }
 
@@ -225,15 +241,13 @@ class LandingJobSpec extends AnyFunSuite {
       .createTempDirectory("graft_landing_rl").resolve("runs.tsv")
     def mkLedger() = new RunLedger(nowMs = nowF,
       persistTo = Some(ledgerFile))
-    LandingJob.run(spark, lock, mkLedger(), cfg, dates, ep.fetch, bucket,
-      retrySleepMs = retrySleep, nowMs = nowF)
+    land(lock, mkLedger(), cfg, dates, ep.fetch, bucket, retrySleep, nowF)
     val before = landingRows(cfg)
     val callsBefore = ep.calls.size
     // the scheduler restarts with a FRESH incarnation on the same file:
     // completed dates skip from the DURABLE state, the failed one retries
-    val out = LandingJob.run(spark, lock, mkLedger(), cfg, dates,
-      ep.fetch, bucket, retrySleepMs = retrySleep, nowMs = nowF)
-      .toOption.get
+    val out = land(lock, mkLedger(), cfg, dates, ep.fetch, bucket,
+      retrySleep, nowF).toOption.get
     assert(out.map(r => (r.date, r.status)) == Seq(
       ("2024-06-03", "skipped"), ("2024-06-04", "skipped"),
       ("2024-06-05", "failed")))
@@ -249,15 +263,14 @@ class LandingJobSpec extends AnyFunSuite {
     // the endpoint hangs long enough for ANOTHER worker to reclaim the
     // date (clock jumps past runningStaleAfterSec inside the fetch),
     // then answers normally — the zombie shape
-    val fetch: LandingJob.Fetch = (date, _) => {
+    val fetch: LandingJob.RowFetch = (date, _) => {
       retrySleep(3601L * 1000L) // the fetch "hangs" 1h+
       hijacked = Some(runs.claim(cfg.jobName, date,
         runningStaleAfterSec = Some(3600L))) // worker B takes over
-      (200, Seq(ApiRow(1L, date, 1.0)), None)
+      (200, Seq(Row(1L, date, 1.0)), None)
     }
-    val out = LandingJob.run(spark, lock, runs, cfg, Seq("2024-06-03"),
-      fetch, bucket, retrySleepMs = retrySleep, nowMs = nowF)
-      .toOption.get
+    val out = land(lock, runs, cfg, Seq("2024-06-03"), fetch, bucket,
+      retrySleep, nowF).toOption.get
     assert(hijacked.exists(c => c.claimed && c.reason == "stale_running"))
     assert(out.head.status == "fenced", s"got ${out.head}")
     // the zombie published NOTHING: no landing table, and the manifest
@@ -272,14 +285,13 @@ class LandingJobSpec extends AnyFunSuite {
   test("landing write is partition-scoped: landing a date leaves every other partition byte-identical") {
     val (cfg, bucket, lock, _, nowF, retrySleep) = mkHarness()
     // any-date endpoint: 3 rows per date, ids disjoint per date
-    val fetch: LandingJob.Fetch = (date, _) => {
+    val fetch: LandingJob.RowFetch = (date, _) => {
       val base = date.takeRight(2).toLong * 100L
-      (200, (0 until 3).map(i => ApiRow(base + i, date, base + i * 0.5)), None)
+      (200, (0 until 3).map(i => Row(base + i, date, base + i * 0.5)), None)
     }
-    def landDates(ds: Seq[String]): Unit =
-      assert(LandingJob.run(spark, lock, new RunLedger(nowMs = nowF), cfg,
-        ds, fetch, bucket, retrySleepMs = retrySleep, nowMs = nowF)
-        .toOption.get.forall(_.status == "success"))
+    def landDates(dd: Seq[String]): Unit =
+      assert(land(lock, new RunLedger(nowMs = nowF), cfg, dd, fetch,
+        bucket, retrySleep, nowF).toOption.get.forall(_.status == "success"))
 
     landDates(Seq("2024-06-03", "2024-06-04"))
     val d3 = partitionFiles(cfg, "2024-06-03")
@@ -313,18 +325,16 @@ class LandingJobSpec extends AnyFunSuite {
     val (cfg, bucket, lock, _, nowF, retrySleep) = mkHarness()
     val ep = new Endpoint
     val token = lock.acquire("landing_orders").toOption.get
-    val out = LandingJob.run(spark, lock, new RunLedger(nowMs = nowF),
-      cfg, dates, ep.fetch, bucket, retrySleepMs = retrySleep,
-      nowMs = nowF)
+    val out = land(lock, new RunLedger(nowMs = nowF), cfg, dates,
+      ep.fetch, bucket, retrySleep, nowF)
     assert(out.isLeft)
     assert(ep.calls.isEmpty, "a rejected start must not touch the endpoint")
-    assert(LandingJob.readLanding(spark, cfg.landingRoot).isEmpty &&
+    assert(LandingJob.readLanding(spark, cfg.landingRoot, ds).isEmpty &&
       Upsert.resolvePublished(cfg.coverageRoot).isEmpty,
       "a rejected start must not write")
     // the holder finishes; the next scheduled run proceeds normally
     lock.release("landing_orders", token)
-    assert(LandingJob.run(spark, lock, new RunLedger(nowMs = nowF), cfg,
-      dates, ep.fetch, bucket, retrySleepMs = retrySleep,
-      nowMs = nowF).isRight)
+    assert(land(lock, new RunLedger(nowMs = nowF), cfg, dates, ep.fetch,
+      bucket, retrySleep, nowF).isRight)
   }
 }

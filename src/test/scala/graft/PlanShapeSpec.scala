@@ -273,8 +273,8 @@ class PlanShapeSpec extends AnyFunSuite {
     // the O(day) refresh claim, structurally: the landing table is
     // date-partitioned, and a refresh stage's scan must carry the
     // target_date in PartitionFilters and select exactly one of the
-    // landed partition dirs (ProbeLanding proves the same by counts at
-    // sf1 volume; this pins the plan so a layout regression fails fast)
+    // landed partition dirs (this pins the plan so a layout regression
+    // fails fast)
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val tmp = java.nio.file.Files.createTempDirectory("graft_planland")
@@ -293,11 +293,12 @@ class PlanShapeSpec extends AnyFunSuite {
     val fetch: graft.jobs.LandingJob.RowFetch = (d, _) =>
       (200, Seq(Row(1L, d, 1.0), Row(2L, d, 2.0)), None)
     val dates = Seq("2024-06-03", "2024-06-04", "2024-06-05")
-    assert(graft.jobs.LandingJob.runDataset(spark, lock, runs, cfg, ds,
-      dates, fetch, bucket, now += _, nowMs = () => now)
-      .toOption.get.forall(_.status == "success"))
+    assert(graft.jobs.LandingJob.runSchedule(spark, lock, runs, cfg,
+      Seq(graft.jobs.LandingJob.Scheduled(ds, fetch, dates)), bucket,
+      now += _, nowMs = () => now)
+      .toOption.get.forall(_._2.status == "success"))
     val stage = graft.jobs.DailyRefreshJob.landingStages(spark,
-      cfg.landingRoot, "2024-06-04", cfg.dataset).head._2()
+      cfg.landingRoot, "2024-06-04", ds).head._2()
     val plan = stage.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("2024-06-04"),
       "target_date must reach the scan as a partition filter:\n" +

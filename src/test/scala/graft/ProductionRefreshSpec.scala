@@ -131,9 +131,9 @@ class ProductionRefreshSpec extends AnyFunSuite {
                       lock: JobLock, runs: RunLedger,
                       sleep: Long => Unit, now: () => Long,
                       ds: Dataset): Unit = {
-    val r = LandingJob.runDataset(spark, lock, runs, cfg, ds, Seq(D),
-      pagedFetch(slices(ds.name)), bucket, sleep, nowMs = now)
-      .toOption.get.head
+    val r = LandingJob.runSchedule(spark, lock, runs, cfg,
+      Seq(LandingJob.Scheduled(ds, pagedFetch(slices(ds.name)), Seq(D))),
+      bucket, sleep, nowMs = now).toOption.get.head._2
     assert(r.status == "success", r.toString)
   }
 

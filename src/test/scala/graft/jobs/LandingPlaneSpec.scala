@@ -23,6 +23,11 @@ import graft.sources.Coverage
   *     dates) window, and a publish still writes the COMPLETE ledger
   *     (remainder rows ride cluster-side), so planning output is
   *     unchanged.
+  *  3. LEDGER PRUNE vs A FOREIGN PUBLISHER — a second writer sharing the
+  *     coverage root writes its complete `v=` snapshot before it flips
+  *     `_PUBLISHED`; a landing run publishing in that window must not
+  *     prune the unflipped dir, or the foreign flip would point at a
+  *     deleted snapshot.
   */
 class LandingPlaneSpec extends AnyFunSuite {
   lazy val spark = graft.SparkTestSession.spark
@@ -86,6 +91,58 @@ class LandingPlaneSpec extends AnyFunSuite {
       val added = out.join(hist, hist.columns.toSeq, "left_anti").collect()
       assert(added.head.getString(0) == "ds7" &&
         added.head.getDate(1) == day)
+    } finally Upsert.rmTree(tmp.toFile)
+  }
+
+  test("a landing publish spares a foreign writer's unflipped ledger snapshot") {
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_lprune")
+    try {
+      val cfg = LandingJob.Config("lprune_job", "rows",
+        s"$tmp/landing", s"$tmp/coverage")
+      val ds = LandingJob.Dataset(cfg.dataset, StructType(Seq(
+        StructField("id", LongType, nullable = false),
+        StructField("target_date", StringType, nullable = false),
+        StructField("value", DoubleType, nullable = false))), Seq("id"))
+      var now = 0L
+      val bucket = new graft.sources.Ingest.TokenBucket(600, 1L,
+        nowMs = () => now, sleepMs = now += _)
+      val lock = new graft.sources.JobLock(tmp.resolve("locks"))
+      val runs = new graft.sources.RunLedger(nowMs = () => now)
+      val fetch: LandingJob.RowFetch = (d, _) =>
+        (200, Seq(Row(1L, d, 1.0)), None)
+      def land(date: String): Unit =
+        assert(LandingJob.runSchedule(spark, lock, runs, cfg,
+          Seq(LandingJob.Scheduled(ds, fetch, Seq(date))), bucket,
+          now += _, nowMs = () => now)
+          .toOption.get.forall(_._2.status == "success"))
+      land("2024-06-03")
+      // the foreign writer: a COMPLETE ledger snapshot (the current rows
+      // plus its own), written under the root but not yet flipped
+      val foreignRow = Row("other", java.sql.Date.valueOf("2024-06-10"),
+        Coverage.Success, 7L, 0, Long.box(1L), "foreign_run")
+      val foreign = spark.read.parquet(
+          Upsert.resolvePublished(cfg.coverageRoot).get)
+        .unionByName(spark.createDataFrame(Seq(foreignRow).asJava,
+          Coverage.emptyLedger(spark).schema))
+        .coalesce(1).localCheckpoint()
+      val foreignDir = new java.io.File(s"${cfg.coverageRoot}/v=foreign")
+      foreign.write.parquet(foreignDir.toString)
+      // this run publishes twice (claim placeholder, success) while the
+      // foreign flip is pending
+      land("2024-06-04")
+      assert(foreignDir.isDirectory,
+        "the landing publish pruned a written-but-unflipped snapshot")
+      // the foreign flip lands on an intact snapshot
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"${cfg.coverageRoot}/_PUBLISHED"), "foreign")
+      val read = spark.read.parquet(
+        Upsert.resolvePublished(cfg.coverageRoot).get)
+      assert(read.count() == 2)
+      assert(read.filter(col("dataset") === "other").count() == 1)
+      assert(read.join(foreign, foreign.columns.toSeq, "left_anti")
+        .count() == 0)
     } finally Upsert.rmTree(tmp.toFile)
   }
 }
