@@ -11,11 +11,12 @@ import graft.queries.{AnalyticsQueries, TextQueries}
   * derived-refresh chain, `scripts/cron/cron-a-direct.ts:115-147`).
   *
   * Each derived stage reads only tables written by earlier stages; every
-  * write is an atomic snapshot publication ([[Upsert.publishSnapshot]]) so
-  * a crash mid-chain never exposes a partial snapshot — the reference's
-  * `_PUBLISHED`-marker discipline (refresh-technical.ts:181-196).
-  * Re-running a stage with the same inputs overwrites the same version
-  * directory: the job is idempotent end-to-end.
+  * write is staged, then published by a directory move and a pointer flip
+  * ([[Upsert.stageSnapshot]]) so a crash mid-chain never exposes a
+  * partial snapshot — the reference's `_PUBLISHED`-marker discipline
+  * (refresh-technical.ts:181-196). Re-running a stage with the same
+  * inputs replaces the same version directory: the job is idempotent
+  * end-to-end.
   *
   * The continue-on-error chain semantics of cron-a.yml are preserved:
   * each stage is attempted independently and failures are reported, not
@@ -25,22 +26,6 @@ object DailyRefreshJob {
 
   final case class StageResult(name: String, rows: Long,
                                error: Option[String])
-
-  /** Publish gate (refresh-technical.ts:98-112,129-135): a derived
-    * snapshot only publishes when it covers at least `minCoverage` of the
-    * entity universe — two scalar counts and a guard, never a collect of
-    * the data itself. */
-  def coverageGate(snapshot: org.apache.spark.sql.DataFrame,
-                   universe: org.apache.spark.sql.DataFrame,
-                   minCoverage: Double): Either[String, Long] = {
-    val got = snapshot.count()
-    val want = universe.count()
-    if (want == 0) Left("empty universe")
-    else if (got.toDouble / want < minCoverage)
-      Left(f"coverage ${got.toDouble / want}%.3f below $minCoverage%.2f " +
-        s"($got of $want entities)")
-    else Right(got)
-  }
 
   /** The production chain: each stage reads only tables written by
     * earlier stages (or the snapshot dir). */
@@ -60,10 +45,27 @@ object DailyRefreshJob {
       "neardup_pairs" -> (() => TextQueries.q15NearDupPairs(spark, sfDir)),
     )
 
+  /** Publish gate (refresh-technical.ts:98-112,129-135): an
+    * entity-keyed snapshot only publishes when it covers at least this
+    * share of the entity universe. */
+  private val MinCoverage = 0.8
+  private val gatedStages = Set("screen_metrics", "factor_vectors",
+    "per_bands")
+
   /** Run the derived-analytics chain over a testdata snapshot dir,
     * publishing each stage under `outRoot/<stage>/v=<version>`.
-    * `afterStage` observes each completed stage — [[runClaimed]] hangs
-    * the lease heartbeat there. */
+    *
+    * Each stage is evaluated once, by its write: the rows go into an
+    * attempt-scoped staging dir ([[Upsert.stageSnapshot]]) while an
+    * observation counts them — no count job, no read-back. An entity-keyed stage then meets the
+    * coverage gate — observed rows against the universe count, taken
+    * once per run — and a blocked stage's staging dir is deleted, so
+    * the published pointer and every `v=*` dir stay as they were. A
+    * passing stage runs `publishGuard`, moves the staging dir to
+    * `v=<version>`, flips `_PUBLISHED`, and applies `retainVersions`.
+    * `StageResult.rows` is the observed count. `afterStage` observes
+    * each completed stage — [[runClaimed]] hangs the lease heartbeat
+    * there. */
   def run(spark: SparkSession, sfDir: String, outRoot: String,
           version: String,
           stages: Option[Seq[(String, () => DataFrame)]] = None,
@@ -79,12 +81,11 @@ object DailyRefreshJob {
     // chains (e.g. landing-derived stages) may run against a root that
     // has no customer table at all
     lazy val universe = graft.Tables.customer(spark, sfDir)
-      .select(org.apache.spark.sql.functions.col("c_custkey"))
+      .select(org.apache.spark.sql.functions.col("c_custkey")).count()
     // once the guard trips (attempt superseded) the chain is DEAD: no
-    // later stage may compute (the gated stages' coverage counts are
-    // real Spark jobs), publish, or keep extending the lease — a zombie
-    // that walks its remaining stages delays the rightful owner for the
-    // whole chain length
+    // later stage may compute, publish, or keep extending the lease — a
+    // zombie that walks its remaining stages delays the rightful owner
+    // for the whole chain length
     var fenced = false
     chain.map { case (name, mk) =>
       if (fenced)
@@ -92,43 +93,45 @@ object DailyRefreshJob {
         StageResult(name, -1, Some("skipped: attempt superseded"))
       else {
         val r = try {
-          val df = mk()
-          // entity-keyed snapshots must clear the coverage gate first
-          if (name == "screen_metrics" || name == "factor_vectors" ||
-              name == "per_bands") {
-            coverageGate(df, universe, minCoverage = 0.8) match {
-              case Left(reason) =>
-                throw new IllegalStateException(s"publish blocked: $reason")
-              case Right(_) =>
+          val staged = Upsert.stageSnapshot(mk(), s"$outRoot/$name")
+          try {
+            if (gatedStages(name)) {
+              val got = staged.rows
+              if (universe == 0)
+                throw new IllegalStateException(
+                  "publish blocked: empty universe")
+              if (got.toDouble / universe < MinCoverage)
+                throw new IllegalStateException(
+                  f"publish blocked: coverage ${got.toDouble / universe}%.3f " +
+                    f"below $MinCoverage%.2f ($got of $universe entities)")
             }
-          }
-          // the guard runs IMMEDIATELY before the publish (stage
-          // DataFrames are lazy — probing any earlier leaves the whole
-          // stage compute + write inside the zombie window)
-          publishGuard().foreach { reason =>
-            fenced = true
-            throw new IllegalStateException(reason)
-          }
-          // capture the about-to-be-superseded version BY NAME before
-          // the flip: mtimes can tie at publish rates below the fs
-          // timestamp granularity, and graceKeep's recency sort alone
-          // could then prune the version a concurrent reader resolved
-          // just before the pointer moved (the publishCoverage rule)
-          val prevPublished = Upsert.resolvePublished(s"$outRoot/$name")
-            .map(p => new java.io.File(p).getName).toSet
-          Upsert.publishSnapshot(df, s"$outRoot/$name", version)
-          // under daily cadence versioned snapshots accumulate one
-          // v=* dir per day per stage forever; callers that don't want
-          // the full audit history bound retention. Steady state is
-          // retain+2 dirs: current + the name-pinned spared previous +
-          // graceKeep=N superseded (the spare is IN ADDITION to
-          // graceKeep — r16 ADVICE; readers of the just-flipped pointer
-          // keep their grace window)
-          retainVersions.foreach(n =>
-            Upsert.pruneSnapshots(s"$outRoot/$name", graceKeep = n,
-              spare = prevPublished))
-          val published = Upsert.resolvePublished(s"$outRoot/$name").get
-          StageResult(name, spark.read.parquet(published).count(), None)
+            // the guard runs IMMEDIATELY before the publish: the stage
+            // is computed and staged by now, and a superseded attempt
+            // must not move it into place
+            publishGuard().foreach { reason =>
+              fenced = true
+              throw new IllegalStateException(reason)
+            }
+            // capture the about-to-be-superseded version BY NAME before
+            // the flip: mtimes can tie at publish rates below the fs
+            // timestamp granularity, and graceKeep's recency sort alone
+            // could then prune the version a concurrent reader resolved
+            // just before the pointer moved (the publishCoverage rule)
+            val prevPublished = Upsert.resolvePublished(s"$outRoot/$name")
+              .map(p => new java.io.File(p).getName).toSet
+            staged.publish(version)
+            // under daily cadence versioned snapshots accumulate one
+            // v=* dir per day per stage forever; callers that don't want
+            // the full audit history bound retention. Steady state is
+            // retain+2 dirs: current + the name-pinned spared previous +
+            // graceKeep=N superseded (the spare is IN ADDITION to
+            // graceKeep — r16 ADVICE; readers of the just-flipped pointer
+            // keep their grace window)
+            retainVersions.foreach(n =>
+              Upsert.pruneSnapshots(s"$outRoot/$name", graceKeep = n,
+                spare = prevPublished))
+            StageResult(name, staged.rows, None)
+          } finally staged.discard()
         } catch {
           case e: Throwable =>
             StageResult(name, -1,
@@ -181,7 +184,7 @@ object DailyRefreshJob {
                              datasets: Seq[String]): Boolean = {
     import org.apache.spark.sql.functions._
     Upsert.resolvePublished(cfg.coverageRoot).exists { dir =>
-      spark.read.parquet(dir)
+      graft.Tables.readParquet(spark, dir)
         .filter(col("dataset").isin(datasets: _*) &&
           col("target_date") === to_date(lit(targetDate)) &&
           col("status") === lit(graft.sources.Coverage.Success))

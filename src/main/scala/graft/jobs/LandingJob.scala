@@ -107,9 +107,9 @@ object LandingJob {
   final case class DateResult(date: String, status: String, rows: Long,
                               pages: Int, error: Option[String])
 
-  private def readLedger(s: SparkSession, root: String): DataFrame =
+  private[jobs] def readLedger(s: SparkSession, root: String): DataFrame =
     Upsert.resolvePublished(root)
-      .map(s.read.parquet(_))
+      .map(graft.Tables.readParquet(s, _))
       .getOrElse(Coverage.emptyLedger(s))
 
   /** Write-through coverage-ledger buffer for ONE leased landing run
@@ -120,8 +120,11 @@ object LandingJob {
     * of the snapshot this same process just wrote plus the left-anti
     * merge shuffle. Durability and readers are untouched: every publish
     * is still a complete snapshot plus the atomic `_PUBLISHED` pointer
-    * flip, and cross-process planners ([[catchUpDatesFor]], q218-style)
-    * keep reading storage.
+    * flip, and cross-process planners ([[scheduleCatchUp]], q218-style)
+    * keep reading storage. Every ledger read — this buffer's load and
+    * re-sync, and the planners' — goes through [[graft.Tables.readParquet]]:
+    * the snapshot is one file, and its footer gives the schema without a
+    * Spark job.
     *
     * Round-18 hardening of the two r17 caveats:
     *
@@ -363,7 +366,10 @@ object LandingJob {
       * element is the deduped count when it is already known
       * driver-side (the one-chunk path — no count job needed). */
     def dedupedIncoming(): Option[(DataFrame, Option[Long])] = {
-      if (staged) { flush(); Some((dedupDf(s.read.parquet(stageDir)), None)) }
+      if (staged) {
+        flush()
+        Some((dedupDf(graft.Tables.readParquet(s, stageDir)), None))
+      }
       else if (buf.isEmpty) None
       else {
         // one-chunk path: last-wins dedup ON THE DRIVER (the rows are
@@ -404,7 +410,8 @@ object LandingJob {
     val p = new java.io.File(landingDataPath(root, ds))
     val real = Option(p.listFiles()).getOrElse(Array())
       .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
-    if (real.nonEmpty) Some(s.read.parquet(p.toString)) else None
+    if (real.nonEmpty) Some(graft.Tables.readParquet(s, p.toString))
+    else None
   }
 
   /** PARTITION-SCOPED idempotent landing write: upsert the date's rows
@@ -539,30 +546,33 @@ object LandingJob {
         finally lock.release(cfg.jobName, token)
     }
 
-  /** Plan catch-up ACROSS datasets from the shared coverage root:
-    * per-dataset missing/failed business days ([[Coverage.catchUpTargets]]),
-    * ordered by the given dataset priority, oldest dates first within a
-    * dataset — the order [[runSchedule]] executes. Datasets with
-    * nothing to heal are omitted. */
+  /** Plan catch-up ACROSS datasets from the shared coverage root: one
+    * ledger read and ONE query for every dataset
+    * ([[Coverage.catchUpPlan]] — per-dataset missing/failed business
+    * days, each dataset capped at `maxDays`), so the plan's job count does
+    * not grow with the number of datasets. The plan reads COVERAGE, not
+    * output presence. Ordered by the given dataset priority, oldest
+    * dates first within a dataset — the order [[runSchedule]] executes.
+    * Datasets with nothing to heal are omitted. */
   def scheduleCatchUp(s: SparkSession, cfg: Config,
                       datasets: Seq[String], calendar: DataFrame,
                       calDateCol: String, today: java.sql.Date,
                       lookbackDays: Int, maxDays: Int)
-      : Seq[(String, Seq[String])] =
-    datasets.map(d => d -> catchUpDatesFor(s, cfg, d, calendar,
-        calDateCol, today, lookbackDays, maxDays))
-      .filter(_._2.nonEmpty)
+      : Seq[(String, Seq[String])] = {
+    val planned = Coverage.catchUpPlan(readLedger(s, cfg.coverageRoot),
+        datasets, calendar, calDateCol, today, lookbackDays, maxDays)
+      .select(col("dataset"), col("target_day")).collect()
+      .groupMap(_.getString(0))(_.getDate(1))
+    datasets.distinct.flatMap(d => planned.get(d).map(days =>
+      d -> days.sortBy(_.getTime).map(_.toString).toSeq))
+  }
 
-  /** Per-dataset catch-up planning over the shared coverage root: the
-    * plan reads COVERAGE, not output presence. */
+  /** [[scheduleCatchUp]] for one dataset: its catch-up dates, oldest
+    * first. */
   def catchUpDatesFor(s: SparkSession, cfg: Config, dataset: String,
                       calendar: DataFrame, calDateCol: String,
                       today: java.sql.Date, lookbackDays: Int,
-                      maxDays: Int): Seq[String] = {
-    import s.implicits._
-    Coverage.catchUpTargets(readLedger(s, cfg.coverageRoot), dataset,
-      calendar, calDateCol, today, lookbackDays, maxDays)
-      .select(col("target_day")).as[java.sql.Date]
-      .collect().toSeq.map(_.toString)
-  }
+                      maxDays: Int): Seq[String] =
+    scheduleCatchUp(s, cfg, Seq(dataset), calendar, calDateCol, today,
+      lookbackDays, maxDays).flatMap(_._2)
 }

@@ -47,13 +47,64 @@ object Upsert {
   def publishSnapshot(df: DataFrame, root: String, version: String): String = {
     val dir = s"$root/v=$version"
     df.write.mode(SaveMode.Overwrite).parquet(dir)
+    flip(root, version)
+    dir
+  }
+
+  /** Atomically point `<root>/_PUBLISHED` at `version` — the one flip
+    * both publish paths use. */
+  private def flip(root: String, version: String): Unit = {
     val marker = new java.io.File(s"$root/_PUBLISHED")
     val tmp = new java.io.File(s"$root/_PUBLISHED.tmp")
     java.nio.file.Files.writeString(tmp.toPath, version)
     java.nio.file.Files.move(tmp.toPath, marker.toPath,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    dir
+  }
+
+  /** A snapshot written, counted, and not yet published: the rows sit in
+    * an attempt-scoped `_stage-<uuid>` dir under the root, which readers
+    * (they resolve `_PUBLISHED`) and [[pruneSnapshots]] (it only looks at
+    * `v=*`) never see. `rows` is counted during the write itself. Exactly
+    * one of [[publish]] or [[discard]] takes effect. */
+  final class Staged private[Upsert] (root: String, dir: java.io.File,
+                                       newRoot: Boolean, val rows: Long) {
+    /** Move the staged dir to `v=<version>` (replacing a previous write
+      * of the same version) and flip `_PUBLISHED` to it. */
+    def publish(version: String): String = {
+      val target = new java.io.File(s"$root/v=$version")
+      if (target.exists()) {
+        // move the old copy aside first so the replacement is one rename
+        val old = new java.io.File(s"${dir.getPath}.old")
+        java.nio.file.Files.move(target.toPath, old.toPath)
+        java.nio.file.Files.move(dir.toPath, target.toPath)
+        rmTree(old)
+      } else java.nio.file.Files.move(dir.toPath, target.toPath)
+      flip(root, version)
+      target.getPath
+    }
+
+    /** Delete the staged rows, and the root too when staging created it
+      * and it is still empty, so a discarded stage leaves no trace; a
+      * no-op once published. */
+    def discard(): Unit = {
+      rmTree(dir)
+      if (newRoot) new java.io.File(root).delete()
+    }
+  }
+
+  /** Write `df` once into a fresh staging dir under `root`, counting its
+    * rows through an [[org.apache.spark.sql.Observation]] on the write —
+    * no second evaluation, no read-back. The caller gates on `rows`, then
+    * publishes or discards. */
+  def stageSnapshot(df: DataFrame, root: String): Staged = {
+    val dir = new java.io.File(s"$root/_stage-${java.util.UUID.randomUUID()}")
+    val newRoot = !new java.io.File(root).exists()
+    def staged(rows: Long) = new Staged(root, dir, newRoot, rows)
+    val obs = org.apache.spark.sql.Observation()
+    try df.observe(obs, count(lit(1)).as("rows")).write.parquet(dir.getPath)
+    catch { case e: Throwable => staged(0L).discard(); throw e }
+    staged(obs.get("rows").asInstanceOf[Long])
   }
 
   /** Delete superseded `v=*` snapshot directories under `root`, keeping

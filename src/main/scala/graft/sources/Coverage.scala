@@ -97,32 +97,50 @@ object Coverage {
       Seq("dataset", "target_date"))
 
   /** COVERAGE-driven catch-up (the round-13 ask: catch-up must read the
-    * manifest, not output presence): business days within
-    * `lookbackDays` of `today` whose coverage row for `dataset` is
-    * ABSENT (never claimed → `reason = 'missing'`) or FAILED
-    * (`reason = 'failed'`), oldest first, capped at `maxDays`.
-    * `success` rows — INCLUDING row_count = 0, the explicitly-checked
-    * empty day — are covered and never retried. The ledger and calendar
-    * are both date-cardinality relations: the join broadcasts. */
-  def catchUpTargets(ledger: DataFrame, dataset: String,
-                     calendar: DataFrame, calDateCol: String,
-                     today: java.sql.Date, lookbackDays: Int,
-                     maxDays: Int): DataFrame = {
-    val cov = ledger.filter(col("dataset") === lit(dataset))
-      .select(col("target_date").as("target_day"), col("status"))
+    * manifest, not output presence): per dataset, the business days
+    * within `lookbackDays` of `today` whose coverage row is ABSENT
+    * (never claimed → `reason = 'missing'`) or FAILED
+    * (`reason = 'failed'`), the oldest `maxDays` of them. `success`
+    * rows — INCLUDING row_count = 0, the explicitly-checked empty day —
+    * are covered and never retried. Every dataset is planned in ONE
+    * query over one ledger read: the calendar window fans out to one row
+    * per (dataset, day) by an explode, the ledger (date-cardinality)
+    * broadcasts onto it, and a per-dataset row number applies the cap.
+    * Columns: `dataset`, `target_day`, `reason`; unordered. */
+  def catchUpPlan(ledger: DataFrame, datasets: Seq[String],
+                  calendar: DataFrame, calDateCol: String,
+                  today: java.sql.Date, lookbackDays: Int,
+                  maxDays: Int): DataFrame = {
+    val cov = ledger.filter(col("dataset").isin(datasets: _*))
+      .select(col("dataset"), col("target_date").as("target_day"),
+        col("status"))
+    val byAge = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("dataset")).orderBy(col("target_day"))
     calendar
       .filter(col("is_business_day") &&
         col(calDateCol) <= lit(today) &&
         col(calDateCol) >= date_sub(lit(today), lookbackDays))
-      .select(col(calDateCol).as("target_day"))
-      .join(broadcast(cov), Seq("target_day"), "left")
+      .select(col(calDateCol).as("target_day"),
+        explode(typedLit(datasets.distinct)).as("dataset"))
+      .join(broadcast(cov), Seq("dataset", "target_day"), "left")
       .filter(col("status").isNull || col("status") === lit(Failed))
-      .select(col("target_day"),
+      .withColumn("__age", row_number().over(byAge))
+      .filter(col("__age") <= maxDays)
+      .select(col("dataset"), col("target_day"),
         when(col("status").isNull, lit("missing"))
           .otherwise(lit("failed")).as("reason"))
-      .orderBy(col("target_day"))
-      .limit(maxDays)
   }
+
+  /** [[catchUpPlan]] for one dataset: `target_day`, `reason`, oldest
+    * first. */
+  def catchUpTargets(ledger: DataFrame, dataset: String,
+                     calendar: DataFrame, calDateCol: String,
+                     today: java.sql.Date, lookbackDays: Int,
+                     maxDays: Int): DataFrame =
+    catchUpPlan(ledger, Seq(dataset), calendar, calDateCol, today,
+      lookbackDays, maxDays)
+      .select(col("target_day"), col("reason"))
+      .orderBy(col("target_day"))
 }
 
 /** Driver-side run-claim control state — `jquants_ingest.job_runs` +

@@ -222,11 +222,94 @@ class JobsSpec extends AnyFunSuite {
 
   test("coverage gate blocks under-covered snapshots") {
     import spark.implicits._
-    val universe = (1 to 100).toDF("c_custkey")
+    val tmp = Files.createTempDirectory("refresh_gate").toFile.getAbsolutePath
+    // a snapshot dir whose customer table is the entity universe
+    def universeDir(n: Int): String = {
+      val d = s"$tmp/sf$n"
+      (1 to n).map(_.toLong).toDF("c_custkey").coalesce(1)
+        .write.parquet(s"$d/customer.parquet")
+      d
+    }
+    val sf100 = universeDir(100)
+    val out = s"$tmp/out"
     val thin = (1 to 50).toDF("c_custkey")
     val full = (1 to 90).toDF("c_custkey")
-    assert(DailyRefreshJob.coverageGate(thin, universe, 0.8).isLeft)
-    assert(DailyRefreshJob.coverageGate(full, universe, 0.8) == Right(90L))
-    assert(DailyRefreshJob.coverageGate(full, full.limit(0), 0.8).isLeft)
+    def runOne(sfDir: String, df: org.apache.spark.sql.DataFrame,
+               version: String) =
+      DailyRefreshJob.run(spark, sfDir, out, version,
+        stages = Some(Seq("screen_metrics" -> (() => df)))).head
+    def entries: Seq[String] =
+      Option(new java.io.File(s"$out/screen_metrics").list())
+        .map(_.toSeq.sorted).getOrElse(Nil)
+    // full: published, rows = the observed count
+    val ok = runOne(sf100, full, "v1")
+    assert(ok == DailyRefreshJob.StageResult("screen_metrics", 90L, None))
+    assert(entries == Seq("_PUBLISHED", "v=v1"), entries.toString)
+    // thin: blocked; the pointer stays on v1, and neither v=v2 nor a
+    // staging dir is left behind
+    val blocked = runOne(sf100, thin, "v2")
+    assert(blocked.rows == -1 &&
+      blocked.error.exists(_.contains("publish blocked: coverage")),
+      blocked.toString)
+    assert(entries == Seq("_PUBLISHED", "v=v1"), entries.toString)
+    assert(graft.operators.Upsert.resolvePublished(s"$out/screen_metrics")
+      .exists(_.endsWith("v=v1")))
+    // empty universe: blocked
+    val empty = runOne(universeDir(0), full, "v3")
+    assert(empty.error.exists(_.contains("empty universe")), empty.toString)
+    assert(entries == Seq("_PUBLISHED", "v=v1"), entries.toString)
+  }
+
+  test("a re-run of a published version whose stage now fails the gate leaves the published bytes unchanged") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("refresh_regate").toFile.getAbsolutePath
+    val sfDir = s"$tmp/sf"
+    (1 to 100).map(_.toLong).toDF("c_custkey").coalesce(1)
+      .write.parquet(s"$sfDir/customer.parquet")
+    val out = s"$tmp/out"
+    def runOne(df: org.apache.spark.sql.DataFrame) =
+      DailyRefreshJob.run(spark, sfDir, out, "v1",
+        stages = Some(Seq("per_bands" -> (() => df)))).head
+    def bytes(): Map[String, Seq[Byte]] = {
+      val root = java.nio.file.Paths.get(s"$out/per_bands")
+      val paths = Files.walk(root)
+      try {
+        import scala.jdk.CollectionConverters._
+        paths.iterator().asScala.filter(Files.isRegularFile(_))
+          .map(f => root.relativize(f).toString ->
+            Files.readAllBytes(f).toSeq).toMap
+      } finally paths.close()
+    }
+    assert(runOne((1 to 90).toDF("c_custkey")).rows == 90L)
+    val before = bytes()
+    val again = runOne((1 to 10).toDF("c_custkey"))
+    assert(again.error.exists(_.contains("publish blocked")), again.toString)
+    assert(bytes() == before)
+    val published = graft.operators.Upsert
+      .resolvePublished(s"$out/per_bands").get
+    assert(spark.read.parquet(published).count() == 90L)
+  }
+
+  test("empty stages publish with rows = 0") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("refresh_empty").toFile.getAbsolutePath
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("x",
+        org.apache.spark.sql.types.IntegerType)))
+    val stages = Seq(
+      "local" -> (() => Seq.empty[Int].toDF("x")),
+      "limit" -> (() => Seq(1, 2).toDF("x").limit(0)),
+      "filtered" -> (() => spark.range(10).filter($"id" > 100).toDF("x")),
+      "no_partitions" -> (() => spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)))
+    // no stage is entity-gated, so the snapshot dir is never read
+    val out = DailyRefreshJob.run(spark, root, root, "v1",
+      stages = Some(stages))
+    assert(out.map(r => (r.name, r.rows, r.error)) ==
+      stages.map(s => (s._1, 0L, None)))
+    stages.foreach { case (name, _) =>
+      assert(spark.read.parquet(graft.operators.Upsert
+        .resolvePublished(s"$root/$name").get).count() == 0L, name)
+    }
   }
 }

@@ -1,0 +1,154 @@
+package graft.jobs
+
+import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+import graft.Tables
+import graft.operators.Upsert
+import graft.sources.Coverage
+
+/** Spark-job budgets of the refresh and landing control paths. At
+  * control-plane sizes a pass is bound by its job count, so a read that
+  * starts a schema-inference job, a publish that reads its snapshot back
+  * to count it, or a catch-up plan that runs one query per dataset shows
+  * here as a count, not as noise in a timing. */
+class JobCountSpec extends AnyFunSuite {
+  lazy val spark = graft.SparkTestSession.spark
+  val sf = "/root/testdata/sf0.01"
+
+  /** Spark jobs started while `body` runs, and its result. */
+  def jobs[A](body: => A): (Int, A) = {
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerDrain.drain(sc)
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      val a = body
+      org.apache.spark.ListenerDrain.drain(sc)
+      (n.get, a)
+    } finally sc.removeSparkListener(l)
+  }
+
+  def tmpDir(tag: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(tag)
+
+  private val rowSchema = StructType(Seq(
+    StructField("id", LongType, nullable = false),
+    StructField("target_date", StringType, nullable = false),
+    StructField("value", DoubleType, nullable = false)))
+
+  /** A landed, date-partitioned table with two dates. */
+  def landed(root: String): LandingJob.Dataset = {
+    val ds = LandingJob.Dataset("rows", rowSchema, Seq("id"))
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(Seq(
+        Row(1L, "2024-06-03", 1.5), Row(2L, "2024-06-03", 2.5),
+        Row(3L, "2024-06-04", 3.5)).asJava, rowSchema)
+      .withColumn("target_date", to_date(col("target_date")))
+      .write.partitionBy("target_date").parquet(s"$root/data_rows")
+    ds
+  }
+
+  test("Tables.load, readLanding and the ledger read start no Spark job") {
+    val (n, _) = jobs(Tables.names.map(Tables.load(spark, sf, _).schema))
+    assert(n == 0, s"$n jobs for ${Tables.names.size} table loads")
+    val tmp = tmpDir("jc_read")
+    try {
+      val ds = landed(s"$tmp/landing")
+      val (nl, df) = jobs(LandingJob.readLanding(spark, s"$tmp/landing", ds))
+      assert(nl == 0 && df.isDefined)
+      Upsert.publishSnapshot(Coverage.row(spark, "rows",
+        java.sql.Date.valueOf("2024-06-03"), Coverage.Success, 2L, 0,
+        Some(1L), Some("r")), s"$tmp/coverage", "v1")
+      val (ng, led) = jobs(LandingJob.readLedger(spark, s"$tmp/coverage"))
+      assert(ng == 0)
+      assert(led.count() == 1)
+    } finally Upsert.rmTree(tmp.toFile)
+  }
+
+  test("footer schemas equal Spark's inferred schemas: every testdata table and a landed partitioned table") {
+    Tables.names.foreach { t =>
+      assert(Tables.load(spark, sf, t).schema ==
+        spark.read.parquet(Tables.path(sf, t)).schema, t)
+    }
+    val tmp = tmpDir("jc_schema")
+    try {
+      val ds = landed(s"$tmp/landing")
+      val got = LandingJob.readLanding(spark, s"$tmp/landing", ds).get
+      val want = spark.read.parquet(s"$tmp/landing/data_rows")
+      assert(got.schema == want.schema)
+      assert(got.schema.last.name == "target_date" &&
+        got.schema.last.dataType == DateType)
+      assert(got.orderBy("id").collect().toSeq ==
+        want.orderBy("id").collect().toSeq)
+    } finally Upsert.rmTree(tmp.toFile)
+  }
+
+  test("a one-stage refresh run is one job: no count or read-back after its write") {
+    import spark.implicits._
+    val tmp = tmpDir("jc_stage")
+    try {
+      val df = (1 to 40).toDF("x").localCheckpoint()
+      val (n, out) = jobs(DailyRefreshJob.run(spark, s"$tmp/sf",
+        s"$tmp/out", "v1", stages = Some(Seq("stage" -> (() => df)))))
+      assert(out.map(_.error) == Seq(None), out.toString)
+      assert(n == 1, s"$n jobs for one stage publish")
+      val published = Upsert.resolvePublished(s"$tmp/out/stage").get
+      assert(out.head.rows == spark.read.parquet(published).count())
+      assert(out.head.rows == 40L)
+    } finally Upsert.rmTree(tmp.toFile)
+  }
+
+  test("scheduleCatchUp over four datasets runs as many jobs as over one") {
+    val tmp = tmpDir("jc_catchup")
+    try {
+      val cfg = LandingJob.Config("jc_job", "a", s"$tmp/landing",
+        s"$tmp/coverage")
+      val days = (3 to 7).map(d => java.sql.Date.valueOf(f"2024-06-$d%02d"))
+      // a: 06-04 failed, 06-06 missing; b: all covered; c: nothing
+      // landed; d: 06-07 failed
+      def r(ds: String, d: java.sql.Date, ok: Boolean) =
+        if (ok) Coverage.row(spark, ds, d, Coverage.Success, 1L, 0,
+          Some(1L), Some("r"))
+        else Coverage.row(spark, ds, d, Coverage.Failed, 0L, 1, None,
+          Some("r"))
+      val rows = days.flatMap { d =>
+        val day = d.toString
+        (if (day == "2024-06-06") Nil else Seq(r("a", d, day != "2024-06-04"))) ++
+          Seq(r("b", d, ok = true), r("d", d, day != "2024-06-07"))
+      }
+      Upsert.publishSnapshot(rows.reduce(_ unionByName _).coalesce(1),
+        cfg.coverageRoot, "v1")
+      import scala.jdk.CollectionConverters._
+      val calendar: DataFrame = spark.createDataFrame(
+        days.map(d => Row(d, true)).asJava,
+        StructType(Seq(StructField("day", DateType),
+          StructField("is_business_day", BooleanType))))
+      val today = days.last
+      def plan(ds: Seq[String], maxDays: Int) =
+        LandingJob.scheduleCatchUp(spark, cfg, ds, calendar, "day", today,
+          10, maxDays)
+      val (one, p1) = jobs(plan(Seq("a"), 10))
+      val (four, p4) = jobs(plan(Seq("d", "a", "b", "c"), 10))
+      assert(one == four, s"one dataset: $one jobs, four: $four")
+      assert(p1 == Seq("a" -> Seq("2024-06-04", "2024-06-06")))
+      // priority order kept, covered datasets omitted, oldest first
+      assert(p4 == Seq("d" -> Seq("2024-06-07"),
+        "a" -> Seq("2024-06-04", "2024-06-06"),
+        "c" -> days.map(_.toString)))
+      // the per-dataset cap
+      assert(plan(Seq("a", "c"), 2) == Seq("a" -> Seq("2024-06-04",
+        "2024-06-06"), "c" -> Seq("2024-06-03", "2024-06-04")))
+      // the one-dataset entry is the same plan
+      assert(LandingJob.catchUpDatesFor(spark, cfg, "c", calendar, "day",
+        today, 10, 2) == Seq("2024-06-03", "2024-06-04"))
+    } finally Upsert.rmTree(tmp.toFile)
+  }
+}
