@@ -15,6 +15,8 @@ object Verify {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries",
+        Session.CodegenCacheMaxEntries)
       // let AQE coalesce partitions inside cached (persisted) subtrees —
       // otherwise persist() freezes small shuffles at the full partition
       // count and schedules empty tasks (~2x on the LSH pipeline)

@@ -65,8 +65,4 @@ package object functions {
     * exact through the final cast. */
   def exactSum(x: Column, scale: Int = 4): Column =
     sum(x.cast(s"decimal(18,$scale)")).cast("double")
-
-  /** As exactSum but over an arbitrary (already decimal-safe) expression. */
-  def exactSumExpr(x: Column, precision: Int = 30, scale: Int = 8): Column =
-    sum(x.cast(s"decimal($precision,$scale)")).cast("double")
 }

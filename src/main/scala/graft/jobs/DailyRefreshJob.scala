@@ -176,22 +176,17 @@ object DailyRefreshJob {
     * for EVERY dataset in `datasets`? The refresh trusts the MANIFEST,
     * not output presence — a date whose landing failed (or never ran)
     * has a partition that is stale or absent, and deriving analytics
-    * from it would publish wrong snapshots silently. One read, one
-    * distinct-count — never a per-dataset scan loop. */
-  private def landingCovered(spark: SparkSession,
-                             cfg: LandingJob.Config,
-                             targetDate: String,
-                             datasets: Seq[String]): Boolean = {
-    import org.apache.spark.sql.functions._
-    Upsert.resolvePublished(cfg.coverageRoot).exists { dir =>
-      graft.Tables.readParquet(spark, dir)
-        .filter(col("dataset").isin(datasets: _*) &&
-          col("target_date") === to_date(lit(targetDate)) &&
-          col("status") === lit(graft.sources.Coverage.Success))
-        // distinct on BOTH sides (r16 ADVICE): a caller passing the same
-        // dataset name twice must not block forever on count < size
-        .select(col("dataset")).distinct().count() == datasets.distinct.size
-    }
+    * from it would publish wrong snapshots silently. A driver-side probe
+    * of the (datasets × targetDate) cells: no Spark job. */
+  private[jobs] def landingCovered(cfg: LandingJob.Config,
+                                   targetDate: String,
+                                   datasets: Seq[String]): Boolean = {
+    // distinct (r16 ADVICE): a caller passing the same dataset name
+    // twice must not block forever on count < size
+    val want = datasets.distinct
+    graft.sources.Coverage.readCells(cfg.coverageRoot, want,
+        Seq(java.sql.Date.valueOf(targetDate)))
+      .count(_.getString(2) == graft.sources.Coverage.Success) == want.size
   }
 
   /** LANDING → REFRESH, composed end to end on one storage root (the
@@ -281,7 +276,7 @@ object DailyRefreshJob {
                                   stages: Seq[(String, () => DataFrame)],
                                   retainVersions: Option[Int] = None)
       : Either[String, Seq[StageResult]] =
-    if (landingCovered(spark, landingCfg, targetDate, datasets))
+    if (landingCovered(landingCfg, targetDate, datasets))
       runClaimed(spark, lock, runs, targetDate, landingCfg.landingRoot,
         outRoot, version, jobName, ttlSeconds, runningStaleAfterSec,
         stages = Some(stages), retainVersions = retainVersions)

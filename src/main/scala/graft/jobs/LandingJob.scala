@@ -70,7 +70,16 @@ import graft.sources.Ingest.Retry
   * skipped by the claim (`already_executed`). The job heartbeats the
   * lease after every date so a long backfill never loses its lock
   * mid-run; a second concurrent start is rejected by the lock before
-  * any work happens (the reference's 409). */
+  * any work happens (the reference's 409).
+  *
+  * COVERAGE LEDGER: one small file per (dataset, target_date) cell under
+  * `coverageRoot` ([[Coverage.writeCell]]). A landed date publishes its
+  * cell twice — the FAILED placeholder at claim, SUCCESS after the
+  * partition write — and each publish is one atomic rename of a temp
+  * file over that cell: the ledger's only commit point, a driver-side
+  * file operation with no Spark job. Readers ([[readLedger]],
+  * [[scheduleCatchUp]], the refresh's coverage gate) open only the cells
+  * their (datasets × dates) window names. */
 object LandingJob {
 
   /** One page-fetch response: HTTP-ish status, rows matching the
@@ -107,126 +116,41 @@ object LandingJob {
   final case class DateResult(date: String, status: String, rows: Long,
                               pages: Int, error: Option[String])
 
-  private[jobs] def readLedger(s: SparkSession, root: String): DataFrame =
-    Upsert.resolvePublished(root)
-      .map(graft.Tables.readParquet(s, _))
-      .getOrElse(Coverage.emptyLedger(s))
+  /** The coverage manifest rows of the (datasets × days) window as a
+    * `LocalRelation`: the cells are read on the driver
+    * ([[Coverage.readCells]]) and no Spark job runs. Every ledger read
+    * goes through here (or, for a pure driver-side probe, straight
+    * through `readCells`), so driver residency is bounded by the
+    * caller's window, never by the ledger's history. */
+  def readLedger(s: SparkSession, root: String, datasets: Seq[String],
+                 days: Seq[java.sql.Date]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    s.createDataFrame(Coverage.readCells(root, datasets, days).asJava,
+      Coverage.ledgerSchema)
+  }
 
-  /** Write-through coverage-ledger buffer for ONE leased landing run
-    * (round-17, guide §1.2/"do fewer passes"): the published snapshot is
-    * loaded ONCE per run, upserts apply driver-side, and every publish
-    * writes the complete merged ledger as a single-partition snapshot.
-    * This removes, per publish (2 per landed date), the parquet re-read
-    * of the snapshot this same process just wrote plus the left-anti
-    * merge shuffle. Durability and readers are untouched: every publish
-    * is still a complete snapshot plus the atomic `_PUBLISHED` pointer
-    * flip, and cross-process planners ([[scheduleCatchUp]], q218-style)
-    * keep reading storage. Every ledger read — this buffer's load and
-    * re-sync, and the planners' — goes through [[graft.Tables.readParquet]]:
-    * the snapshot is one file, and its footer gives the schema without a
-    * Spark job.
-    *
-    * Round-18 hardening of the two r17 caveats:
-    *
-    *  - BOUNDED DRIVER RESIDENCY (VERDICT #4/"what's wrong"): only the
-    *    rows this run can touch — the (run datasets) × (run dates)
-    *    window — are collected to the driver; every other row stays
-    *    cluster-side in an eagerly-checkpointed single-partition
-    *    `remainder` relation that each publish unions back in. A ledger
-    *    grown over years × many datasets no longer scales the driver
-    *    heap with history — driver residency is O(|schedule|), fixed by
-    *    the run's own plan.
-    *  - FOREIGN-WRITER RE-MERGE (ADVICE: the lease is keyed on jobName
-    *    while the shared resource is coverageRoot — two configs with
-    *    different jobName sharing one coverageRoot could permanently
-    *    drop each other's rows for the whole run). Before every publish
-    *    the buffer re-resolves the `_PUBLISHED` pointer (one tiny
-    *    metadata read, no Spark job); if some other process published
-    *    since this buffer last synced, the buffer RELOADS that snapshot
-    *    and re-merges — foreign rows win everywhere except the keys
-    *    this run itself wrote (`dirty`), restoring the old
-    *    read-merge-publish semantics where a race costs at most the
-    *    single racing row, never the whole run. */
-  private[jobs] final class LedgerBuf(s: SparkSession, cfg: Config,
-                                datasets: Set[String], days0: Set[String]) {
+  /** One leased run's writer of coverage cells. A publish refuses a
+    * cell outside the run's (datasets × dates) window, then writes the
+    * cell ([[Coverage.writeCell]]: the 00085 CHECK, a temp file, one
+    * driver-side rename — no Spark job). Cells are independent files, so
+    * a run never reads, rewrites or prunes another run's rows: two
+    * configs with different `jobName`s sharing one `coverageRoot` keep
+    * each other's cells, and a re-publish of one cell is last-writer-
+    * wins. */
+  private[jobs] final class LedgerWindow(cfg: Config, datasets: Set[String],
+                                         days0: Set[String]) {
     // normalized ISO form — callers may pass unpadded dates that
     // java.sql.Date accepts but whose canonical toString differs
     private val days: Set[String] =
       days0.map(d => java.sql.Date.valueOf(d).toString)
-    private val schema = Coverage.emptyLedger(s).schema
-    private val rows =
-      scala.collection.mutable.LinkedHashMap.empty[(String, String), Row]
-    private val dirty =
-      scala.collection.mutable.HashSet.empty[(String, String)]
-    // rows outside the run's window: never touched by this run's
-    // publishes, kept as a checkpointed one-partition relation (lineage
-    // cut — survives pruning of the snapshot it was read from)
-    private var remainder: DataFrame = _
-    // the published version this buffer last loaded or wrote — the
-    // foreign-writer detector
-    private var syncedVer: Option[String] = None
 
-    private def windowPred: org.apache.spark.sql.Column =
-      if (datasets.isEmpty || days.isEmpty) lit(false)
-      else col("dataset").isin(datasets.toSeq: _*) &&
-        col("target_date").cast("string").isin(days.toSeq: _*)
-
-    private def sync(): Unit = {
-      syncedVer = Upsert.resolvePublished(cfg.coverageRoot)
-        .map(p => new java.io.File(p).getName)
-      val led = readLedger(s, cfg.coverageRoot)
-      led.filter(windowPred).collect().foreach { r =>
-        val key = (r.getString(0), String.valueOf(r.getDate(1)))
-        if (!dirty.contains(key)) rows(key) = r
-      }
-      remainder = led.filter(!windowPred).coalesce(1).localCheckpoint()
-    }
-    sync()
-
-    /** Rows currently buffered on the driver — the bounded-residency
-      * observable the spec pins (must be O(run window), not
-      * O(ledger history)). */
-    private[jobs] def bufferedRows: Int = synchronized { rows.size }
-
-    // synchronized: one leased run is normally one thread, but nothing
-    // in the protocol forbids a caller overlapping datasets — the
-    // buffer, dirty set, and publish/prune sequence must not interleave
     def publish(dataset: String, day: java.sql.Date, status: String,
                 rowCount: Long, errorCount: Int, obsMs: Option[Long],
-                runId: Option[String]): Unit = synchronized {
-      Coverage.validate(status, rowCount, errorCount, obsMs)
+                runId: Option[String]): Unit = {
       require(datasets.contains(dataset) && days.contains(day.toString),
         s"publish outside the run window: ($dataset, $day)")
-      val key = (dataset, day.toString)
-      rows(key) = Row(dataset, day, status, rowCount,
-        errorCount, obsMs.map(Long.box).orNull, runId.orNull)
-      dirty += key
-      val prevVer = Upsert.resolvePublished(cfg.coverageRoot)
-        .map(p => new java.io.File(p).getName)
-      // another process published since we last synced (shared
-      // coverageRoot under a different jobName lease): adopt its rows
-      // for every key this run hasn't written itself
-      if (prevVer != syncedVer) sync()
-      import scala.jdk.CollectionConverters._
-      // one partition: the ledger is metadata-sized — a single file per
-      // version keeps listing/footer costs flat for every reader (§6)
-      val df = remainder.unionByName(
-        s.createDataFrame(rows.values.toSeq.asJava, schema)).coalesce(1)
-      Upsert.publishSnapshot(df, cfg.coverageRoot,
-        java.util.UUID.randomUUID().toString)
-      syncedVer = Upsert.resolvePublished(cfg.coverageRoot)
-        .map(p => new java.io.File(p).getName)
-      // two publishes per date would otherwise grow version dirs forever.
-      // Spared: the JUST-superseded version BY NAME (mtimes can tie at
-      // publish rates below the fs timestamp granularity), for readers
-      // that resolved the old pointer right before this flip (q218-style
-      // catch-up planners in other processes); and, via graceKeep = 1,
-      // the most recent other version — a foreign publisher sharing this
-      // coverageRoot writes its v= dir BEFORE flipping the pointer, and
-      // pruning that written-but-unflipped dir would leave its flip
-      // pointing at a deleted snapshot
-      Upsert.pruneSnapshots(cfg.coverageRoot, graceKeep = 1,
-        spare = prevVer.toSet)
+      Coverage.writeCell(cfg.coverageRoot, dataset, day, status, rowCount,
+        errorCount, obsMs, runId)
     }
   }
 
@@ -236,7 +160,7 @@ object LandingJob {
                          retrySleepMs: Long => Unit,
                          uniform: () => Double,
                          nowMs: () => Long,
-                         ledger: LedgerBuf): DateResult = {
+                         ledger: LedgerWindow): DateResult = {
     // ledger key: the bare job name for the config's own dataset (the
     // single-dataset job key); every other dataset of a schedule claims
     // per (job, dataset) so one dataset's failed date never blocks
@@ -531,7 +455,7 @@ object LandingJob {
       case Left(reason) => Left(reason)
       case Right(token) =>
         try {
-          val ledger = new LedgerBuf(s, cfg,
+          val ledger = new LedgerWindow(cfg,
             entries.map(_.ds.name).toSet,
             entries.flatMap(_.dates).toSet)
           Right(entries.flatMap { e =>
@@ -551,15 +475,20 @@ object LandingJob {
     * ([[Coverage.catchUpPlan]] — per-dataset missing/failed business
     * days, each dataset capped at `maxDays`), so the plan's job count does
     * not grow with the number of datasets. The plan reads COVERAGE, not
-    * output presence. Ordered by the given dataset priority, oldest
-    * dates first within a dataset — the order [[runSchedule]] executes.
-    * Datasets with nothing to heal are omitted. */
+    * output presence, and only the cells of its window: `datasets` ×
+    * the `lookbackDays + 1` days ending at `today`. Ordered by the given
+    * dataset priority, oldest dates first within a dataset — the order
+    * [[runSchedule]] executes. Datasets with nothing to heal are
+    * omitted. */
   def scheduleCatchUp(s: SparkSession, cfg: Config,
                       datasets: Seq[String], calendar: DataFrame,
                       calDateCol: String, today: java.sql.Date,
                       lookbackDays: Int, maxDays: Int)
       : Seq[(String, Seq[String])] = {
-    val planned = Coverage.catchUpPlan(readLedger(s, cfg.coverageRoot),
+    val window = (0 to lookbackDays).map(i =>
+      java.sql.Date.valueOf(today.toLocalDate.minusDays(i)))
+    val planned = Coverage.catchUpPlan(
+        readLedger(s, cfg.coverageRoot, datasets, window),
         datasets, calendar, calDateCol, today, lookbackDays, maxDays)
       .select(col("dataset"), col("target_day")).collect()
       .groupMap(_.getString(0))(_.getDate(1))

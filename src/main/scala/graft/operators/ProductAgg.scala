@@ -12,8 +12,7 @@ import org.apache.spark.sql.functions.udaf
   *
   * [[DecimalProduct]] folds `java.math.BigDecimal` with unbounded precision
   * (MathContext.DECIMAL128 guard rails) — the exact analog of Postgres
-  * numeric multiplication. [[DoubleProduct]] is the fast path when factors
-  * are already exact in binary (integer-scaled factors).
+  * numeric multiplication.
   */
 object ProductAgg {
 
@@ -34,19 +33,6 @@ object ProductAgg {
       Encoders.DECIMAL
   }
 
-  object DoubleProduct extends Aggregator[java.lang.Double, Double, Double] {
-    override def zero: Double = 1.0
-    override def reduce(b: Double, a: java.lang.Double): Double =
-      if (a == null) b else b * a
-    override def merge(b1: Double, b2: Double): Double = b1 * b2
-    override def finish(r: Double): Double = r
-    override def bufferEncoder: Encoder[Double] = Encoders.scalaDouble
-    override def outputEncoder: Encoder[Double] = Encoders.scalaDouble
-  }
-
   /** Column-level exact decimal product (group aggregate or window). */
   def decimalProduct(c: Column): Column = udaf(DecimalProduct).apply(c)
-
-  /** Column-level double product. */
-  def doubleProduct(c: Column): Column = udaf(DoubleProduct).apply(c)
 }

@@ -36,9 +36,6 @@ object Quantize {
   /** Embedding dimensionality of the driver testdata (all SFs). */
   val Dims = 64
 
-  /** Quantization levels - 1 (codes are 0..255). */
-  val Levels = 255
-
   /** Per-dimension [min, max] over the corpus as driver-side arrays.
     * One shuffle of `dims` groups; the collect is bounded metadata
     * (`dims` rows), same sanction as q74's centroid collect. */

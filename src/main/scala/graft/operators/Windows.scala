@@ -62,16 +62,4 @@ object Windows {
     df.withColumn(outCol,
       when(valueCol.isNotNull, (lit(1.0) - pr) * 100.0))
   }
-
-  /** Population z-score per partition (`00108:151-156`): (x - avg)/stddev_pop,
-    * null when stddev is 0 or x is null. `flip` negates (PER/PBR style —
-    * lower is better). */
-  def zScore(df: DataFrame, partitionCol: Column, valueCol: Column,
-             outCol: String, flip: Boolean = false): DataFrame = {
-    val w = Window.partitionBy(partitionCol)
-    val mu = avg(valueCol).over(w)
-    val sd = stddev_pop(valueCol).over(w)
-    val z = (valueCol - mu) / sd
-    df.withColumn(outCol, when(sd > 0, if (flip) -z else z))
-  }
 }

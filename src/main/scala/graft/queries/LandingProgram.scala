@@ -58,6 +58,13 @@ object LandingProgram {
         .fold(r => sys.error(s"landing rejected: $r"), identity)
   }
 
+  /** Days from the first to the last of `dates`: the catch-up lookback
+    * whose window is exactly a gate's date universe. */
+  private def spanDays(dates: Seq[String]): Int =
+    java.time.temporal.ChronoUnit.DAYS.between(
+      java.time.LocalDate.parse(dates.head),
+      java.time.LocalDate.parse(dates.last)).toInt
+
   /** q219's landing row: (id, target_date, value) — id is the upsert
     * key, value the order's cents. */
   private val q219Schema = StructType(Seq(
@@ -131,7 +138,7 @@ object LandingProgram {
     val calendar = dates.map(java.sql.Date.valueOf).toDF("day")
       .withColumn("is_business_day", lit(true))
     val plan = LandingJob.catchUpDatesFor(s, cfg, ds.name, calendar, "day",
-      java.sql.Date.valueOf(dates.last), lookbackDays = 10000,
+      java.sql.Date.valueOf(dates.last), lookbackDays = spanDays(dates),
       maxDays = 100)
     val planted = dates.zipWithIndex
       .collect { case (d, i) if i % 3 == 2 => d }
@@ -141,8 +148,8 @@ object LandingProgram {
     // the gate output: per-date aggregates over the LANDED table joined
     // with the manifest's terminal status — every date covered, every
     // source row present exactly once
-    val manifest = s.read.parquet(
-      graft.operators.Upsert.resolvePublished(cfg.coverageRoot).get)
+    val manifest = LandingJob.readLedger(s, cfg.coverageRoot, Seq(ds.name),
+        dates.map(java.sql.Date.valueOf))
       .select(col("target_date"), col("status"))
     // checkpoint: the caller's action runs AFTER the finally deletes the
     // scratch root, so the 6-row result must be materialized here
@@ -259,13 +266,13 @@ object LandingProgram {
     val calendar = dates.map(java.sql.Date.valueOf).toDF("day")
       .withColumn("is_business_day", lit(true))
     val plan = LandingJob.catchUpDatesFor(s, cfg, ds.name, calendar,
-      "day", java.sql.Date.valueOf(dates.last), lookbackDays = 10000,
+      "day", java.sql.Date.valueOf(dates.last), lookbackDays = spanDays(dates),
       maxDays = 100)
     require(plan == Seq(plantedFail),
       s"catch-up planned $plan, expected Seq($plantedFail)")
     pass(plan)
-    val manifest = s.read.parquet(
-      graft.operators.Upsert.resolvePublished(cfg.coverageRoot).get)
+    val manifest = LandingJob.readLedger(s, cfg.coverageRoot, Seq(ds.name),
+        dates.map(java.sql.Date.valueOf))
       .select(col("target_date"), col("status"))
     LandingJob.readLanding(s, cfg.landingRoot, ds).get
       .groupBy(col("target_date"))
@@ -477,7 +484,7 @@ object LandingProgram {
     val calendar = Seq(D).map(java.sql.Date.valueOf).toDF("day")
       .withColumn("is_business_day", lit(true))
     val plan = LandingJob.scheduleCatchUp(s, cfg, all.map(_.name),
-      calendar, "day", java.sql.Date.valueOf(D), 10000, 100)
+      calendar, "day", java.sql.Date.valueOf(D), 0, 100)
     require(plan == Seq("lineitem" -> Seq(D)),
       s"catch-up planned $plan, expected the lineitem heal")
     heal()
@@ -597,8 +604,8 @@ object LandingProgram {
     plane.now += 10_000L // past the success-stale threshold: re-pull allowed
     setBase(5)
     pull(dates.slice(2, 6)) // the SLID window [d3..d6]
-    val manifest = s.read.parquet(
-      graft.operators.Upsert.resolvePublished(cfg.coverageRoot).get)
+    val manifest = LandingJob.readLedger(s, cfg.coverageRoot, Seq(ds.name),
+        dates.map(java.sql.Date.valueOf))
       .select(col("target_date"), col("status"))
     val landed = LandingJob.readLanding(s, cfg.landingRoot, ds).get
     val w = org.apache.spark.sql.expressions.Window

@@ -1,7 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Run-claim ledger + dataset-coverage manifest — the reference's
   * ingestion bookkeeping contract
@@ -27,13 +30,28 @@ import org.apache.spark.sql.functions._
   *
   * Split Spark-first: the run claim/heartbeat is driver-side control
   * state (like [[JobLock]] — a handful of rows, never a distributed
-  * dataset) in [[RunLedger]]; the coverage manifest is a real TABLE the
-  * refresh jobs upsert ([[Coverage]]) and catch-up planning is a
-  * DataFrame program over it — business-day calendar LEFT JOIN coverage,
-  * keep absent-or-failed days ([[Coverage.catchUpTargets]]). At 100 TB
-  * both sides stay metadata-sized: the ledger has one row per (dataset,
-  * day), the calendar broadcasts, and the only fact-table touch the
-  * composed q218 program makes is one map-side-combined per-day count.
+  * dataset) in [[RunLedger]]; catch-up planning is a DataFrame program
+  * over the coverage manifest — business-day calendar LEFT JOIN
+  * coverage, keep absent-or-failed days ([[Coverage.catchUpTargets]]).
+  * At 100 TB both sides stay metadata-sized: the ledger has one row per
+  * (dataset, day), the calendar broadcasts, and the only fact-table
+  * touch the composed q218 program makes is one map-side-combined
+  * per-day count.
+  *
+  * The DURABLE manifest is one small file per (dataset, target_date)
+  * CELL under a coverage root, `<root>/ds=<enc(dataset)>/<date>.tsv`,
+  * holding one URL-encoded TSV line (the [[RunLedger]] cell encoding).
+  * [[writeCell]] is the upsert: it writes a uniquely named temp sibling
+  * and renames it over the cell with `ATOMIC_MOVE` — the cell rename is
+  * the ledger's single commit point. A publish touches only its own
+  * cell, so writers of different cells never contend, a re-publish of
+  * one cell is last-writer-wins, and a writer killed before its rename
+  * leaves the previous cell intact (its temp file is never read: readers
+  * open cell names only). [[readCells]] reads the cells a
+  * (datasets × days) window names, on the driver, without Spark. Like
+  * the [[RunLedger]] file and the [[JobLock]] dir, the coverage root is
+  * driver-side control state on a filesystem with atomic rename (a
+  * local or POSIX-mounted path), not a Hadoop URI.
   */
 object Coverage {
 
@@ -77,17 +95,73 @@ object Coverage {
                        runId: String): DataFrame =
     row(s, dataset, targetDate, Failed, 0L, 1, None, Some(runId))
 
-  def emptyLedger(s: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
-        StructField("dataset", StringType, nullable = false),
-        StructField("target_date", DateType, nullable = false),
-        StructField("status", StringType, nullable = false),
-        StructField("row_count", LongType, nullable = false),
-        StructField("error_count", IntegerType, nullable = false),
-        StructField("source_observed_at", LongType, nullable = true),
-        StructField("run_id", StringType, nullable = true))))
+  /** The manifest row schema (`dataset_coverage`'s columns). */
+  val ledgerSchema: StructType = StructType(Seq(
+    StructField("dataset", StringType, nullable = false),
+    StructField("target_date", DateType, nullable = false),
+    StructField("status", StringType, nullable = false),
+    StructField("row_count", LongType, nullable = false),
+    StructField("error_count", IntegerType, nullable = false),
+    StructField("source_observed_at", LongType, nullable = true),
+    StructField("run_id", StringType, nullable = true)))
+
+  def emptyLedger(s: SparkSession): DataFrame =
+    s.createDataFrame(s.sparkContext.emptyRDD[Row], ledgerSchema)
+
+  private def cellPath(root: String, dataset: String,
+                       day: java.sql.Date): Path =
+    Paths.get(root, "ds=" + RunLedger.enc(dataset), s"$day.tsv")
+
+  /** Upsert one manifest cell: contract-check the row, write it to a
+    * uniquely named temp sibling, and rename that over the cell. */
+  def writeCell(root: String, dataset: String, day: java.sql.Date,
+                status: String, rowCount: Long, errorCount: Int,
+                sourceObservedAtMs: Option[Long],
+                runId: Option[String]): Unit =
+    Files.move(stageCell(root, dataset, day, status, rowCount, errorCount,
+        sourceObservedAtMs, runId), cellPath(root, dataset, day),
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+
+  /** [[writeCell]] up to its rename: the written temp file. A publish
+    * killed at this point leaves exactly this file behind. */
+  private[graft] def stageCell(root: String, dataset: String,
+                               day: java.sql.Date, status: String,
+                               rowCount: Long, errorCount: Int,
+                               sourceObservedAtMs: Option[Long],
+                               runId: Option[String]): Path = {
+    validate(status, rowCount, errorCount, sourceObservedAtMs)
+    import RunLedger.{enc, optCell}
+    val cell = cellPath(root, dataset, day)
+    Files.createDirectories(cell.getParent)
+    val tmp = cell.resolveSibling(
+      s"${cell.getFileName}.${java.util.UUID.randomUUID()}.tmp")
+    Files.writeString(tmp, Seq(enc(dataset), day.toString, status,
+      rowCount.toString, errorCount.toString,
+      sourceObservedAtMs.map(_.toString).getOrElse("-"),
+      optCell(runId)).mkString("\t"))
+    tmp
+  }
+
+  /** The manifest rows of the (datasets × days) window, in dataset then
+    * day order: one existence probe per named cell and one read per
+    * present cell — driver work bounded by the window, whatever the
+    * ledger's history. */
+  def readCells(root: String, datasets: Seq[String],
+                days: Seq[java.sql.Date]): Seq[Row] = {
+    import RunLedger.{cellOpt, dec}
+    for {
+      d <- datasets.distinct
+      day <- days.distinct
+      p = cellPath(root, d, day)
+      if Files.exists(p)
+    } yield Files.readString(p).split("\t", -1) match {
+      case Array(ds, dt, st, rc, ec, obs, run)
+          if dec(ds) == d && dt == day.toString =>
+        Row(d, day, st, rc.toLong, ec.toInt,
+          if (obs == "-") null else Long.box(obs.toLong),
+          cellOpt(run).orNull)
+      case _ => throw new IllegalStateException(s"corrupt coverage cell $p")
+    }
   }
 
   /** Upsert manifest rows into the ledger — `ON CONFLICT (dataset,
@@ -182,16 +256,7 @@ final class RunLedger(nowMs: () => Long = () => System.currentTimeMillis(),
   private val beats = scala.collection.mutable.Map[String, Heartbeat]()
 
   // ------------------------------------------------------- persistence
-  private def enc(s: String): String =
-    java.net.URLEncoder.encode(s, "UTF-8")
-  private def dec(s: String): String =
-    java.net.URLDecoder.decode(s, "UTF-8")
-  // None is "-"; present values carry an "=" prefix so a literal "-"
-  // (which URLEncoder leaves bare) round-trips as Some("-"), not None
-  private def optCell(o: Option[String]): String =
-    o.map("=" + enc(_)).getOrElse("-")
-  private def cellOpt(c: String): Option[String] =
-    if (c == "-") None else Some(dec(c.stripPrefix("=")))
+  import RunLedger.{cellOpt, dec, enc, optCell}
 
   private def save(): Unit = persistTo.foreach { p =>
     val sb = new StringBuilder
@@ -417,6 +482,18 @@ final class RunLedger(nowMs: () => Long = () => System.currentTimeMillis(),
 }
 
 object RunLedger {
+  // URL-encoded TSV cells, shared with the coverage ledger's cell files
+  private[sources] def enc(s: String): String =
+    java.net.URLEncoder.encode(s, "UTF-8")
+  private[sources] def dec(s: String): String =
+    java.net.URLDecoder.decode(s, "UTF-8")
+  // None is "-"; present values carry an "=" prefix so a literal "-"
+  // (which URLEncoder leaves bare) round-trips as Some("-"), not None
+  private[sources] def optCell(o: Option[String]): String =
+    o.map("=" + enc(_)).getOrElse("-")
+  private[sources] def cellOpt(c: String): Option[String] =
+    if (c == "-") None else Some(dec(c.stripPrefix("=")))
+
   // one monitor per canonical ledger path: OS file locks are per-JVM
   // (a second FileChannel.lock on the same file from this JVM throws
   // OverlappingFileLockException), so same-JVM instances serialize on

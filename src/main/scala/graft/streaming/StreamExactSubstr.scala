@@ -41,19 +41,6 @@ object StreamExactSubstr {
         StructField("base_kmin", kT, nullable = true))))
   }
 
-  /** Env-gated per-stage wall marks for the absorb loops (the r17
-    * job-count-floor probe — SPARK_GRAFT_Q216_DEBUG=1). */
-  private def marker(tag: String): String => Unit =
-    if (!sys.env.contains("SPARK_GRAFT_Q216_DEBUG")) _ => ()
-    else {
-      var t = System.nanoTime()
-      m => {
-        System.err.println(
-          f"$tag $m ${(System.nanoTime() - t) / 1e9}%.2f s")
-        t = System.nanoTime()
-      }
-    }
-
   /** Mutable standing state + accumulated emissions for an in-process
     * run. Each state and emission is eagerly checkpointed so lineage
     * never chains across batches. */
@@ -62,11 +49,8 @@ object StreamExactSubstr {
     @volatile private var emitted: List[DataFrame] = Nil
 
     def absorb(batch: Dataset[SDoc]): Unit = synchronized {
-      val mark = marker("Q214-PROBE")
       val docs = batch.toDF().localCheckpoint()
-      mark("docs-ckpt")
       val grams = ExactSubstr.gramPositions(docs).localCheckpoint()
-      mark("grams-ckpt")
       val st = state.getOrElse(emptyState(docs.sparkSession))
       // the batch's emission and its state extension both derive from the
       // SAME checkpointed (grams, st) inputs and write to independent
@@ -87,7 +71,6 @@ object StreamExactSubstr {
           .localCheckpoint()))
       emitted = both(0) :: emitted
       state = Some(both(1))
-      mark("emit+state-ckpt")
     }
 
     def results: DataFrame = emitted match {
@@ -289,17 +272,13 @@ object StreamExactSubstr {
     private var genMeta: Option[(Long, Long)] = None
 
     def absorb(batch: Dataset[SDoc]): Unit = synchronized {
-      val mark = marker("Q216-PROBE")
       val s = batch.sparkSession
       val docs = batch.toDF().localCheckpoint()
-      mark("docs-ckpt")
       val grams = ExactSubstr.gramPositions(docs).localCheckpoint()
-      mark("grams-ckpt")
       // the input materialization above overlapped any queued fold;
       // from here on the batch plans table reads, so the overwrite
       // window must be closed
       awaitCompact()
-      mark("compact-sync")
       val exists = s.catalog.tableExists(table)
       val (maxGen, nGens) = genMeta.getOrElse {
         if (!exists) (0L, 0L)
@@ -314,7 +293,6 @@ object StreamExactSubstr {
         if (!exists) emptyState(s)
         else if (stateBytes > pruneStateOverBytes) resolvedFor(s, grams)
         else resolved(s.table(table))
-      mark("state-resolve")
       val out = ExactSubstr.applySpans(docs,
         ExactSubstr.absorbDups(grams, st), ordered = false)
       // overlap (guide §2.6): the generation's minima AGGREGATION is
@@ -333,13 +311,11 @@ object StreamExactSubstr {
           .agg(min(col("__k")).as("base_kmin"))
           .withColumn("gen", lit(gen))
           .localCheckpoint()))
-      mark("emit-write+mins")
       if (exists)
         graft.sources.Bucketed.appendBucketed(mins, table, "gram", 16)
       else
         graft.sources.Bucketed.writeBucketed(mins, table,
           s"$path/state", "gram", 16)
-      mark("state-append")
       genMeta = Some((gen, nGens + 1L))
       if (nGens + 1L >= compactEvery.toLong) {
         // queued, not run: the fold overlaps the NEXT batch's input

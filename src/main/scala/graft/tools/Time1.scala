@@ -14,6 +14,8 @@ object Time1 {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries",
+        graft.Session.CodegenCacheMaxEntries)
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.files.maxPartitionBytes",
         sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "134217728"))

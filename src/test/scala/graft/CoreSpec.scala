@@ -10,6 +10,8 @@ object SparkTestSession {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .config("spark.sql.codegen.cache.maxEntries",
+      Session.CodegenCacheMaxEntries)
     .getOrCreate()
 }
 

@@ -96,8 +96,8 @@ class GenericLandingSpec extends AnyFunSuite {
     // the transform cleansed ""→null on the fins rows only
     assert(finsT.filter(col("note").isNull).count() == 1)
     // ONE coverage root carries one manifest row per (dataset, day)
-    val cov = spark.read.parquet(
-      Upsert.resolvePublished(cfg.coverageRoot).get)
+    val cov = LandingJob.readLedger(spark, cfg.coverageRoot,
+      Seq("bars", "fins"), Seq(java.sql.Date.valueOf("2024-06-03")))
     assert(cov.select("dataset").distinct().collect().map(_.getString(0))
       .toSet == Set("bars", "fins"))
     assert(cov.filter(col("status") === "success").count() == 2)
@@ -301,8 +301,8 @@ class GenericLandingSpec extends AnyFunSuite {
     assert(!new java.io.File(s"${cfg.landingRoot}/stage/bars").exists() ||
       new java.io.File(s"${cfg.landingRoot}/stage/bars").list().isEmpty)
     // manifest says FAILED — the catch-up signal
-    val cov0 = spark.read.parquet(
-      Upsert.resolvePublished(cfg.coverageRoot).get)
+    val cov0 = LandingJob.readLedger(spark, cfg.coverageRoot, Seq("bars"),
+      Seq(java.sql.Date.valueOf("2024-06-03")))
     assert(cov0.filter(col("dataset") === "bars" &&
       col("status") === "failed").count() == 1)
     healed = true

@@ -120,7 +120,8 @@ class LandingJobSpec extends AnyFunSuite {
 
   private def coverageRows(cfg: LandingJob.Config): Map[String, (String, Long, Int)] = {
     import spark.implicits._
-    spark.read.parquet(Upsert.resolvePublished(cfg.coverageRoot).get)
+    LandingJob.readLedger(spark, cfg.coverageRoot, Seq(ds.name),
+        dates.map(java.sql.Date.valueOf))
       .select(col("target_date").cast("string"), col("status"),
         col("row_count"), col("error_count"))
       .as[(String, String, Long, Int)].collect()
@@ -330,7 +331,7 @@ class LandingJobSpec extends AnyFunSuite {
     assert(out.isLeft)
     assert(ep.calls.isEmpty, "a rejected start must not touch the endpoint")
     assert(LandingJob.readLanding(spark, cfg.landingRoot, ds).isEmpty &&
-      Upsert.resolvePublished(cfg.coverageRoot).isEmpty,
+      !new java.io.File(cfg.coverageRoot).exists(),
       "a rejected start must not write")
     // the holder finishes; the next scheduled run proceeds normally
     lock.release("landing_orders", token)

@@ -64,10 +64,11 @@ class JobCountSpec extends AnyFunSuite {
       val ds = landed(s"$tmp/landing")
       val (nl, df) = jobs(LandingJob.readLanding(spark, s"$tmp/landing", ds))
       assert(nl == 0 && df.isDefined)
-      Upsert.publishSnapshot(Coverage.row(spark, "rows",
-        java.sql.Date.valueOf("2024-06-03"), Coverage.Success, 2L, 0,
-        Some(1L), Some("r")), s"$tmp/coverage", "v1")
-      val (ng, led) = jobs(LandingJob.readLedger(spark, s"$tmp/coverage"))
+      val day = java.sql.Date.valueOf("2024-06-03")
+      Coverage.writeCell(s"$tmp/coverage", "rows", day, Coverage.Success,
+        2L, 0, Some(1L), Some("r"))
+      val (ng, led) = jobs(LandingJob.readLedger(spark, s"$tmp/coverage",
+        Seq("rows"), Seq(day)))
       assert(ng == 0)
       assert(led.count() == 1)
     } finally Upsert.rmTree(tmp.toFile)
@@ -106,6 +107,35 @@ class JobCountSpec extends AnyFunSuite {
     } finally Upsert.rmTree(tmp.toFile)
   }
 
+  test("a landed date's two ledger publishes and the refresh coverage gate start no Spark job") {
+    val tmp = tmpDir("jc_ledger")
+    try {
+      val cfg = LandingJob.Config("jc_job", "rows", s"$tmp/landing",
+        s"$tmp/coverage")
+      val day = java.sql.Date.valueOf("2024-06-03")
+      val ledger = new LandingJob.LedgerWindow(cfg, Set("rows", "more"),
+        Set(day.toString))
+      // the claim placeholder, then the success row
+      val (np, _) = jobs {
+        ledger.publish("rows", day, Coverage.Failed, 0L, 1, None, Some("r"))
+        ledger.publish("rows", day, Coverage.Success, 3L, 0, Some(1L),
+          Some("r"))
+      }
+      assert(np == 0, s"$np jobs for one landed date's ledger publishes")
+      val (nc, covered) = jobs(DailyRefreshJob.landingCovered(cfg,
+        day.toString, Seq("rows", "rows")))
+      assert(nc == 0, s"$nc jobs for the coverage gate")
+      assert(covered)
+      // an input without a success cell blocks: absent, then failed
+      assert(!DailyRefreshJob.landingCovered(cfg, day.toString,
+        Seq("rows", "more")))
+      ledger.publish("more", day, Coverage.Failed, 0L, 1, None, Some("m"))
+      assert(!DailyRefreshJob.landingCovered(cfg, day.toString,
+        Seq("rows", "more")))
+      assert(!DailyRefreshJob.landingCovered(cfg, "2024-06-04", Seq("rows")))
+    } finally Upsert.rmTree(tmp.toFile)
+  }
+
   test("scheduleCatchUp over four datasets runs as many jobs as over one") {
     val tmp = tmpDir("jc_catchup")
     try {
@@ -114,18 +144,18 @@ class JobCountSpec extends AnyFunSuite {
       val days = (3 to 7).map(d => java.sql.Date.valueOf(f"2024-06-$d%02d"))
       // a: 06-04 failed, 06-06 missing; b: all covered; c: nothing
       // landed; d: 06-07 failed
-      def r(ds: String, d: java.sql.Date, ok: Boolean) =
-        if (ok) Coverage.row(spark, ds, d, Coverage.Success, 1L, 0,
-          Some(1L), Some("r"))
-        else Coverage.row(spark, ds, d, Coverage.Failed, 0L, 1, None,
-          Some("r"))
-      val rows = days.flatMap { d =>
+      val cells = days.flatMap { d =>
         val day = d.toString
-        (if (day == "2024-06-06") Nil else Seq(r("a", d, day != "2024-06-04"))) ++
-          Seq(r("b", d, ok = true), r("d", d, day != "2024-06-07"))
+        (if (day == "2024-06-06") Nil
+         else Seq(("a", d, day != "2024-06-04"))) ++
+          Seq(("b", d, true), ("d", d, day != "2024-06-07"))
       }
-      Upsert.publishSnapshot(rows.reduce(_ unionByName _).coalesce(1),
-        cfg.coverageRoot, "v1")
+      cells.foreach { case (ds, d, ok) =>
+        if (ok) Coverage.writeCell(cfg.coverageRoot, ds, d,
+          Coverage.Success, 1L, 0, Some(1L), Some("r"))
+        else Coverage.writeCell(cfg.coverageRoot, ds, d, Coverage.Failed,
+          0L, 1, None, Some("r"))
+      }
       import scala.jdk.CollectionConverters._
       val calendar: DataFrame = spark.createDataFrame(
         days.map(d => Row(d, true)).asJava,
@@ -138,6 +168,8 @@ class JobCountSpec extends AnyFunSuite {
       val (one, p1) = jobs(plan(Seq("a"), 10))
       val (four, p4) = jobs(plan(Seq("d", "a", "b", "c"), 10))
       assert(one == four, s"one dataset: $one jobs, four: $four")
+      // no more than the plan over a parquet ledger snapshot ran
+      assert(one <= 3, s"$one jobs for one catch-up plan")
       assert(p1 == Seq("a" -> Seq("2024-06-04", "2024-06-06")))
       // priority order kept, covered datasets omitted, oldest first
       assert(p4 == Seq("d" -> Seq("2024-06-07"),
