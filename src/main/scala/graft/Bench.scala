@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
 /** Benchmark harness. Coordinator mode (default) forks ONE CHILD JVM PER
@@ -19,24 +18,6 @@ import scala.jdk.CollectionConverters._
   * the check in the JSON (`"inv"`).
   */
 object Bench {
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries",
-        Session.CodegenCacheMaxEntries)
-      // let AQE coalesce partitions inside cached (persisted) subtrees —
-      // otherwise persist() freezes small shuffles at the full partition
-      // count and schedules empty tasks (~2x on the LSH pipeline)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   def main(args: Array[String]): Unit =
     if (args.length >= 2 && args(0) == "--one") child(args(1).split(",").toSeq)
     else coordinate()
@@ -68,7 +49,7 @@ object Bench {
     // per-child rep override (deadline shedding) wins over the global knob
     val reps = sys.props.getOrElse("graft.bench.reps",
       sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3")).toInt
-    val spark = session()
+    val spark = Session.local(Session.cpus)
     mark("session")
     // the range-sum JVM warmup is skipped for GROUPED (multi-query)
     // children only: there the later queries run warm anyway and the
@@ -713,7 +694,7 @@ object Bench {
     * fork itself failed (no BENCHQ lines at all). */
   private def runForked(group: Seq[String], cp: String,
                         extraFlags: Seq[String],
-                        onHit: (String, QRes) => Unit = (_, _) => ())
+                        onHit: (String, QRes) => Unit)
       : Option[Seq[(String, QRes)]] = {
     val javaBin = s"${System.getProperty("java.home")}/bin/java"
     val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
@@ -751,7 +732,7 @@ object Bench {
   private def runInProcess(names: Seq[String]): Seq[(String, QRes)] = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = session()
+    val spark = Session.local(Session.cpus)
     spark.range(1000000).selectExpr("sum(id)").collect()
     try SparkEntry.entry(spark).count() catch { case _: Throwable => }
     val res = names.map { name =>
@@ -778,7 +759,7 @@ object Bench {
                    isoMode: String,
                    remeasured: Seq[String],
                    retriesLog: Seq[(String, QRes, QRes, Int, String)],
-                   shedChildren: Int = 0): Unit = {
+                   shedChildren: Int): Unit = {
     def f3(d: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, d)
     def f2(d: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, d)
     def short(k: String): String = shortKey(k)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,20 +8,7 @@ object Verify {
     // optional trailing args: run only these queries (local iteration);
     // the driver passes exactly two args and gets the full dump
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries",
-        Session.CodegenCacheMaxEntries)
-      // let AQE coalesce partitions inside cached (persisted) subtrees —
-      // otherwise persist() freezes small shuffles at the full partition
-      // count and schedules empty tasks (~2x on the LSH pipeline)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -440,10 +440,13 @@ object LandingJob {
     * DATASET moves to the next dataset — one broken endpoint never
     * blocks the others.
     * The lease heartbeats after every date, so an N-dataset backfill
-    * never loses its lock mid-pass. Returns (dataset, result) per
-    * attempted date, in execution order, or Left(reason) when the lease
-    * is held (double start) — then nothing is claimed, fetched or
-    * written. */
+    * never loses its lock mid-pass. Holding the lease, the run first
+    * deletes ledger temp files older than the lease TTL
+    * ([[Coverage.sweepTemps]]): a temp lives for one write and one
+    * rename, so those were left by publishes killed mid-write. Returns
+    * (dataset, result) per attempted date, in execution order, or
+    * Left(reason) when the lease is held (double start) — then nothing
+    * is claimed, fetched or written. */
   def runSchedule(s: SparkSession, lock: JobLock, runs: RunLedger,
                   cfg: Config, entries: Seq[Scheduled],
                   bucket: Ingest.TokenBucket,
@@ -455,6 +458,7 @@ object LandingJob {
       case Left(reason) => Left(reason)
       case Right(token) =>
         try {
+          Coverage.sweepTemps(cfg.coverageRoot, cfg.ttlSeconds * 1000L)
           val ledger = new LedgerWindow(cfg,
             entries.map(_.ds.name).toSet,
             entries.flatMap(_.dates).toSet)

@@ -716,7 +716,6 @@ object Dedup {
     * right tool when the graph's shape is unknown or adversarial
     * (reference-chain link graphs, long citation chains). */
   def connectedComponentsStars(edges0: DataFrame): DataFrame = {
-    val spark = edges0.sparkSession
     def canon(e: DataFrame): DataFrame =
       e.filter(col("u") =!= col("v"))
         .select(least(col("u"), col("v")).as("u"),

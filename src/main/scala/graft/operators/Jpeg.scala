@@ -545,7 +545,7 @@ object Jpeg {
             "spectral selection/approximation must be 0..63/0 for baseline")
           pos += len
           return decodeScan(bytes, pos, width, height, comps, quant,
-            dcTables, acTables, restartInterval, off)
+            dcTables, acTables, restartInterval)
         case other => throw new IllegalArgumentException(
           f"unsupported marker 0xFF$other%02X at offset ${pos - 2}")
       }
@@ -557,7 +557,7 @@ object Jpeg {
                          width: Int, height: Int, comps: Array[Component],
                          quant: Array[Array[Int]],
                          dcTables: Array[HuffTable], acTables: Array[HuffTable],
-                         restartInterval: Int, off: Int): Decoded = {
+                         restartInterval: Int): Decoded = {
     val hMax = comps.map(_.h).max
     val vMax = comps.map(_.v).max
     val mcuW = 8 * hMax

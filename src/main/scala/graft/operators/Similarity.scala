@@ -69,7 +69,7 @@ object Similarity {
   }
 
   /** Assign each vector its LSH bucket. */
-  def hyperplaneBuckets(emb: DataFrame, idCol: String, vecCol: String,
+  def hyperplaneBuckets(emb: DataFrame, vecCol: String,
                         dims: Int, nPlanes: Int): DataFrame =
     emb.withColumn("bucket", bucketExpr(asDouble(col(vecCol)), dims, nPlanes))
 
@@ -320,7 +320,7 @@ object Similarity {
       .sortBy { case (dt, p) => (math.abs(dt), p) } // deterministic tie-break
       .take(nProbe - 1).map { case (_, p) => base ^ (1L << p) }
     val probes = base +: flips
-    hyperplaneBuckets(emb, idCol, vecCol, dims, nPlanes)
+    hyperplaneBuckets(emb, vecCol, dims, nPlanes)
       .filter(col("bucket").isin(probes.map(Long.box): _*))
       .select(col(idCol),
         cosineSim(asDouble(col(vecCol)), array(query.map(lit): _*))
@@ -486,7 +486,7 @@ object Similarity {
       }
       acc
     }
-    hyperplaneBuckets(emb, idCol, vecCol, dims, nPlanes)
+    hyperplaneBuckets(emb, vecCol, dims, nPlanes)
       .filter(col("bucket") === qBucket)
       .select(col(idCol),
         cosineSim(asDouble(col(vecCol)), array(query.map(lit): _*))

@@ -369,7 +369,7 @@ object Advanced {
       .orderBy(col("event_type"))
 
   val oracleQ82: String = {
-    import HllSketch.{HllAlphaNum, HllLcThreshold, HllM, HllP, HllRhoMax}
+    import HllSketch.{HllAlphaNum, HllLcThreshold, HllM, HllRhoMax}
     s"""WITH h AS (
        |  SELECT event_type, user_id,
        |    CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))
@@ -517,33 +517,30 @@ object Advanced {
       .as[(java.sql.Timestamp, Long, Double)].collect()
       .sortBy(_._1.getTime) // in-order arrival: nothing is watermark-late
       .map { case (ts, u, v) => Event(ts, u, v) }
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
+    val ss = graft.Session.forStream(s)
+    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
     val mem = MemoryStream[Event]
     val sink = s"q93_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-    val savedSp = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
+    val q = WindowedAgg.tumbling(mem.toDS(), "1 hour", "10 minutes")
+      .writeStream.format("memory").queryName(sink).outputMode("append")
+      .start()
     try {
-      val q = WindowedAgg.tumbling(mem.toDS(), "1 hour", "10 minutes")
-        .writeStream.format("memory").queryName(sink).outputMode("append")
-        .start()
-      try {
-        val third = evs.length / 3
-        Seq(evs.slice(0, third), evs.slice(third, 2 * third),
-            evs.slice(2 * third, evs.length)).foreach { b =>
-          mem.addData(b.toIndexedSeq: _*)
-          q.processAllAvailable()
-        }
-        mem.addData(Event(
-          java.sql.Timestamp.valueOf("2030-01-01 00:00:00"), -1L, 0.0))
+      val third = evs.length / 3
+      Seq(evs.slice(0, third), evs.slice(third, 2 * third),
+          evs.slice(2 * third, evs.length)).foreach { b =>
+        mem.addData(b.toIndexedSeq: _*)
         q.processAllAvailable()
-      } finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", savedSp)
-    val out = s.table(sink)
+      }
+      mem.addData(Event(
+        java.sql.Timestamp.valueOf("2030-01-01 00:00:00"), -1L, 0.0))
+      q.processAllAvailable()
+    } finally q.stop()
+    val out = ss.table(sink)
       .select(col("win_start"), col("userId").as("user_id"),
         col("n_events"), col("total"))
       .orderBy(col("win_start"), col("user_id"))
       .localCheckpoint() // pin rows before the temp view is dropped
-    s.catalog.dropTempView(sink)
+    ss.catalog.dropTempView(sink)
     out
   }
 
@@ -574,33 +571,30 @@ object Advanced {
       .as[(java.sql.Timestamp, Long, String)].collect()
       .sortBy(_._1.getTime) // in-order arrival: nothing is watermark-late
       .map { case (ts, u, t) => Event(ts, u, t) }
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
+    val ss = graft.Session.forStream(s)
+    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
     val mem = MemoryStream[Event]
     val sink = s"q95_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-    val savedSp = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
+    val q = StreamCardinality.windowedDistinct(mem.toDS(), "1 hour", "10 minutes")
+      .writeStream.format("memory").queryName(sink).outputMode("append")
+      .start()
     try {
-      val q = StreamCardinality.windowedDistinct(mem.toDS(), "1 hour", "10 minutes")
-        .writeStream.format("memory").queryName(sink).outputMode("append")
-        .start()
-      try {
-        val third = evs.length / 3
-        Seq(evs.slice(0, third), evs.slice(third, 2 * third),
-            evs.slice(2 * third, evs.length)).foreach { b =>
-          mem.addData(b.toIndexedSeq: _*)
-          q.processAllAvailable()
-        }
-        mem.addData(Event(
-          java.sql.Timestamp.valueOf("2030-01-01 00:00:00"), -1L, "zz"))
+      val third = evs.length / 3
+      Seq(evs.slice(0, third), evs.slice(third, 2 * third),
+          evs.slice(2 * third, evs.length)).foreach { b =>
+        mem.addData(b.toIndexedSeq: _*)
         q.processAllAvailable()
-      } finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", savedSp)
-    val out = s.table(sink)
+      }
+      mem.addData(Event(
+        java.sql.Timestamp.valueOf("2030-01-01 00:00:00"), -1L, "zz"))
+      q.processAllAvailable()
+    } finally q.stop()
+    val out = ss.table(sink)
       .select(col("win_start"), col("eventType").as("event_type"),
         col("n_events"), col("distinct_users_est"), col("s51"))
       .orderBy(col("win_start"), col("event_type"))
       .localCheckpoint() // pin rows before the temp view is dropped
-    s.catalog.dropTempView(sink)
+    ss.catalog.dropTempView(sink)
     out
   }
 
@@ -677,25 +671,22 @@ object Advanced {
       .as[(Long, java.sql.Date, Double)].collect()
       .sortBy(_._2.getTime) // day order: per-key state sees days ascending
       .map { case (u, d, c) => Tick(u, d, c) }
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
+    val ss = graft.Session.forStream(s)
+    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
     val mem = MemoryStream[Tick]
     val sink = s"q96_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-    val savedSp = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
+    val q = BreadthStream.directions(mem.toDS())
+      .writeStream.format("memory").queryName(sink).outputMode("append")
+      .start()
     try {
-      val q = BreadthStream.directions(mem.toDS())
-        .writeStream.format("memory").queryName(sink).outputMode("append")
-        .start()
-      try {
-        val third = ticks.length / 3
-        Seq(ticks.slice(0, third), ticks.slice(third, 2 * third),
-            ticks.slice(2 * third, ticks.length)).foreach { b =>
-          mem.addData(b.toIndexedSeq: _*)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", savedSp)
-    val out = s.table(sink)
+      val third = ticks.length / 3
+      Seq(ticks.slice(0, third), ticks.slice(third, 2 * third),
+          ticks.slice(2 * third, ticks.length)).foreach { b =>
+        mem.addData(b.toIndexedSeq: _*)
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    val out = ss.table(sink)
       .groupBy(col("day"))
       .agg(count(lit(1)).as("n_users"),
         sum(when(col("dir") === 1, 1).otherwise(0)).as("advancers"),
@@ -703,7 +694,7 @@ object Advanced {
         sum(when(col("dir") === 0, 1).otherwise(0)).as("flat_or_first"))
       .orderBy(col("day"))
       .localCheckpoint() // pin rows before the temp view is dropped
-    s.catalog.dropTempView(sink)
+    ss.catalog.dropTempView(sink)
     out
   }
 
@@ -791,33 +782,30 @@ object Advanced {
       .sortBy(_._1.getTime)
     val clicks = ev.collect { case (ts, u, id, "click") => Click(ts, u, id) }
     val views = ev.collect { case (ts, u, id, "view") => View(ts, u, id) }
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
+    val ss = graft.Session.forStream(s)
+    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
     val memC = MemoryStream[Click]
     val memV = MemoryStream[View]
     val sink = s"q105_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-    val savedSp = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
+    val q = StreamStreamJoin.attributed(memC.toDS(), memV.toDS(),
+        AttributionWindowSec, "6 hours")
+      .writeStream.format("memory").queryName(sink).outputMode("append")
+      .start()
     try {
-      val q = StreamStreamJoin.attributed(memC.toDS(), memV.toDS(),
-          AttributionWindowSec, "6 hours")
-        .writeStream.format("memory").queryName(sink).outputMode("append")
-        .start()
-      try {
-        val (tc, tv) = (clicks.length / 3, views.length / 3)
-        for (i <- 0 until 3) {
-          val (c0, c1) = (i * tc, if (i == 2) clicks.length else (i + 1) * tc)
-          val (v0, v1) = (i * tv, if (i == 2) views.length else (i + 1) * tv)
-          memV.addData(views.slice(v0, v1).toIndexedSeq: _*)
-          memC.addData(clicks.slice(c0, c1).toIndexedSeq: _*)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", savedSp)
-    val out = s.table(sink)
+      val (tc, tv) = (clicks.length / 3, views.length / 3)
+      for (i <- 0 until 3) {
+        val (c0, c1) = (i * tc, if (i == 2) clicks.length else (i + 1) * tc)
+        val (v0, v1) = (i * tv, if (i == 2) views.length else (i + 1) * tv)
+        memV.addData(views.slice(v0, v1).toIndexedSeq: _*)
+        memC.addData(clicks.slice(c0, c1).toIndexedSeq: _*)
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    val out = ss.table(sink)
       .select(col("user_id"), col("click_id"), col("view_id"), col("lag_sec"))
       .orderBy(col("click_id"), col("view_id"))
       .localCheckpoint() // pin rows before the temp view is dropped
-    s.catalog.dropTempView(sink)
+    ss.catalog.dropTempView(sink)
     out
   }
 
@@ -849,40 +837,37 @@ object Advanced {
     val maxTs = ev.last._1.getTime
     def sentinel(k: Int) =
       new java.sql.Timestamp(maxTs + 86400000L * 1000 * k)
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
+    val ss = graft.Session.forStream(s)
+    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
     val memC = MemoryStream[Click]
     val memV = MemoryStream[View]
     val sink = s"q187_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-    val savedSp = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
+    val q = StreamStreamJoin.attributedLeft(memC.toDS(), memV.toDS(),
+        AttributionWindowSec, "6 hours")
+      .writeStream.format("memory").queryName(sink).outputMode("append")
+      .start()
     try {
-      val q = StreamStreamJoin.attributedLeft(memC.toDS(), memV.toDS(),
-          AttributionWindowSec, "6 hours")
-        .writeStream.format("memory").queryName(sink).outputMode("append")
-        .start()
-      try {
-        val (tc, tv) = (clicks.length / 3, views.length / 3)
-        for (i <- 0 until 3) {
-          val (c0, c1) = (i * tc, if (i == 2) clicks.length else (i + 1) * tc)
-          val (v0, v1) = (i * tv, if (i == 2) views.length else (i + 1) * tv)
-          memV.addData(views.slice(v0, v1).toIndexedSeq: _*)
-          memC.addData(clicks.slice(c0, c1).toIndexedSeq: _*)
-          q.processAllAvailable()
-        }
-        // watermark flush: two sentinel batches (jump, then evict+emit)
-        for (k <- 1 to 2) {
-          memC.addData(Click(sentinel(k), -1L, -1L))
-          memV.addData(View(sentinel(k), -1L, -1L))
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", savedSp)
-    val out = s.table(sink)
+      val (tc, tv) = (clicks.length / 3, views.length / 3)
+      for (i <- 0 until 3) {
+        val (c0, c1) = (i * tc, if (i == 2) clicks.length else (i + 1) * tc)
+        val (v0, v1) = (i * tv, if (i == 2) views.length else (i + 1) * tv)
+        memV.addData(views.slice(v0, v1).toIndexedSeq: _*)
+        memC.addData(clicks.slice(c0, c1).toIndexedSeq: _*)
+        q.processAllAvailable()
+      }
+      // watermark flush: two sentinel batches (jump, then evict+emit)
+      for (k <- 1 to 2) {
+        memC.addData(Click(sentinel(k), -1L, -1L))
+        memV.addData(View(sentinel(k), -1L, -1L))
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    val out = ss.table(sink)
       .filter(col("user_id") >= 0)
       .select(col("user_id"), col("click_id"), col("view_id"), col("lag_sec"))
       .orderBy(col("click_id"), col("view_id"))
       .localCheckpoint()
-    s.catalog.dropTempView(sink)
+    ss.catalog.dropTempView(sink)
     out
   }
 
@@ -1539,22 +1524,19 @@ object Advanced {
         floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
       .as[(java.sql.Timestamp, String, Long)].collect()
       .map { case (ts, et, c) => Ev(ts, et, c) }
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
+    val ss = graft.Session.forStream(s)
+    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
     val mem = MemoryStream[Ev]
     val m = new StreamMaintain.Maintainer
-    val savedSp = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
+    val q = StreamMaintain.maintained(mem.toDS(), m).start()
     try {
-      val q = StreamMaintain.maintained(mem.toDS(), m).start()
-      try {
-        val third = evs.length / 3
-        Seq(evs.slice(0, third), evs.slice(third, 2 * third),
-            evs.slice(2 * third, evs.length)).foreach { b =>
-          mem.addData(b.toIndexedSeq: _*)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", savedSp)
+      val third = evs.length / 3
+      Seq(evs.slice(0, third), evs.slice(third, 2 * third),
+          evs.slice(2 * third, evs.length)).foreach { b =>
+        mem.addData(b.toIndexedSeq: _*)
+        q.processAllAvailable()
+      }
+    } finally q.stop()
     m.current
       .select(col("eventType").as("event_type"), col("n"),
         col("sum_cents"), col("min_cents"), col("max_cents"))
@@ -2889,7 +2871,6 @@ object Advanced {
 
   lazy val oracleQ205: String = {
     val rounds = (1 until KcentK).map { r =>
-      val prev = if (r == 1) "m1" else s"m$r"
       // selection CTE c$r reads m$r; the NEXT distance CTE m${r+1}
       // folds c$r in with least()
       s"""c$r AS (SELECT vec_id, qv, sq, mind FROM m$r

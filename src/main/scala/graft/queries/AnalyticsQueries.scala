@@ -1390,28 +1390,25 @@ object AnalyticsQueries {
       .as[(java.sql.Timestamp, Long, Long, Double)].collect()
       .sortBy(t => (t._1.getTime, t._3)) // in-order arrival per user
       .map { case (ts, u, e, v) => Event(ts, u, e, v) }
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
+    val ss = graft.Session.forStream(s)
+    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
     val mem = MemoryStream[Event]
     val sink = s"q157_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-    val savedSp = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
+    val q = StreamSessions.sessions(mem.toDS(), SessionGapSec)
+      .writeStream.format("memory").queryName(sink).outputMode("append")
+      .start()
     try {
-      val q = StreamSessions.sessions(mem.toDS(), SessionGapSec)
-        .writeStream.format("memory").queryName(sink).outputMode("append")
-        .start()
-      try {
-        val third = evs.length / 3
-        Seq(evs.slice(0, third), evs.slice(third, 2 * third),
-            evs.slice(2 * third, evs.length)).foreach { b =>
-          mem.addData(b.toIndexedSeq: _*)
-          q.processAllAvailable()
-        }
-        mem.addData(Event(
-          java.sql.Timestamp.valueOf("2030-01-01 00:00:00"), -1L, 0L, 0.0))
+      val third = evs.length / 3
+      Seq(evs.slice(0, third), evs.slice(third, 2 * third),
+          evs.slice(2 * third, evs.length)).foreach { b =>
+        mem.addData(b.toIndexedSeq: _*)
         q.processAllAvailable()
-      } finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", savedSp)
-    val out = s.table(sink)
+      }
+      mem.addData(Event(
+        java.sql.Timestamp.valueOf("2030-01-01 00:00:00"), -1L, 0L, 0.0))
+      q.processAllAvailable()
+    } finally q.stop()
+    val out = ss.table(sink)
       .select(col("userId").as("user_id"),
         col("sessionIdx").as("session_idx"),
         col("nEvents").as("n_events"),
@@ -1421,7 +1418,7 @@ object AnalyticsQueries {
         col("sum6").as("value_sum6"))
       .orderBy(col("user_id"), col("session_idx"))
       .localCheckpoint() // pin rows before the temp view is dropped
-    s.catalog.dropTempView(sink)
+    ss.catalog.dropTempView(sink)
     out
   }
 

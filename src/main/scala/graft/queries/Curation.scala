@@ -1795,22 +1795,19 @@ object Curation {
       .select(col("doc_id"), col("text"))
       .as[(Long, String)].collect()
       .map { case (id, t) => Doc(id, t) }
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
+    val ss = graft.Session.forStream(s)
+    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
     val mem = MemoryStream[Doc]
     val m = new StreamCms.Maintainer
-    val savedSp = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
+    val q = StreamCms.maintained(mem.toDS(), m).start()
     try {
-      val q = StreamCms.maintained(mem.toDS(), m).start()
-      try {
-        val third = docs.length / 3
-        Seq(docs.slice(0, third), docs.slice(third, 2 * third),
-            docs.slice(2 * third, docs.length)).foreach { b =>
-          mem.addData(b.toIndexedSeq: _*)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", savedSp)
+      val third = docs.length / 3
+      Seq(docs.slice(0, third), docs.slice(third, 2 * third),
+          docs.slice(2 * third, docs.length)).foreach { b =>
+        mem.addData(b.toIndexedSeq: _*)
+        q.processAllAvailable()
+      }
+    } finally q.stop()
     m.current.select(col("i"), col("bucket"), col("rc"))
       .orderBy(col("i"), col("bucket"))
   }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -321,21 +321,18 @@ object ExactSubstr {
     import graft.streaming.StreamExactSubstr.SDoc
     val docs = normDocs(s, dir)
       .orderBy(col("doc_id")).as[SDoc].collect()
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
+    val ss = graft.Session.forStream(s)
+    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
     val mem = MemoryStream[SDoc]
     val a = new StreamExactSubstr.Absorber
-    val savedSp = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
+    val q = StreamExactSubstr.applied(mem.toDS(), a).start()
     try {
-      val q = StreamExactSubstr.applied(mem.toDS(), a).start()
-      try {
-        val quarter = math.max(1, docs.length / 4)
-        docs.grouped(quarter).foreach { b =>
-          mem.addData(b.toIndexedSeq: _*)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", savedSp)
+      val quarter = math.max(1, docs.length / 4)
+      docs.grouped(quarter).foreach { b =>
+        mem.addData(b.toIndexedSeq: _*)
+        q.processAllAvailable()
+      }
+    } finally q.stop()
     a.results.orderBy(col("doc_id"))
   }
 
@@ -372,16 +369,15 @@ object ExactSubstr {
     val tmp = java.nio.file.Files.createTempDirectory("graft_q216")
     val table = "graft_q216_state_" +
       tmp.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    s.sql(s"DROP TABLE IF EXISTS $table")
-    val savedSp = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
+    val ss = graft.Session.forStream(s)
+    ss.sql(s"DROP TABLE IF EXISTS $table")
     try {
       val quarter = math.max(1, docs.length / 4)
       val batches = docs.grouped(quarter).toVector
       // one incarnation of the absorber per phase — phase 2's instance
       // is constructed AFTER phase 1's died, seeing only the storage
       def phase(bs: Seq[Array[SDoc]]): Unit = if (bs.nonEmpty) {
-        implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
+        implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
         val mem = MemoryStream[SDoc]
         val a = new StreamExactSubstr.PersistedAbsorber(table, tmp.toString,
           compactEvery = 3)
@@ -392,12 +388,11 @@ object ExactSubstr {
       }
       phase(batches.take(2))
       phase(batches.drop(2))
-      val out = s.read.parquet(s"$tmp/emitted").drop("gen")
+      val out = ss.read.parquet(s"$tmp/emitted").drop("gen")
         .orderBy(col("doc_id")).localCheckpoint()
-      s.sql(s"DROP TABLE IF EXISTS $table")
+      ss.sql(s"DROP TABLE IF EXISTS $table")
       out
     } finally {
-      s.conf.set("spark.sql.shuffle.partitions", savedSp)
       // tidy the scratch storage; results are checkpointed already
       graft.operators.Upsert.rmTree(tmp.toFile)
     }

@@ -582,7 +582,6 @@ object LandingProgram {
                        dates: Seq[String],
                        fetch: LandingJob.RowFetch,
                        setBase: Int => Unit): DataFrame = {
-    import s.implicits._
     val cfg = LandingJob.Config("landing_q222", "corrections",
       s"$tmp/landing", s"$tmp/coverage",
       successStaleAfterSec = Some(1)) // a SUCCESS day re-pulls freely

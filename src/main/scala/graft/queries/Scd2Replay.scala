@@ -79,24 +79,21 @@ object Scd2Replay {
         .map { case (code, seg, nat) => Chg(Days(i - 1), code, seg, nat) }
     }
     val (r1, r2, r3) = (rows(1), rows(2), rows(3))
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
+    val ss = graft.Session.forStream(s)
+    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
     val mem = MemoryStream[Chg]
-    val m = new StreamScd2.Maintainer(s)
-    val savedSp = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
+    val m = new StreamScd2.Maintainer(ss)
+    val q = StreamScd2.applied(mem.toDS(), m).start()
     try {
-      val q = StreamScd2.applied(mem.toDS(), m).start()
-      try {
-        // batch 1: snapshot 1 + the FIRST HALF of snapshot 2 (boundary
-        // spans snapshots); batch 2: rest of 2; batch 3: snapshot 3
-        val (r2a, r2b) = r2.splitAt(r2.length / 2)
-        Seq(r1 ++ r2a, r2b, r3).foreach { b =>
-          mem.addData(b: _*)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      m.flush() // snapshot 3 has no successor — explicit end-of-stream
-    } finally s.conf.set("spark.sql.shuffle.partitions", savedSp)
+      // batch 1: snapshot 1 + the FIRST HALF of snapshot 2 (boundary
+      // spans snapshots); batch 2: rest of 2; batch 3: snapshot 3
+      val (r2a, r2b) = r2.splitAt(r2.length / 2)
+      Seq(r1 ++ r2a, r2b, r3).foreach { b =>
+        mem.addData(b: _*)
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    m.flush() // snapshot 3 has no successor — explicit end-of-stream
     m.current.orderBy(col("code"), col("valid_from"))
   }
 

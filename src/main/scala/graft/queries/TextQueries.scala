@@ -1412,7 +1412,8 @@ GROUP BY d.source ORDER BY d.source"""
       .sortBy(_._1)
       .map { case (id, t) =>
         Doc(new java.sql.Timestamp(1704067200000L + id * 1000L), id, t) }
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
+    val ss = graft.Session.forStream(s)
+    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
     val mem = MemoryStream[Doc]
     val sink = s"q92_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
     // the standing banded relation is read by EVERY micro-batch —
@@ -1421,31 +1422,25 @@ GROUP BY d.source ORDER BY d.source"""
     val out = graft.operators.Materialize.withMaterialized(
         StreamNearDedup.standingBanded(standing, ShingleK, NumHashes,
           RowsPerBand)) { sBand =>
-      // micro-batches here are batch-slice-sized, so 32 state-store
-      // partitions are pure per-batch commit overhead; a real deployment
-      // sizes this to its own batch volume (it is fixed at the first
-      // checkpoint for the query's life). Scoped: restored after the run.
-      val savedSp = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
+      // a real deployment sizes the state width to its own batch volume
+      // (it is fixed at the first checkpoint for the query's life)
+      val q = StreamNearDedup.screenBanded(mem.toDS(), sBand, ShingleK,
+          NumHashes, RowsPerBand, JaccardThreshold, lateness = "10 minutes")
+        .writeStream.format("memory").queryName(sink).outputMode("append")
+        .start()
       try {
-        val q = StreamNearDedup.screenBanded(mem.toDS(), sBand, ShingleK,
-            NumHashes, RowsPerBand, JaccardThreshold, lateness = "10 minutes")
-          .writeStream.format("memory").queryName(sink).outputMode("append")
-          .start()
-        try {
-          val (b1, b2) = arriving.splitAt(arriving.length / 2)
-          mem.addData(b1.toIndexedSeq: _*)
-          q.processAllAvailable()
-          mem.addData(b2.toIndexedSeq: _*)
-          q.processAllAvailable()
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", savedSp)
-      s.table(sink)
+        val (b1, b2) = arriving.splitAt(arriving.length / 2)
+        mem.addData(b1.toIndexedSeq: _*)
+        q.processAllAvailable()
+        mem.addData(b2.toIndexedSeq: _*)
+        q.processAllAvailable()
+      } finally q.stop()
+      ss.table(sink)
         .select(col("docId").as("new_doc_id"), col("dup_of"), col("jaccard"))
         .orderBy(col("new_doc_id"), col("dup_of"))
         .localCheckpoint() // pin rows before the temp view is dropped
     }
-    s.catalog.dropTempView(sink)
+    ss.catalog.dropTempView(sink)
     out
   }
 
@@ -1474,27 +1469,24 @@ GROUP BY d.source ORDER BY d.source"""
       .as[(Long, String, Int)].collect()
     val stepMs = (ranked.map(_._1).max + 1) * 1000L + 601000L
     val batches = ranked.groupBy(_._3).toSeq.sortBy(_._1).map(_._2)
-    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
+    val ss = graft.Session.forStream(s)
+    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
     val mem = MemoryStream[Doc]
     val sink = s"q94_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-    val savedSp = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = StreamDedup.dedup(mem.toDS(), lateness = "3650 days")
-        .writeStream.format("memory").queryName(sink).outputMode("append")
-        .start()
-      try batches.foreach { b =>
-        mem.addData(b.map { case (id, t, occ) =>
-          Doc(new java.sql.Timestamp(
-            1704067200000L + occ * stepMs + id * 1000L), id, t) }.toIndexedSeq: _*)
-        q.processAllAvailable()
-      } finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", savedSp)
-    val out = s.table(sink)
+    val q = StreamDedup.dedup(mem.toDS(), lateness = "3650 days")
+      .writeStream.format("memory").queryName(sink).outputMode("append")
+      .start()
+    try batches.foreach { b =>
+      mem.addData(b.map { case (id, t, occ) =>
+        Doc(new java.sql.Timestamp(
+          1704067200000L + occ * stepMs + id * 1000L), id, t) }.toIndexedSeq: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    val out = ss.table(sink)
       .select(col("docId").as("doc_id"), col("fp"))
       .orderBy(col("doc_id"))
       .localCheckpoint() // pin rows before the temp view is dropped
-    s.catalog.dropTempView(sink)
+    ss.catalog.dropTempView(sink)
     out
   }
 

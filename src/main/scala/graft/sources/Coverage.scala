@@ -41,17 +41,18 @@ import org.apache.spark.sql.types._
   * The DURABLE manifest is one small file per (dataset, target_date)
   * CELL under a coverage root, `<root>/ds=<enc(dataset)>/<date>.tsv`,
   * holding one URL-encoded TSV line (the [[RunLedger]] cell encoding).
-  * [[writeCell]] is the upsert: it writes a uniquely named temp sibling
-  * and renames it over the cell with `ATOMIC_MOVE` — the cell rename is
-  * the ledger's single commit point. A publish touches only its own
-  * cell, so writers of different cells never contend, a re-publish of
-  * one cell is last-writer-wins, and a writer killed before its rename
-  * leaves the previous cell intact (its temp file is never read: readers
-  * open cell names only). [[readCells]] reads the cells a
-  * (datasets × days) window names, on the driver, without Spark. Like
-  * the [[RunLedger]] file and the [[JobLock]] dir, the coverage root is
-  * driver-side control state on a filesystem with atomic rename (a
-  * local or POSIX-mounted path), not a Hadoop URI.
+  * [[writeCell]] is the upsert: it writes a uniquely named temp file
+  * under `<root>/_tmp/` (same filesystem) and renames it over the cell
+  * with `ATOMIC_MOVE` — the cell rename is the ledger's single commit
+  * point. A publish touches only its own cell, so writers of different
+  * cells never contend, a re-publish of one cell is last-writer-wins,
+  * and a writer killed before its rename leaves the previous cell intact
+  * (its temp file is never read: readers open cell names only; a
+  * landing run's [[sweepTemps]] deletes it later). [[readCells]] reads
+  * the cells a (datasets × days) window names, on the driver, without
+  * Spark. Like the [[RunLedger]] file and the [[JobLock]] dir, the
+  * coverage root is driver-side control state on a filesystem with
+  * atomic rename (a local or POSIX-mounted path), not a Hadoop URI.
   */
 object Coverage {
 
@@ -87,14 +88,6 @@ object Coverage {
         "error_count", "source_observed_at", "run_id")
   }
 
-  /** The claim-time placeholder (`00085:137-152`): FAILED with one
-    * error until the attempt proves otherwise — a crash mid-run leaves
-    * the date marked uncovered, so catch-up retries it. */
-  def claimPlaceholder(s: SparkSession, dataset: String,
-                       targetDate: java.sql.Date,
-                       runId: String): DataFrame =
-    row(s, dataset, targetDate, Failed, 0L, 1, None, Some(runId))
-
   /** The manifest row schema (`dataset_coverage`'s columns). */
   val ledgerSchema: StructType = StructType(Seq(
     StructField("dataset", StringType, nullable = false),
@@ -105,15 +98,16 @@ object Coverage {
     StructField("source_observed_at", LongType, nullable = true),
     StructField("run_id", StringType, nullable = true)))
 
-  def emptyLedger(s: SparkSession): DataFrame =
-    s.createDataFrame(s.sparkContext.emptyRDD[Row], ledgerSchema)
+  /** Where [[stageCell]] writes its temp files, under a coverage root. */
+  val TmpDir = "_tmp"
 
   private def cellPath(root: String, dataset: String,
                        day: java.sql.Date): Path =
     Paths.get(root, "ds=" + RunLedger.enc(dataset), s"$day.tsv")
 
   /** Upsert one manifest cell: contract-check the row, write it to a
-    * uniquely named temp sibling, and rename that over the cell. */
+    * uniquely named temp file under `<root>/_tmp/`, and rename that over
+    * the cell. */
   def writeCell(root: String, dataset: String, day: java.sql.Date,
                 status: String, rowCount: Long, errorCount: Int,
                 sourceObservedAtMs: Option[Long],
@@ -131,15 +125,32 @@ object Coverage {
                                runId: Option[String]): Path = {
     validate(status, rowCount, errorCount, sourceObservedAtMs)
     import RunLedger.{enc, optCell}
-    val cell = cellPath(root, dataset, day)
-    Files.createDirectories(cell.getParent)
-    val tmp = cell.resolveSibling(
-      s"${cell.getFileName}.${java.util.UUID.randomUUID()}.tmp")
+    Files.createDirectories(cellPath(root, dataset, day).getParent)
+    val tmp = Files.createDirectories(Paths.get(root, TmpDir)).resolve(
+      s"${enc(dataset)}.$day.${java.util.UUID.randomUUID()}.tmp")
     Files.writeString(tmp, Seq(enc(dataset), day.toString, status,
       rowCount.toString, errorCount.toString,
       sourceObservedAtMs.map(_.toString).getOrElse("-"),
       optCell(runId)).mkString("\t"))
     tmp
+  }
+
+  /** Delete the temp files under `<root>/_tmp/` last modified more than
+    * `maxAgeMs` ago. A temp lives for one write and one rename, so one
+    * that old was left by a publish killed before its rename. Ages are
+    * file mtimes, so they are read against the wall clock. */
+  def sweepTemps(root: String, maxAgeMs: Long): Unit = {
+    val dir = Paths.get(root, TmpDir)
+    if (Files.isDirectory(dir)) {
+      val cutoff = System.currentTimeMillis() - maxAgeMs
+      val ls = Files.list(dir)
+      try ls.forEach { p =>
+        // a live writer may rename its temp away between list and stat
+        try if (Files.getLastModifiedTime(p).toMillis < cutoff)
+          Files.deleteIfExists(p)
+        catch { case _: java.nio.file.NoSuchFileException => }
+      } finally ls.close()
+    }
   }
 
   /** The manifest rows of the (datasets × days) window, in dataset then
@@ -163,12 +174,6 @@ object Coverage {
       case _ => throw new IllegalStateException(s"corrupt coverage cell $p")
     }
   }
-
-  /** Upsert manifest rows into the ledger — `ON CONFLICT (dataset,
-    * target_date) DO UPDATE`, last write wins ([[Upsert.keyed]]). */
-  def upsert(ledger: DataFrame, rows: DataFrame): DataFrame =
-    graft.operators.Upsert.keyed(ledger, rows,
-      Seq("dataset", "target_date"))
 
   /** COVERAGE-driven catch-up (the round-13 ask: catch-up must read the
     * manifest, not output presence): per dataset, the business days

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured-Streaming re-expression of the reference's stateful breadth

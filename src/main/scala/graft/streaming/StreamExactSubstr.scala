@@ -147,7 +147,7 @@ object StreamExactSubstr {
     *   (measured: the q216 sf0.1 gate, whose state is ~10 MB, ran
     *   25.5 s always-pruned vs 17.3 s with the crossover), and pure
     *   win once the state dwarfs any batch (the 100 TB regime the
-    *   pruning exists for — `tools/Probe216` measures rows-into-merge
+    *   pruning exists for — PLANS.md records rows-into-merge
     *   scaling with the delta, not the state). The default crossover
     *   is deliberately conservative: at 64 MB a full scan-and-merge
     *   still costs less than a second. */
@@ -231,25 +231,6 @@ object StreamExactSubstr {
           col("gram") <= lit(mm.getString(1)))
         .join(grams.select(col("gram")).distinct().hint("shuffle_hash"),
           Seq("gram"), "left_semi"))
-    }
-
-    /** Probe hook: standing state rows a full resolve would scan vs the
-      * rows the pruned delta read feeds to the min-merge ([[tools
-      * .Probe216]]'s read-volume row). */
-    private[graft] def stateReadRows(s: SparkSession,
-                                     grams: DataFrame): (Long, Long) = synchronized {
-      awaitCompact()
-      if (!s.catalog.tableExists(table)) (0L, 0L)
-      else {
-        val mm = grams.agg(min(col("gram")), max(col("gram"))).collect()(0)
-        val pruned = if (mm.isNullAt(0)) 0L
-          else s.table(table)
-            .filter(col("gram") >= lit(mm.getString(0)) &&
-              col("gram") <= lit(mm.getString(1)))
-            .join(grams.select(col("gram")).distinct()
-              .hint("shuffle_hash"), Seq("gram"), "left_semi").count()
-        (s.table(table).count(), pruned)
-      }
     }
 
     /** Highest committed state generation (0 = no state yet). Bounded

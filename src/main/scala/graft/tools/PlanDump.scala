@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named gate queries to files — the
   * optimization-round plan artifact (`plans/rNN/<query>_{before,after}.txt`).
   *
@@ -19,15 +17,7 @@ object PlanDump {
     java.nio.file.Files.createDirectories(outDir)
     val suffix = args(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(graft.Session.cpus)
     args.drop(2).foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       val df = fn(spark, sfDir)

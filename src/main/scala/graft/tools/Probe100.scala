@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Build an SF1-EQUIVALENT test directory from sf0.1 so the scale-ratio
@@ -46,13 +45,7 @@ object Probe100 {
   def main(args: Array[String]): Unit = {
     val src = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "/tmp/graft_sf1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cpus)
 
     val lower = "abcdefghijklmnopqrstuvwxyz"
     val digits = "0123456789"

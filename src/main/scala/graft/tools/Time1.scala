@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Time one gate query N times in a single JVM (noise-resistant profiling):
   * `runMain graft.tools.Time1 <queryName> [sfDir] [reps]`. */
 object Time1 {
@@ -9,18 +7,7 @@ object Time1 {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries",
-        graft.Session.CodegenCacheMaxEntries)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "134217728"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cpus)
     spark.range(1000000).selectExpr("sum(id)").collect()
     val fn = graft.SparkEntry.queries(name)
     (1 to reps).foreach { i =>

@@ -269,29 +269,6 @@ class CoverageSpec extends AnyFunSuite {
     Coverage.validate(Coverage.Failed, 5L, 2, Some(1L))  // partial save + errors
   }
 
-  test("claim placeholder is failed/0/1 with the run id") {
-    import spark.implicits._
-    val r = Coverage.claimPlaceholder(spark, "orders",
-      java.sql.Date.valueOf("2024-06-03"), "run-1")
-      .select(col("status"), col("row_count"), col("error_count"),
-        col("run_id"))
-      .as[(String, Long, Int, String)].collect()
-    assert(r.toSeq == Seq(("failed", 0L, 1, "run-1")))
-  }
-
-  test("upsert: the success manifest replaces the claim placeholder") {
-    import spark.implicits._
-    val d = java.sql.Date.valueOf("2024-06-03")
-    val led0 = Coverage.upsert(Coverage.emptyLedger(spark),
-      Coverage.claimPlaceholder(spark, "orders", d, "run-1"))
-    val led1 = Coverage.upsert(led0,
-      Coverage.row(spark, "orders", d, Coverage.Success, 120L, 0,
-        Some(999L), Some("run-1")))
-    val rows = led1.select(col("dataset"), col("status"), col("row_count"))
-      .as[(String, String, Long)].collect()
-    assert(rows.toSeq == Seq(("orders", "success", 120L)))
-  }
-
   test("catch-up reads COVERAGE: checked-empty success is covered, failed+missing retry") {
     import spark.implicits._
     val today = java.sql.Date.valueOf("2024-06-14") // a Friday

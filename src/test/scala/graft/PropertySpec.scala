@@ -320,7 +320,8 @@ class PropertySpec extends AnyFunSuite {
         }
       }
       val ledger = rows.reduceOption(_ unionByName _)
-        .getOrElse(Coverage.emptyLedger(spark))
+        .getOrElse(spark.createDataFrame(
+          java.util.List.of[org.apache.spark.sql.Row](), Coverage.ledgerSchema))
       val got = Coverage.catchUpTargets(ledger, "ds", calendar, "day",
         today, lookback, maxDays)
         .as[(java.sql.Date, String)].collect().toSeq

@@ -23,7 +23,8 @@ import graft.sources.Coverage
   *     every other cell byte-identical, and a plan reads only the cells
   *     of its window.
   *  3. THE CELL RENAME is the ledger's commit point: a publish killed
-  *     before it leaves the previous cell readable, runs sharing a
+  *     before it leaves the previous cell readable (and its temp file
+  *     is swept by a later landing once older than the lease TTL), runs sharing a
   *     coverage root under different job names keep each other's rows,
   *     and a re-publish of one cell is last-writer-wins.
   */
@@ -147,14 +148,36 @@ class LandingPlaneSpec extends AnyFunSuite {
       // a killed first publish leaves the cell absent: the date reads as
       // missing, which catch-up plans
       val d2 = date("2024-06-04")
-      Coverage.stageCell(root, "rows", d2, Coverage.Failed, 0L, 1, None,
-        Some("r3"))
+      val tmpFile2 = Coverage.stageCell(root, "rows", d2, Coverage.Failed,
+        0L, 1, None, Some("r3"))
       assert(Coverage.readCells(root, Seq("rows"), Seq(d2)).isEmpty)
       // the next publish commits over the leftovers
       Coverage.writeCell(root, "rows", d, Coverage.Failed, 0L, 1, None,
         Some("r4"))
       assert(Coverage.readCells(root, Seq("rows"), Seq(d, d2)) ==
         Seq(Row("rows", d, Coverage.Failed, 0L, 1, null, "r4")))
+      // the next landing sweeps temps older than the lease TTL out of
+      // _tmp and keeps younger ones; it lists no ds= dir, so a file
+      // planted there (named like a temp, just as old) stays
+      val cfg = LandingJob.Config("sweep_job", "other", s"$tmp/landing", root)
+      def age(p: java.nio.file.Path): Unit =
+        java.nio.file.Files.setLastModifiedTime(p,
+          java.nio.file.attribute.FileTime.fromMillis(
+            System.currentTimeMillis() - cfg.ttlSeconds * 1000L - 60000L))
+      age(Coverage.stageCell(root, "rows", d2, Coverage.Failed, 0L, 1, None,
+        Some("r5")))
+      val planted = java.nio.file.Paths.get(root, "ds=rows",
+        "2024-06-03.tsv.0.tmp")
+      java.nio.file.Files.writeString(planted, "x")
+      age(planted)
+      def split() = files(root).partition(_._1.startsWith(Coverage.TmpDir))
+      val (_, cellsBefore) = split()
+      lander(tmp, cfg)(Seq("2024-06-05"))
+      val (temps, cellsAfter) = split()
+      assert(temps.keySet == Set(tmpFile, tmpFile2).map(p =>
+        java.nio.file.Paths.get(root).relativize(p).toString))
+      assert(cellsAfter - "ds=other/2024-06-05.tsv" == cellsBefore)
+      assert(cellsAfter.contains("ds=other/2024-06-05.tsv"))
     } finally Upsert.rmTree(tmp.toFile)
   }
 
