@@ -440,6 +440,15 @@ object Bench {
 
   private def coordinate(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    System.err.println(deadlineSec match {
+      case Some(d) if deadlineDefault =>
+        s"BENCH: deadline ${d}s (non-interactive default)"
+      case Some(d) => s"BENCH: deadline ${d}s (SPARK_GRAFT_BENCH_DEADLINE_SEC)"
+      case None =>
+        if (sys.env.contains("SPARK_GRAFT_BENCH_DEADLINE_SEC"))
+          "BENCH: deadline none (SPARK_GRAFT_BENCH_DEADLINE_SEC)"
+        else "BENCH: deadline none (interactive)"
+    })
     // wait (bounded) for ambient load to decay, THEN sample the regime
     // BEFORE any child inflates loadavg (lazy val — forced here so the
     // reading is the true pre-bench ambient load)
@@ -513,6 +522,8 @@ object Bench {
     def estSec(g: Seq[String], r: Int): Double =
       5.0 + r * g.map(n => prior.getOrElse(shortKey(n), 0.7)).sum
     var shedChildren = 0
+    // the query names of every child forked at reps=1
+    val shedQueries = scala.collection.mutable.ListBuffer.empty[String]
     val results: Seq[(String, QRes)] =
       if (sys.env.contains("SPARK_GRAFT_BENCH_INPROC")) {
         isoMode = "session"; runInProcess(names)
@@ -552,7 +563,7 @@ object Bench {
               shed
             }
             val flags = if (shedThis) cds :+ "-Dgraft.bench.reps=1" else cds
-            if (shedThis) shedChildren += 1
+            if (shedThis) { shedChildren += 1; shedQueries ++= g }
             acc ++= runForked(g, childCp, flags, onHit)
               .getOrElse(g.map(_ -> NoRes))
           }
@@ -658,7 +669,8 @@ object Bench {
       Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
         .forEach(p => Files.deleteIfExists(p))
     } catch { case _: Throwable => }
-    emit(results.toMap, results, isoMode, remeasured, retriesLog, shedChildren)
+    emit(results.toMap, results, isoMode, remeasured, retriesLog,
+      shedChildren, shedQueries.toSeq)
   }
 
   /** The parent's classpath with every directory entry replaced by a jar of
@@ -759,7 +771,8 @@ object Bench {
                    isoMode: String,
                    remeasured: Seq[String],
                    retriesLog: Seq[(String, QRes, QRes, Int, String)],
-                   shedChildren: Int): Unit = {
+                   shedChildren: Int,
+                   shedQueries: Seq[String]): Unit = {
     def f3(d: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, d)
     def f2(d: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, d)
     def short(k: String): String = shortKey(k)
@@ -791,7 +804,7 @@ object Bench {
     val loadSummary =
       s""""loadmax":${f2(loadMax)},"iso_spreadmax":${f3(spreadMax)},"quiet":$quietBoxRegime,"quiet_waited_sec":$quietWaitedSec,"deadline_default":$deadlineDefault,"shed":$shedChildren,"remeasured":${remeasured.map(n => "\"" + short(n) + "\"").mkString("[", ",", "]")},"""
     def line(qs: String, extra: String): String =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,$extra$loadSummary"reps":$reps,"iso":"$isoMode","inv":"$inv","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,$extra$loadSummary"reps":$reps,"cpus":${Session.cpus},"iso":"$isoMode","inv":"$inv","sf":"$sfDir"}"""
     // FULL artifact — every median + total + inv — goes to a FILE the
     // tail can never truncate: round 7's 181-entry stdout line overflowed
     // the driver's 2000-char tail buffer, losing 32 medians and leaving
@@ -812,8 +825,10 @@ object Bench {
         ",\"l2\":" + f2(r2.load) + ",\"s2\":" + f3(r2.spread) +
         ",\"kept\":" + kept + ",\"why\":\"" + why + "\"}"
     }.mkString("{", ",", "}")
+    val shedJson = shedQueries.map(n => "\"" + short(n) + "\"")
+      .mkString("[", ",", "]")
     val full = line(fullQs,
-      s""""load":$loadQs,"spread":$spreadQs,"retries":$retriesJson,""")
+      s""""load":$loadQs,"spread":$spreadQs,"retries":$retriesJson,"shed_queries":$shedJson,""")
     val outPath = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_results.json"))
     try java.nio.file.Files.write(outPath,

@@ -143,41 +143,12 @@ object DailyRefreshJob {
     }
   }
 
-  /** Derived stages that read the LANDING table [[LandingJob]]
-    * publishes — the reference's cron-A post-steps read exactly the
-    * tables the fetch loop just wrote (`cron-a-direct.ts:115-147`
-    * chains the derived refreshes over the SAME day's landed data).
-    * Both stages prune to the one target_date partition (the landing
-    * table is date-partitioned), so a daily refresh touches O(day)
-    * input regardless of table history. */
-  def landingStages(spark: SparkSession, landingRoot: String,
-                    targetDate: String, ds: LandingJob.Dataset)
-      : Seq[(String, () => DataFrame)] = {
-    import org.apache.spark.sql.functions._
-    def landed = LandingJob.readLanding(spark, landingRoot, ds)
-      .getOrElse(sys.error(s"no landed ${ds.name} table under $landingRoot"))
-      .filter(col("target_date") === to_date(lit(targetDate)))
-    Seq(
-      "landing_daily_stats" -> (() =>
-        landed.groupBy(col("target_date"))
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("value")).as("sum_value"),
-            min(col("value")).as("min_value"),
-            max(col("value")).as("max_value"))),
-      "landing_value_ranks" -> (() => {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("target_date"))
-          .orderBy(col("value").desc, col("id"))
-        landed.withColumn("rank", row_number().over(w))
-      }))
-  }
-
   /** Is `targetDate`'s landing marked SUCCESS in the coverage manifest
-    * for EVERY dataset in `datasets`? The refresh trusts the MANIFEST,
-    * not output presence — a date whose landing failed (or never ran)
-    * has a partition that is stale or absent, and deriving analytics
-    * from it would publish wrong snapshots silently. A driver-side probe
-    * of the (datasets × targetDate) cells: no Spark job. */
+    * for EVERY dataset in `datasets`? A date whose landing failed (or
+    * never ran) has a partition that is stale or absent, and deriving
+    * analytics from it would publish wrong snapshots silently. A
+    * driver-side probe of the (datasets × targetDate) cells: no Spark
+    * job. */
   private[jobs] def landingCovered(cfg: LandingJob.Config,
                                    targetDate: String,
                                    datasets: Seq[String]): Boolean = {
@@ -189,52 +160,27 @@ object DailyRefreshJob {
       .count(_.getString(2) == graft.sources.Coverage.Success) == want.size
   }
 
-  /** LANDING → REFRESH, composed end to end on one storage root (the
-    * round-14 "What's missing" #2): run the derived chain for
-    * `targetDate` READING THE LANDING TABLE [[LandingJob]] published —
-    * gated on that date's coverage manifest row. A date whose landing
-    * is FAILED or absent blocks the refresh VIA THE CLAIM: the blocked
-    * attempt is recorded as a failed run in the shared ledger (visible
-    * to monitoring, reclaimable once the landing heals via
-    * [[LandingJob.scheduleCatchUp]] → re-land → re-refresh), and no stage
-    * runs or publishes. Both jobs write their run rows to the SAME
-    * [[graft.sources.RunLedger]], so the ledger shows the full
-    * land(D) → refresh(D) lifecycle per date. */
-  def runRefreshForLandedDate(spark: SparkSession,
-                              lock: graft.sources.JobLock,
-                              runs: graft.sources.RunLedger,
-                              landingCfg: LandingJob.Config,
-                              ds: LandingJob.Dataset,
-                              targetDate: String, outRoot: String,
-                              version: String,
-                              jobName: String = "daily_refresh",
-                              ttlSeconds: Long = 600L,
-                              runningStaleAfterSec: Option[Long] =
-                                Some(3600L),
-                              retainVersions: Option[Int] = None)
-      : Either[String, Seq[StageResult]] =
-    runRefreshIfCovered(spark, lock, runs, landingCfg, targetDate,
-      Seq(ds.name), outRoot, version, jobName, ttlSeconds,
-      runningStaleAfterSec,
-      landingStages(spark, landingCfg.landingRoot, targetDate, ds),
-      retainVersions)
-
-  /** The PRODUCTION refresh DAG over LANDED tables: the real derived
-    * stages (the flagship stock-metrics program + the technical-kernel
-    * snapshot — the reference cron-A post-step chain,
-    * `cron-a-direct.ts:115-147`) computed FROM THE TABLES THE LANDING
-    * JOB WROTE, plus the O(day) per-date landing stats. Gated on the
-    * coverage manifest of EVERY input dataset for `targetDate`: one
-    * unlanded input blocks the whole chain via a recorded failed claim
-    * (reclaimable once the landing catch-up heals). `orders`,
-    * `lineitem`, `customer`, `events` are the landed [[LandingJob.Dataset]]
-    * specs whose tables carry the testdata column names.
+  /** The PRODUCTION refresh DAG over LANDED tables, and the one gated
+    * refresh entry: the real derived stages (the flagship stock-metrics
+    * program + the technical-kernel snapshot — the reference cron-A
+    * post-step chain, `cron-a-direct.ts:115-147`) computed FROM THE
+    * TABLES THE LANDING JOB WROTE. `orders`, `lineitem`, `customer`,
+    * `events` are the landed [[LandingJob.Dataset]] specs whose tables
+    * carry the testdata column names.
     *
-    * Scale shape: the derived programs read the landed tables' FULL
-    * history (stock metrics ranks the latest-10 orders per entity;
-    * technicals fold a 400-bar lookback) — the reference's refresh
-    * cost, O(lookback·entities), not O(day); the landing-stat stages
-    * prune to the one target_date partition. */
+    * Gated on the coverage manifest of EVERY input dataset for
+    * `targetDate`: the refresh trusts the MANIFEST, not output presence.
+    * A date whose landing is FAILED or absent for any input blocks the
+    * whole chain via the claim: the blocked attempt is recorded as a
+    * failed run in the shared [[graft.sources.RunLedger]] (visible to
+    * monitoring, reclaimable once the landing heals via
+    * [[LandingJob.scheduleCatchUp]] → re-land → re-refresh), and no stage
+    * runs or publishes. A covered date runs [[runClaimed]].
+    *
+    * Scale shape: both stages read the landed tables' FULL history
+    * (stock metrics ranks the latest-10 orders per entity; technicals
+    * fold a 400-bar lookback) — the reference's refresh cost,
+    * O(lookback·entities), not O(day). */
   def runProductionRefresh(spark: SparkSession,
                            lock: graft.sources.JobLock,
                            runs: graft.sources.RunLedger,
@@ -250,37 +196,8 @@ object DailyRefreshJob {
                            runningStaleAfterSec: Option[Long] =
                              Some(3600L))
       : Either[String, Seq[StageResult]] = {
-    def landed(ds: LandingJob.Dataset) =
-      LandingJob.readLanding(spark, landingCfg.landingRoot, ds)
-        .getOrElse(sys.error(s"no landed ${ds.name} table under " +
-          landingCfg.landingRoot))
-    val stages: Seq[(String, () => DataFrame)] = Seq(
-      "stock_metrics" -> (() => graft.analytics.ScreenMetrics.fromTables(
-        landed(orders), landed(lineitem), landed(customer))),
-      "technical_snapshot" -> (() =>
-        graft.analytics.TechnicalJob.fromEventsDf(landed(events))))
-    runRefreshIfCovered(spark, lock, runs, landingCfg, targetDate,
-      Seq(orders, lineitem, customer, events).map(_.name), outRoot,
-      version, jobName, ttlSeconds, runningStaleAfterSec, stages)
-  }
-
-  private def runRefreshIfCovered(spark: SparkSession,
-                                  lock: graft.sources.JobLock,
-                                  runs: graft.sources.RunLedger,
-                                  landingCfg: LandingJob.Config,
-                                  targetDate: String,
-                                  datasets: Seq[String],
-                                  outRoot: String, version: String,
-                                  jobName: String, ttlSeconds: Long,
-                                  runningStaleAfterSec: Option[Long],
-                                  stages: Seq[(String, () => DataFrame)],
-                                  retainVersions: Option[Int] = None)
-      : Either[String, Seq[StageResult]] =
-    if (landingCovered(landingCfg, targetDate, datasets))
-      runClaimed(spark, lock, runs, targetDate, landingCfg.landingRoot,
-        outRoot, version, jobName, ttlSeconds, runningStaleAfterSec,
-        stages = Some(stages), retainVersions = retainVersions)
-    else {
+    val datasets = Seq(orders, lineitem, customer, events).map(_.name)
+    if (!landingCovered(landingCfg, targetDate, datasets)) {
       val why = s"landing not covered for $targetDate " +
         s"(need ${datasets.mkString(",")})"
       // record the blocked attempt: a failed run row the next scheduled
@@ -290,7 +207,21 @@ object DailyRefreshJob {
       claim.attemptId.foreach(a =>
         runs.complete(claim.runId, a, "failed", Some(why)))
       Left(why)
+    } else {
+      def landed(ds: LandingJob.Dataset) =
+        LandingJob.readLanding(spark, landingCfg.landingRoot, ds)
+          .getOrElse(sys.error(s"no landed ${ds.name} table under " +
+            landingCfg.landingRoot))
+      val stages: Seq[(String, () => DataFrame)] = Seq(
+        "stock_metrics" -> (() => ScreenMetrics.fromTables(
+          landed(orders), landed(lineitem), landed(customer))),
+        "technical_snapshot" -> (() =>
+          graft.analytics.TechnicalJob.fromEventsDf(landed(events))))
+      runClaimed(spark, lock, runs, targetDate, landingCfg.landingRoot,
+        outRoot, version, jobName, ttlSeconds, runningStaleAfterSec,
+        stages = Some(stages))
     }
+  }
 
   /** The FULLY composed production entry: lease + per-(job, target_date)
     * run claim + the DAG + terminal run state — the reference cron

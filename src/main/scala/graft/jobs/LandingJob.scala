@@ -79,7 +79,8 @@ import graft.sources.Ingest.Retry
   * file over that cell: the ledger's only commit point, a driver-side
   * file operation with no Spark job. Readers ([[readLedger]],
   * [[scheduleCatchUp]], the refresh's coverage gate) open only the cells
-  * their (datasets × dates) window names. */
+  * their (datasets × dates) window names, and catch-up planning over
+  * those cells runs on the driver ([[Coverage.catchUp]]). */
 object LandingJob {
 
   /** One page-fetch response: HTTP-ish status, rows matching the
@@ -474,30 +475,32 @@ object LandingJob {
         finally lock.release(cfg.jobName, token)
     }
 
-  /** Plan catch-up ACROSS datasets from the shared coverage root: one
-    * ledger read and ONE query for every dataset
-    * ([[Coverage.catchUpPlan]] — per-dataset missing/failed business
-    * days, each dataset capped at `maxDays`), so the plan's job count does
-    * not grow with the number of datasets. The plan reads COVERAGE, not
-    * output presence, and only the cells of its window: `datasets` ×
-    * the `lookbackDays + 1` days ending at `today`. Ordered by the given
-    * dataset priority, oldest dates first within a dataset — the order
-    * [[runSchedule]] executes. Datasets with nothing to heal are
-    * omitted. */
-  def scheduleCatchUp(s: SparkSession, cfg: Config,
-                      datasets: Seq[String], calendar: DataFrame,
-                      calDateCol: String, today: java.sql.Date,
-                      lookbackDays: Int, maxDays: Int)
-      : Seq[(String, Seq[String])] = {
-    val window = (0 to lookbackDays).map(i =>
-      java.sql.Date.valueOf(today.toLocalDate.minusDays(i)))
-    val planned = Coverage.catchUpPlan(
-        readLedger(s, cfg.coverageRoot, datasets, window),
-        datasets, calendar, calDateCol, today, lookbackDays, maxDays)
-      .select(col("dataset"), col("target_day")).collect()
-      .groupMap(_.getString(0))(_.getDate(1))
-    datasets.distinct.flatMap(d => planned.get(d).map(days =>
-      d -> days.sortBy(_.getTime).map(_.toString).toSeq))
+  /** Plan catch-up ACROSS datasets from the shared coverage root, on the
+    * driver: the business days of `calendar` from `lookbackDays` before
+    * `today` through `today` ([[Coverage.businessDays]]), the cells those
+    * days name for `datasets` ([[Coverage.readCells]]), and
+    * [[Coverage.catchUp]] over them — per-dataset missing/failed days,
+    * each dataset capped at `maxDays`. The plan reads COVERAGE, not
+    * output presence. A local calendar (`createDataFrame`) is read
+    * without a Spark job, so the plan starts none, whatever the number
+    * of datasets. Ordered by the given dataset priority, oldest dates
+    * first within a dataset — the order [[runSchedule]] executes.
+    * Datasets with nothing to heal are omitted. `s` is unused: the plan
+    * needs no session of its own. */
+  def scheduleCatchUp(@scala.annotation.unused s: SparkSession,
+                      cfg: Config, datasets: Seq[String],
+                      calendar: DataFrame, calDateCol: String,
+                      today: java.sql.Date, lookbackDays: Int,
+                      maxDays: Int): Seq[(String, Seq[String])] = {
+    val days = Coverage.businessDays(calendar, calDateCol, today,
+      lookbackDays)
+    val plan = Coverage.catchUp(
+      Coverage.readCells(cfg.coverageRoot, datasets, days),
+      datasets, days, maxDays)
+    datasets.distinct.flatMap { d =>
+      val due = plan.collect { case (`d`, day, _) => day.toString }
+      if (due.isEmpty) None else Some(d -> due)
+    }
   }
 
   /** [[scheduleCatchUp]] for one dataset: its catch-up dates, oldest

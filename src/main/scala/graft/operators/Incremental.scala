@@ -3,61 +3,12 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Incremental / self-healing refresh discipline (SURVEY §2.9) — the
-  * reference's watermark + forward-fill + catch-up machinery re-expressed
-  * as DataFrame programs:
-  *
-  * - watermark = `max(date)` with an overlap-by-1 re-read so a partially
-  *   written latest day self-heals (`forward-fill.ts:100-133`);
-  * - target days clipped to a per-run cap (`forward-fill.ts:51-52`);
-  * - catch-up = business-day calendar anti-join success log, bounded by a
-  *   lookback window (`catch-up.ts:33-117`);
-  * - zero-rows-on-business-day anomaly gate (`forward-fill.ts:36-42`).
-  *
-  * All plans are metadata-scale (calendars, logs) — they broadcast; the
-  * only fact-table touch is the `max(date)` scan, which Parquet answers
-  * from footer statistics.
+/** Incremental refresh discipline (SURVEY §2.9). Catch-up planning
+  * lives with the coverage ledger ([[graft.sources.Coverage.catchUp]]);
+  * what stays here is the standing-aggregate merge.
   */
 object Incremental {
 
-  /** Refresh window: [watermark, today] re-reading the watermark day itself
-    * (overlap-by-1), capped at `maxDays` business days. Returns the business
-    * days to (re)process, ascending. */
-  def forwardFillTargets(table: DataFrame, dateCol: String,
-                         calendar: DataFrame, calDateCol: String,
-                         today: java.sql.Date, maxDays: Int): DataFrame = {
-    val wm = table.agg(max(col(dateCol)).as("wm"))
-    calendar
-      .filter(col("is_business_day"))
-      .select(col(calDateCol).as("target_day"))
-      .crossJoin(broadcast(wm))
-      .filter((col("wm").isNull || col("target_day") >= col("wm")) &&
-        col("target_day") <= lit(today))
-      .orderBy(col("target_day"))
-      .limit(maxDays)
-      .select(col("target_day"))
-  }
-
-  /** Catch-up: business days within `lookbackDays` of today that have no
-    * success-log entry, oldest first, capped at `maxDays`
-    * (catch-up.ts:33-117). */
-  def catchUpTargets(successLog: DataFrame, logDateCol: String,
-                     calendar: DataFrame, calDateCol: String,
-                     today: java.sql.Date, lookbackDays: Int,
-                     maxDays: Int): DataFrame =
-    calendar
-      .filter(col("is_business_day") &&
-        col(calDateCol) <= lit(today) &&
-        col(calDateCol) >= date_sub(lit(today), lookbackDays))
-      .select(col(calDateCol).as("target_day"))
-      .join(successLog.select(col(logDateCol).as("target_day")).distinct(),
-        Seq("target_day"), "left_anti")
-      .orderBy(col("target_day"))
-      .limit(maxDays)
-
-  /** Zero-row anomaly gate: true when `day` is a business day but the batch
-    * is empty and the dataset does not allow empties
-    * (forward-fill.ts:36-42,191-197). */
   /** Algebraic partial-aggregate merge — incremental materialized-view
     * maintenance. A standing aggregate table keyed by `keys` with measure
     * columns (count `n`, sums, mins, maxes) absorbs a delta partition's
@@ -83,8 +34,4 @@ object Incremental {
       .groupBy(keys.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
   }
-
-  def isZeroRowAnomaly(rowCount: Long, isBusinessDay: Boolean,
-                       allowEmpty: Boolean): Boolean =
-    isBusinessDay && rowCount == 0 && !allowEmpty
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions._
   *
   * Spark-first: upsert = anti-join keep + union (one shuffle on the key;
   * with date-partitioned tables prefer dynamic partition overwrite instead —
-  * zero read of untouched partitions at 100 TB). Publication = write a
-  * versioned directory then flip a tiny `_PUBLISHED` pointer file.
+  * zero read of untouched partitions at 100 TB). Publication = stage the
+  * rows once ([[stageSnapshot]]), move the staged dir to `v=<version>`,
+  * then flip a tiny `_PUBLISHED` pointer file.
   */
 object Upsert {
 
@@ -41,18 +42,7 @@ object Upsert {
     keyed(existing, dedup, keys)
   }
 
-  /** Staged write + pointer swap: write `<root>/v=<version>/`, then atomically
-    * replace `<root>/_PUBLISHED` with the version string. Readers resolve the
-    * pointer first; a crashed writer never exposes a partial snapshot. */
-  def publishSnapshot(df: DataFrame, root: String, version: String): String = {
-    val dir = s"$root/v=$version"
-    df.write.mode(SaveMode.Overwrite).parquet(dir)
-    flip(root, version)
-    dir
-  }
-
-  /** Atomically point `<root>/_PUBLISHED` at `version` — the one flip
-    * both publish paths use. */
+  /** Atomically point `<root>/_PUBLISHED` at `version`. */
   private def flip(root: String, version: String): Unit = {
     val marker = new java.io.File(s"$root/_PUBLISHED")
     val tmp = new java.io.File(s"$root/_PUBLISHED.tmp")

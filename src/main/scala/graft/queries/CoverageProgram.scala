@@ -1,7 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, StringType, StructField,
+  StructType}
 
 import graft.Tables
 import graft.sources.Coverage
@@ -33,24 +35,30 @@ import graft.sources.Coverage
   *    dayofmonth % 7 == 1 (a deterministically-planted day the
   *    scheduler never ran) — has no manifest row at all (never
   *    claimed), so BOTH catch-up reasons appear in the gate's output;
-  *  - catch-up = [[Coverage.catchUpTargets]]: absent → 'missing',
-  *    failed → 'failed', oldest first, capped at 100.
+  *  - catch-up = [[Coverage.catchUp]], the planner the landing scheduler
+  *    runs: absent → 'missing', failed → 'failed', oldest first, capped
+  *    at 100.
   *
   * Scale shape: ONE map-side-combined per-day count is the only fact
-  * scan (the `max(o_orderdate)` watermark reads parquet footer stats);
-  * calendar and manifest are date-cardinality relations that broadcast
-  * through the planner join. At 100 TB the manifest stays one row per
-  * (dataset, day) regardless of fact volume. */
+  * scan, besides the `max(o_orderdate)` watermark. The manifest (at most
+  * 61 rows) and the calendar's business days are collected to the
+  * driver, where the planner runs, and the output is a local relation
+  * holding the plan in its order. At 100 TB the manifest stays one row
+  * per (dataset, day) regardless of fact volume. */
 object CoverageProgram {
 
-  def q218CoverageCatchup(s: SparkSession, dir: String): DataFrame = {
+  private val LookbackDays = 60
+
+  /** The q218 manifest (one row per business day with orders, in
+    * [[Coverage.ledgerSchema]]'s columns), its calendar (`day`,
+    * `is_business_day`) and the watermark day. */
+  private[graft] def q218Inputs(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame, java.sql.Date) = {
     val o = Tables.orders(s, dir)
-    // watermark scalar: parquet footer stats, bounded driver traffic
     val today = o.agg(max(to_date(col("o_orderdate")))).collect()(0)
       .getDate(0)
-    val lookbackDays = 60
     val calendar = s.range(1).select(explode(sequence(
-        date_sub(lit(today), lookbackDays), lit(today).cast("date")))
+        date_sub(lit(today), LookbackDays), lit(today).cast("date")))
         .as("day"))
       .withColumn("is_business_day", dayofweek(col("day")).between(2, 6))
     val perDay = o.groupBy(to_date(col("o_orderdate")).as("target_date"))
@@ -73,8 +81,18 @@ object CoverageProgram {
           lit(null).cast("long")).otherwise(lit(0L))
           .as("source_observed_at"),
         lit("run-q218").as("run_id"))
-    Coverage.catchUpTargets(ledger, "orders", calendar, "day",
-      today, lookbackDays, maxDays = 100)
+    (ledger, calendar, today)
+  }
+
+  def q218CoverageCatchup(s: SparkSession, dir: String): DataFrame = {
+    val (ledger, calendar, today) = q218Inputs(s, dir)
+    val plan = Coverage.catchUp(ledger.collect().toSeq, Seq("orders"),
+      Coverage.businessDays(calendar, "day", today, LookbackDays),
+      maxDays = 100)
+    import scala.jdk.CollectionConverters._
+    s.createDataFrame(plan.map { case (_, day, why) => Row(day, why) }.asJava,
+      StructType(Seq(StructField("target_day", DateType),
+        StructField("reason", StringType))))
   }
 
   val oracleQ218: String =

@@ -43,21 +43,6 @@ object Screen {
     // …v2 = newer data, staged but NEVER published (no marker flip)
     val v2 = techSnapshot(o)
 
-    // Root is derived from the SANITIZED sfDir (no hashCode: collisions
-    // between different dirs would silently share one root) plus a fresh
-    // per-invocation suffix, so concurrent gate runs (Verify + Bench,
-    // parallel CI) never race SaveMode.Overwrite against each other's
-    // reader. The published content is a pure function of the base tables,
-    // so a unique root per call changes nothing downstream.
-    val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val root = s"${System.getProperty("user.dir")}/target/graft_screen_pub_" +
-      s"${safe}_${java.util.UUID.randomUUID().toString.take(8)}"
-    Upsert.publishSnapshot(v1, root, "1")
-    v2.write.mode(SaveMode.Overwrite).parquet(s"$root/v=2")
-
-    val published = s.read.parquet(Upsert.resolvePublished(root)
-      .getOrElse(sys.error(s"no _PUBLISHED marker under $root")))
-
     val wLatest = Window.partitionBy(col("o_custkey"))
       .orderBy(col("o_orderdate").desc, col("o_orderkey").desc)
     val fund = o.withColumn("rn", row_number().over(wLatest))
@@ -66,10 +51,27 @@ object Screen {
         to_date(col("o_orderdate")).as("latest_orderdate"),
         col("o_totalprice").as("latest_price"))
 
-    fund.join(published, Seq("code"), "left")
-      .select(col("code"), col("latest_orderdate"), col("latest_price"),
-        col("pub_as_of"), col("pub_price"), col("pub_n_orders"))
-      .orderBy(col("code"))
+    // Root is derived from the SANITIZED sfDir (no hashCode: collisions
+    // between different dirs would silently share one root) plus a fresh
+    // per-invocation suffix, so concurrent gate runs (Verify + Bench,
+    // parallel CI) never race each other's reader. The published content
+    // is a pure function of the base tables, so a unique root per call
+    // changes nothing downstream; the result is pinned before the root
+    // is deleted.
+    val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
+    val root = s"${System.getProperty("user.dir")}/target/graft_screen_pub_" +
+      s"${safe}_${java.util.UUID.randomUUID().toString.take(8)}"
+    try {
+      Upsert.stageSnapshot(v1, root).publish("1")
+      v2.write.mode(SaveMode.Overwrite).parquet(s"$root/v=2")
+      val published = Tables.readParquet(s, Upsert.resolvePublished(root)
+        .getOrElse(sys.error(s"no _PUBLISHED marker under $root")))
+      fund.join(published, Seq("code"), "left")
+        .select(col("code"), col("latest_orderdate"), col("latest_price"),
+          col("pub_as_of"), col("pub_price"), col("pub_n_orders"))
+        .orderBy(col("code"))
+        .localCheckpoint()
+    } finally Upsert.rmTree(new java.io.File(root))
   }
 
   val oracleQ45: String =

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -30,13 +30,12 @@ import org.apache.spark.sql.types._
   *
   * Split Spark-first: the run claim/heartbeat is driver-side control
   * state (like [[JobLock]] — a handful of rows, never a distributed
-  * dataset) in [[RunLedger]]; catch-up planning is a DataFrame program
-  * over the coverage manifest — business-day calendar LEFT JOIN
-  * coverage, keep absent-or-failed days ([[Coverage.catchUpTargets]]).
-  * At 100 TB both sides stay metadata-sized: the ledger has one row per
-  * (dataset, day), the calendar broadcasts, and the only fact-table
-  * touch the composed q218 program makes is one map-side-combined
-  * per-day count.
+  * dataset) in [[RunLedger]], and so is catch-up planning: the window's
+  * business days and the cells they name are read to the driver, and
+  * [[Coverage.catchUp]] keeps the absent-or-failed days. At 100 TB both
+  * stay metadata-sized — the ledger has one cell per (dataset, day) and
+  * the window is a few dozen days — and the only fact-table touch the
+  * composed q218 program makes is one map-side-combined per-day count.
   *
   * The DURABLE manifest is one small file per (dataset, target_date)
   * CELL under a coverage root, `<root>/ds=<enc(dataset)>/<date>.tsv`,
@@ -73,19 +72,6 @@ object Coverage {
         "success coverage requires error_count=0 and source_observed_at")
     else
       require(errorCount > 0, "failed coverage requires error_count > 0")
-  }
-
-  /** One manifest row as a DataFrame, contract-checked. */
-  def row(s: SparkSession, dataset: String, targetDate: java.sql.Date,
-          status: String, rowCount: Long, errorCount: Int,
-          sourceObservedAtMs: Option[Long],
-          runId: Option[String]): DataFrame = {
-    validate(status, rowCount, errorCount, sourceObservedAtMs)
-    import s.implicits._
-    Seq((dataset, targetDate, status, rowCount, errorCount,
-      sourceObservedAtMs, runId))
-      .toDF("dataset", "target_date", "status", "row_count",
-        "error_count", "source_observed_at", "run_id")
   }
 
   /** The manifest row schema (`dataset_coverage`'s columns). */
@@ -175,51 +161,43 @@ object Coverage {
     }
   }
 
-  /** COVERAGE-driven catch-up (the round-13 ask: catch-up must read the
-    * manifest, not output presence): per dataset, the business days
-    * within `lookbackDays` of `today` whose coverage row is ABSENT
-    * (never claimed → `reason = 'missing'`) or FAILED
-    * (`reason = 'failed'`), the oldest `maxDays` of them. `success`
-    * rows — INCLUDING row_count = 0, the explicitly-checked empty day —
-    * are covered and never retried. Every dataset is planned in ONE
-    * query over one ledger read: the calendar window fans out to one row
-    * per (dataset, day) by an explode, the ledger (date-cardinality)
-    * broadcasts onto it, and a per-dataset row number applies the cap.
-    * Columns: `dataset`, `target_day`, `reason`; unordered. */
-  def catchUpPlan(ledger: DataFrame, datasets: Seq[String],
-                  calendar: DataFrame, calDateCol: String,
-                  today: java.sql.Date, lookbackDays: Int,
-                  maxDays: Int): DataFrame = {
-    val cov = ledger.filter(col("dataset").isin(datasets: _*))
-      .select(col("dataset"), col("target_date").as("target_day"),
-        col("status"))
-    val byAge = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("dataset")).orderBy(col("target_day"))
-    calendar
-      .filter(col("is_business_day") &&
-        col(calDateCol) <= lit(today) &&
-        col(calDateCol) >= date_sub(lit(today), lookbackDays))
-      .select(col(calDateCol).as("target_day"),
-        explode(typedLit(datasets.distinct)).as("dataset"))
-      .join(broadcast(cov), Seq("dataset", "target_day"), "left")
-      .filter(col("status").isNull || col("status") === lit(Failed))
-      .withColumn("__age", row_number().over(byAge))
-      .filter(col("__age") <= maxDays)
-      .select(col("dataset"), col("target_day"),
-        when(col("status").isNull, lit("missing"))
-          .otherwise(lit("failed")).as("reason"))
+  /** The business days of `calendar` (its `is_business_day` flag, dates
+    * in `calDateCol`) from `lookbackDays` before `today` through `today`.
+    * Over a local calendar (`createDataFrame`), Spark answers the filter
+    * and the collect on the driver and starts no job. */
+  def businessDays(calendar: DataFrame, calDateCol: String,
+                   today: java.sql.Date,
+                   lookbackDays: Int): Seq[java.sql.Date] = {
+    val from = java.sql.Date.valueOf(today.toLocalDate.minusDays(lookbackDays))
+    calendar.filter(col("is_business_day") &&
+        col(calDateCol).between(lit(from), lit(today)))
+      .select(col(calDateCol)).collect().map(_.getDate(0)).toSeq
   }
 
-  /** [[catchUpPlan]] for one dataset: `target_day`, `reason`, oldest
-    * first. */
-  def catchUpTargets(ledger: DataFrame, dataset: String,
-                     calendar: DataFrame, calDateCol: String,
-                     today: java.sql.Date, lookbackDays: Int,
-                     maxDays: Int): DataFrame =
-    catchUpPlan(ledger, Seq(dataset), calendar, calDateCol, today,
-      lookbackDays, maxDays)
-      .select(col("target_day"), col("reason"))
-      .orderBy(col("target_day"))
+  /** COVERAGE-driven catch-up, the one planner: per dataset, in the given
+    * priority order, the `businessDays` whose manifest cell is ABSENT
+    * (never claimed: `missing`) or FAILED (`failed`), oldest first, at
+    * most `maxDays` of them. `success` cells — INCLUDING row_count = 0,
+    * the explicitly-checked empty day — are covered and never retried.
+    * `cells` are manifest rows ([[ledgerSchema]]; [[readCells]] reads
+    * them); rows of other datasets or days are ignored. Pure driver
+    * work, no Spark job. Returns (dataset, day, reason). */
+  def catchUp(cells: Seq[Row], datasets: Seq[String],
+              businessDays: Seq[java.sql.Date],
+              maxDays: Int): Seq[(String, java.sql.Date, String)] = {
+    val status = cells.map(r =>
+      (r.getString(0), r.getDate(1).toString) -> r.getString(2)).toMap
+    val days = businessDays.distinctBy(_.toString).sortBy(_.toString)
+    datasets.distinct.flatMap { ds =>
+      days.flatMap { day =>
+        status.get((ds, day.toString)) match {
+          case None => Some((ds, day, "missing"))
+          case Some(Failed) => Some((ds, day, "failed"))
+          case Some(_) => None
+        }
+      }.take(maxDays)
+    }
+  }
 }
 
 /** Driver-side run-claim control state — `jquants_ingest.job_runs` +
@@ -244,24 +222,14 @@ final class RunLedger(nowMs: () => Long = () => System.currentTimeMillis(),
                         () => java.util.UUID.randomUUID().toString,
                       persistTo: Option[java.nio.file.Path] = None) {
 
-  final case class Run(runId: String, attemptId: String, status: String,
-                       startedAtMs: Long, finishedAtMs: Option[Long],
-                       error: Option[String])
-  final case class Heartbeat(lastSeenMs: Long, lastStatus: String,
-                             lastRunId: String,
-                             lastTargetDate: String,
-                             lastError: Option[String])
-  /** `claim_job_run`'s RETURNS row: `attemptId` is None exactly when
-    * the claim was rejected (`already_executed`). */
-  final case class Claim(runId: String, attemptId: Option[String],
-                         claimed: Boolean, reason: String)
+  import RunLedger.{Claim, Health, Heartbeat, Run, cellOpt, dec, enc,
+    optCell}
 
   private val runs =
     scala.collection.mutable.Map[(String, String), Run]()
   private val beats = scala.collection.mutable.Map[String, Heartbeat]()
 
   // ------------------------------------------------------- persistence
-  import RunLedger.{cellOpt, dec, enc, optCell}
 
   private def save(): Unit = persistTo.foreach { p =>
     val sb = new StringBuilder
@@ -440,11 +408,6 @@ final class RunLedger(nowMs: () => Long = () => System.currentTimeMillis(),
         r.attemptId == attemptId && r.status == "running")
     }
 
-  final case class Health(jobName: String, healthy: Boolean,
-                          reason: Option[String],
-                          lastSeenMs: Option[Long],
-                          lastStatus: Option[String])
-
   /** The monitoring contract (`heartbeat.ts:120-153` `isJobHealthy`):
     * a job is unhealthy when it has NO heartbeat record, when its last
     * heartbeat is older than `staleThresholdHours` (default 25 — one
@@ -487,6 +450,23 @@ final class RunLedger(nowMs: () => Long = () => System.currentTimeMillis(),
 }
 
 object RunLedger {
+  final case class Run(runId: String, attemptId: String, status: String,
+                       startedAtMs: Long, finishedAtMs: Option[Long],
+                       error: Option[String])
+  final case class Heartbeat(lastSeenMs: Long, lastStatus: String,
+                             lastRunId: String,
+                             lastTargetDate: String,
+                             lastError: Option[String])
+  /** `claim_job_run`'s RETURNS row: `attemptId` is None exactly when
+    * the claim was rejected (`already_executed`). */
+  final case class Claim(runId: String, attemptId: Option[String],
+                         claimed: Boolean, reason: String)
+
+  final case class Health(jobName: String, healthy: Boolean,
+                          reason: Option[String],
+                          lastSeenMs: Option[Long],
+                          lastStatus: Option[String])
+
   // URL-encoded TSV cells, shared with the coverage ledger's cell files
   private[sources] def enc(s: String): String =
     java.net.URLEncoder.encode(s, "UTF-8")

@@ -132,11 +132,13 @@ object StreamExactSubstr {
     * between batches (the merged relation is eagerly checkpointed
     * before the overwrite — the round-4 DROP-TABLE lesson).
     *
-    * Flush contract: compaction runs on a background thread, and a
-    * failed fold surfaces only at the next fence. Every caller must call
-    * [[flush]] before it abandons the instance — before the process
-    * exits, and before a fresh incarnation takes over the same (table,
-    * path). Skipping it drops the last queued compaction and its error.
+    * Flush contract: compaction runs on a background `q216-compact`
+    * thread; a failed fold is reported on stderr when it happens and
+    * rethrown at the next fence. Every caller must call [[flush]] before
+    * it abandons the instance — before the process exits, and before a
+    * fresh incarnation takes over the same (table, path). [[flush]] also
+    * ends the thread. Skipping it drops the last queued compaction and
+    * its error, and leaves the thread idle for the life of the JVM.
     *
     * @param pruneStateOverBytes delta-prune the state read
     *   ([[resolvedFor]]) only once the standing state's on-disk size
@@ -168,10 +170,7 @@ object StreamExactSubstr {
       * claims, or a crash would strand a batch the streaming checkpoint
       * will never re-deliver (see the r18 rejection note on the
       * cross-epoch overlap in OPTIMIZATION_r18.md). */
-    private val tailExec = java.util.concurrent.Executors
-      .newSingleThreadExecutor(r => {
-        val t = new Thread(r, "q216-compact"); t.setDaemon(true); t
-      })
+    private var lane: Option[java.util.concurrent.ExecutorService] = None
     private var compactF: Option[java.util.concurrent.Future[_]] = None
     private def awaitCompact(): Unit = compactF.foreach { f =>
       try f.get()
@@ -180,12 +179,44 @@ object StreamExactSubstr {
       }
       compactF = None
     }
-    /** Settle every queued background write. MUST be called before the
-      * absorber instance is abandoned in favor of a fresh incarnation on
-      * the same storage (the gates' graceful-handoff protocol); a
-      * process crash instead leaves at most a torn batch, which the
-      * replay contract covers. */
-    def flush(): Unit = synchronized { awaitCompact() }
+    /** Queue the fold of generations up to `gen` on the lane, starting the
+      * lane if [[flush]] ended it. A failed fold is reported on the lane
+      * thread when it happens and rethrown at the next fence. */
+    private def queueCompact(s: SparkSession, gen: Long): Unit = {
+      val ex = lane.getOrElse {
+        val e = java.util.concurrent.Executors.newSingleThreadExecutor(r => {
+          val t = new Thread(r, "q216-compact"); t.setDaemon(true); t
+        })
+        lane = Some(e)
+        e
+      }
+      compactF = Some(ex.submit(new Runnable {
+        def run(): Unit = {
+          s.sparkContext.setJobDescription(s"q216-compact $table gen=$gen")
+          try compact(s, gen)
+          catch {
+            case e: Throwable =>
+              System.err.println(
+                s"[q216-compact] fold of $table to gen $gen failed: $e")
+              throw e
+          }
+        }
+      }))
+    }
+    /** Settle every queued background write, then end the compaction
+      * lane (its thread exits; a later compaction starts a new one). MUST
+      * be called before the absorber instance is abandoned in favor of a
+      * fresh incarnation on the same storage (the gates' graceful-handoff
+      * protocol); a process crash instead leaves at most a torn batch,
+      * which the replay contract covers. Rethrows a failed fold. */
+    def flush(): Unit = synchronized {
+      try awaitCompact()
+      finally lane.foreach { ex =>
+        lane = None
+        ex.shutdown()
+        ex.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)
+      }
+    }
 
     /** On-disk size of the standing state — FS metadata only, no job. */
     private def stateBytes: Long = {
@@ -303,9 +334,7 @@ object StreamExactSubstr {
         // materialization; its overwrite window is fenced by
         // awaitCompact() before any later table read (and by flush()
         // at incarnation handoff)
-        compactF = Some(tailExec.submit(new Runnable {
-          def run(): Unit = compact(s, gen)
-        }))
+        queueCompact(s, gen)
         genMeta = Some((gen, 1L))
       }
     }

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.sources.{Coverage, RunLedger}
@@ -155,7 +156,7 @@ class CoverageSpec extends AnyFunSuite {
   test("durable ledger: edge-case error strings round-trip (empty, literal '-', null message)") {
     val p = java.nio.file.Files.createTempDirectory("graft_ledger_edge")
       .resolve("runs.tsv")
-    var now = 0L
+    val now = 0L
     val a = new RunLedger(() => now, persistTo = Some(p))
     val c1 = a.claim("j", "d1")
     assert(a.complete(c1.runId, c1.attemptId.get, "failed", Some("")))
@@ -270,16 +271,19 @@ class CoverageSpec extends AnyFunSuite {
   }
 
   test("catch-up reads COVERAGE: checked-empty success is covered, failed+missing retry") {
-    import spark.implicits._
     val today = java.sql.Date.valueOf("2024-06-14") // a Friday
     // business-day calendar over two weeks
     val calendar = spark.range(1).select(explode(sequence(
         lit(java.sql.Date.valueOf("2024-06-01")), lit(today))).as("day"))
       .withColumn("is_business_day", dayofweek(col("day")).between(2, 6))
+    def cell(ds: String, day: String, status: String, rows: Long, errs: Int,
+             obs: Option[Long]): Row = {
+      Coverage.validate(status, rows, errs, obs)
+      Row(ds, java.sql.Date.valueOf(day), status, rows, errs,
+        obs.map(Long.box).orNull, "run")
+    }
     def r(day: String, status: String, rows: Long, errs: Int,
-          obs: Option[Long]) =
-      Coverage.row(spark, "orders", java.sql.Date.valueOf(day), status,
-        rows, errs, obs, Some("run"))
+          obs: Option[Long]) = cell("orders", day, status, rows, errs, obs)
     val ledger = Seq(
       r("2024-06-03", Coverage.Success, 100L, 0, Some(1L)),
       r("2024-06-04", Coverage.Success, 0L, 0, Some(1L)), // checked empty
@@ -290,31 +294,26 @@ class CoverageSpec extends AnyFunSuite {
       r("2024-06-10", Coverage.Failed, 10L, 1, Some(1L)), // partial save
       r("2024-06-11", Coverage.Success, 80L, 0, Some(1L)),
       // other-dataset rows must not mask orders days
-      Coverage.row(spark, "topix", java.sql.Date.valueOf("2024-06-06"),
-        Coverage.Success, 5L, 0, Some(1L), Some("run")),
+      cell("topix", "2024-06-06", Coverage.Success, 5L, 0, Some(1L)),
       r("2024-06-12", Coverage.Success, 70L, 0, Some(1L)),
       r("2024-06-13", Coverage.Success, 60L, 0, Some(1L)),
       r("2024-06-14", Coverage.Success, 50L, 0, Some(1L)),
-    ).reduce(_ unionByName _)
-    val got = Coverage.catchUpTargets(ledger, "orders", calendar, "day",
-      today, lookbackDays = 11, maxDays = 10)
-      .as[(java.sql.Date, String)].collect().toSeq
-      .map { case (d, why) => (d.toString, why) }
-    assert(got == Seq(
+    )
+    def plan(lookbackDays: Int, maxDays: Int) =
+      Coverage.catchUp(ledger, Seq("orders"),
+        Coverage.businessDays(calendar, "day", today, lookbackDays), maxDays)
+        .map { case (ds, d, why) => assert(ds == "orders"); (d.toString, why) }
+    assert(plan(lookbackDays = 11, maxDays = 10) == Seq(
       ("2024-06-05", "failed"),   // crashed claim retried
       ("2024-06-06", "missing"),  // never claimed (topix row must not mask)
       ("2024-06-10", "failed")))  // partial save retried
     // 06-04 (success, 0 rows) is NOT in the list: checked-empty = covered.
     // lookback window excludes 06-03 and earlier? 06-03 is 11 days before
     // 06-14 -> included and covered; shrink the window to prove the bound:
-    val narrow = Coverage.catchUpTargets(ledger, "orders", calendar, "day",
-      today, lookbackDays = 7, maxDays = 10)
-      .as[(java.sql.Date, String)].collect().toSeq.map(_._1.toString)
-    assert(narrow == Seq("2024-06-10")) // 06-05/06-06 fall outside
+    assert(plan(lookbackDays = 7, maxDays = 10).map(_._1) ==
+      Seq("2024-06-10")) // 06-05/06-06 fall outside
     // cap: oldest first, truncated
-    val capped = Coverage.catchUpTargets(ledger, "orders", calendar, "day",
-      today, lookbackDays = 11, maxDays = 2)
-      .as[(java.sql.Date, String)].collect().toSeq.map(_._1.toString)
-    assert(capped == Seq("2024-06-05", "2024-06-06"))
+    assert(plan(lookbackDays = 11, maxDays = 2).map(_._1) ==
+      Seq("2024-06-05", "2024-06-06"))
   }
 }

@@ -242,8 +242,7 @@ class GenericLandingSpec extends AnyFunSuite {
   }
 
   test("a generic dataset named like the config lands and refreshes under data_<name>") {
-    // coverage gating is keyed by the dataset NAME; the refresh must read
-    // the same dataset's data_<name> table the gate vouched for
+    // the refresh must read the dataset's own data_<name> table
     val (tmp, bucket, lock, runs, sleep, now) = mkHarness()
     val cfg = Config("landing_fb", "rows",
       s"$tmp/landing", s"$tmp/coverage")
@@ -262,8 +261,11 @@ class GenericLandingSpec extends AnyFunSuite {
     assert(new java.io.File(s"${cfg.landingRoot}/data_rows").isDirectory)
     assert(new java.io.File(cfg.landingRoot).list().toSet
       .subsetOf(Set("data_rows", "stage")))
-    val out = graft.jobs.DailyRefreshJob.runRefreshForLandedDate(
-      spark, lock, runs, cfg, ds, "2024-06-03", s"$tmp/refresh", "v1")
+    val out = graft.jobs.DailyRefreshJob.runClaimed(spark, lock, runs,
+      "2024-06-03", cfg.landingRoot, s"$tmp/refresh", "v1",
+      stages = Some(Seq("landing_daily_stats" -> (() =>
+        GenericLandingSpec.dayStats(spark, cfg.landingRoot, ds,
+          "2024-06-03")))))
     val stages = out.fold(e => fail(s"refresh blocked: $e"), identity)
     assert(stages.forall(_.error.isEmpty), stages.toString)
     import spark.implicits._
@@ -322,4 +324,18 @@ class GenericLandingSpec extends AnyFunSuite {
       "healed partition must hold exactly the clean-run rows")
     Upsert.rmTree(tmp.toFile)
   }
+}
+
+object GenericLandingSpec {
+  /** A derived stage over one landed date: row count and value sum of
+    * `ds`'s `targetDate` partition (the dataset needs a `value`
+    * column). */
+  def dayStats(spark: org.apache.spark.sql.SparkSession, landingRoot: String,
+               ds: Dataset, targetDate: String)
+      : org.apache.spark.sql.DataFrame =
+    LandingJob.readLanding(spark, landingRoot, ds)
+      .getOrElse(sys.error(s"no landed ${ds.name} table under $landingRoot"))
+      .filter(col("target_date") === to_date(lit(targetDate)))
+      .groupBy(col("target_date"))
+      .agg(count(lit(1)).as("n_rows"), sum(col("value")).as("sum_value"))
 }

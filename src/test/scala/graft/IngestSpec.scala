@@ -166,7 +166,7 @@ class IngestSpec extends AnyFunSuite {
 
   test("job lock: a torn (empty/corrupt) lease file is expired — acquire " +
       "takes it over and cleanup sweeps it") {
-    var now = 0L
+    val now = 0L
     val dir = java.nio.file.Files.createTempDirectory("graft_locks4")
     val jl = new JobLock(dir, nowMs = () => now)
     // EXTERNALLY corrupted lock files (our own writers link fully-written
@@ -188,7 +188,7 @@ class IngestSpec extends AnyFunSuite {
   }
 
   test("job lock: fresh acquires are born WITH content — no contentless steal window") {
-    var now = 0L
+    val now = 0L
     val dir = java.nio.file.Files.createTempDirectory("graft_locks5")
     val jl = new JobLock(dir, nowMs = () => now)
     val t = jl.acquire("j", ttlSeconds = 600)

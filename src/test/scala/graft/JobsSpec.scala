@@ -33,8 +33,8 @@ class JobsSpec extends AnyFunSuite {
   test("freshness-guarded resolve refuses stale published snapshots") {
     import spark.implicits._
     val root = Files.createTempDirectory("fresh").toFile.getAbsolutePath
-    graft.operators.Upsert.publishSnapshot(
-      Seq(1, 2, 3).toDF("x"), root, "v1")
+    graft.operators.Upsert.stageSnapshot(
+      Seq(1, 2, 3).toDF("x"), root).publish("v1")
     val now = System.currentTimeMillis()
     // within the bound → resolves to the published dir
     assert(graft.operators.Upsert
@@ -149,7 +149,7 @@ class JobsSpec extends AnyFunSuite {
       Files.createTempDirectory("refresh_fence_locks"))
     var now = 0L
     val runs = new graft.sources.RunLedger(nowMs = () => now)
-    var hijack: Option[RunLedger#Claim] = None
+    var hijack: Option[RunLedger.Claim] = None
     val stages = Seq(
       // stage "slow" outlives the stale-running threshold mid-run and a
       // second worker reclaims the date while it computes
@@ -205,7 +205,8 @@ class JobsSpec extends AnyFunSuite {
     import spark.implicits._
     val root = Files.createTempDirectory("prune_grace").toFile.getAbsolutePath
     for (i <- 1 to 4) {
-      graft.operators.Upsert.publishSnapshot(Seq(i).toDF("x"), root, s"v$i")
+      graft.operators.Upsert.stageSnapshot(Seq(i).toDF("x"), root)
+        .publish(s"v$i")
       // distinct mtimes so recency ordering is deterministic
       new java.io.File(s"$root/v=v$i").setLastModified(1000000L * i)
     }
@@ -311,5 +312,19 @@ class JobsSpec extends AnyFunSuite {
       assert(spark.read.parquet(graft.operators.Upsert
         .resolvePublished(s"$root/$name").get).count() == 0L, name)
     }
+  }
+
+  test("q45 reads its published snapshot and leaves no graft_screen_pub_* root behind") {
+    val target = new java.io.File(s"${System.getProperty("user.dir")}/target")
+    def roots = Option(target.list()).getOrElse(Array.empty[String])
+      .filter(_.startsWith("graft_screen_pub_")).toSet
+    val before = roots
+    val out = graft.queries.Screen.q45ScreenPublished(spark,
+      "/root/testdata/sf0.001")
+    assert(roots == before, s"new publish roots: ${roots -- before}")
+    // the result is pinned: it still reads after its root is deleted
+    assert(out.count() > 0)
+    assert(out.filter(
+      org.apache.spark.sql.functions.col("pub_as_of").isNotNull).count() > 0)
   }
 }

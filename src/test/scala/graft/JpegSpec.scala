@@ -32,8 +32,7 @@ class JpegSpec extends AnyFunSuite {
     // adjacent blocks swing between 0 and 254 => DPCM diffs near +/-127,
     // long 1-runs in the amplitude bits force 0xFF stuffing
     val w = 64; val h = 8
-    def v(bx: Int, by: Int): Int = if (bx % 2 == 0) 0 else 254
-    val px = flatBlocks(w, h, v)
+    val px = flatBlocks(w, h, (bx, _) => if (bx % 2 == 0) 0 else 254)
     val bytes = Jpeg.encodeGray(w, h, px)
     assert(Jpeg.decodePixels(bytes).samples.sameElements(px))
   }
@@ -157,7 +156,7 @@ class JpegSpec extends AnyFunSuite {
   test("MJPEG concatenation: decode consumes exactly one frame and reports end") {
     val w = 16; val h = 8
     def frame(seed: Int): Array[Byte] =
-      Jpeg.encodeGray(w, h, flatBlocks(w, h, (bx, by) => 2 * ((seed + bx * 19) % 128)))
+      Jpeg.encodeGray(w, h, flatBlocks(w, h, (bx, _) => 2 * ((seed + bx * 19) % 128)))
     val stream = frame(3) ++ frame(57) ++ frame(101)
     var off = 0
     var n = 0

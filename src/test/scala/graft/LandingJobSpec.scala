@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.jobs.LandingJob
-import graft.operators.Upsert
-import graft.sources.{Coverage, Ingest, JobLock, RunLedger}
+import graft.sources.{Ingest, JobLock, RunLedger}
 
 /** The composed landing job (`cron-a-direct.ts:115-147` shape), replayed
   * deterministically end to end:
@@ -260,7 +259,7 @@ class LandingJobSpec extends AnyFunSuite {
   test("landing job: a mid-fetch stale-running reclaim fences the zombie before it publishes") {
     val (cfg, bucket, lock, _, nowF, retrySleep) = mkHarness()
     val runs = new RunLedger(nowMs = nowF)
-    var hijacked: Option[RunLedger#Claim] = None
+    var hijacked: Option[RunLedger.Claim] = None
     // the endpoint hangs long enough for ANOTHER worker to reclaim the
     // date (clock jumps past runningStaleAfterSec inside the fetch),
     // then answers normally — the zombie shape

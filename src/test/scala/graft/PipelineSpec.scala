@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Incremental, ProductAgg, Scd2}
+import graft.operators.{ProductAgg, Scd2}
 import graft.streaming.BreadthStream
 import graft.streaming.BreadthStream.{Direction, Tick}
 
@@ -62,44 +62,6 @@ class PipelineSpec extends AnyFunSuite {
       lit(d("2024-07-01")))
     assert(after.select("sector").collect().map(_.getString(0)).toSeq ==
       Seq("health"))
-  }
-
-  // ---------------- incremental discipline ----------------
-
-  def calendar = {
-    import spark.implicits._
-    (1 to 20).map(i => (d(f"2024-01-$i%02d"), i % 7 != 6 && i % 7 != 0))
-      .toDF("calendar_date", "is_business_day")
-  }
-
-  test("forward-fill re-reads the watermark day and caps the window") {
-    import spark.implicits._
-    val table = Seq(d("2024-01-10")).toDF("trade_date")
-    val targets = Incremental.forwardFillTargets(table, "trade_date",
-        calendar, "calendar_date", today = d("2024-01-18"), maxDays = 3)
-      .collect().map(_.getDate(0)).toSeq
-    // overlap-by-1: the watermark day itself is re-read
-    assert(targets.head == d("2024-01-10"))
-    assert(targets.size == 3)
-  }
-
-  test("catch-up targets are missing business days only, oldest first") {
-    import spark.implicits._
-    val log = Seq(d("2024-01-15"), d("2024-01-16")).toDF("run_date")
-    val targets = Incremental.catchUpTargets(log, "run_date",
-        calendar, "calendar_date", today = d("2024-01-18"),
-        lookbackDays = 5, maxDays = 10)
-      .collect().map(_.getDate(0)).toSeq
-    assert(!targets.contains(d("2024-01-15")))
-    assert(targets == targets.sorted)
-    assert(targets.contains(d("2024-01-17")))
-  }
-
-  test("zero-row anomaly gate") {
-    assert(Incremental.isZeroRowAnomaly(0, isBusinessDay = true, allowEmpty = false))
-    assert(!Incremental.isZeroRowAnomaly(0, isBusinessDay = false, allowEmpty = false))
-    assert(!Incremental.isZeroRowAnomaly(5, isBusinessDay = true, allowEmpty = false))
-    assert(!Incremental.isZeroRowAnomaly(0, isBusinessDay = true, allowEmpty = true))
   }
 
   // ---------------- streaming breadth ----------------

@@ -161,15 +161,18 @@ class PlanShapeSpec extends AnyFunSuite {
     } finally spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 
-  test("coverage catch-up: the manifest broadcasts onto the calendar; one fact agg only") {
-    val p = plan("q218_coverage_catchup")
-    // the planner join is metadata-scale: the manifest side broadcasts
-    assert(p.contains("BroadcastHashJoin"))
-    assert(!p.contains("CartesianProduct"))
+  test("coverage catch-up: one fact agg builds the manifest; the plan is driver-side") {
+    val (ledger, _, _) =
+      graft.queries.CoverageProgram.q218Inputs(spark, dir)
+    val lp = ledger.queryExecution.executedPlan.toString
+    assert(!lp.contains("CartesianProduct"))
     // exactly one scan of the fact table feeds the per-day count; the
     // watermark scalar was already resolved at plan-build time
-    assert("orders\\.parquet".r.findAllIn(p).size <= 2,
+    assert("orders\\.parquet".r.findAllIn(lp).size <= 2,
       "coverage catch-up must not rescan the fact table")
+    // the planner ran on the driver: the output is a local relation
+    val p = plan("q218_coverage_catchup")
+    assert(p.contains("LocalTableScan") && !p.contains("orders.parquet"), p)
   }
 
   test("no gate query degenerates to an unintended cartesian product") {
@@ -297,8 +300,8 @@ class PlanShapeSpec extends AnyFunSuite {
       Seq(graft.jobs.LandingJob.Scheduled(ds, fetch, dates)), bucket,
       now += _, nowMs = () => now)
       .toOption.get.forall(_._2.status == "success"))
-    val stage = graft.jobs.DailyRefreshJob.landingStages(spark,
-      cfg.landingRoot, "2024-06-04", ds).head._2()
+    val stage = GenericLandingSpec.dayStats(spark, cfg.landingRoot, ds,
+      "2024-06-04")
     val plan = stage.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("2024-06-04"),
       "target_date must reach the scan as a partition filter:\n" +

@@ -26,40 +26,7 @@ class ProductionRefreshSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
-  private val ordersSchema = StructType(Seq(
-    StructField("o_orderkey", LongType, nullable = false),
-    StructField("o_custkey", LongType, nullable = false),
-    StructField("o_totalprice", DoubleType, nullable = false),
-    StructField("o_orderdate", StringType, nullable = false),
-    StructField("target_date", StringType, nullable = false)))
-  private val lineitemSchema = StructType(Seq(
-    StructField("l_rowid", LongType, nullable = false),
-    StructField("l_orderkey", LongType, nullable = false),
-    StructField("l_linenumber", LongType, nullable = false),
-    StructField("l_quantity", DoubleType, nullable = false),
-    StructField("l_extendedprice", DoubleType, nullable = false),
-    StructField("l_discount", DoubleType, nullable = false),
-    StructField("target_date", StringType, nullable = false)))
-  private val customerSchema = StructType(Seq(
-    StructField("c_custkey", LongType, nullable = false),
-    StructField("c_mktsegment", StringType, nullable = false),
-    StructField("c_acctbal", DoubleType, nullable = false),
-    StructField("target_date", StringType, nullable = false)))
-  private val eventsSchema = StructType(Seq(
-    StructField("event_id", LongType, nullable = false),
-    StructField("user_id", LongType, nullable = false),
-    StructField("ts", TimestampType, nullable = false),
-    StructField("value", DoubleType, nullable = false),
-    StructField("target_date", StringType, nullable = false)))
-
-  private val dsOrders = Dataset("orders", ordersSchema, Seq("o_orderkey"))
-  // the synthetic testdata's (l_orderkey, l_linenumber) is NOT unique
-  // (6000 rows, 4599 distinct pairs at sf0.001) — the endpoint carries
-  // its own unique row id, as the reference's statement rows do
-  private val dsLineitem =
-    Dataset("lineitem", lineitemSchema, Seq("l_rowid"))
-  private val dsCustomer = Dataset("customer", customerSchema, Seq("c_custkey"))
-  private val dsEvents = Dataset("events", eventsSchema, Seq("event_id"))
+  import ProductionRefreshSpec.{dsCustomer, dsEvents, dsLineitem, dsOrders}
 
   private val D = "2024-06-03" // the business date everything lands under
 
@@ -198,4 +165,43 @@ class ProductionRefreshSpec extends AnyFunSuite {
     assert(published(outRoot, "stock_metrics").count() > 0)
     Upsert.rmTree(tmp.toFile)
   }
+}
+
+/** The four landed business tables the production refresh reads, with
+  * the testdata column names. */
+object ProductionRefreshSpec {
+  val ordersSchema = StructType(Seq(
+    StructField("o_orderkey", LongType, nullable = false),
+    StructField("o_custkey", LongType, nullable = false),
+    StructField("o_totalprice", DoubleType, nullable = false),
+    StructField("o_orderdate", StringType, nullable = false),
+    StructField("target_date", StringType, nullable = false)))
+  val lineitemSchema = StructType(Seq(
+    StructField("l_rowid", LongType, nullable = false),
+    StructField("l_orderkey", LongType, nullable = false),
+    StructField("l_linenumber", LongType, nullable = false),
+    StructField("l_quantity", DoubleType, nullable = false),
+    StructField("l_extendedprice", DoubleType, nullable = false),
+    StructField("l_discount", DoubleType, nullable = false),
+    StructField("target_date", StringType, nullable = false)))
+  val customerSchema = StructType(Seq(
+    StructField("c_custkey", LongType, nullable = false),
+    StructField("c_mktsegment", StringType, nullable = false),
+    StructField("c_acctbal", DoubleType, nullable = false),
+    StructField("target_date", StringType, nullable = false)))
+  val eventsSchema = StructType(Seq(
+    StructField("event_id", LongType, nullable = false),
+    StructField("user_id", LongType, nullable = false),
+    StructField("ts", TimestampType, nullable = false),
+    StructField("value", DoubleType, nullable = false),
+    StructField("target_date", StringType, nullable = false)))
+
+  val dsOrders = Dataset("orders", ordersSchema, Seq("o_orderkey"))
+  // the synthetic testdata's (l_orderkey, l_linenumber) is NOT unique
+  // (6000 rows, 4599 distinct pairs at sf0.001) — the endpoint carries
+  // its own unique row id, as the reference's statement rows do
+  val dsLineitem =
+    Dataset("lineitem", lineitemSchema, Seq("l_rowid"))
+  val dsCustomer = Dataset("customer", customerSchema, Seq("c_custkey"))
+  val dsEvents = Dataset("events", eventsSchema, Seq("event_id"))
 }

@@ -289,7 +289,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("coverage catch-up == reference set algebra on random ledgers") {
-    import spark.implicits._
     import graft.sources.Coverage
     val day0 = java.time.LocalDate.of(2024, 1, 1)
     // random ledger over a 40-day universe: each day independently
@@ -301,37 +300,36 @@ class PropertySpec extends AnyFunSuite {
       maxDays <- Gen.chooseNum(1, 10)
       todayOff <- Gen.chooseNum(20, 39)
     } yield (states, lookback, maxDays, todayOff)
+    val calendar = spark.range(1).select(explode(sequence(
+        lit(java.sql.Date.valueOf(day0)),
+        lit(java.sql.Date.valueOf(day0.plusDays(39))))).as("day"))
+      .withColumn("is_business_day", dayofweek(col("day")).between(2, 6))
     forSamples(gen, 12) { case (states, lookback, maxDays, todayOff) =>
       val today = java.sql.Date.valueOf(day0.plusDays(todayOff))
-      val calendar = spark.range(1).select(explode(sequence(
-          lit(java.sql.Date.valueOf(day0)),
-          lit(java.sql.Date.valueOf(day0.plusDays(39))))).as("day"))
-        .withColumn("is_business_day", dayofweek(col("day")).between(2, 6))
-      val rows = states.zipWithIndex.flatMap { case (st, i) =>
+      def cell(d: java.sql.Date, status: String, rows: Long, errs: Int,
+               obs: Option[Long]): org.apache.spark.sql.Row = {
+        Coverage.validate(status, rows, errs, obs)
+        org.apache.spark.sql.Row("ds", d, status, rows, errs,
+          obs.map(Long.box).orNull, null)
+      }
+      val ledger = states.zipWithIndex.flatMap { case (st, i) =>
         val d = java.sql.Date.valueOf(day0.plusDays(i))
         st match {
           case 0 => None // never claimed
-          case 1 => Some(Coverage.row(spark, "ds", d, Coverage.Success,
-            10L, 0, Some(1L), None))
-          case 2 => Some(Coverage.row(spark, "ds", d, Coverage.Success,
-            0L, 0, Some(1L), None)) // checked empty
-          case _ => Some(Coverage.row(spark, "ds", d, Coverage.Failed,
-            0L, 1, None, None))
+          case 1 => Some(cell(d, Coverage.Success, 10L, 0, Some(1L)))
+          case 2 => Some(cell(d, Coverage.Success, 0L, 0, Some(1L))) // checked empty
+          case _ => Some(cell(d, Coverage.Failed, 0L, 1, None))
         }
       }
-      val ledger = rows.reduceOption(_ unionByName _)
-        .getOrElse(spark.createDataFrame(
-          java.util.List.of[org.apache.spark.sql.Row](), Coverage.ledgerSchema))
-      val got = Coverage.catchUpTargets(ledger, "ds", calendar, "day",
-        today, lookback, maxDays)
-        .as[(java.sql.Date, String)].collect().toSeq
-        .map { case (d, r) => (d.toString, r) }
+      val got = Coverage.catchUp(ledger, Seq("ds"),
+          Coverage.businessDays(calendar, "day", today, lookback), maxDays)
+        .map { case (_, d, r) => (d.toString, r) }
       // reference implementation: plain set algebra on the driver
       val want = (0 until 40).flatMap { i =>
         val ld = day0.plusDays(i)
         val d = java.sql.Date.valueOf(ld)
         val isBiz = ld.getDayOfWeek.getValue <= 5
-        // window floor mirrors date_sub(today, lookback) exactly
+        // window floor: `lookback` days before today
         val floor = java.time.LocalDate.parse(today.toString)
           .minusDays(lookback)
         val inWindow = !ld.isBefore(floor) && !ld.isAfter(

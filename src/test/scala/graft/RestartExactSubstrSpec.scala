@@ -183,4 +183,51 @@ class RestartExactSubstrSpec extends AnyFunSuite {
           "not double-append it")
     }
   }
+
+  test("flush ends each incarnation's compaction lane; a failed fold is " +
+      "reported when it happens and rethrown at the fence") {
+    withScratch { (table, tmp) =>
+      import spark.implicits._
+      import scala.jdk.CollectionConverters._
+      val batches = docBatches
+      def lanes = Thread.getAllStackTraces.keySet.asScala
+        .count(t => t.getName == "q216-compact" && t.isAlive)
+      // three incarnations on one path, each of which compacts
+      batches.take(3).foreach { b =>
+        val a = new StreamExactSubstr.PersistedAbsorber(table, tmp,
+          compactEvery = 1)
+        a.absorb(b.toSeq.toDS())
+        a.flush()
+      }
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (lanes > 1 && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(lanes <= 1, s"$lanes live q216-compact threads after flush()")
+      // a fourth incarnation's fold fails: every job the lane starts is
+      // cancelled as it starts
+      val sc = spark.sparkContext
+      val cancelFolds = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(e.properties)
+              .flatMap(p => Option(p.getProperty("spark.job.description")))
+              .exists(_.startsWith("q216-compact"))) sc.cancelJob(e.jobId)
+      }
+      val err = new java.io.ByteArrayOutputStream
+      val stderr = System.err
+      sc.addSparkListener(cancelFolds)
+      System.setErr(new java.io.PrintStream(err, true))
+      val failed = try {
+        val a = new StreamExactSubstr.PersistedAbsorber(table, tmp,
+          compactEvery = 1)
+        a.absorb(batches(3).toSeq.toDS())
+        intercept[Exception](a.flush())
+      } finally {
+        System.setErr(stderr)
+        sc.removeSparkListener(cancelFolds)
+      }
+      assert(failed.getMessage.contains("cancelled"), failed.toString)
+      assert(err.toString.contains(s"[q216-compact] fold of $table"),
+        "the fold failure must be reported on the compaction thread")
+    }
+  }
 }

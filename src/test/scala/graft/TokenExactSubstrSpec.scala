@@ -146,7 +146,6 @@ class TokenExactSubstrSpec extends AnyFunSuite {
   }
 
   test("incremental token absorb (q217) equals the batch q215 on delta docs") {
-    import spark.implicits._
     val norm = Tables.documents(spark, dir)
       .select(col("doc_id"),
         graft.functions.Text.normalize(col("text")).as("text"))

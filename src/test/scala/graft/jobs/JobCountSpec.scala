@@ -13,8 +13,8 @@ import graft.sources.Coverage
 /** Spark-job budgets of the refresh and landing control paths. At
   * control-plane sizes a pass is bound by its job count, so a read that
   * starts a schema-inference job, a publish that reads its snapshot back
-  * to count it, or a catch-up plan that runs one query per dataset shows
-  * here as a count, not as noise in a timing. */
+  * to count it, or a catch-up plan that leaves the driver shows here as a
+  * count, not as noise in a timing. */
 class JobCountSpec extends AnyFunSuite {
   lazy val spark = graft.SparkTestSession.spark
   val sf = "/root/testdata/sf0.01"
@@ -167,9 +167,10 @@ class JobCountSpec extends AnyFunSuite {
           10, maxDays)
       val (one, p1) = jobs(plan(Seq("a"), 10))
       val (four, p4) = jobs(plan(Seq("d", "a", "b", "c"), 10))
-      assert(one == four, s"one dataset: $one jobs, four: $four")
-      // no more than the plan over a parquet ledger snapshot ran
-      assert(one <= 3, s"$one jobs for one catch-up plan")
+      // the plan runs on the driver: a local calendar and the ledger
+      // cells are read without a job, whatever the number of datasets
+      assert(one == 0 && four == 0,
+        s"one dataset: $one jobs, four: $four")
       assert(p1 == Seq("a" -> Seq("2024-06-04", "2024-06-06")))
       // priority order kept, covered datasets omitted, oldest first
       assert(p4 == Seq("d" -> Seq("2024-06-07"),
