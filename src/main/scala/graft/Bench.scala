@@ -328,18 +328,24 @@ object Bench {
       .getOrElse(base)
   }
   private var quietWaitedSec = 0L
-  private def awaitQuietBox(): Unit = {
-    if (sys.env.contains("SPARK_GRAFT_BENCH_NOWAIT")) return
+  private def awaitQuietBox(): Unit =
+    if (!sys.env.contains("SPARK_GRAFT_BENCH_NOWAIT"))
+      quietWaitedSec = awaitQuiet(() => loadAvg1(), quietWaitCapSec)
+
+  /** Polls `load` every 15 s, never sleeping past `capSec`, until it
+    * reads below [[QuietStartLoad]] or the cap is spent; returns the
+    * whole seconds waited. */
+  private[graft] def awaitQuiet(load: () => Double, capSec: => Long): Long = {
     val t0 = System.nanoTime()
-    var l = loadAvg1()
-    while (l >= QuietStartLoad &&
-        (System.nanoTime() - t0) / 1e9 < quietWaitCapSec) {
+    def waitedMs = (System.nanoTime() - t0) / 1000000
+    var l = load()
+    while (l >= QuietStartLoad && waitedMs < capSec * 1000) {
       System.err.println(f"BENCH: waiting for quiet box (load $l%.2f >= " +
         f"$QuietStartLoad%.1f)")
-      Thread.sleep(15000)
-      l = loadAvg1()
+      Thread.sleep(math.min(15000L, capSec * 1000 - waitedMs) max 0L)
+      l = load()
     }
-    quietWaitedSec = ((System.nanoTime() - t0) / 1e9).toLong
+    waitedMs / 1000
   }
 
   /** Optional wall-clock budget (seconds) for the WHOLE coordinator run

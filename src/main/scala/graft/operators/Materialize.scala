@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.optimizer.JoinSelectionHelper
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Filter, Join,
+  LogicalPlan, Project}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.internal.SQLConf
 
 /** Scoped materialization for intermediate relations read by more than one
   * downstream consumer — the repo's sanctioned persist pattern.
@@ -21,12 +25,12 @@ import org.apache.spark.sql.execution.LogicalRDD
   * added).
   *
   * Contract for `body`: anything that must OUTLIVE the scope has to be
-  * materialized inside it — `localCheckpoint()` (eager by default) for
-  * bounded results, or a sink write. Returning a lazy plan that still
-  * references `df` is not an error, but it silently recomputes `df` from
-  * scratch on first use, which defeats the cache. All Dedup/Similarity
-  * operators therefore end their bodies with a `localCheckpoint()` of the
-  * (candidate-/result-sized) output.
+  * materialized inside it — `localCheckpoint()` (eager by default) or
+  * [[sorted]] for bounded results, or a sink write. Returning a lazy plan
+  * that still references `df` is not an error, but it silently recomputes
+  * `df` from scratch on first use, which defeats the cache. All
+  * Dedup/Similarity operators therefore end their bodies with a
+  * `localCheckpoint()` of the (candidate-/result-sized) output.
   */
 object Materialize {
 
@@ -48,10 +52,49 @@ object Materialize {
       case _ =>
     }
 
+  /** The sorted-output gate: the eager `localCheckpoint()` of
+    * `df.orderBy(keys)`, the one way a query result leaves its program
+    * sorted and pinned, so a caller may drop its temp view or memory sink,
+    * or delete its scratch root, as soon as this returns.
+    *
+    * Barrier rule, one predicate for every caller: a range sort runs its
+    * child twice (a sampling pass for bounds, then the shuffle). When the
+    * child's optimized plan is, through `Project` and `Filter`, a join the
+    * planner shuffles, the child is pinned first and released once the
+    * sorted checkpoint exists (q112's verify tail: 5.1 s lazy, 2.6 s
+    * pinned). A join it broadcasts (by hint, or a build side under
+    * `autoBroadcastJoinThreshold` and no other strategy hint) is cheaper
+    * to run twice than to pin (q25 at sf0.1: 1.4 s, 2.2 s pinned). Any
+    * other child, such as a checkpoint, local relation or memory-sink
+    * scan, sorts as it is. */
+  def sorted(df: DataFrame, keys: Column*): DataFrame =
+    if (shuffledJoinTail(df.queryExecution.optimizedPlan,
+        df.sparkSession.sessionState.conf)) {
+      val pinned = df.localCheckpoint()
+      try pinned.orderBy(keys: _*).localCheckpoint()
+      finally release(pinned)
+    } else df.orderBy(keys: _*).localCheckpoint()
+
+  private object Planner extends JoinSelectionHelper
+
+  private def shuffledJoinTail(plan: LogicalPlan, conf: SQLConf): Boolean =
+    plan match {
+      case j: Join =>
+        val hints = (j.hint.leftHint ++ j.hint.rightHint).flatMap(_.strategy)
+        if (hints.nonEmpty) !hints.exists(_ == BROADCAST)
+        else Planner.getBroadcastBuildSide(j, hintOnly = false, conf).isEmpty
+      case Project(_, child) => shuffledJoinTail(child, conf)
+      case Filter(_, child) => shuffledJoinTail(child, conf)
+      case _ => false
+    }
+
   /** Two-relation variant (nested scopes, released inner-first). */
   def withMaterialized2[A](df1: DataFrame, df2: DataFrame)(
       body: (DataFrame, DataFrame) => A): A =
     withMaterialized(df1)(a => withMaterialized(df2)(b => body(a, b)))
+
+  /** Driver threads [[concurrently]] runs action chains on. */
+  private val ConcurrentChains = 4
 
   /** Run INDEPENDENT Spark action chains from a bounded driver thread
     * pool and return their results in input order — the optimization
@@ -64,13 +107,14 @@ object Materialize {
     * pure scheduling change: each chain's computation (and therefore the
     * query result) is untouched.
     *
-    * Only for thunks with no data dependencies between them. Failures
-    * propagate with the original cause (the first failing thunk's
-    * exception), after all threads settle. */
-  def concurrently[A](thunks: Seq[() => A], parallelism: Int = 4): Seq[A] = {
+    * Only for thunks with no data dependencies between them, at most
+    * [[ConcurrentChains]] at a time. Failures propagate with the original
+    * cause (the first failing thunk's exception), after all threads
+    * settle. */
+  def concurrently[A](thunks: Seq[() => A]): Seq[A] = {
     if (thunks.size <= 1) return thunks.map(_())
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(parallelism, thunks.size))
+      math.min(ConcurrentChains, thunks.size))
     try {
       val fs = thunks.map(t => pool.submit(
         new java.util.concurrent.Callable[A] { def call(): A = t() }))

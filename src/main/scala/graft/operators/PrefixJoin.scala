@@ -40,7 +40,10 @@ object PrefixJoin {
     *
     * @param harrs per-doc DISTINCT element arrays `(idCol, harr:
     *              array&lt;long&gt;)` — e.g. [[Dedup.shingleHashArrays]].
-    * @return (id1, id2, jaccard), eagerly checkpointed (pair-sized).
+    * @return (id1, id2, jaccard): a lazy `jaccard >= tau` filter over the
+    *         eager, pair-sized verify checkpoint of
+    *         [[Dedup.jaccardForCandidatesHashes]] — reading it re-runs
+    *         only the filter.
     */
   def allPairsJaccard(harrs: DataFrame, idCol: String,
                       tau: Double): DataFrame = {

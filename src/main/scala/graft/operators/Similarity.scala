@@ -224,7 +224,7 @@ object Similarity {
       // thread pool (guide §2.6) so one k's stage tail backfills with
       // the next k's tasks; each chain's computation is unchanged and
       // the ordered union keeps the output deterministic
-      Materialize.concurrently(ks.map { k => () =>
+      val perK = Materialize.concurrently(ks.map { k => () =>
         val cents = lloyd(vecs, idCol, k, iters)
         kmAssignUnder(vecs, idCol, cents)
           .withColumn("__d2", col("__score") + dotProduct(col("v"), col("v")))
@@ -235,9 +235,8 @@ object Similarity {
           .select(col("k"), col("n_vecs"), col("n_cells_used"),
             col("inertia6"))
           .localCheckpoint() // 1-row: pin this k's result inside its thread
-      }).reduce(_ unionByName _)
-        .orderBy(col("k"))
-        .localCheckpoint()
+      })
+      Materialize.sorted(perK.reduce(_ unionByName _), col("k"))
     }
   }
 

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.{EraDate, Text}
-import graft.operators.{AsOfJoin, HllSketch, Multimodal, ProductAgg}
+import graft.operators.{AsOfJoin, HllSketch, Materialize, Multimodal,
+  ProductAgg}
 
 /** Remaining operator surface: interval-formulated as-of joins, era-date
   * parsing, multimodal feature extraction, and the custom exact product
@@ -535,11 +536,9 @@ object Advanced {
         java.sql.Timestamp.valueOf("2030-01-01 00:00:00"), -1L, 0.0))
       q.processAllAvailable()
     } finally q.stop()
-    val out = ss.table(sink)
+    val out = Materialize.sorted(ss.table(sink)
       .select(col("win_start"), col("userId").as("user_id"),
-        col("n_events"), col("total"))
-      .orderBy(col("win_start"), col("user_id"))
-      .localCheckpoint() // pin rows before the temp view is dropped
+        col("n_events"), col("total")), col("win_start"), col("user_id"))
     ss.catalog.dropTempView(sink)
     out
   }
@@ -589,11 +588,10 @@ object Advanced {
         java.sql.Timestamp.valueOf("2030-01-01 00:00:00"), -1L, "zz"))
       q.processAllAvailable()
     } finally q.stop()
-    val out = ss.table(sink)
+    val out = Materialize.sorted(ss.table(sink)
       .select(col("win_start"), col("eventType").as("event_type"),
-        col("n_events"), col("distinct_users_est"), col("s51"))
-      .orderBy(col("win_start"), col("event_type"))
-      .localCheckpoint() // pin rows before the temp view is dropped
+        col("n_events"), col("distinct_users_est"), col("s51")),
+      col("win_start"), col("event_type"))
     ss.catalog.dropTempView(sink)
     out
   }
@@ -686,14 +684,13 @@ object Advanced {
         q.processAllAvailable()
       }
     } finally q.stop()
-    val out = ss.table(sink)
+    val out = Materialize.sorted(ss.table(sink)
       .groupBy(col("day"))
       .agg(count(lit(1)).as("n_users"),
         sum(when(col("dir") === 1, 1).otherwise(0)).as("advancers"),
         sum(when(col("dir") === -1, 1).otherwise(0)).as("decliners"),
-        sum(when(col("dir") === 0, 1).otherwise(0)).as("flat_or_first"))
-      .orderBy(col("day"))
-      .localCheckpoint() // pin rows before the temp view is dropped
+        sum(when(col("dir") === 0, 1).otherwise(0)).as("flat_or_first")),
+      col("day"))
     ss.catalog.dropTempView(sink)
     out
   }
@@ -801,10 +798,9 @@ object Advanced {
         q.processAllAvailable()
       }
     } finally q.stop()
-    val out = ss.table(sink)
-      .select(col("user_id"), col("click_id"), col("view_id"), col("lag_sec"))
-      .orderBy(col("click_id"), col("view_id"))
-      .localCheckpoint() // pin rows before the temp view is dropped
+    val out = Materialize.sorted(ss.table(sink)
+      .select(col("user_id"), col("click_id"), col("view_id"), col("lag_sec")),
+      col("click_id"), col("view_id"))
     ss.catalog.dropTempView(sink)
     out
   }
@@ -862,11 +858,10 @@ object Advanced {
         q.processAllAvailable()
       }
     } finally q.stop()
-    val out = ss.table(sink)
+    val out = Materialize.sorted(ss.table(sink)
       .filter(col("user_id") >= 0)
-      .select(col("user_id"), col("click_id"), col("view_id"), col("lag_sec"))
-      .orderBy(col("click_id"), col("view_id"))
-      .localCheckpoint()
+      .select(col("user_id"), col("click_id"), col("view_id"), col("lag_sec")),
+      col("click_id"), col("view_id"))
     ss.catalog.dropTempView(sink)
     out
   }

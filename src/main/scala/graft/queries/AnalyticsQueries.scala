@@ -188,12 +188,10 @@ object AnalyticsQueries {
       val z = when(variance > 0, (col(s"__wz_$name") - mu) / sqrt(variance))
       coalesce(least(greatest(z, lit(-3.0)), lit(3.0)), lit(0.0))
     }
-    wz.crossJoin(broadcast(zStats))
+    Materialize.sorted(wz.crossJoin(broadcast(zStats))
       .withColumn("f_p1", zc("f_p1"))
       .withColumn("f_bal", zc("f_bal"))
-      .select(col("c_custkey"), col("f_bal"), col("f_p1"))
-      .orderBy(col("c_custkey"))
-      .localCheckpoint()
+      .select(col("c_custkey"), col("f_bal"), col("f_p1")), col("c_custkey"))
 
     } // withMaterialized(base)
   }
@@ -1408,16 +1406,14 @@ object AnalyticsQueries {
         java.sql.Timestamp.valueOf("2030-01-01 00:00:00"), -1L, 0L, 0.0))
       q.processAllAvailable()
     } finally q.stop()
-    val out = ss.table(sink)
+    val out = Materialize.sorted(ss.table(sink)
       .select(col("userId").as("user_id"),
         col("sessionIdx").as("session_idx"),
         col("nEvents").as("n_events"),
         timestamp_micros(col("startUs")).as("session_start"),
         timestamp_micros(col("endUs")).as("session_end"),
         expr("(endUs - startUs) DIV 1000000").as("duration_sec"),
-        col("sum6").as("value_sum6"))
-      .orderBy(col("user_id"), col("session_idx"))
-      .localCheckpoint() // pin rows before the temp view is dropped
+        col("sum6").as("value_sum6")), col("user_id"), col("session_idx"))
     ss.catalog.dropTempView(sink)
     out
   }

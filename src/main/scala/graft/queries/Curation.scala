@@ -631,11 +631,9 @@ object Curation {
         .filter(coalesce(col("contamination"), lit(0.0)) < DecontamThreshold)
       val sampled = Sampling.stratifiedHash(surv, "doc_id", "lang",
         SamplePermille, DefaultPermille)
-      Sampling.shardAssign(sampled, "doc_id", ShardCount)
+      Materialize.sorted(Sampling.shardAssign(sampled, "doc_id", ShardCount)
         .select(col("doc_id"), col("lang"), col("source"), col("shard"),
-          col("pos"), col("n_tokens"))
-        .orderBy(col("doc_id"))
-        .localCheckpoint()
+          col("pos"), col("n_tokens")), col("doc_id"))
     }
   }
 
@@ -1228,12 +1226,10 @@ object Curation {
           .union(v.orderBy(col("cnt").asc, col("tok")).limit(CmsProbes)
             .select(col("tok")))
           .distinct()
-        CountMin.estimates(probes, b, regs)
+        Materialize.sorted(CountMin.estimates(probes, b, regs)
           .join(v, Seq("tok"))
           .select(col("tok").as("token"), col("cnt").as("true_cnt"),
-            col("cms_est"))
-          .orderBy(col("token"))
-          .localCheckpoint()
+            col("cms_est")), col("token"))
       }
     }
   }
@@ -1456,7 +1452,8 @@ object Curation {
           floor(log(col("c").cast("double") / col("n_docs").cast("double"))
             * lit(1e6) + lit(0.5))).as("hterm"))
         .groupBy(col("source")).agg(sum(col("hterm")).as("hsum"))
-      ns.join(ent, Seq("source")).join(nDup, Seq("source"), "left")
+      Materialize.sorted(ns.join(ent, Seq("source"))
+        .join(nDup, Seq("source"), "left")
         .na.fill(0L, Seq("n_dup"))
         .select(col("source"), col("n_docs"), col("n_tokens"),
           (col("sq6").cast("double")
@@ -1465,9 +1462,8 @@ object Curation {
           (col("n_dup").cast("double") / col("n_docs").cast("double"))
             .as("dup_rate"),
           (-col("hsum").cast("double")
-            / (col("n_docs").cast("double") * lit(1e6))).as("lang_entropy"))
-        .orderBy(col("source"))
-        .localCheckpoint()
+            / (col("n_docs").cast("double") * lit(1e6))).as("lang_entropy")),
+        col("source"))
     }
   }
 
@@ -1616,7 +1612,8 @@ object Curation {
         .join(dt.select(col("doc_id"), col("w").as("w2")), Seq("doc_id"))
         .filter(col("w1") < col("w2"))
         .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
-      pairs.orderBy(col("c12").desc, col("w1"), col("w2")).limit(PmiTopK)
+      Materialize.sorted(pairs
+        .orderBy(col("c12").desc, col("w1"), col("w2")).limit(PmiTopK)
         .join(broadcast(dfw.select(col("w").as("w1"), col("c").as("c1"))),
           Seq("w1"))
         .join(broadcast(dfw.select(col("w").as("w2"), col("c").as("c2"))),
@@ -1625,9 +1622,7 @@ object Curation {
         .select(col("w1"), col("w2"), col("c12"), col("c1"), col("c2"),
           floor(log((col("c12") * col("d")).cast("double")
             / (col("c1") * col("c2")).cast("double")) * lit(1e6) + lit(0.5))
-            .as("pmi6"))
-        .orderBy(col("c12").desc, col("w1"), col("w2"))
-        .localCheckpoint()
+            .as("pmi6")), col("c12").desc, col("w1"), col("w2"))
     }
   }
 
@@ -1685,12 +1680,12 @@ object Curation {
             .as("tg"))
         .select(col("doc_id"), col("w1"), col("tg.tpos").as("pos"),
           col("tg.w6").as("w6"))
-      targets.join(t.select(col("doc_id"), col("pos"), col("w").as("w2")),
+      Materialize.sorted(targets
+        .join(t.select(col("doc_id"), col("pos"), col("w").as("w2")),
           Seq("doc_id", "pos"))
         .groupBy(col("w1"), col("w2"))
-        .agg(count(lit(1)).as("cnt"), sum(col("w6")).as("wsum6"))
-        .orderBy(col("w1"), col("w2"))
-        .localCheckpoint()
+        .agg(count(lit(1)).as("cnt"), sum(col("w6")).as("wsum6")),
+        col("w1"), col("w2"))
     }
   }
 
@@ -2624,7 +2619,7 @@ object Curation {
         .agg(sum(col("r")).as("n_tokens"), count(lit(1)).as("n_types"))
       val next = coc.select(col("source"), (col("r") - 1).as("r"),
         col("n_r").as("n_r1"))
-      coc.join(next, Seq("source", "r"), "left")
+      Materialize.sorted(coc.join(next, Seq("source", "r"), "left")
         .join(tot, Seq("source"))
         .select(col("source"), col("r"), col("n_r"),
           col("n_tokens"), col("n_types"),
@@ -2636,9 +2631,7 @@ object Curation {
             .as("unseen_mass"),
           when(col("r") === 1,
             col("n_r").cast("double") / col("n_types").cast("double"))
-            .as("hapax_ratio"))
-        .orderBy(col("source"), col("r"))
-        .localCheckpoint()
+            .as("hapax_ratio")), col("source"), col("r"))
     }
   }
 
@@ -2882,13 +2875,11 @@ object Curation {
         .select(col("score").as("gscore"),
           row_number().over(wGlob).cast("long").as("p"))
       val n = dm.agg(count(lit(1)).as("nn"))
-      withRanks.crossJoin(broadcast(n))
+      Materialize.sorted(withRanks.crossJoin(broadcast(n))
         .withColumn("p", expr("(rs * nn + ns - 1) DIV ns"))
         .join(globalOrd, Seq("p"))
         .select(col("doc_id"), col("source"), col("score"),
-          col("rs"), col("p"), col("gscore").as("norm_score"))
-        .orderBy(col("doc_id"))
-        .localCheckpoint()
+          col("rs"), col("p"), col("gscore").as("norm_score")), col("doc_id"))
     }
   }
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.Text
+import graft.operators.Materialize
 
 /** Corpus-level EXACT-substring deduplication (Lee et al. 2022,
   * "Deduplicating Training Data Makes Language Models Better" — the
@@ -388,8 +389,8 @@ object ExactSubstr {
       }
       phase(batches.take(2))
       phase(batches.drop(2))
-      val out = ss.read.parquet(s"$tmp/emitted").drop("gen")
-        .orderBy(col("doc_id")).localCheckpoint()
+      val out = Materialize.sorted(
+        ss.read.parquet(s"$tmp/emitted").drop("gen"), col("doc_id"))
       ss.sql(s"DROP TABLE IF EXISTS $table")
       out
     } finally {

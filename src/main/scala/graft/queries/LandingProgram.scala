@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.Tables
 import graft.jobs.{DailyRefreshJob, LandingJob}
+import graft.operators.Materialize
 import graft.sources.{Ingest, JobLock, RunLedger}
 
 /** q219 — the LANDING PIPELINE, oracle-gated end to end: the full
@@ -151,17 +152,13 @@ object LandingProgram {
     val manifest = LandingJob.readLedger(s, cfg.coverageRoot, Seq(ds.name),
         dates.map(java.sql.Date.valueOf))
       .select(col("target_date"), col("status"))
-    // checkpoint: the caller's action runs AFTER the finally deletes the
-    // scratch root, so the 6-row result must be materialized here
-    LandingJob.readLanding(s, cfg.landingRoot, ds).get
+    Materialize.sorted(LandingJob.readLanding(s, cfg.landingRoot, ds).get
       .groupBy(col("target_date"))
       .agg(count(lit(1)).as("n_rows"),
         sum(col("value")).cast("long").as("sum_cents"),
         min(col("value")).cast("long").as("min_cents"),
         max(col("value")).cast("long").as("max_cents"))
-      .join(manifest, Seq("target_date"))
-      .orderBy(col("target_date"))
-      .localCheckpoint()
+      .join(manifest, Seq("target_date")), col("target_date"))
   }
 
   // ---------------------------------------------------------------- q220
@@ -274,16 +271,14 @@ object LandingProgram {
     val manifest = LandingJob.readLedger(s, cfg.coverageRoot, Seq(ds.name),
         dates.map(java.sql.Date.valueOf))
       .select(col("target_date"), col("status"))
-    LandingJob.readLanding(s, cfg.landingRoot, ds).get
+    Materialize.sorted(LandingJob.readLanding(s, cfg.landingRoot, ds).get
       .groupBy(col("target_date"))
       .agg(count(lit(1)).as("n_rows"),
         sum(col("v07")).cast("long").as("sum_v07"),
         sum(col("v31")).cast("long").as("sum_v31"),
         count(when(col("note").isNull, 1)).as("n_null_note"),
         countDistinct(col("code")).as("n_codes"))
-      .join(manifest, Seq("target_date"))
-      .orderBy(col("target_date"))
-      .localCheckpoint()
+      .join(manifest, Seq("target_date")), col("target_date"))
   }
 
   /** DuckDB derives the same wide columns from the source rows
@@ -398,7 +393,7 @@ object LandingProgram {
     var cuSlice: IndexedSeq[(Long, String, Double)] = null
     var evSlice: IndexedSeq[(Long, Long, java.sql.Timestamp, Double, String)] =
       null
-    graft.operators.Materialize.concurrently(Seq[() => Unit](
+    Materialize.concurrently(Seq[() => Unit](
       () => {
         dates = o.map(_._4).distinct().orderBy(col("value"))
           .limit(3).collect().toSeq.sorted
@@ -406,7 +401,7 @@ object LandingProgram {
           .collect().toIndexedSeq
         val keys = oSlice.map(_._1).toSeq
         val custKeys = oSlice.map(_._2).distinct.toSeq
-        graft.operators.Materialize.concurrently(Seq[() => Unit](
+        Materialize.concurrently(Seq[() => Unit](
           () => liSlice = Tables.lineitem(s, dir)
             .select(col("l_orderkey").cast("long"),
               col("l_quantity").cast("double"),
@@ -495,11 +490,9 @@ object LandingProgram {
       .fold(r => sys.error(s"healed refresh rejected: $r"), identity)
     require(out.forall(_.error.isEmpty), out.toString)
     // the gate output: the PUBLISHED flagship snapshot (scratch is
-    // deleted in the caller's finally — materialize before returning)
-    s.read.parquet(graft.operators.Upsert
-        .resolvePublished(s"$outRoot/stock_metrics").get)
-      .orderBy(col("c_custkey"))
-      .localCheckpoint()
+    // deleted in the caller's finally)
+    Materialize.sorted(s.read.parquet(graft.operators.Upsert
+        .resolvePublished(s"$outRoot/stock_metrics").get), col("c_custkey"))
   }
 
   // ---------------------------------------------------------------- q222
@@ -618,7 +611,7 @@ object LandingProgram {
         w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
           org.apache.spark.sql.expressions.Window.unboundedFollowing)))
       .withColumn("rn", row_number().over(w))
-    versioned
+    Materialize.sorted(versioned
       .groupBy(col("target_date"))
       .agg(count(lit(1)).as("n_versions"),
         count(when(col("published_date") =!= col("target_date"), 1))
@@ -627,9 +620,7 @@ object LandingProgram {
           .as("sum_latest"),
         sum(when(col("rn") === 1, col("vfirst"))).cast("long")
           .as("sum_first"))
-      .join(manifest, Seq("target_date"))
-      .orderBy(col("target_date"))
-      .localCheckpoint()
+      .join(manifest, Seq("target_date")), col("target_date"))
   }
 
   /** DuckDB derives the bitemporal end-state from orders + the

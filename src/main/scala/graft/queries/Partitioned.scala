@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.operators.Materialize
 
 /** q194: dynamic partition pruning over a date-partitioned fact layout —
   * the single most important scan optimization for a 100-TB fact table,
@@ -71,10 +72,8 @@ object Partitioned {
       s"graft_dpp_${safe}_${java.util.UUID.randomUUID().toString.take(8)}"
     try {
       writePartitioned(s, dir, root)
-      // eager checkpoint: the (months-sized) result must outlive the
-      // scratch layout deleted below — same rule as q53's bucketed tables
-      prunedAgg(s, root, urgentMonths(s, dir))
-        .orderBy(col("ship_month")).localCheckpoint(true)
+      Materialize.sorted(prunedAgg(s, root, urgentMonths(s, dir)),
+        col("ship_month"))
     } finally deleteRecursively(new java.io.File(root))
   }
 
@@ -151,10 +150,9 @@ object Partitioned {
       val wm = state.agg(max(col("ship_month"))).collect()(0).getString(0)
       val healed = state.filter(col("ship_month") < lit(wm))
         .unionByName(monthlyAgg(refreshRead(s, root, wm)))
-      healed.select(col("ship_month"), col("l_returnflag"),
-          col("n_items"), col("sum_qty").cast("double").as("sum_qty"))
-        .orderBy(col("ship_month"), col("l_returnflag"))
-        .localCheckpoint(true)
+      Materialize.sorted(healed.select(col("ship_month"), col("l_returnflag"),
+          col("n_items"), col("sum_qty").cast("double").as("sum_qty")),
+        col("ship_month"), col("l_returnflag"))
     } finally deleteRecursively(new java.io.File(root))
   }
 

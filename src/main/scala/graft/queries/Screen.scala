@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.Upsert
+import graft.operators.{Materialize, Upsert}
 
 /** Screen view reading through the atomic publication marker
   * (00051_create_stock_screen_view.sql:49-53): fundamentals at their
@@ -66,11 +66,9 @@ object Screen {
       v2.write.mode(SaveMode.Overwrite).parquet(s"$root/v=2")
       val published = Tables.readParquet(s, Upsert.resolvePublished(root)
         .getOrElse(sys.error(s"no _PUBLISHED marker under $root")))
-      fund.join(published, Seq("code"), "left")
+      Materialize.sorted(fund.join(published, Seq("code"), "left")
         .select(col("code"), col("latest_orderdate"), col("latest_price"),
-          col("pub_as_of"), col("pub_price"), col("pub_n_orders"))
-        .orderBy(col("code"))
-        .localCheckpoint()
+          col("pub_as_of"), col("pub_price"), col("pub_n_orders")), col("code"))
     } finally Upsert.rmTree(new java.io.File(root))
   }
 

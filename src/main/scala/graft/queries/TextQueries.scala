@@ -85,17 +85,9 @@ object TextQueries {
         Tables.documents(s, dir), "doc_id", "text", ShingleK)) { harrs =>
       val sig = Dedup.minhashSignaturesFromHashes(harrs, "doc_id", NumHashes)
       val cand = Dedup.minhashCandidates(sig, "doc_id", RowsPerBand)
-      Dedup.jaccardForCandidatesHashes(cand, harrs, "doc_id")
+      Materialize.sorted(Dedup.jaccardForCandidatesHashes(cand, harrs, "doc_id")
         .filter(col("jaccard") >= JaccardThreshold)
-        .select(col("id1"), col("id2"), col("jaccard"))
-        // barrier BEFORE the output sort (r18): orderBy's range sampling
-        // re-evaluates its child, so sorting the lazy verify tail
-        // computed the whole candidate+verify chain TWICE (measured on
-        // q112's identical shape: tail+sort 5.1 s vs 2.6 s with the
-        // barrier); the pair-sized extra checkpoint is noise
-        .localCheckpoint()
-        .orderBy(col("id1"), col("id2"))
-        .localCheckpoint()
+        .select(col("id1"), col("id2"), col("jaccard")), col("id1"), col("id2"))
     }
 
   /** Exact-join threshold for q123 — higher than [[JaccardThreshold]]
@@ -122,16 +114,11 @@ object TextQueries {
     * unrestricted brute-force join, so the gate proves the prefix filter
     * dropped NOTHING — the exactness claim itself is what's hash-pinned. */
   def q123AllPairsJoin(s: SparkSession, dir: String): DataFrame =
-    PrefixJoin.allPairsJaccard(
+    Materialize.sorted(PrefixJoin.allPairsJaccard(
       Dedup.shingleHashArrays(Tables.documents(s, dir), "doc_id", "text",
         AllPairsK),
       "doc_id", AllPairsTau)
-      .select(col("id1"), col("id2"), col("jaccard"))
-      // barrier before the output sort (r18, the q15 rule): the sort's
-      // sampling pass must read the pair-sized result, not re-run the
-      // prefix self-join chain
-      .localCheckpoint()
-      .orderBy(col("id1"), col("id2"))
+      .select(col("id1"), col("id2"), col("jaccard")), col("id1"), col("id2"))
 
   lazy val oracleQ123: String =
     s"""${shingleHashCtesK(AllPairsK)}, sz AS (
@@ -429,14 +416,13 @@ object TextQueries {
     Materialize.withMaterialized(harrs) { h =>
       val ex = h.select(col("doc_id"), explode(col("harr")).as("el"))
       val firstDoc = ex.groupBy(col("el")).agg(min(col("doc_id")).as("fd"))
-      ex.join(firstDoc.hint("shuffle_hash"), Seq("el"))
+      Materialize.sorted(ex.join(firstDoc.hint("shuffle_hash"), Seq("el"))
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_kgrams"),
           count(when(col("fd") === col("doc_id"), lit(1))).as("n_novel"))
         .withColumn("novelty",
-          col("n_novel").cast("double") / col("n_kgrams").cast("double"))
-        .orderBy(col("doc_id"))
-        .localCheckpoint()
+          col("n_novel").cast("double") / col("n_kgrams").cast("double")),
+        col("doc_id"))
     }
   }
 
@@ -734,14 +720,11 @@ FROM reach GROUP BY a ORDER BY doc_id"""
         .withColumn("score", col("tf") * col("idf6"))
       val rk = row_number().over(Window.partitionBy(col("cluster"))
         .orderBy(col("score").desc, col("term")))
-      scored.withColumn("rk", rk)
+      Materialize.sorted(scored.withColumn("rk", rk)
         .filter(col("rk") <= ClusterLabelTopK)
         .select(col("cluster"), col("term"), col("tf"), col("ft"),
-          col("idf6"), col("score"), col("rk").cast("long").as("rk"))
-        // barrier before the output sort (r18, the q15 rule)
-        .localCheckpoint()
-        .orderBy(col("cluster"), col("rk"))
-        .localCheckpoint()
+          col("idf6"), col("score"), col("rk").cast("long").as("rk")),
+        col("cluster"), col("rk"))
     }
   }
 
@@ -1341,14 +1324,12 @@ GROUP BY d.source ORDER BY d.source"""
         "doc_id", RowsPerBand)
       val w = Window.partitionBy(col("id1"))
         .orderBy(col("jaccard").desc, col("id2"))
-      Dedup.jaccardForCandidatesHashes(cand, harrs, "doc_id")
+      Materialize.sorted(Dedup.jaccardForCandidatesHashes(cand, harrs, "doc_id")
         .filter(col("jaccard") >= JaccardThreshold)
         .withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1)
         .select(col("id1").as("new_doc_id"), col("id2").as("dup_of"),
-          col("jaccard"))
-        .orderBy(col("new_doc_id"))
-        .localCheckpoint()
+          col("jaccard")), col("new_doc_id"))
     }
   }
 
@@ -1435,10 +1416,9 @@ GROUP BY d.source ORDER BY d.source"""
         mem.addData(b2.toIndexedSeq: _*)
         q.processAllAvailable()
       } finally q.stop()
-      ss.table(sink)
-        .select(col("docId").as("new_doc_id"), col("dup_of"), col("jaccard"))
-        .orderBy(col("new_doc_id"), col("dup_of"))
-        .localCheckpoint() // pin rows before the temp view is dropped
+      Materialize.sorted(ss.table(sink)
+        .select(col("docId").as("new_doc_id"), col("dup_of"), col("jaccard")),
+        col("new_doc_id"), col("dup_of"))
     }
     ss.catalog.dropTempView(sink)
     out
@@ -1482,10 +1462,8 @@ GROUP BY d.source ORDER BY d.source"""
           1704067200000L + occ * stepMs + id * 1000L), id, t) }.toIndexedSeq: _*)
       q.processAllAvailable()
     } finally q.stop()
-    val out = ss.table(sink)
-      .select(col("docId").as("doc_id"), col("fp"))
-      .orderBy(col("doc_id"))
-      .localCheckpoint() // pin rows before the temp view is dropped
+    val out = Materialize.sorted(ss.table(sink)
+      .select(col("docId").as("doc_id"), col("fp")), col("doc_id"))
     ss.catalog.dropTempView(sink)
     out
   }
@@ -1877,7 +1855,7 @@ GROUP BY d.source ORDER BY d.source"""
         .groupBy(col("qid")).agg(count(lit(1)).as("overlap"))
       val nv = visited.groupBy(col("qid"))
         .agg(count(lit(1)).as("n_visited"))
-      bk.filter(col("rn") === 1)
+      Materialize.sorted(bk.filter(col("rn") === 1)
         .select(col("qid"), col("vec_id").as("beam_top1"))
         .join(nv, Seq("qid"))
         .join(ovl, Seq("qid"), "left")
@@ -1885,9 +1863,7 @@ GROUP BY d.source ORDER BY d.source"""
           col("n_visited"),
           coalesce(col("overlap"), lit(0L)).as("overlap"),
           (coalesce(col("overlap"), lit(0L)).cast("double")
-            / lit(BeamK.toDouble)).as("recall"))
-        .orderBy(col("query_id"))
-        .localCheckpoint()
+            / lit(BeamK.toDouble)).as("recall")), col("query_id"))
     }
   }
 
@@ -2924,12 +2900,8 @@ GROUP BY d.source ORDER BY d.source"""
           levenshtein(col("p1"), col("p2"), LevMaxDist)
             .cast("long").as("lev"))
         .filter(col("lev") >= 0)
-        // barrier before the output sort (r18): the sort's sampling pass
-        // re-ran the candidate+join+lev tail — measured 5.1 s vs 2.6 s
-        .localCheckpoint()
-      val out = lev.orderBy(col("id1"), col("id2")).localCheckpoint()
+      val out = Materialize.sorted(lev, col("id1"), col("id2"))
       Materialize.release(cand)
-      Materialize.release(lev)
       out
     }
   }
@@ -2960,7 +2932,7 @@ GROUP BY d.source ORDER BY d.source"""
           .join(hsm.select(col("source").as("s2"), col("h")), Seq("h"))
           .filter(col("s1") < col("s2"))
           .groupBy(col("s1"), col("s2")).agg(count(lit(1)).as("inter"))
-        inter
+        Materialize.sorted(inter
           .join(broadcast(sizes.select(col("source").as("s1"),
             col("sz").as("sz1"))), Seq("s1"))
           .join(broadcast(sizes.select(col("source").as("s2"),
@@ -2968,9 +2940,7 @@ GROUP BY d.source ORDER BY d.source"""
           .select(col("s1"), col("s2"), col("inter"), col("sz1"), col("sz2"),
             (col("inter").cast("double")
               / (col("sz1") + col("sz2") - col("inter")).cast("double"))
-              .as("jaccard"))
-          .orderBy(col("s1"), col("s2"))
-          .localCheckpoint()
+              .as("jaccard")), col("s1"), col("s2"))
       }
     }
   }

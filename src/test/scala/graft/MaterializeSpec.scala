@@ -1,0 +1,126 @@
+package graft
+
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, Sort}
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.operators.Materialize
+
+/** The sorted-output gate ([[Materialize.sorted]]): the rows and order of
+  * `orderBy`, pinned; a shuffled-join tail is pinned before the sort and
+  * released after it; any other child sorts as it is. */
+class MaterializeSpec extends AnyFunSuite {
+  lazy val spark = SparkTestSession.spark
+
+  private def left: DataFrame = spark.range(0, 400)
+    .select(col("id"), (col("id") % 7).as("g"), (col("id") * 3).as("x"))
+  private def right: DataFrame = spark.range(0, 400, 2)
+    .select(col("id"), (col("id") % 5).as("h"))
+
+  /** A shuffled join under Project and Filter: the q112 tail. */
+  private def joinChild: DataFrame =
+    left.join(right.hint("shuffle_hash"), Seq("id"))
+      .filter(col("h") =!= 3).select(col("id"), col("g"), col("x"), col("h"))
+  /** Joins the planner broadcasts: by hint, and by size (both sides are
+    * far under `autoBroadcastJoinThreshold`). */
+  private def broadcastChildren: Seq[DataFrame] = Seq(
+    left.join(broadcast(right), Seq("id")).select(col("id"), col("x")),
+    left.crossJoin(right.agg(max(col("h")).as("mh"))).filter(col("mh") > 0),
+    left.join(right, Seq("id"), "left").select(col("id"), col("h")))
+  private def aggChild: DataFrame = left.groupBy(col("g"))
+    .agg(sum(col("x")).as("sx"), count(lit(1)).as("n"))
+
+  /** The q151 shape: a per-group top-k over a join. */
+  private def rankedChild: DataFrame = joinChild
+    .withColumn("rk", row_number().over(
+      Window.partitionBy(col("g")).orderBy(col("x").desc)))
+    .filter(col("rk") <= 3)
+
+  /** The `localCheckpoint` actions `body` runs, in order, and its result. */
+  private def checkpoints[A](body: => A): (Seq[QueryExecution], A) = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val l = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint") seen.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.ListenerDrain.drain(sc)
+    spark.listenerManager.register(l)
+    try {
+      val a = body
+      org.apache.spark.ListenerDrain.drain(sc)
+      import scala.jdk.CollectionConverters._
+      (seen.asScala.toSeq, a)
+    } finally spark.listenerManager.unregister(l)
+  }
+
+  /** The child the checkpointed sort read. */
+  private def sortChild(qe: QueryExecution) = qe.optimizedPlan.collectFirst {
+    case s: Sort if s.global => s.child
+  }.getOrElse(fail(s"no global sort in ${qe.optimizedPlan}"))
+
+  test("the gate returns orderBy's rows in orderBy's order") {
+    val cases: Seq[(DataFrame, Seq[Column])] = Seq(
+      joinChild -> Seq(col("x").desc),
+      aggChild -> Seq(col("g")),
+      rankedChild -> Seq(col("g"), col("rk")),
+      joinChild.localCheckpoint() -> Seq(col("h"), col("id").desc))
+    cases.foreach { case (df, keys) =>
+      val out = Materialize.sorted(df, keys: _*)
+      assert(out.queryExecution.logical.isInstanceOf[LogicalRDD])
+      val got = out.collect().toSeq
+      assert(got.nonEmpty)
+      assert(got == df.orderBy(keys: _*).collect().toSeq)
+    }
+  }
+
+  test("a shuffled join child is pinned: the sort reads an ExistingRDD") {
+    val (cks, _) = checkpoints(Materialize.sorted(joinChild, col("id")))
+    assert(cks.size == 2, cks.map(_.optimizedPlan))
+    assert(cks.head.optimizedPlan.collectFirst { case j: Join => j }.nonEmpty)
+    val child = sortChild(cks.last)
+    assert(child.isInstanceOf[LogicalRDD], child)
+    assert(cks.last.executedPlan.toString.contains("ExistingRDD"))
+  }
+
+  test("a checkpoint, aggregate, window or broadcast-join child is not pinned") {
+    val ckpt = joinChild.localCheckpoint()
+    val (c1, _) = checkpoints(Materialize.sorted(ckpt.filter(col("g") > 1),
+      col("id")))
+    assert(c1.size == 1)
+    assert(sortChild(c1.head).collectFirst { case r: LogicalRDD => r }
+      .exists(_.rdd.id == ckptRddId(ckpt)))
+    val (c2, _) = checkpoints(Materialize.sorted(aggChild, col("g")))
+    assert(c2.size == 1)
+    assert(sortChild(c2.head).collectFirst { case a: Aggregate => a }
+      .nonEmpty)
+    val (c3, _) = checkpoints(Materialize.sorted(rankedChild, col("g")))
+    assert(c3.size == 1)
+    broadcastChildren.foreach { df =>
+      val (c, out) = checkpoints(Materialize.sorted(df, col("id")))
+      assert(c.size == 1, df.queryExecution.optimizedPlan)
+      assert(sortChild(c.head).collectFirst { case j: Join => j }.nonEmpty)
+      assert(out.collect().toSeq == df.orderBy(col("id")).collect().toSeq)
+    }
+  }
+
+  private def ckptRddId(df: DataFrame): Int = df.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.id
+    case p => fail(s"not a checkpoint: $p")
+  }
+
+  test("after the call the only new persistent RDD is the result's") {
+    val sc = spark.sparkContext
+    val children = Seq(joinChild, rankedChild, aggChild) ++ broadcastChildren
+    children.foreach { df =>
+      val before = sc.getPersistentRDDs.keySet
+      val out = Materialize.sorted(df, col(df.columns.head))
+      assert(sc.getPersistentRDDs.keySet -- before == Set(ckptRddId(out)))
+    }
+  }
+}

@@ -184,4 +184,13 @@ class JobCountSpec extends AnyFunSuite {
         today, 10, 2) == Seq("2024-06-03", "2024-06-04"))
     } finally Upsert.rmTree(tmp.toFile)
   }
+
+  test("q15 at sf0.01 runs one job fewer than with a pre-sort barrier") {
+    // with a hand-placed localCheckpoint() of the verify tail before the
+    // output sort, q15 ran 19 jobs here; the sorted-output gate does not
+    // pin a filter over the verify checkpoint again
+    val (n, out) = jobs(graft.queries.TextQueries.q15NearDupPairs(spark, sf))
+    assert(n == 18, s"$n jobs for q15 at sf0.01")
+    assert(out.count() == 25)
+  }
 }
