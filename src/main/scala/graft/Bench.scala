@@ -16,11 +16,44 @@ import scala.jdk.CollectionConverters._
   * The coordinator also asserts the containment invariants (q61/q69/q79
   * must not run faster than the q15 pipeline they contain) and reports
   * the check in the JSON (`"inv"`).
+  *
+  * One measurement mode: forked children only. If the FIRST child cannot
+  * fork (or dies before its first query), the coordinator says so on
+  * stderr and exits 1 — there is no in-process fallback, whose medians
+  * carried the r06 2–3× late-session tax under the same schema.
+  *
+  * One stability rule ([[suspects]]): after pass 1, a row re-measures
+  * once, alone, for wide warm spread or for history against the last
+  * committed artifact; the lower median wins. Load is recorded per row
+  * (`load`, `loadmax`) for attribution and triggers nothing; the run
+  * starts at once, without waiting for a quiet box.
+  *
+  * Env knobs (7): `SPARK_GRAFT_SF_DIR` (data, default sf0.1),
+  * `SPARK_GRAFT_BENCH_ONLY` (comma-separated query list; an unknown name
+  * exits 2), `SPARK_GRAFT_BENCH_REPS` (default 3),
+  * `SPARK_GRAFT_BENCH_DEADLINE_SEC` ([[deadlineSec]]),
+  * `SPARK_GRAFT_BENCH_OUT` (the artifact, default `bench_results.json`),
+  * `SPARK_GRAFT_BENCH_PRIOR` (the history anchor, default the artifact)
+  * and `SPARK_GRAFT_BENCH_MIN` (per-query minima on stderr). Cores come
+  * from `SPARK_GRAFT_CPUS` through [[Session.cpus]].
   */
 object Bench {
   def main(args: Array[String]): Unit =
     if (args.length >= 2 && args(0) == "--one") child(args(1).split(",").toSeq)
     else coordinate()
+
+  private def shortKey(k: String): String = k.takeWhile(_ != '_')
+
+  /** Ambient 1-minute load average — the round-8 postmortem's missing
+    * covariate: two same-code full runs disagreed up to 1.6x on the heavy
+    * graph tier purely from driver-side load the JSON never recorded.
+    * Every BENCHQ line carries the load read at query start so a
+    * suspicious median is attributable after the fact; it triggers no
+    * re-measure (see [[suspects]]). */
+  private def loadAvg1(): Double =
+    try new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("/proc/loadavg"))).split(" ")(0).toDouble
+    catch { case _: Throwable => -1.0 }
 
   /** Child mode: same warmup + rep discipline as tools.Time1 (range-sum
     * warmup only; no table pre-touch — rep 1 pays the parquet footer reads
@@ -29,18 +62,6 @@ object Bench {
     * medians are fresh-JVM by construction); cheap ones share a child 8 at
     * a time — their residual cross-query tax is bounded by the group size
     * and was small even in the r06 single-session harness. */
-  /** Ambient 1-minute load average — the round-8 postmortem's missing
-    * covariate: two same-code full runs disagreed up to 1.6x on the heavy
-    * graph tier purely from driver-side load the JSON never recorded.
-    * Every BENCHQ line now carries the load read at query start so a
-    * suspicious median is attributable (and re-measurable) after the fact. */
-  private def shortKey(k: String): String = k.takeWhile(_ != '_')
-
-  private def loadAvg1(): Double =
-    try new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/proc/loadavg"))).split(" ")(0).toDouble
-    catch { case _: Throwable => -1.0 }
-
   private def child(names: Seq[String]): Unit = {
     val t00 = System.nanoTime()
     def mark(s: String): Unit =
@@ -81,8 +102,8 @@ object Bench {
       // pays the parquet footer reads BY DESIGN (the median discards it),
       // so including it inflated spread everywhere (round-9 postmortem:
       // median spread ~0.8, q09 showed 3.4 on a 0.59s query) and blunted
-      // the load-suspect trigger. Warm reps are identical fresh-cache
-      // work, so genuine warm variance should be small.
+      // the spread trigger. Warm reps are identical fresh-cache work, so
+      // genuine warm variance should be small.
       val warm = raw.drop(1).filter(_ >= 0)
       val spread =
         if (warm.isEmpty || med <= 0) -1.0
@@ -187,8 +208,8 @@ object Bench {
   /** Cheap tier (sub-1.2s, median ~0.5s; 50 of them sub-0.4s): grouped 24
     * to a child. r8-r10 showed shared-child tax at this weight is within
     * rep noise, so the group size is purely a child-count/wall-time knob
-    * (24 vs 16 saves ~3 children ≈ 25s toward the <1,200s quiet-box
-    * target without touching any median's provenance). */
+    * (24 vs 16 saves ~3 children ≈ 25s toward the <1,200s target
+    * without touching any median's provenance). */
   private val GroupSize = 24
 
   /** Containment pairs: the first query's pipeline is a strict subset of
@@ -224,44 +245,78 @@ object Bench {
 
   /** One query's measurement: median, min, ambient 1-min load at query
     * start, rep spread (max-min)/median. load/spread are -1 when
-    * unavailable (fork-failure placeholder, /proc unreadable). */
+    * unavailable (failed child, /proc unreadable). */
   final case class QRes(med: Double, min: Double, load: Double, spread: Double)
   private val NoRes = QRes(-1.0, -1.0, -1.0, -1.0)
 
-  /** Isolated-tier medians whose WARM spread exceeds this (or whose
-    * ambient load exceeds [[LoadThreshold]]) are re-measured once in a
-    * fresh child; the run with the LOWER MEDIAN wins. Lower-median is the
-    * right estimator here because contention noise is one-sided — ambient
-    * load can only slow a fixed-work rep down, never speed it up — so of
-    * two fresh-JVM medians of identical work, the smaller is strictly
-    * closer to the uncontended cost. BOTH runs' full measurements (median,
-    * load, spread, which won) are recorded in the artifact's `retries`
-    * map so the selection is auditable after the fact. */
+  /** Isolated-tier medians whose WARM spread exceeds this are re-measured
+    * once in a fresh child; the run with the LOWER MEDIAN wins.
+    * Lower-median is the right estimator here because contention noise
+    * is one-sided — ambient load can only slow a fixed-work rep down,
+    * never speed it up — so of two fresh-JVM medians of identical work,
+    * the smaller is strictly closer to the uncontended cost. BOTH runs'
+    * full measurements (median, load, spread, which won) are recorded in
+    * the artifact's `retries` map so the selection is auditable after
+    * the fact. */
   private val SpreadThreshold = 0.20
-  private val LoadThreshold = 2.0
 
-  /** Round-9 postmortem: mid-tier medians inherited ambient load up to 16
-    * because the remeasure pass covered only the isolated tier. Any query
-    * ≥1s — whatever its tier — re-measures when its recorded load or warm
-    * spread exceeds these looser bounds (looser because shared-child
-    * queries see some cross-query variance by construction). */
+  /** Round-9 postmortem: mid-tier medians went unchecked because the
+    * remeasure pass covered only the isolated tier. Any query ≥1s —
+    * whatever its tier — re-measures when its warm spread exceeds this
+    * looser bound (looser because shared-child queries see some
+    * cross-query variance by construction). */
   private val WideSpreadThreshold = 0.25
-  private val HighLoadThreshold = 6.0
 
   /** Round-15 postmortem: a child whose EVERY rep is uniformly slow looks
-    * perfectly healthy to the load/spread triggers — BENCH_r15 shipped
-    * q185 at 18.8s (spread 0.015, load 3.39) against a 2.0–2.6s isolated
-    * truth. The one signal that catches uniform poisoning is HISTORY:
-    * after pass 1, any query whose fresh median exceeds
-    * [[HistRatio]]× its median in the LAST COMMITTED bench_results.json
-    * (and by more than [[HistMinExcessSec]] absolute — sub-second rows
-    * flap on ratio alone) re-measures ALONE regardless of load/spread,
-    * lower median kept, recorded in `retries` tagged `"hist"`. A REAL
-    * regression survives the re-fork (both medians high — exactly how
-    * the isolated-Time1 arbitration confirmed r15's q216); a poisoned
-    * one collapses back to its historical level. */
+    * perfectly healthy to the spread trigger — BENCH_r15 shipped q185 at
+    * 18.8s (spread 0.015) against a 2.0–2.6s isolated truth. The one
+    * signal that catches uniform poisoning is HISTORY: after pass 1, any
+    * query whose fresh median exceeds [[HistRatio]]× its median in the
+    * LAST COMMITTED bench_results.json (and by more than
+    * [[HistMinExcessSec]] absolute — sub-second rows flap on ratio alone)
+    * re-measures ALONE, lower median kept, recorded in `retries` tagged
+    * `"hist"`. A REAL regression survives the re-fork (both medians
+    * high — exactly how the isolated-Time1 arbitration confirmed r15's
+    * q216); a poisoned one collapses back to its historical level. */
   private val HistRatio = 1.5
   private val HistMinExcessSec = 0.5
+
+  /** Seconds by which `r`'s median exceeds its prior committed median,
+    * when that excess trips the history trigger; None otherwise. The
+    * stability pass ([[suspects]]) and the partial line's `suspect` list
+    * both ask this one predicate. */
+  private def histExcess(n: String, r: QRes,
+                         prior: Map[String, Double]): Option[Double] =
+    prior.get(shortKey(n)).filter(p => p > 0 && r.med >= 0 &&
+      r.med > HistRatio * p && r.med - p > HistMinExcessSec).map(r.med - _)
+
+  /** The stability pass's one rule: the pass-1 rows to re-measure, each
+    * with why — `"spread"` (warm spread above [[SpreadThreshold]] on the
+    * isolated tier, or above [[WideSpreadThreshold]] at ≥ 1 s), `"hist"`
+    * ([[histExcess]] against `prior`) or `"hist+spread"` — most SECONDS
+    * OF SUSPECTED ERROR first, so the capped re-measure slots go where
+    * the most error sits (round 10 sorted by median and gave every slot
+    * to the heavy tier while a mid-tier row sat at 2.84× its truth).
+    * spread×median approximates the warm max−min swing in seconds; a
+    * history suspect's error is its whole excess over the committed
+    * median. Load is recorded per row but triggers nothing: a child's
+    * own predecessor leaves the 1-min load near the core count, and a
+    * load trigger re-measured 10–11 of 16 rows for it on a 4-core box. */
+  private[graft] def suspects(pass1: Seq[(String, QRes)],
+                              prior: Map[String, Double]): Seq[(String, String)] =
+    pass1.flatMap { case (n, r) =>
+      val spread = r.med >= 0 && ((isolated(n) && r.spread > SpreadThreshold) ||
+        (r.med >= 1.0 && r.spread > WideSpreadThreshold))
+      val hist = histExcess(n, r, prior)
+      val why = (hist.isDefined, spread) match {
+        case (true, true) => Some("hist+spread")
+        case (true, false) => Some("hist")
+        case (false, true) => Some("spread")
+        case _ => None
+      }
+      why.map(w => (n, w, math.max(math.max(r.spread, 0.0) * r.med,
+        hist.getOrElse(0.0))))
+    }.sortBy(-_._3).map { case (n, w, _) => (n, w) }
 
   /** Prior committed medians, keyed by SHORT name ("q185"), read from
     * the last committed artifact BEFORE this run overwrites it. Missing
@@ -288,84 +343,40 @@ object Bench {
     } catch { case _: Throwable => Map.empty }
   }
 
-  /** Round-11 postmortem: on a genuinely quiet box the load columns are
-    * SELF-INFLICTED — each 32-thread child leaves a 1-min loadavg tail
-    * of 5–12 that the next query inherits, and the load trigger then
-    * remeasured 20 queries (~10 min of wall) on a box with zero foreign
-    * work. When the loadavg at bench START is below this, the run is in
-    * the quiet-box regime: load columns stay recorded (attribution),
-    * but only warm SPREAD triggers the stability pass — self-load slows
-    * every rep of a child equally, which is exactly what the spread
-    * columns would expose if it mattered. */
-  private val QuietStartLoad = 2.0
-
-  /** Bounded wait for ambient quiet (the round-11 artifact-divergence
-    * fix): the driver's own post-processing leaves a loadavg tail, so
-    * ITS bench reruns started loaded (loadmax 14, 20 remeasures) while
-    * the builder's were quiet — poll the 1-min loadavg until it decays
-    * below [[QuietStartLoad]] (give up after the cap) so
-    * driver-initiated runs qualify for the quiet regime too. The wait
-    * is recorded in the artifact; SPARK_GRAFT_BENCH_NOWAIT=1 skips it
-    * for local iteration.
-    *
-    * Round-17 harness-fit: the cap dropped 600 → 120 s
-    * (SPARK_GRAFT_BENCH_QUIET_MAX_SEC overrides) and shrinks further
-    * under a deadline. Two of the last three driver bench artifacts
-    * were rc-124/unparsed with the kill landing BEFORE the first child
-    * finished — a 10-minute silent wait was spending the driver's whole
-    * budget on not measuring. r13 needed 45 s and r15 90 s of wait for
-    * a quiet run, so 120 s preserves the quiet-regime fix while keeping
-    * the worst-case time-to-first-median bounded. */
-  private def quietWaitCapSec: Long = {
-    // Try-guarded like the deadline (ADVICE r17: a malformed value in
-    // the env crashed the whole bench run), and capped against the
-    // REMAINING budget, not the full deadline — time already elapsed
-    // before the wait starts must not be spent twice
-    val base = sys.env.get("SPARK_GRAFT_BENCH_QUIET_MAX_SEC")
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-      .getOrElse(120L)
-    deadlineSec.map(_ => math.min(base, (remainingSec / 5).toLong max 0L))
-      .getOrElse(base)
-  }
-  private var quietWaitedSec = 0L
-  private def awaitQuietBox(): Unit =
-    if (!sys.env.contains("SPARK_GRAFT_BENCH_NOWAIT"))
-      quietWaitedSec = awaitQuiet(() => loadAvg1(), quietWaitCapSec)
-
-  /** Polls `load` every 15 s, never sleeping past `capSec`, until it
-    * reads below [[QuietStartLoad]] or the cap is spent; returns the
-    * whole seconds waited. */
-  private[graft] def awaitQuiet(load: () => Double, capSec: => Long): Long = {
-    val t0 = System.nanoTime()
-    def waitedMs = (System.nanoTime() - t0) / 1000000
-    var l = load()
-    while (l >= QuietStartLoad && waitedMs < capSec * 1000) {
-      System.err.println(f"BENCH: waiting for quiet box (load $l%.2f >= " +
-        f"$QuietStartLoad%.1f)")
-      Thread.sleep(math.min(15000L, capSec * 1000 - waitedMs) max 0L)
-      l = load()
+  /** The queries to measure: every registered query, or the
+    * comma-separated `SPARK_GRAFT_BENCH_ONLY` list in its own order. A
+    * list naming an unregistered query (`q15` for `q15_neardup_pairs`)
+    * or no query at all is an error, never a silently smaller run. */
+  private[graft] def selectNames(only: Option[String]): Either[String, Seq[String]] =
+    only match {
+      case None => Right(SparkEntry.queries.keys.toSeq)
+      case Some(list) =>
+        val asked = list.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+        val unknown = asked.filterNot(SparkEntry.queries.contains)
+        if (unknown.nonEmpty)
+          Left("SPARK_GRAFT_BENCH_ONLY names unknown queries: " +
+            unknown.mkString(","))
+        else if (asked.isEmpty) Left("SPARK_GRAFT_BENCH_ONLY names no query")
+        else Right(asked)
     }
-    waitedMs / 1000
-  }
 
   /** Optional wall-clock budget (seconds) for the WHOLE coordinator run
     * (the round-16 "make the bench fit the driver's harness" ask). When
-    * set, the coordinator (a) caps the quiet-wait at remaining/5, (b)
-    * sheds reps 3 → 1 for the remaining children once the projected
-    * full-rep finish (plus a reserve for the stability pass) would
-    * overrun the budget — coverage is shed last, reps first — and (c)
-    * skips the stability remeasure pass when the remaining budget
-    * cannot pay for it. Shedding events are recorded in the JSON
-    * (`"shed"` = children forked at reps=1).
+    * set, the coordinator (a) sheds reps 3 → 1 for the remaining
+    * children once the projected full-rep finish (plus a reserve for the
+    * stability pass) would overrun the budget — coverage is shed last,
+    * reps first — and (b) skips the stability remeasure pass when the
+    * remaining budget cannot pay for it. Shedding events are recorded in
+    * the JSON (`"shed"` = children forked at reps=1).
     *
     * Round-18 (VERDICT #2): the deadline DEFAULTS ON in non-interactive
     * runs — the driver's bench budget killed the 32-core run in three
     * of the last five rounds (rc 124) because the env opt-in was never
-    * set, so load-poisoned first-pass medians survived into the
-    * artifact and the stability pass never ran. stdin-not-a-tty is the
-    * driver/CI signature; SPARK_GRAFT_BENCH_DEADLINE_SEC still
-    * overrides (any value ≤ 0 or unparsable = explicitly unbounded —
-    * the committed-artifact regime). */
+    * set, so poisoned first-pass medians survived into the artifact and
+    * the stability pass never ran. stdin-not-a-tty is the driver/CI
+    * signature; SPARK_GRAFT_BENCH_DEADLINE_SEC still overrides (any
+    * value ≤ 0 or unparsable = explicitly unbounded — the
+    * committed-artifact regime). */
   /** 25 min, from the r17 driver evidence: the 8-core run PASSED at
     * ~21.5 min wall with its stability pass, the 32-core run was killed
     * at ≥ ~29 min — the budget sits between. A tighter default (the
@@ -387,24 +398,16 @@ object Bench {
   private lazy val deadlineDefault: Boolean =
     deadlineSec.isDefined && !sys.env.contains("SPARK_GRAFT_BENCH_DEADLINE_SEC")
   /** Budget slice the shed decision keeps aside so the stability pass
-    * (the load/spread/history remeasures — what rescued q209-style
-    * poisoned medians every round it ran) survives under a deadline:
-    * shedding reps early is cheaper than losing the pass. */
+    * (the spread/history remeasures — what rescued q209-style poisoned
+    * medians every round it ran) survives under a deadline: shedding
+    * reps early is cheaper than losing the pass. */
   private val StabilityReserveSec = 150.0
   private val tStartNanos = System.nanoTime()
   private def elapsedSec: Double = (System.nanoTime() - tStartNanos) / 1e9
   private def remainingSec: Double =
     deadlineSec.map(_ - elapsedSec).getOrElse(Double.MaxValue)
 
-  private lazy val quietBoxRegime: Boolean = {
-    val l0 = loadAvg1()
-    if (l0 >= 0 && l0 < QuietStartLoad)
-      System.err.println(f"BENCH: quiet-box regime (start load $l0%.2f) — " +
-        "spread-only remeasure triggers")
-    l0 >= 0 && l0 < QuietStartLoad
-  }
-
-  /** PARTIAL stdout emission (the round-14 postmortem: the driver killed
+  /** PARTIAL stdout line (the round-14 postmortem: the driver killed
     * its bench child ~72s in and got `parsed: null` even though every
     * completed query's median existed in memory). After EVERY measured
     * query (round-17: per BENCHQ line, not per finished child group —
@@ -413,39 +416,38 @@ object Bench {
     * `"partial":true`, heaviest medians that fit the driver's
     * ~2000-char tail buffer — so a killed run's stdout tail always ends
     * in a parseable line covering everything measured so far. The final
-    * (non-partial) line still prints last and wins any last-line parse. */
-  /** Prior committed medians, exposed to the partial emitter so a
-    * killed run's stand-in artifact can FLAG first-pass medians the
-    * stability pass never got to re-measure (r17 VERDICT #8: q209's
-    * load-poisoned 40.5 s shipped in the partial line indistinguishable
-    * from a real 3× regression). */
-  @volatile private var partialPrior: Map[String, Double] = Map.empty
-
-  private def emitPartial(done: Seq[(String, QRes)], qn: Int): Unit = {
+    * (non-partial) line still prints last and wins any last-line parse.
+    * `"suspect"` names the medians the history trigger flags against
+    * `prior` (r17 VERDICT #8: q209's poisoned 40.5 s shipped in the
+    * partial line indistinguishable from a real 3× regression) — a
+    * consumer of a killed run's artifact should discount these. */
+  private[graft] def partialLine(done: Seq[(String, QRes)], qn: Int,
+                                 prior: Map[String, Double]): String = {
     def f3(d: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, d)
-    def short(k: String): String = shortKey(k)
     val total = done.map(_._2.med).filter(_ >= 0).sum
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // medians that would trip the history trigger if the run survived
-    // to its stability pass — a consumer of a partial (killed) artifact
-    // should discount these, not report them as regressions
     val suspect = done.collect {
-      case (k, r) if r.med >= 0 && partialPrior.get(short(k)).exists(p =>
-        p > 0 && r.med > HistRatio * p && r.med - p > HistMinExcessSec) =>
-        "\"" + short(k) + "\""
+      case (k, r) if histExcess(k, r, prior).isDefined =>
+        "\"" + shortKey(k) + "\""
     }.take(8).mkString("[", ",", "]")
     val head = s"""{"metric":"total","value":${f3(total)},"unit":"sec","partial":true,"deadline_default":$deadlineDefault,"qn_done":${done.size},"qn":$qn,"suspect":$suspect,"sf":"$sfDir","queries":"""
     var budget = 1800 - head.length - 1
     val kept = scala.collection.mutable.ListBuffer.empty[String]
     done.sortBy(-_._2.med).foreach { case (k, r) =>
-      val cell = "\"" + short(k) + "\":" + f3(r.med)
+      val cell = "\"" + shortKey(k) + "\":" + f3(r.med)
       if (budget - cell.length - 1 >= 0) { budget -= cell.length + 1; kept += cell }
     }
-    println(head + kept.mkString("{", ",", "}") + "}")
+    head + kept.mkString("{", ",", "}") + "}"
   }
 
   private def coordinate(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // SPARK_GRAFT_BENCH_ONLY=q15_neardup_pairs,q61_neardup_clusters — local
+    // iteration aid; the driver never sets it
+    val names = selectNames(sys.env.get("SPARK_GRAFT_BENCH_ONLY")) match {
+      case Right(ns) => ns
+      case Left(why) => System.err.println(s"BENCH: $why"); sys.exit(2)
+    }
     System.err.println(deadlineSec match {
       case Some(d) if deadlineDefault =>
         s"BENCH: deadline ${d}s (non-interactive default)"
@@ -455,19 +457,16 @@ object Bench {
           "BENCH: deadline none (SPARK_GRAFT_BENCH_DEADLINE_SEC)"
         else "BENCH: deadline none (interactive)"
     })
-    // wait (bounded) for ambient load to decay, THEN sample the regime
-    // BEFORE any child inflates loadavg (lazy val — forced here so the
-    // reading is the true pre-bench ambient load)
-    awaitQuietBox()
-    quietBoxRegime
-    // SPARK_GRAFT_BENCH_ONLY=q15_neardup_pairs,q61_neardup_clusters — local
-    // iteration aid; the driver never sets it
-    val names = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
-      case Some(list) => list.split(",").map(_.trim).filter(SparkEntry.queries.contains).toSeq
-      case None => SparkEntry.queries.keys.toSeq
-    }
-    var isoMode = "jvm"
+    // read the LAST COMMITTED artifact once, before this run overwrites
+    // it — the history anchor for the stability pass and the heavy
+    // tier's order
+    val prior = priorMedians(sfDir)
     val tmp = java.nio.file.Files.createTempDirectory("graft-bench")
+    def rmTmp(): Unit = try {
+      import java.nio.file._
+      Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => Files.deleteIfExists(p))
+    } catch { case _: Throwable => }
     // CDS (class-data-sharing) archive cuts per-child overhead ~13s -> ~4.5s
     // (session create 7->2.3s, codegen warmup 5.8->1.9s, measured on this
     // host) WITHOUT touching measured reps — sharing only accelerates
@@ -494,21 +493,12 @@ object Bench {
     // spends its full-rep budget on the queries where rep noise costs
     // the most seconds
     val isoOrdered = names.filter(isolated)
-      .sortBy(n => -priorMedians(sfDir).getOrElse(shortKey(n), 0.7))
+      .sortBy(n => -prior.getOrElse(shortKey(n), 0.7))
     val groups: Seq[Seq[String]] =
       cheapGroups.take(1) ++
         isoOrdered.map(Seq(_)) ++
         names.filter(midTier).grouped(MidGroup).toSeq ++
         cheapGroups.drop(1)
-    var remeasured: Seq[String] = Seq.empty
-    // (name, first measurement, retry measurement, which was kept: 1|2,
-    // why it was suspected: "ls" load/spread, "hist" history-anchored,
-    // "hist+ls" both) — the lower-median-wins selection stays auditable
-    var retriesLog: Seq[(String, QRes, QRes, Int, String)] = Seq.empty
-    // read the LAST COMMITTED artifact before this run overwrites it —
-    // the history anchor for the uniform-poisoning trigger
-    val prior = priorMedians(sfDir)
-    partialPrior = prior
     // live per-query snapshot for partial emission: updated on every
     // BENCHQ line any child prints (including the stability pass, where
     // the lower median wins — the final selection rule), so whatever
@@ -520,163 +510,95 @@ object Bench {
         case Some(p) if p.med >= 0 && (r.med < 0 || p.med <= r.med) => p
         case _ => r
       }
-      emitPartial(live.toSeq, names.size)
+      println(partialLine(live.toSeq, names.size, prior))
     }
     val repsConf = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     // projected child cost from the prior committed medians (unknown
     // queries estimated at 0.7 s) + ~5 s fixed per-child overhead
     def estSec(g: Seq[String], r: Int): Double =
       5.0 + r * g.map(n => prior.getOrElse(shortKey(n), 0.7)).sum
+    // the one measurement mode is a fresh child JVM per group: a first
+    // child that cannot fork ends the run — an in-process fallback would
+    // ship medians with the r06 late-session tax under the same schema
+    val first = runForked(groups.head, childCp,
+      Seq(s"-XX:ArchiveClassesAtExit=$jsa"), onHit).getOrElse {
+      System.err.println("BENCH: the first child JVM (" +
+        groups.head.map(shortKey).mkString(",") + ") produced no " +
+        "measurement; stopping without results")
+      rmTmp(); sys.exit(1)
+    }
+    val cds = if (java.nio.file.Files.exists(jsa))
+      Seq(s"-XX:SharedArchiveFile=$jsa") else Seq.empty
+    val acc = scala.collection.mutable.ListBuffer.empty[(String, QRes)]
+    acc ++= first
+    // deadline rep-shedding, PER CHILD (r18: the r17 rule flipped one
+    // global switch, so the first tight projection degraded every
+    // remaining child — including the whole heavy tier — to single-rep
+    // medians the history comparison then reads as regressions): each
+    // child runs full reps while [this child at full reps + every later
+    // child at one rep + the stability reserve] still fits the budget,
+    // else THIS child sheds to reps=1 and the walk continues — reps are
+    // shed before coverage, coverage never silently (every shed child is
+    // counted in the JSON)
     var shedChildren = 0
     // the query names of every child forked at reps=1
     val shedQueries = scala.collection.mutable.ListBuffer.empty[String]
-    val results: Seq[(String, QRes)] =
-      if (sys.env.contains("SPARK_GRAFT_BENCH_INPROC")) {
-        isoMode = "session"; runInProcess(names)
-      } else runForked(groups.head, childCp,
-          Seq(s"-XX:ArchiveClassesAtExit=$jsa"), onHit) match {
-        case None =>
-          // fork failed outright (classpath/launcher mismatch in this
-          // environment) — fall back to the r06 single-session harness so
-          // the driver still gets numbers; mark the JSON accordingly
-          System.err.println("BENCH: fork failed, falling back to in-process")
-          isoMode = "session"; runInProcess(names)
-        case Some(first) =>
-          val cds = if (java.nio.file.Files.exists(jsa))
-            Seq(s"-XX:SharedArchiveFile=$jsa") else Seq.empty
-          val acc = scala.collection.mutable.ListBuffer.empty[(String, QRes)]
-          acc ++= first
-          // deadline rep-shedding, PER CHILD (r18: the r17 rule flipped
-          // one global switch, so the first tight projection degraded
-          // every remaining child — including the whole heavy tier — to
-          // single-rep medians the history comparison then reads as
-          // regressions): each child runs full reps while [this child at
-          // full reps + every later child at one rep + the stability
-          // reserve] still fits the budget, else THIS child sheds to
-          // reps=1 and the walk continues — reps are shed before
-          // coverage, coverage never silently (every shed child is
-          // counted in the JSON)
-          val restGroups = groups.tail
-          restGroups.zipWithIndex.foreach { case (g, i) =>
-            val shedThis = deadlineSec.isDefined && repsConf > 1 && {
-              val floorRest = restGroups.drop(i + 1).map(estSec(_, 1)).sum
-              val need = estSec(g, repsConf) + floorRest + StabilityReserveSec
-              val shed = need > remainingSec
-              if (shed) System.err.println(
-                f"BENCH: deadline $remainingSec%.0fs left < $need%.0fs " +
-                  f"projected — shedding ${g.map(shortKey).mkString(",")} " +
-                  "to reps=1")
-              shed
-            }
-            val flags = if (shedThis) cds :+ "-Dgraft.bench.reps=1" else cds
-            if (shedThis) { shedChildren += 1; shedQueries ++= g }
-            acc ++= runForked(g, childCp, flags, onHit)
-              .getOrElse(g.map(_ -> NoRes))
-          }
-          val pass1 = acc.toSeq
-          // STABILITY PASS: medians measured under load or with wide warm
-          // rep spread are untrustworthy (round-8 postmortem: same-code
-          // heavy-graph medians swung 1.6x with ambient load; round 9:
-          // mid-tier medians inherited load up to 16 because only the
-          // isolated tier re-measured). Re-fork each suspect once — ALONE,
-          // whatever its original tier — and keep the lower median.
-          val sus0 = pass1.filter { case (n, r) =>
-            val loadSuspect = !quietBoxRegime && (
-              (isolated(n) && r.load > LoadThreshold) ||
-                (r.med >= 1.0 && r.load > HighLoadThreshold))
-            r.med >= 0 && (loadSuspect ||
-              (isolated(n) && r.spread > SpreadThreshold) ||
-              (r.med >= 1.0 && r.spread > WideSpreadThreshold))
-          }
-          // HISTORY-ANCHORED trigger (r15 postmortem): uniform poisoning
-          // is invisible to load/spread — compare to the last committed
-          // artifact regardless of either
-          val histSus: Map[String, Double] = pass1.collect {
-            case (n, r) if r.med >= 0 && prior.get(shortKey(n)).exists(p =>
-              p > 0 && r.med > HistRatio * p &&
-                r.med - p > HistMinExcessSec) =>
-              n -> prior(shortKey(n))
-          }.toMap
-          val lsNames = sus0.map(_._1).toSet
-          // Slots go to the suspects carrying the most SECONDS OF
-          // SUSPECTED ERROR, not the largest absolute medians: round 10
-          // sorted by -med and all 12 slots went to heavy-tier queries
-          // while mid-tier q53 sat at 2.84x pure load contamination (5.1s
-          // vs a true 1.8s). spread×median approximates the warm max−min
-          // swing in seconds (q53: 0.95×5.1 ≈ 4.8s of error; an 8s heavy
-          // query at spread 0.25 carries ~2s); load-only suspects (tight
-          // warm spread under ambient load) score by the load excess over
-          // their trigger threshold, capped at 1× the median. The child
-          // cap also grows when suspects overflow — a loaded box yields
-          // MORE suspects, and starving them defeats the pass — but stays
-          // bounded so remeasure overhead cannot double the wall time.
-          def errScore(n: String, r: QRes): Double = {
-            val spreadSecs = math.max(r.spread, 0.0) * r.med
-            val loadRef = if (isolated(n)) LoadThreshold else HighLoadThreshold
-            val loadSecs =
-              if (r.load > loadRef)
-                r.med * math.min((r.load - loadRef) / loadRef, 1.0)
-              else 0.0
-            // a history suspect's suspected error is the whole excess
-            // over its committed median — q185's 18.8 vs 2.0 outranks
-            // any spread-flagged row, as it should
-            val histSecs = histSus.get(n).map(p => r.med - p).getOrElse(0.0)
-            math.max(math.max(spreadSecs, loadSecs), histSecs)
-          }
-          val merged = (sus0 ++ pass1.filter { case (n, _) =>
-            histSus.contains(n) && !lsNames(n) })
-          val cap = if (merged.size > 12) 20 else 12
-          val suspects = merged.sortBy { case (n, r) => -errScore(n, r) }
-            .take(cap).map(_._1)
-          def why(n: String): String =
-            (histSus.contains(n), lsNames(n)) match {
-              case (true, true) => "hist+ls"
-              case (true, false) => "hist"
-              case _ => "ls"
-            }
-          // under a deadline the stability pass runs only if the budget
-          // can pay for it — a clean-but-partial artifact beats a kill
-          // mid-remeasure (the partial lines protect either way)
-          val retryBudgetOk = deadlineSec.isEmpty ||
-            remainingSec > suspects.map(n => estSec(Seq(n), repsConf)).sum
-          if (suspects.nonEmpty && !retryBudgetOk)
-            System.err.println(f"BENCH: deadline $remainingSec%.0fs left —" +
-              s" skipping the stability pass (${suspects.size} suspects)")
-          if (suspects.isEmpty || !retryBudgetOk) pass1
-          else {
-            System.err.println(
-              s"BENCH: re-measuring ${suspects.size} suspect queries: " +
-                suspects.map(n => shortKey(n) + "(" + why(n) + ")")
-                  .mkString(","))
-            val retry: Map[String, QRes] = suspects.flatMap { n =>
-              runForked(Seq(n), childCp, cds, onHit)
-                .map(_.toMap).getOrElse(Map.empty)
-            }.toMap
-            // only queries whose re-fork actually produced a measurement
-            // count as remeasured (a failed fork used to be reported as
-            // remeasured with no second measurement behind it)
-            remeasured = suspects.filter(retry.contains)
-            retriesLog = pass1.collect {
-              case (n, r1) if retry.contains(n) =>
-                val r2 = retry(n)
-                val kept = if (r2.med >= 0 && (r1.med < 0 || r2.med < r1.med)) 2 else 1
-                (n, r1, r2, kept, why(n))
-            }
-            pass1.map { case (n, r1) =>
-              retry.get(n) match {
-                case Some(r2) if r2.med >= 0 && (r1.med < 0 || r2.med < r1.med) => n -> r2
-                case _ => n -> r1
-              }
-            }
-          }
+    val restGroups = groups.tail
+    restGroups.zipWithIndex.foreach { case (g, i) =>
+      val shedThis = deadlineSec.isDefined && repsConf > 1 && {
+        val floorRest = restGroups.drop(i + 1).map(estSec(_, 1)).sum
+        val need = estSec(g, repsConf) + floorRest + StabilityReserveSec
+        val shed = need > remainingSec
+        if (shed) System.err.println(
+          f"BENCH: deadline $remainingSec%.0fs left < $need%.0fs " +
+            f"projected — shedding ${g.map(shortKey).mkString(",")} " +
+            "to reps=1")
+        shed
       }
-    try {
-      import java.nio.file._
-      Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.deleteIfExists(p))
-    } catch { case _: Throwable => }
-    emit(results.toMap, results, isoMode, remeasured, retriesLog,
-      shedChildren, shedQueries.toSeq)
+      val flags = if (shedThis) cds :+ "-Dgraft.bench.reps=1" else cds
+      if (shedThis) { shedChildren += 1; shedQueries ++= g }
+      acc ++= runForked(g, childCp, flags, onHit)
+        .getOrElse(g.map(_ -> NoRes))
+    }
+    val pass1 = acc.toSeq
+    // STABILITY PASS: re-fork each suspect once, ALONE, and keep the
+    // lower median; the cap grows on overflow but stays bounded
+    val sus = suspects(pass1, prior)
+    val picked = sus.take(if (sus.size > 12) 20 else 12)
+    // under a deadline the stability pass runs only if the budget can
+    // pay for it — a clean-but-partial artifact beats a kill
+    // mid-remeasure (the partial lines protect either way)
+    val retryBudgetOk = deadlineSec.isEmpty ||
+      remainingSec > picked.map(p => estSec(Seq(p._1), repsConf)).sum
+    if (picked.nonEmpty && !retryBudgetOk)
+      System.err.println(f"BENCH: deadline $remainingSec%.0fs left —" +
+        s" skipping the stability pass (${picked.size} suspects)")
+    val retry: Map[String, QRes] =
+      if (picked.isEmpty || !retryBudgetOk) Map.empty
+      else {
+        System.err.println(
+          s"BENCH: re-measuring ${picked.size} suspect queries: " +
+            picked.map { case (n, w) => shortKey(n) + "(" + w + ")" }
+              .mkString(","))
+        picked.flatMap { case (n, _) =>
+          runForked(Seq(n), childCp, cds, onHit)
+            .map(_.toMap).getOrElse(Map.empty)
+        }.toMap
+      }
+    rmTmp()
+    def keepSecond(r1: QRes, r2: QRes): Boolean =
+      r2.med >= 0 && (r1.med < 0 || r2.med < r1.med)
+    // (name, both measurements, which was kept: 1|2, why) keeps the
+    // selection auditable; only a re-fork that measured counts
+    val why = picked.toMap
+    val retriesLog = pass1.collect { case (n, r1) if retry.contains(n) =>
+      (n, r1, retry(n), if (keepSecond(r1, retry(n))) 2 else 1, why(n))
+    }
+    val results = pass1.map { case (n, r1) =>
+      retry.get(n).filter(keepSecond(r1, _)).map(n -> _).getOrElse(n -> r1)
+    }
+    emit(results.toMap, results, picked.map(_._1).filter(retry.contains),
+      retriesLog, shedChildren, shedQueries.toSeq)
   }
 
   /** The parent's classpath with every directory entry replaced by a jar of
@@ -708,8 +630,9 @@ object Bench {
   /** Launch `graft.Bench --one <n1,n2,...>` in a fresh JVM with this JVM's
     * own flags (add-opens, -Xmx, -D props) and classpath; parse its BENCHQ
     * lines. Child stdout/stderr noise is forwarded to OUR stderr so the
-    * driver's stdout keeps exactly one JSON line. Returns None only if the
-    * fork itself failed (no BENCHQ lines at all). */
+    * driver's stdout keeps exactly one JSON line. Returns None, after
+    * saying why on stderr, when the child printed no BENCHQ line at all
+    * (the fork failed or the JVM died before its first query). */
   private def runForked(group: Seq[String], cp: String,
                         extraFlags: Seq[String],
                         onHit: (String, QRes) => Unit)
@@ -736,66 +659,39 @@ object Bench {
           hits(parts(1)) = r
           onHit(parts(1), r)
         } else System.err.println(line)
-      p.waitFor()
-      if (hits.isEmpty) None
-      else Some(group.map(n => n -> hits.getOrElse(n, NoRes)))
+      val rc = p.waitFor()
+      if (hits.isEmpty) {
+        System.err.println(s"BENCH fork ${group.mkString(",")}: no BENCHQ " +
+          s"line, exit $rc"); None
+      } else Some(group.map(n => n -> hits.getOrElse(n, NoRes)))
     } catch {
       case e: Throwable =>
         System.err.println(s"BENCH fork ${group.mkString(",")}: $e"); None
     }
   }
 
-  /** r06-style single-session path, kept as a fallback only (medians from
-    * this path carry the documented 2-3x late-session tax). */
-  private def runInProcess(names: Seq[String]): Seq[(String, QRes)] = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = Session.local(Session.cpus)
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => }
-    val res = names.map { name =>
-      val fn = SparkEntry.queries(name)
-      val load = loadAvg1()
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => }
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-        dt
-      }.sorted
-      val med = times(times.length / 2)
-      name -> QRes(med, times.head, load,
-        if (med > 0) (times.max - times.min) / med else -1.0)
-    }
-    spark.stop()
-    res
-  }
-
   private def emit(byName: Map[String, QRes],
                    ordered: Seq[(String, QRes)],
-                   isoMode: String,
                    remeasured: Seq[String],
                    retriesLog: Seq[(String, QRes, QRes, Int, String)],
                    shedChildren: Int,
                    shedQueries: Seq[String]): Unit = {
     def f3(d: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, d)
     def f2(d: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, d)
-    def short(k: String): String = shortKey(k)
     val total = ordered.map(_._2.med).filter(_ >= 0).sum
     // containment invariants: subset must not exceed superset by >10%
     // (10% = rep noise allowance); any hit names the violated pair
     val bad = containment.flatMap { case (sub, sup) =>
       (byName.get(sub), byName.get(sup)) match {
         case (Some(s), Some(g)) if s.med >= 0 && g.med >= 0 && g.med < s.med / 1.10 =>
-          Some(s"${short(sup)}<${short(sub)}")
+          Some(s"${shortKey(sup)}<${shortKey(sub)}")
         case _ => None
       }
     }
     val inv = if (bad.isEmpty) "ok" else bad.mkString("+")
     if (sys.env.contains("SPARK_GRAFT_BENCH_MIN")) {
       val qsMin = ordered.map { case (k, r) =>
-        "\"" + short(k) + "\":" + f3(r.min) }.mkString("{", ",", "}")
+        "\"" + shortKey(k) + "\":" + f3(r.min) }.mkString("{", ",", "}")
       System.err.println(s"""{"queries_min":$qsMin}""")
     }
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3")
@@ -808,9 +704,9 @@ object Bench {
       case (n, r) if isolated(n) && r.spread >= 0 => r.spread }
     val spreadMax = if (isoSpreads.isEmpty) -1.0 else isoSpreads.max
     val loadSummary =
-      s""""loadmax":${f2(loadMax)},"iso_spreadmax":${f3(spreadMax)},"quiet":$quietBoxRegime,"quiet_waited_sec":$quietWaitedSec,"deadline_default":$deadlineDefault,"shed":$shedChildren,"remeasured":${remeasured.map(n => "\"" + short(n) + "\"").mkString("[", ",", "]")},"""
+      s""""loadmax":${f2(loadMax)},"iso_spreadmax":${f3(spreadMax)},"deadline_default":$deadlineDefault,"shed":$shedChildren,"remeasured":${remeasured.map(n => "\"" + shortKey(n) + "\"").mkString("[", ",", "]")},"""
     def line(qs: String, extra: String): String =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,$extra$loadSummary"reps":$reps,"cpus":${Session.cpus},"iso":"$isoMode","inv":"$inv","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,$extra$loadSummary"reps":$reps,"cpus":${Session.cpus},"inv":"$inv","sf":"$sfDir"}"""
     // FULL artifact — every median + total + inv — goes to a FILE the
     // tail can never truncate: round 7's 181-entry stdout line overflowed
     // the driver's 2000-char tail buffer, losing 32 medians and leaving
@@ -818,20 +714,20 @@ object Bench {
     // The file (and only the file — stdout stays under the tail budget)
     // also carries per-query load and spread maps.
     val fullQs = ordered.map { case (k, r) =>
-      "\"" + short(k) + "\":" + f3(r.med) }.mkString("{", ",", "}")
+      "\"" + shortKey(k) + "\":" + f3(r.med) }.mkString("{", ",", "}")
     val loadQs = ordered.map { case (k, r) =>
-      "\"" + short(k) + "\":" + f2(r.load) }.mkString("{", ",", "}")
+      "\"" + shortKey(k) + "\":" + f2(r.load) }.mkString("{", ",", "}")
     val spreadQs = ordered.map { case (k, r) =>
-      "\"" + short(k) + "\":" + f3(r.spread) }.mkString("{", ",", "}")
+      "\"" + shortKey(k) + "\":" + f3(r.spread) }.mkString("{", ",", "}")
     // both measurements of every remeasured query, plus which one the
     // lower-median-wins rule adopted — file artifact only
     val retriesJson = retriesLog.map { case (n, r1, r2, kept, why) =>
-      "\"" + short(n) + "\":{\"m1\":" + f3(r1.med) + ",\"l1\":" + f2(r1.load) +
+      "\"" + shortKey(n) + "\":{\"m1\":" + f3(r1.med) + ",\"l1\":" + f2(r1.load) +
         ",\"s1\":" + f3(r1.spread) + ",\"m2\":" + f3(r2.med) +
         ",\"l2\":" + f2(r2.load) + ",\"s2\":" + f3(r2.spread) +
         ",\"kept\":" + kept + ",\"why\":\"" + why + "\"}"
     }.mkString("{", ",", "}")
-    val shedJson = shedQueries.map(n => "\"" + short(n) + "\"")
+    val shedJson = shedQueries.map(n => "\"" + shortKey(n) + "\"")
       .mkString("[", ",", "]")
     val full = line(fullQs,
       s""""load":$loadQs,"spread":$spreadQs,"retries":$retriesJson,"shed_queries":$shedJson,""")
@@ -853,8 +749,8 @@ object Bench {
       var budget = 1900 - overhead
       val kept = scala.collection.mutable.ListBuffer.empty[(String, Double)]
       ordered.sortBy(-_._2.med).foreach { case (k, r) =>
-        val cost = short(k).length + f3(r.med).length + 4
-        if (budget - cost >= 0) { budget -= cost; kept += (short(k) -> r.med) }
+        val cost = shortKey(k).length + f3(r.med).length + 4
+        if (budget - cost >= 0) { budget -= cost; kept += (shortKey(k) -> r.med) }
       }
       val qs = kept.map { case (k, m) => "\"" + k + "\":" + f3(m) }
         .mkString("{", ",", "}")

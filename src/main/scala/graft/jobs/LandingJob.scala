@@ -235,7 +235,8 @@ object LandingJob {
     * rewrites earlier chunks). [[dedupedIncoming]] then serves the
     * date's full incoming relation from staging, or straight from the
     * buffer when everything fit one chunk (zero staging actions — the
-    * common daily case). Peak driver residency: one chunk. */
+    * common daily case). It is a lazy relation either way: land() counts
+    * it on its own write. Peak driver residency: one chunk. */
   private[graft] final class ChunkSpool(s: SparkSession, ds: Dataset,
                                  stageDir: String) {
     private val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
@@ -287,13 +288,11 @@ object LandingJob {
       * the reference's `ON CONFLICT DO UPDATE` applied within one fetch
       * (ADVICE r15: Upsert.keyed alone lands within-fetch duplicates
       * twice and over-counts them). None when the fetch produced zero
-      * rows (a checked-empty day: no partition to touch). The second
-      * element is the deduped count when it is already known
-      * driver-side (the one-chunk path — no count job needed). */
-    def dedupedIncoming(): Option[(DataFrame, Option[Long])] = {
+      * rows (a checked-empty day: no partition to touch). */
+    def dedupedIncoming(): Option[DataFrame] = {
       if (staged) {
         flush()
-        Some((dedupDf(graft.Tables.readParquet(s, stageDir)), None))
+        Some(dedupDf(graft.Tables.readParquet(s, stageDir)))
       }
       else if (buf.isEmpty) None
       else {
@@ -304,8 +303,7 @@ object LandingJob {
         val seen =
           scala.collection.mutable.LinkedHashMap.empty[Seq[Any], Row]
         buf.foreach(r => seen(keyIdx.map(r.get(_))) = r)
-        val rows = seen.values.toSeq
-        Some((toDf(rows).drop("__seq"), Some(rows.size.toLong)))
+        Some(toDf(seen.values.toSeq).drop("__seq"))
       }
     }
 
@@ -346,27 +344,26 @@ object LandingJob {
     * partition overwrite). Re-landing identical rows yields an
     * identical partition; every other partition's files are untouched
     * byte for byte. Returns the DEDUPED fetched row count (the manifest
-    * figure — within-fetch duplicates land, and count, once; computed
-    * pre-transform so both chunk regimes report the same number). */
+    * figure — within-fetch duplicates land, and count, once; counted
+    * pre-transform so both chunk regimes report the same number). The
+    * count comes from an [[org.apache.spark.sql.Observation]] on the
+    * deduped rows, filled by the action that evaluates them (the merge's
+    * checkpoint or the write) — no pin and no count job of its own, as
+    * [[Upsert.stageSnapshot]] counts a stage. */
   private def land(s: SparkSession, cfg: Config, ds: Dataset,
                    spool: ChunkSpool): Long = {
-    val (raw, knownCount) = spool.dedupedIncoming() match {
+    val raw = spool.dedupedIncoming() match {
       case None => return 0L // checked-empty day: no partition to touch
-      case Some(t) => t
+      case Some(df) => df
     }
-    // one-chunk incoming is a LocalRelation (free to re-evaluate);
-    // staged incoming gets pinned so the count below and the merge
-    // don't each re-run the dedup window over the staging files
-    val rawPinned =
-      if (knownCount.isDefined) raw else raw.localCheckpoint()
     // the manifest figure in BOTH write paths: deduped FETCHED rows
     // (the endpoint's upsert count, the reference's batch figure) —
-    // computed before the transform so a row-count-changing cleanse
+    // observed before the transform so a row-count-changing cleanse
     // cannot skew it differently across chunk regimes
-    val landedCount = knownCount.getOrElse(rawPinned.count())
+    val obs = org.apache.spark.sql.Observation()
     // the dataset transform (cleanse) runs ONCE, on the deduped
     // incoming relation — identically in both write paths
-    val incoming = ds.transform(rawPinned)
+    val incoming = ds.transform(raw.observe(obs, count(lit(1)).as("rows")))
       .withColumn("target_date", to_date(col("target_date")))
     // partition-scoped read: only the incoming dates' partitions are
     // merged against (partition pruning — the rest of the table is
@@ -409,7 +406,7 @@ object LandingJob {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("target_date")
       .parquet(dataPath)
-    landedCount
+    obs.get("rows").asInstanceOf[Long]
   }
 
   /** The merge-vs-fast-path partition probe, through the Hadoop

@@ -122,8 +122,7 @@ class GenericLandingSpec extends AnyFunSuite {
     // residency never exceeded one chunk + one page
     assert(spool.peakBuffered <= 8 + 10,
       s"peak ${spool.peakBuffered} exceeds chunk+page bound")
-    val (df, known) = spool.dedupedIncoming().get
-    assert(known.isEmpty) // staged path: count comes from the relation
+    val df = spool.dedupedIncoming().get
     val got = df.select("code", "close").collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(got.keySet == (0 until 10).map(i => s"c$i").toSet)

@@ -185,6 +185,44 @@ class JobCountSpec extends AnyFunSuite {
     } finally Upsert.rmTree(tmp.toFile)
   }
 
+  test("a two-chunk first land counts its rows on the write: 3 jobs fewer than a pin and a count") {
+    val tmp = tmpDir("jc_land")
+    try {
+      var now = 0L
+      val bucket = new graft.sources.Ingest.TokenBucket(
+        requestsPerMinute = 600, minIntervalMs = 1L, nowMs = () => now,
+        sleepMs = now += _)
+      val lock = new graft.sources.JobLock(tmp.resolve("locks"))
+      val runs = new graft.sources.RunLedger(nowMs = () => now)
+      val cfg = LandingJob.Config("jc_land", "rows", s"$tmp/landing",
+        s"$tmp/coverage")
+      val ds = LandingJob.Dataset("rows", rowSchema, Seq("id"),
+        batchSize = 3)
+      // two pages of 3 rows, each flushed as its own chunk; id 1 comes
+      // back on page 2, so 5 deduped rows land
+      val fetch: LandingJob.RowFetch = (d, cursor) => cursor match {
+        case None =>
+          (200, (1L to 3L).map(i => Row(i, d, i.toDouble)), Some("2"))
+        case _ =>
+          (200, Seq(Row(4L, d, 4.0), Row(5L, d, 5.0), Row(1L, d, 9.0)), None)
+      }
+      val (n, out) = jobs(LandingJob.runSchedule(spark, lock, runs, cfg,
+        Seq(LandingJob.Scheduled(ds, fetch, Seq("2024-06-03"))), bucket,
+        now += _, nowMs = () => now))
+      val results = out.toOption.get.map(_._2)
+      assert(results.map(r => (r.status, r.rows)) == Seq(("success", 5L)))
+      // 2 chunk appends, then the deduped rows' write; the parent tree,
+      // which pinned the deduped rows with localCheckpoint() and counted
+      // them before the write, ran 7 jobs here
+      assert(n == 4, s"$n jobs for a two-chunk first land")
+      val landed = LandingJob.readLanding(spark, cfg.landingRoot, ds).get
+        .select("id", "value").collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(landed == Map(1L -> 9.0, 2L -> 2.0, 3L -> 3.0, 4L -> 4.0,
+        5L -> 5.0))
+    } finally Upsert.rmTree(tmp.toFile)
+  }
+
   test("q15 at sf0.01 runs one job fewer than with a pre-sort barrier") {
     // with a hand-placed localCheckpoint() of the verify tail before the
     // output sort, q15 ran 19 jobs here; the sorted-output gate does not
