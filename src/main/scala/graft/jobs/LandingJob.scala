@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.operators.Upsert
+import graft.operators.{Materialize, Upsert}
 import graft.sources.{Coverage, Ingest, JobLock, RunLedger}
 import graft.sources.Ingest.Retry
 
@@ -394,8 +394,9 @@ object LandingJob {
           .map(_.filter(col("target_date").isin(dates: _*))
             .select(incoming.columns.map(col): _*))
           .getOrElse(incoming.limit(0))
-        Upsert.keyed(existing, incoming, "target_date" +: ds.keyCols)
-          .localCheckpoint() // the write replaces the partition it read
+        Materialize.pin(
+          Upsert.keyed(existing, incoming, "target_date" +: ds.keyCols))
+          // the write replaces the partition it read
       }
     // PER-WRITE option, not a session-conf flip (r18): the save/restore
     // pattern races any concurrent writer in the same session — a

@@ -75,9 +75,9 @@ object Bpe {
             regexp_replace(col("sp"), "\\b" + l + " " + r + "\\b", l + r))
         }
       }
-      val enc = cur.select(col("word"), col("sp").as("encoded"),
-        size(split(col("sp"), " ")).cast("long").as("n_sym"), col("freq"))
-        .localCheckpoint() // vocabulary-sized; must outlive the cache scope
+      val enc = Materialize.pin(cur.select(col("word"), col("sp").as("encoded"),
+        size(split(col("sp"), " ")).cast("long").as("n_sym"), col("freq")))
+        // vocabulary-sized; must outlive the cache scope
       (acc.result(), enc)
     }
     val schema = StructType(Seq(StructField("round", IntegerType, false),

@@ -104,42 +104,46 @@ object Dedup {
   }
 
   /** Exact Jaccard restricted to a given candidate-pair set — the verify
-    * stage of the LSH pipeline. Work is bounded by Σ|shingles(id1)| over
-    * candidate pairs (NOT by co-occurrence: a stop-shingle present in every
-    * doc makes [[jaccardPairs]] quadratic — 210s vs ~2s on the 500-doc
-    * table — and would be fatal at real scale). */
+    * stage of the LSH pipeline, in its exploded-row form (the reference
+    * the array formulations are tested against). Work is bounded by
+    * Σ|shingles(id1)| over candidate pairs (NOT by co-occurrence: a
+    * stop-shingle present in every doc makes [[jaccardPairs]] quadratic —
+    * 210s vs ~2s on the 500-doc table — and would be fatal at real
+    * scale).
+    *
+    * Cache lifecycle: `cand0` is scoped-materialized while the
+    * (candidate-sized) result is computed — it feeds both the intersection
+    * join and the output join — and the result returns as a
+    * [[Materialize.pin]], so no cache outlives the call and nothing is the
+    * caller's to release. Same contract as [[minhashCandidates]]. */
   def jaccardForCandidates(cand0: DataFrame, sh: DataFrame,
                            idCol: String): DataFrame =
-    jaccardForCandidates(cand0, sh,
-      sh.groupBy(col(idCol)).agg(count(lit(1)).as("sz")), idCol)
-
-  /** Exact Jaccard on candidate pairs straight from the per-doc shingle
-    * arrays: two id-keyed joins attach the compact arrays to each pair, and
-    * the intersection is a per-row `array_intersect` (hash-set, O(n+m)) —
-    * no exploded shingle rows ever shuffle, so the verify stage costs
-    * O(candidates · avg set size) CPU with only candidate-sized joins.
-    * Identical results to the exploded formulation (the arrays ARE the
-    * distinct shingle sets). */
-  def jaccardForCandidatesArrays(cand: DataFrame, arrs: DataFrame,
-                                 idCol: String): DataFrame = {
-    val a1 = arrs.select(col(idCol).as("id1"), col("sharr").as("__s1"))
-    val a2 = arrs.select(col(idCol).as("id2"), col("sharr").as("__s2"))
-    cand.join(a1, Seq("id1")).join(a2, Seq("id2"))
-      .withColumn("inter", size(array_intersect(col("__s1"), col("__s2"))).cast("long"))
-      .withColumn("jaccard",
-        col("inter").cast("double") /
-          (size(col("__s1")).cast("long") + size(col("__s2")).cast("long") - col("inter")))
-      .drop("__s1", "__s2")
-  }
+    Materialize.withMaterialized(cand0) { cand =>
+      val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("sz"))
+      val s1 = sh.select(col(idCol).as("id1"), col("shingle"))
+      val s2 = sh.select(col(idCol).as("id2"), col("shingle"))
+      val inter = cand.join(s1, Seq("id1"))
+        .join(s2, Seq("id2", "shingle"), "left_semi")
+        .groupBy(col("id1"), col("id2")).agg(count(lit(1)).as("inter"))
+      Materialize.pin(cand.join(inter, Seq("id1", "id2"), "left")
+        .join(sizes.select(col(idCol).as("id1"), col("sz").as("sz1")),
+          Seq("id1"))
+        .join(sizes.select(col(idCol).as("id2"), col("sz").as("sz2")),
+          Seq("id2"))
+        .withColumn("inter", coalesce(col("inter"), lit(0L)))
+        .withColumn("jaccard",
+          col("inter").cast("double") /
+            (col("sz1") + col("sz2") - col("inter"))))
+    }
 
   /** Exact Jaccard on candidate pairs from the per-doc HASHED shingle
-    * arrays ([[shingleHashArrays]]) — same shape as
-    * [[jaccardForCandidatesArrays]] but the joins ship long arrays and the
-    * per-row intersection compares longs, the cheapest formulation at
-    * scale.
+    * arrays ([[shingleHashArrays]]): two id-keyed joins attach each
+    * pair's arrays and the intersection is a per-row merge count over
+    * longs, so no exploded shingle rows ever shuffle — the cheapest
+    * formulation at scale. Same values as [[jaccardForCandidates]].
     *
-    * The (candidate-sized, slim) result is materialized HERE as an eager
-    * localCheckpoint — load-bearing twice over, measured at sf0.1 with
+    * The (candidate-sized, slim) result is materialized HERE as a
+    * [[Materialize.pin]] — load-bearing twice over, measured at sf0.1 with
     * 151k candidates (q15 15.8s → the fix restores ~4s):
     *  1. A caller's `filter(jaccard >= τ)` over the lazy form gets pushed
     *     by Catalyst INTO the join as a non-equi condition, where the
@@ -152,17 +156,12 @@ object Dedup {
     *     makes those passes read 4 numeric columns per pair instead. */
   def jaccardForCandidatesHashes(cand: DataFrame, harrs: DataFrame,
                                  idCol: String): DataFrame = {
-    // shuffle_hash: the checkpointed candidate side has no stats, and
-    // letting the planner broadcast the ARRAY relations instead collects
-    // tens of MB of shingle hashes to the driver per join side (and at
-    // real scale the array relation is corpus-sized — never broadcast
-    // material). A shuffled hash join on the id is the reviewed verify
-    // shape: candidate-bounded probe, array side partitioned, no sort.
+    // no join hint: the candidate side is a pin and carries its measured
+    // size, so the planner picks each join from sizes; the shuffle_hash
+    // hints this replaced measured no faster (PLANS.md "One pin entry")
     val a1 = harrs.select(col(idCol).as("id1"), col("harr").as("__h1"))
-      .hint("shuffle_hash")
     val a2 = harrs.select(col(idCol).as("id2"), col("harr").as("__h2"))
-      .hint("shuffle_hash")
-    cand.join(a1, Seq("id1")).join(a2, Seq("id2"))
+    Materialize.pin(cand.join(a1, Seq("id1")).join(a2, Seq("id2"))
       // native two-pointer merge count over the SORTED harr carrier
       // (codegen'd) — replaces the interpreted hash-set array_intersect
       .withColumn("inter",
@@ -170,36 +169,8 @@ object Dedup {
       .withColumn("jaccard",
         col("inter").cast("double") /
           (size(col("__h1")).cast("long") + size(col("__h2")).cast("long") - col("inter")))
-      .drop("__h1", "__h2")
-      .localCheckpoint()
+      .drop("__h1", "__h2"))
   }
-
-  /** Variant taking precomputed per-doc set sizes (`idCol`, `sz`) — with
-    * [[shingleArrays]] the sizes are a map-side `size(sharr)`, removing the
-    * count shuffle.
-    *
-    * Cache lifecycle: `cand0` is scoped-materialized while the
-    * (candidate-sized) result is computed — it feeds both the intersection
-    * join and the output join — and the result returns as an eager
-    * `localCheckpoint`, so no cache outlives the call and nothing is the
-    * caller's to release. Same contract as [[minhashCandidates]]. */
-  def jaccardForCandidates(cand0: DataFrame, sh: DataFrame,
-                           sizes: DataFrame, idCol: String): DataFrame =
-    Materialize.withMaterialized(cand0) { cand =>
-      val s1 = sh.select(col(idCol).as("id1"), col("shingle"))
-      val s2 = sh.select(col(idCol).as("id2"), col("shingle"))
-      val inter = cand.join(s1, Seq("id1"))
-        .join(s2, Seq("id2", "shingle"), "left_semi")
-        .groupBy(col("id1"), col("id2")).agg(count(lit(1)).as("inter"))
-      cand.join(inter, Seq("id1", "id2"), "left")
-        .join(sizes.select(col(idCol).as("id1"), col("sz").as("sz1")), Seq("id1"))
-        .join(sizes.select(col(idCol).as("id2"), col("sz").as("sz2")), Seq("id2"))
-        .withColumn("inter", coalesce(col("inter"), lit(0L)))
-        .withColumn("jaccard",
-          col("inter").cast("double") /
-            (col("sz1") + col("sz2") - col("inter")))
-        .localCheckpoint()
-    }
 
   /** MinHash signatures, wide form: one row per doc with columns
     * `mh0..mh{n-1}` = min over the doc's shingle hashes of (a_i·h'+b_i)
@@ -221,38 +192,15 @@ object Dedup {
       .agg(aggs.head, aggs.tail: _*)
   }
 
-  /** MinHash signatures straight from the per-doc shingle arrays — zero
-    * shuffle: one md5 pass per shingle (`transform` into h' = hash60 mod P),
-    * then n affine `array_min` folds, all inside a single codegen'd
-    * projection. Identical values to [[minhashSignatures]] (same hash
-    * family, same min over the same distinct-shingle set); preferred at
-    * scale because the signature stage stops being an aggregation
-    * entirely. */
-  def minhashSignaturesFromArrays(arrs: DataFrame, idCol: String,
-                                  n: Int): DataFrame = {
-    val hs = expr("transform(sharr, x -> " +
-      "CAST(conv(substring(md5(CAST(x AS BINARY)), 1, 15), 16, 10) AS BIGINT)" +
-      s" % $P)").as("__hs")
-    val mins = (0 until n).map { i =>
-      expr(s"array_min(transform(__hs, h -> " +
-        s"(${hashParamsA(i)}L * h + ${hashParamsB(i)}L) % $P))").as(s"mh$i")
-    }
-    arrs.select(col(idCol), hs).select(col(idCol) +: mins: _*)
-  }
-
   /** MinHash signatures from the HASHED shingle arrays — the md5 work is
     * already done in [[shingleHashArrays]], so this is just n affine
-    * `array_min` folds over longs in one codegen'd projection. Same values
-    * as the other two formulations: min over h' mod P of the same distinct
-    * shingle set (duplicate post-mod values cannot change a min). */
-  def minhashSignaturesFromHashes(harrs: DataFrame, idCol: String,
-                                  n: Int): DataFrame =
-    minhashSignaturesFromHashes(harrs, idCol, n, Nil)
-
-  /** Variant carrying extra columns through the signature projection
+    * `array_min` folds over longs in one codegen'd projection, with no
+    * shuffle. Same values as [[minhashSignatures]]: min over h' mod P of
+    * the same distinct shingle set (duplicate post-mod values cannot
+    * change a min). `keep` carries extra columns through the projection
     * (streaming keeps its event-time and the verify-stage hash array). */
-  def minhashSignaturesFromHashes(harrs: DataFrame, idCol: String,
-                                  n: Int, keep: Seq[String]): DataFrame = {
+  def minhashSignaturesFromHashes(harrs: DataFrame, idCol: String, n: Int,
+                                  keep: Seq[String] = Nil): DataFrame = {
     val hs = expr(s"transform(harr, x -> x % $P)").as("__hs")
     val mins = (0 until n).map { i =>
       expr(s"array_min(transform(__hs, h -> " +
@@ -296,12 +244,12 @@ object Dedup {
     // localCheckpoint, so no cache outlives the call
     Materialize.withMaterialized(
         bandedSignatures(sig, idCol, rowsPerBand)) { banded =>
-      banded.select(col("band"), col("bkey"), col(idCol).as("id1"))
+      Materialize.pin(banded
+        .select(col("band"), col("bkey"), col(idCol).as("id1"))
         .join(banded.select(col("band"), col("bkey"), col(idCol).as("id2")),
           Seq("band", "bkey"))
         .filter(col("id1") < col("id2"))
-        .select(col("id1"), col("id2")).distinct()
-        .localCheckpoint()
+        .select(col("id1"), col("id2")).distinct())
     }
 
   /** Cross-corpus LSH candidates: (id1 = new, id2 = standing) pairs
@@ -318,13 +266,12 @@ object Dedup {
     * broadcasts, the standing side keeps its partitioning. */
   def minhashCandidatesCross(sigNew: DataFrame, sigOld: DataFrame,
                              idCol: String, rowsPerBand: Int): DataFrame =
-    bandedSignatures(sigNew, idCol, rowsPerBand)
+    Materialize.pin(bandedSignatures(sigNew, idCol, rowsPerBand)
       .select(col("band"), col("bkey"), col(idCol).as("id1"))
       .join(bandedSignatures(sigOld, idCol, rowsPerBand)
         .select(col("band"), col("bkey"), col(idCol).as("id2")),
         Seq("band", "bkey"))
-      .select(col("id1"), col("id2")).distinct()
-      .localCheckpoint()
+      .select(col("id1"), col("id2")).distinct())
 
   /** Winnowing document fingerprints (Schleimer/Wilkerson/Aiken, SIGMOD'03
     * — the MOSS algorithm): over the ORDERED k-gram hash sequence, slide a
@@ -465,13 +412,12 @@ object Dedup {
         .groupBy(col(idCol), col("doc_len"), col("__isl"))
         .agg(min(col("pos")).as("__s"), max(col("pos")).as("__e"),
           count(lit(1)).as("__np"))
-      spans.groupBy(col(idCol), col("doc_len"))
+      Materialize.pin(spans.groupBy(col(idCol), col("doc_len"))
         .agg(count(lit(1)).as("n_spans"),
           sum(col("__np")).as("n_dup_positions"),
           sum(col("__e") - col("__s") + lit(k)).as("dup_chars"))
         .withColumn("dup_frac",
-          col("dup_chars").cast("double") / col("doc_len"))
-        .localCheckpoint()
+          col("dup_chars").cast("double") / col("doc_len")))
     }
   }
 
@@ -516,14 +462,13 @@ object Dedup {
           .filter(col("id1") < col("id2"))
           .groupBy(col("id1"), col("id2")).agg(count(lit(1)).as("shared_fp"))
         val sz = fps.select(col(idCol), size(col("fp")).cast("long").as("__n"))
-        pairs
+        Materialize.pin(pairs
           .join(sz.select(col(idCol).as("id1"), col("__n").as("__n1")), Seq("id1"))
           .join(sz.select(col(idCol).as("id2"), col("__n").as("__n2")), Seq("id2"))
           .withColumn("containment",
             col("shared_fp").cast("double") / least(col("__n1"), col("__n2")))
           .filter(col("containment") >= minContainment)
-          .drop("__n1", "__n2")
-          .localCheckpoint()
+          .drop("__n1", "__n2"))
       }
     }
   }
@@ -575,13 +520,13 @@ object Dedup {
         .join(broadcast(evalHashes), Seq("__h"), "left_semi")
         .groupBy(col(idCol))
         .agg(count(lit(1)).as("__overlap"))
-      th.select(col(idCol), size(col("harr")).cast("long").as("n_ngrams"))
+      Materialize.pin(th
+        .select(col(idCol), size(col("harr")).cast("long").as("n_ngrams"))
         .join(broadcast(overlap), Seq(idCol), "left")
         .select(col(idCol), col("n_ngrams"),
           coalesce(col("__overlap"), lit(0L)).as("overlap_ngrams"))
         .withColumn("contamination",
-          col("overlap_ngrams").cast("double") / col("n_ngrams"))
-        .localCheckpoint()
+          col("overlap_ngrams").cast("double") / col("n_ngrams")))
     }
 
   /** Connected components over a (small-degree) near-dup edge set by
@@ -596,7 +541,9 @@ object Dedup {
     * this cheaper-per-round variant stays the default.
     *
     * Returns (doc_id, cluster = min doc id of its component), one row per
-    * vertex that appears in an edge; intermediates are released here.
+    * vertex that appears in an edge. Every intermediate is released here:
+    * a round's labels as soon as the next round's are pinned, the edges
+    * on exit; the result reads the final round's pin only.
     *
     * Lineage discipline: persist() caches DATA, not plans — without
     * truncation each round's labels still embed the full edge-producing
@@ -604,44 +551,56 @@ object Dedup {
     * Catalyst re-analyzes a plan that roughly doubles per iteration and
     * planning time grows exponentially even with every input cached
     * (measured on the q15 LSH graph: rounds of 2.0s, 8.3s, 61.8s).
-    * localCheckpoint() materializes AND truncates the plan to the stored
-    * partitions, keeping every round constant-size — the standard move for
-    * iterative algorithms (GraphX/Pregel checkpoint on the same schedule).
+    * A [[Materialize.pin]] materializes AND truncates the plan to the
+    * stored partitions, keeping every round constant-size — the standard
+    * move for iterative algorithms (GraphX/Pregel checkpoint on the same
+    * schedule).
     * On a cluster where executor loss must be survivable, swap for
     * reliable checkpoint() (setCheckpointDir); same contract. */
   def connectedComponents(edges0: DataFrame): DataFrame = {
-    val edges = edges0.select(col("id1").cast("long").as("id1"),
-      col("id2").cast("long").as("id2")).localCheckpoint()
+    val edges = Materialize.pin(edges0.select(
+      col("id1").cast("long").as("id1"), col("id2").cast("long").as("id2")))
     val bedges0 = edges.select(col("id1").as("src"), col("id2").as("dst"))
       .unionByName(edges.select(col("id2").as("src"), col("id1").as("dst")))
-    Materialize.withMaterialized(bedges0) { bedges =>
-      var labels = bedges.select(col("src").as("id")).distinct()
-        .withColumn("lbl", col("id")).localCheckpoint()
+    try Materialize.withMaterialized(bedges0) { bedges =>
+      // `round` is this round's pin; the one it supersedes is released as
+      // soon as it exists, so one labels relation is stored at a time
+      var round = Materialize.pin(bedges.select(col("src").as("id"))
+        .distinct().withColumn("lbl", col("id")))
+      var labels = round
       var changed = 1L
       var rounds = 0
-      while (changed > 0 && rounds < 64) {
-        val nbrMin = bedges
-          .join(labels.select(col("id").as("src"), col("lbl").as("__sl")),
-            Seq("src"))
-          .groupBy(col("dst")).agg(min(col("__sl")).as("__nm"))
-        val next = labels.join(nbrMin, col("id") === col("dst"), "left")
-          .select(col("id"), col("lbl"),
-            least(col("lbl"), coalesce(col("__nm"), col("lbl"))).as("__lbl2"))
-          .localCheckpoint()
-        changed = next.filter(col("__lbl2") =!= col("lbl")).count()
-        labels = next.select(col("id"), col("__lbl2").as("lbl"))
-        rounds += 1
+      try {
+        while (changed > 0 && rounds < 64) {
+          val nbrMin = bedges
+            .join(labels.select(col("id").as("src"), col("lbl").as("__sl")),
+              Seq("src"))
+            .groupBy(col("dst")).agg(min(col("__sl")).as("__nm"))
+          val next = Materialize.pin(
+            labels.join(nbrMin, col("id") === col("dst"), "left")
+              .select(col("id"), col("lbl"),
+                least(col("lbl"), coalesce(col("__nm"), col("lbl")))
+                  .as("__lbl2")))
+          Materialize.release(round)
+          round = next
+          changed = next.filter(col("__lbl2") =!= col("lbl")).count()
+          labels = next.select(col("id"), col("__lbl2").as("lbl"))
+          rounds += 1
+        }
+        // fail loudly rather than return non-converged (wrong) cluster
+        // labels on a pathological high-diameter graph; switch such
+        // callers to connectedComponentsStars (O(log n) rounds on any
+        // topology)
+        require(changed == 0,
+          s"connectedComponents did not converge within $rounds rounds — " +
+            "use connectedComponentsStars for high-diameter graphs")
+      } catch {
+        case e: Throwable => Materialize.release(round); throw e
       }
-      // fail loudly rather than return non-converged (wrong) cluster labels
-      // on a pathological high-diameter graph; switch such callers to
-      // connectedComponentsStars (O(log n) rounds on any topology)
-      require(changed == 0,
-        s"connectedComponents did not converge within $rounds rounds — " +
-          "use connectedComponentsStars for high-diameter graphs")
-      // labels is a localCheckpoint from the final round — it no longer
-      // references bedges, so it safely outlives the scope
+      // labels reads the final round's pin only — not bedges or edges —
+      // so it safely outlives both
       labels.select(col("id").as("doc_id"), col("lbl").as("cluster"))
-    }
+    } finally Materialize.release(edges)
   }
 
   /** DBSCAN-discipline role assignment over a verified similarity-pair
@@ -726,10 +685,9 @@ object Dedup {
     // vertex set from the RAW edges, before canon() drops self-loops — a
     // vertex whose only edge is a self-loop must still be labeled (its own
     // singleton component), matching connectedComponents' contract
-    val vertices = raw.select(col("u").as("id"))
-      .unionByName(raw.select(col("v").as("id"))).distinct()
-      .localCheckpoint()
-    var edges = canon(raw).localCheckpoint()
+    val vertices = Materialize.pin(raw.select(col("u").as("id"))
+      .unionByName(raw.select(col("v").as("id"))).distinct())
+    var edges = Materialize.pin(canon(raw))
     def largeStar(e: DataFrame): DataFrame = {
       val bi = e.select(col("u"), col("v"))
         .unionByName(e.select(col("v").as("u"), col("u").as("v")))
@@ -761,19 +719,26 @@ object Dedup {
         sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)"))).head()
       (r.getLong(0), if (r.isNullAt(1)) BigDecimal(0) else BigDecimal(r.getDecimal(1)))
     }
-    var fpEdges = fingerprint(edges)
     var changed = true
     var rounds = 0
-    while (changed && rounds < 64) {
-      val next = smallStar(largeStar(edges)).localCheckpoint()
-      val fpNext = fingerprint(next)
-      changed = fpNext != fpEdges
-      edges = next
-      fpEdges = fpNext
-      rounds += 1
+    try {
+      var fpEdges = fingerprint(edges)
+      while (changed && rounds < 64) {
+        // each round's edge set is released once its successor is pinned
+        val next = Materialize.pin(smallStar(largeStar(edges)))
+        Materialize.release(edges)
+        edges = next
+        val fpNext = fingerprint(next)
+        changed = fpNext != fpEdges
+        fpEdges = fpNext
+        rounds += 1
+      }
+      require(!changed,
+        s"connectedComponentsStars did not converge within $rounds rounds")
+    } catch {
+      case e: Throwable =>
+        Materialize.release(edges); Materialize.release(vertices); throw e
     }
-    require(!changed,
-      s"connectedComponentsStars did not converge within $rounds rounds")
     // final star forest: canon edges are (root, member); roots label
     // themselves
     val labels = edges.select(col("v").as("id"), col("u").as("lbl"))
@@ -858,7 +823,7 @@ object Dedup {
       .select(col(idCol), col(hashCol).as("__s"),
         col("bb.b").as("b"), col("bb.bkey").as("bkey"))
     Materialize.withMaterialized(banded0) { banded =>
-      banded
+      Materialize.pin(banded
         .select(col("b"), col("bkey"), col(idCol).as("id1"), col("__s").as("__s1"))
         .join(banded.select(col("b"), col("bkey"), col(idCol).as("id2"),
             col("__s").as("__s2")),
@@ -867,8 +832,7 @@ object Dedup {
         .select(col("id1"), col("id2"), col("__s1"), col("__s2")).distinct()
         .withColumn("hamming", expr("bit_count(__s1 ^ __s2)").cast("long"))
         .filter(col("hamming") <= maxHamming)
-        .select(col("id1"), col("id2"), col("hamming"))
-        .localCheckpoint()
+        .select(col("id1"), col("id2"), col("hamming")))
     }
   }
 

@@ -29,8 +29,8 @@ object KCore {
     */
   def peel(spark: SparkSession, edges0: DataFrame, k: Int,
            maxRounds: Int): DataFrame = {
-    val edges = edges0.select(col("u").cast("long").as("u"),
-      col("v").cast("long").as("v")).localCheckpoint()
+    val edges = Materialize.pin(edges0.select(col("u").cast("long").as("u"),
+      col("v").cast("long").as("v")))
     val nodes = edges.select(col("u").as("node"))
       .union(edges.select(col("v").as("node"))).distinct()
     def degrees(g: DataFrame): DataFrame =
@@ -43,7 +43,7 @@ object KCore {
     // classified (peel_round AND core_deg both null). Left-joining alive
     // against degrees treats missing degree as 0, so such nodes peel in
     // the following round, as standard k-core semantics demand.
-    var alive = nodes.localCheckpoint()
+    var alive = Materialize.pin(nodes)
     // per-round peel sets, accumulated LAZILY (r17, guide §1.2): each
     // round's weak set is already checkpointed, so re-checkpointing the
     // growing union every round was one extra full-union job per round —
@@ -52,10 +52,10 @@ object KCore {
     var round = 1L
     var weakCount = 1L
     while (weakCount > 0 && round <= maxRounds) {
-      val weak = alive
+      val weak = Materialize.pin(alive
         .join(degrees(g).withColumnRenamed("x", "node"), Seq("node"), "left")
         .filter(coalesce(col("d"), lit(0L)) < k)
-        .select(col("node").as("x")).localCheckpoint()
+        .select(col("node").as("x")))
       weakCount = weak.count()
       if (weakCount > 0) {
         removedRounds ::= weak
@@ -63,14 +63,13 @@ object KCore {
         // the surviving-node update and the surviving-edge update both
         // read only (alive/g, weak) and feed the NEXT round — overlap
         // their checkpoints (guide §2.6); each computation is unchanged
-        val next = graft.operators.Materialize.concurrently(Seq(
-          () => alive
-            .join(weak.select(col("x").as("node")), Seq("node"), "left_anti")
-            .localCheckpoint(),
-          () => g.join(weak.select(col("x").as("u")), Seq("u"), "left_anti")
+        val next = Materialize.concurrently(Seq(
+          () => Materialize.pin(alive
+            .join(weak.select(col("x").as("node")), Seq("node"), "left_anti")),
+          () => Materialize.pin(g
+            .join(weak.select(col("x").as("u")), Seq("u"), "left_anti")
             .join(weak.select(col("x").as("v")), Seq("v"), "left_anti")
-            .select(col("u"), col("v"))
-            .localCheckpoint()))
+            .select(col("u"), col("v")))))
         alive = next(0)
         g = next(1)
         round += 1

@@ -1,22 +1,32 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftInterop}
 import org.apache.spark.sql.catalyst.optimizer.JoinSelectionHelper
 import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Filter, Join,
   LogicalPlan, Project}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.internal.SQLConf
 
-/** Scoped materialization for intermediate relations read by more than one
-  * downstream consumer — the repo's sanctioned persist pattern.
+/** The materialization vocabulary: [[pin]] (the one eager checkpoint),
+  * [[sorted]] (the one sort-and-pin), [[release]] (free a pin's blocks),
+  * [[withMaterialized]] (a scoped cache read by several consumers) and
+  * [[concurrently]] (overlap independent action chains).
   *
-  * Why scoped: a bare `persist()` whose release is a CONTRACT ("the caller
-  * unpersists once consumed") is one forgotten call site away from a leak —
-  * and composed programs like q76 are exactly where a leaked cache ends up
-  * taxing every later stage of a long session (the round-5 bench
-  * contamination). `withMaterialized` owns the whole lifecycle in one
-  * lexical scope: persist → eager `count()` barrier → body → guaranteed
-  * `unpersist` in a finally.
+  * Every materialized relation carries its measured size. A bare
+  * `localCheckpoint()` copies its origin plan's *estimate* into the
+  * checkpoint, and that estimate can be 100x off either way (an explode
+  * under-estimates, a join over-estimates), so join selection next to a
+  * checkpoint followed a guess. [[pin]] sets the checkpoint's
+  * `sizeInBytes` to the bytes its blocks take, and the planner picks
+  * broadcast or shuffle from that.
+  *
+  * Why scoped caches: a bare `persist()` whose release is a CONTRACT
+  * ("the caller unpersists once consumed") is one forgotten call site away
+  * from a leak — and composed programs like q76 are exactly where a leaked
+  * cache ends up taxing every later stage of a long session.
+  * `withMaterialized` owns the whole lifecycle in one lexical scope:
+  * persist → eager `count()` barrier → body → guaranteed `unpersist` in a
+  * finally, also when the fill itself fails.
   *
   * The eager count is load-bearing, not a nicety: two consumers reading a
   * LAZY cache concurrently (e.g. both sides of a bucket self-join) race the
@@ -25,12 +35,11 @@ import org.apache.spark.sql.internal.SQLConf
   * added).
   *
   * Contract for `body`: anything that must OUTLIVE the scope has to be
-  * materialized inside it — `localCheckpoint()` (eager by default) or
-  * [[sorted]] for bounded results, or a sink write. Returning a lazy plan
-  * that still references `df` is not an error, but it silently recomputes
-  * `df` from scratch on first use, which defeats the cache. All
-  * Dedup/Similarity operators therefore end their bodies with a
-  * `localCheckpoint()` of the (candidate-/result-sized) output.
+  * materialized inside it — [[pin]] or [[sorted]] for bounded results, or
+  * a sink write. Returning a lazy plan that still references `df` is not
+  * an error, but it silently recomputes `df` from scratch on first use,
+  * which defeats the cache. All Dedup/Similarity operators therefore end
+  * their bodies with a [[pin]] of the (candidate-/result-sized) output.
   */
 object Materialize {
 
@@ -38,24 +47,39 @@ object Materialize {
     * releases the cache on exit (including on exception). */
   def withMaterialized[A](df: DataFrame)(body: DataFrame => A): A = {
     val cached = df.persist()
-    cached.count() // eager fill — concurrent consumers must not stampede
-    try body(cached) finally cached.unpersist()
+    try {
+      cached.count() // eager fill — concurrent consumers must not stampede
+      body(cached)
+    } finally cached.unpersist()
   }
 
-  /** Releases the blocks of one eager `localCheckpoint()` result by its
-    * handle, once nothing reads it any more. Only the caller's own blocks
-    * go — a sweep over `getPersistentRDDs` would also free relations
-    * other threads still read. */
+  /** The one eager checkpoint: Spark's own `localCheckpoint()` action,
+    * returned as the same `LogicalRDD` (same RDD, partitioning and
+    * ordering) with `sizeInBytes` set to the bytes the block manager
+    * stores for that RDD. The size is read on the driver after the
+    * action, so a pin runs exactly the jobs of a bare checkpoint. No row
+    * count is set: with CBO off no planner rule reads one. */
+  def pin(df: DataFrame): DataFrame = {
+    val ckpt = df.localCheckpoint()
+    val r = ckpt.queryExecution.logical.asInstanceOf[LogicalRDD]
+    GraftInterop.withSizeInBytes(ckpt, r,
+      GraftInterop.storedBytes(ckpt.sparkSession, r.rdd.id))
+  }
+
+  /** Releases the blocks of one [[pin]] by its handle, once nothing
+    * reads it any more. Only the caller's own blocks go — a sweep over
+    * `getPersistentRDDs` would also free relations other threads still
+    * read. */
   def release(ckpt: DataFrame): Unit =
     ckpt.queryExecution.logical match {
       case r: LogicalRDD => r.rdd.unpersist(blocking = false)
       case _ =>
     }
 
-  /** The sorted-output gate: the eager `localCheckpoint()` of
-    * `df.orderBy(keys)`, the one way a query result leaves its program
-    * sorted and pinned, so a caller may drop its temp view or memory sink,
-    * or delete its scratch root, as soon as this returns.
+  /** The sorted-output gate: the [[pin]] of `df.orderBy(keys)`, the one
+    * way a query result leaves its program sorted and pinned, so a caller
+    * may drop its temp view or memory sink, or delete its scratch root,
+    * as soon as this returns.
     *
     * Barrier rule, one predicate for every caller: a range sort runs its
     * child twice (a sampling pass for bounds, then the shuffle). When the
@@ -70,10 +94,10 @@ object Materialize {
   def sorted(df: DataFrame, keys: Column*): DataFrame =
     if (shuffledJoinTail(df.queryExecution.optimizedPlan,
         df.sparkSession.sessionState.conf)) {
-      val pinned = df.localCheckpoint()
-      try pinned.orderBy(keys: _*).localCheckpoint()
+      val pinned = pin(df)
+      try pin(pinned.orderBy(keys: _*))
       finally release(pinned)
-    } else df.orderBy(keys: _*).localCheckpoint()
+    } else pin(df.orderBy(keys: _*))
 
   private object Planner extends JoinSelectionHelper
 
@@ -100,7 +124,7 @@ object Materialize {
     * pool and return their results in input order — the optimization
     * guide's §2.6 "overlap independent jobs" pattern: Spark's scheduler
     * happily runs several jobs at once inside one application; chains of
-    * eager actions (iterative `localCheckpoint` loops, per-config
+    * eager actions (iterative [[pin]] loops, per-config
     * trainings) are only sequential because the driver calls them
     * sequentially. Overlapping them lets one chain's stage tail backfill
     * with the next chain's tasks — a wall-clock win at ANY scale, and a

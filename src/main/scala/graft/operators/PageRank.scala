@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * Per iteration: one join of edges against current ranks (key-partitioned
   * on src), one grouped integer-sum by dst, one left join back onto the
   * node set — all ordinary keyed shuffles that AQE co-partitions; the
-  * result is `localCheckpoint()`ed each round (iterative-lineage rule:
+  * result is pinned ([[Materialize.pin]]) each round (iterative-lineage rule:
   * persist() caches data but hands Catalyst a per-round-doubling plan).
   *
   * Integer contract: with rank scale S and damping 85/100, node ranks are
@@ -45,9 +45,9 @@ object PageRank {
     // checkpoint, so nothing downstream re-reads the edges.
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     Materialize.withMaterialized(edges.join(deg, Seq("src"))) { degE =>
-      val nodes = degE.select(col("src").as("node"))
-        .union(degE.select(col("dst").as("node"))).distinct()
-        .localCheckpoint() // reused every round; bounded (node-cardinality)
+      val nodes = Materialize.pin(degE.select(col("src").as("node"))
+        .union(degE.select(col("dst").as("node"))).distinct())
+        // reused every round; bounded (node-cardinality)
       val base = scale * (DampDen - DampNum) / DampDen
       var rank = nodes.withColumn("rank", lit(scale))
       for (_ <- 1 to iterations) {
@@ -56,10 +56,9 @@ object PageRank {
           .select(col("dst").as("node"),
             expr(s"((rank * $DampNum) div $DampDen) div deg").as("c"))
           .groupBy(col("node")).agg(sum(col("c")).as("inr"))
-        rank = nodes.join(contribs, Seq("node"), "left")
+        rank = Materialize.pin(nodes.join(contribs, Seq("node"), "left")
           .select(col("node"),
-            (lit(base) + coalesce(col("inr"), lit(0L))).as("rank"))
-          .localCheckpoint()
+            (lit(base) + coalesce(col("inr"), lit(0L))).as("rank")))
       }
       rank
     }
@@ -84,9 +83,8 @@ object PageRank {
     require(iterations >= 1 && scale > 0)
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     Materialize.withMaterialized(edges.join(deg, Seq("src"))) { degE =>
-      val nodes = degE.select(col("src").as("node"))
-        .union(degE.select(col("dst").as("node"))).distinct()
-        .localCheckpoint()
+      val nodes = Materialize.pin(degE.select(col("src").as("node"))
+        .union(degE.select(col("dst").as("node"))).distinct())
       val seeded0 = nodes.join(
         seeds.select(col("node"), lit(true).as("is_seed")),
         Seq("node"), "left")
@@ -94,7 +92,7 @@ object PageRank {
       // scalar counts ride the plan as a broadcast 1-row dim — no collect
       val counts = seeded0.agg(count(lit(1)).as("n"),
         sum(when(col("is_seed"), 1L).otherwise(0L)).as("ns"))
-      val seeded = seeded0.crossJoin(broadcast(counts)).localCheckpoint()
+      val seeded = Materialize.pin(seeded0.crossJoin(broadcast(counts)))
       val teleNum = DampDen - DampNum
       var rank = seeded.select(col("node"), col("is_seed"), col("n"), col("ns"),
         when(col("is_seed"), expr(s"(n * $scale) DIV ns"))
@@ -105,12 +103,11 @@ object PageRank {
           .select(col("dst").as("node"),
             expr(s"((rank * $DampNum) div $DampDen) div deg").as("c"))
           .groupBy(col("node")).agg(sum(col("c")).as("inr"))
-        rank = seeded.join(contribs, Seq("node"), "left")
+        rank = Materialize.pin(seeded.join(contribs, Seq("node"), "left")
           .select(col("node"), col("is_seed"), col("n"), col("ns"),
             (when(col("is_seed"),
               expr(s"($teleNum * n * $scale) DIV ($DampDen * ns)"))
-              .otherwise(0L) + coalesce(col("inr"), lit(0L))).as("rank"))
-          .localCheckpoint()
+              .otherwise(0L) + coalesce(col("inr"), lit(0L))).as("rank")))
       }
       rank.select(col("node"), col("is_seed"), col("rank"))
     }

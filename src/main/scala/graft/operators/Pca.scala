@@ -54,10 +54,9 @@ object Pca {
                    iters: Int): DataFrame = {
     import s.implicits._
     // 10^-3-grid integer carrier; float->double cast is exact
-    val xq = emb.select(col("vec_id"),
+    val xq = Materialize.pin(emb.select(col("vec_id"),
       expr("transform(embedding, e -> " +
-        "CAST(floor(CAST(e AS DOUBLE) * 1000 + 0.5) AS BIGINT))").as("xq"))
-      .localCheckpoint()
+        "CAST(floor(CAST(e AS DOUBLE) * 1000 + 0.5) AS BIGINT))").as("xq")))
     val n = xq.count()
     require(n > 0, "empty embedding table")
     // integer mean on the grid: floor(sum / n) via exact doubles (sums
@@ -67,9 +66,9 @@ object Pca {
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val mu = Array.tabulate(dim)(i =>
       math.floor(colSums(i).toDouble / n).toLong)
-    val xc = xq.select(col("vec_id"),
-      zip_with(col("xq"), typedlit(mu.toSeq), (a, b) => a - b).as("xc"))
-      .localCheckpoint() // iterations re-read this; plans stay flat
+    val xc = Materialize.pin(xq.select(col("vec_id"),
+      zip_with(col("xq"), typedlit(mu.toSeq), (a, b) => a - b).as("xc")))
+      // iterations re-read this; plans stay flat
     var vq = Array.fill(dim)(1000L) // v0 = all-ones on the grid
     var wScaled = Array.fill(dim)(0L)
     for (_ <- 1 to iters) {

@@ -69,8 +69,8 @@ object PrefixJoin {
       Materialize.withMaterialized(pref) { p =>
         val pe = p.select(col(idCol), col("n"), explode(col("pref")).as("el"))
         val cand = pe.select(col(idCol).as("id1"), col("n").as("n1"), col("el"))
-          .join(pe.select(col(idCol).as("id2"), col("n").as("n2"), col("el"))
-            .hint("shuffle_hash"), Seq("el"))
+          .join(pe.select(col(idCol).as("id2"), col("n").as("n2"), col("el")),
+            Seq("el"))
           .filter(col("id1") < col("id2"))
           .filter(col("n2") >= ceil(lit(tau) * col("n1")) &&
             col("n1") >= ceil(lit(tau) * col("n2")))

@@ -117,9 +117,8 @@ object Quantize {
       // (and the k tie-break) matches the full d² — mirrors oracle SQL
       val score = graft.functions.dotProduct(col("cw"), col("cw")) -
         lit(2.0) * graft.functions.dotProduct(col("svi"), col("cw"))
-      var cents = subs.filter(col(idCol) < k)
-        .select(col("m"), col(idCol).cast("int").as("k"), col("svi").as("cw"))
-        .localCheckpoint()
+      var cents = Materialize.pin(subs.filter(col(idCol) < k)
+        .select(col("m"), col(idCol).cast("int").as("k"), col("svi").as("cw")))
       for (_ <- 1 to iters) {
         val assigned = subs.join(broadcast(cents), Seq("m"))
           .select(col(idCol), col("m"), col("k"), col("svi"), score.as("__s"))
@@ -133,13 +132,11 @@ object Quantize {
           .groupBy(col("m"), col("k"))
           .agg(expr("transform(array_sort(collect_list(struct(pos, cm))), " +
             "s -> s.cm)").as("cwNew"))
-        cents = cents.join(upd, Seq("m", "k"), "left")
-          .select(col("m"), col("k"), coalesce(col("cwNew"), col("cw")).as("cw"))
-          .localCheckpoint()
+        cents = Materialize.pin(cents.join(upd, Seq("m", "k"), "left")
+          .select(col("m"), col("k"), coalesce(col("cwNew"), col("cw")).as("cw")))
       }
-      cents.select(col("m"), col("k"),
-          transform(col("cw"), x => x / lit(1e6)).as("cw"))
-        .localCheckpoint()
+      Materialize.pin(cents.select(col("m"), col("k"),
+          transform(col("cw"), x => x / lit(1e6)).as("cw")))
     }
   }
 }

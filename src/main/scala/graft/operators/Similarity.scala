@@ -159,9 +159,8 @@ object Similarity {
         expr("transform(vd, x -> CAST(floor(x * 1e6 + 0.5) AS DOUBLE))"))
     Materialize.withMaterialized(vecs0) { vecs =>
       val cents = lloyd(vecs, idCol, nCells, iters)
-      kmAssignUnder(vecs, idCol, cents)
-        .select(col(idCol), col("cell"), col("vd"))
-        .localCheckpoint()
+      Materialize.pin(kmAssignUnder(vecs, idCol, cents)
+        .select(col(idCol), col("cell"), col("vd")))
     }
   }
 
@@ -172,9 +171,8 @@ object Similarity {
     * against one carrier. */
   private[graft] def lloyd(vecs: DataFrame, idCol: String, nCells: Int,
                            iters: Int): DataFrame = {
-    var cents = vecs.filter(col(idCol) < nCells)
-      .select(col(idCol).cast("int").as("cell"), col("v").as("cv"))
-      .localCheckpoint()
+    var cents = Materialize.pin(vecs.filter(col(idCol) < nCells)
+      .select(col(idCol).cast("int").as("cell"), col("v").as("cv")))
     for (_ <- 1 to iters) {
       val upd = kmAssignUnder(vecs, idCol, cents)
         .select(col("cell"), posexplode(col("v")).as(Seq("pos", "x")))
@@ -183,9 +181,8 @@ object Similarity {
         .groupBy(col("cell"))
         .agg(expr("transform(array_sort(collect_list(struct(pos, m))), " +
           "s -> s.m)").as("cvNew"))
-      cents = cents.join(upd, Seq("cell"), "left")
-        .select(col("cell"), coalesce(col("cvNew"), col("cv")).as("cv"))
-        .localCheckpoint()
+      cents = Materialize.pin(cents.join(upd, Seq("cell"), "left")
+        .select(col("cell"), coalesce(col("cvNew"), col("cv")).as("cv")))
     }
     cents
   }
@@ -226,15 +223,15 @@ object Similarity {
       // the ordered union keeps the output deterministic
       val perK = Materialize.concurrently(ks.map { k => () =>
         val cents = lloyd(vecs, idCol, k, iters)
-        kmAssignUnder(vecs, idCol, cents)
+        Materialize.pin(kmAssignUnder(vecs, idCol, cents)
           .withColumn("__d2", col("__score") + dotProduct(col("v"), col("v")))
           .agg(count(lit(1)).as("n_vecs"),
             countDistinct(col("cell")).as("n_cells_used"),
             sum(floor(col("__d2") + lit(0.5)).cast("long")).as("inertia6"))
           .withColumn("k", lit(k.toLong))
           .select(col("k"), col("n_vecs"), col("n_cells_used"),
-            col("inertia6"))
-          .localCheckpoint() // 1-row: pin this k's result inside its thread
+            col("inertia6")))
+          // 1-row: pin this k's result inside its thread
       })
       Materialize.sorted(perK.reduce(_ unionByName _), col("k"))
     }
@@ -258,9 +255,8 @@ object Similarity {
           .withColumn("__score", score(col("v")))
           .withColumn("__rn", row_number().over(wMin))
           .filter(col("__rn") === 1)
-      var cents = vecs.filter(col(idCol) < nCells)
-        .select(col(idCol).cast("int").as("cell"), col("v").as("cv"))
-        .localCheckpoint()
+      var cents = Materialize.pin(vecs.filter(col(idCol) < nCells)
+        .select(col(idCol).cast("int").as("cell"), col("v").as("cv")))
       for (_ <- 1 to iters) {
         val upd = assign(cents)
           .select(col("cell"), posexplode(col("v")).as(Seq("pos", "x")))
@@ -269,9 +265,9 @@ object Similarity {
           .groupBy(col("cell"))
           .agg(expr("transform(array_sort(collect_list(struct(pos, m))), " +
             "s -> s.m)").as("cvNew"))
-        cents = cents.join(upd, Seq("cell"), "left")
-          .select(col("cell"), coalesce(col("cvNew"), col("cv")).as("cv"))
-          .localCheckpoint() // truncate the per-iteration lineage
+        cents = Materialize.pin(cents.join(upd, Seq("cell"), "left")
+          .select(col("cell"), coalesce(col("cvNew"), col("cv")).as("cv")))
+          // truncate the per-iteration lineage
       }
       val qRow = vecs.filter(col(idCol) === queryId)
         .select(col("v").as("qv"), col("vd").as("qvd"))
@@ -279,13 +275,12 @@ object Similarity {
         .withColumn("__score", score(col("qv")))
         .orderBy(col("__score"), col("cell")).limit(nProbe)
         .select(col("cell"))
-      assign(cents)
+      Materialize.pin(assign(cents)
         .join(broadcast(probes), Seq("cell"))
         .crossJoin(broadcast(qRow))
         .select(col(idCol), cosineSim(col("vd"), col("qvd")).as("cosine_sim"))
         .orderBy(col("cosine_sim").desc, col(idCol))
-        .limit(k)
-        .localCheckpoint()
+        .limit(k))
     }
   }
 
@@ -377,12 +372,11 @@ object Similarity {
         .drop("__nc")
       val sim = when(col("__n1") > 0 && col("__n2") > 0,
         dotProduct(col("v1"), col("v2")) / (col("__n1") * col("__n2")))
-      a.join(b, Seq(blockCol, "__i", "__j"))
+      Materialize.pin(a.join(b, Seq(blockCol, "__i", "__j"))
         .filter(col("id1") < col("id2"))
         .withColumn("cosine_sim", sim)
         .filter(col("cosine_sim") > minSim)
-        .select(col(blockCol), col("id1"), col("id2"), col("cosine_sim"))
-        .localCheckpoint()
+        .select(col(blockCol), col("id1"), col("id2"), col("cosine_sim")))
     }
   }
 
@@ -450,10 +444,9 @@ object Similarity {
             dotProduct(col("v"), col("qv")) / (col("n") * col("qn")))
             .as("sim"))
         .filter(col("sim").isNotNull)
-    var visited = score(
+    var visited = Materialize.pin(score(
         queries.select(col("qid")).crossJoin(broadcast(entries))
-          .filter(col("vec_id") =!= col("qid")))
-      .localCheckpoint()
+          .filter(col("vec_id") =!= col("qid"))))
     val wBeam = Window.partitionBy(col("qid"))
       .orderBy(col("sim").desc, col("vec_id"))
     for (_ <- 1 to rounds) {
@@ -467,7 +460,7 @@ object Similarity {
         .distinct()
       val fresh = expanded.join(visited.select(col("qid"), col("vec_id")),
         Seq("qid", "vec_id"), "left_anti")
-      visited = visited.unionByName(score(fresh)).localCheckpoint()
+      visited = Materialize.pin(visited.unionByName(score(fresh)))
     }
     visited
   }

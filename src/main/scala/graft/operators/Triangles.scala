@@ -83,8 +83,8 @@ object Triangles {
               size(col("ws")).cast("long").as("c")))
             .unionByName(withArrs.select(explode(col("ws")).as("node"),
               lit(1L).as("c")))
-        corners.groupBy(col("node")).agg(sum(col("c")).as("n_tri"))
-          .localCheckpoint()
+        Materialize.pin(
+          corners.groupBy(col("node")).agg(sum(col("c")).as("n_tri")))
       }
     }
   }

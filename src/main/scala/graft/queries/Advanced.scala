@@ -1188,7 +1188,7 @@ object Advanced {
     * BIGINT SQL with the [[graft.operators.Multimodal.phCos]] table
     * embedded (the q197 shared-constant discipline). */
   def q199PhashPairs(s: SparkSession, dir: String): DataFrame =
-    phashPairsFrom(Multimodal.phashes(s, dir).localCheckpoint())
+    phashPairsFrom(Materialize.pin(Multimodal.phashes(s, dir)))
 
   /** The q199 pair algebra over a ready fingerprint relation
     * (doc_id, phash) — shared by the standalone gate and the q212
@@ -1287,7 +1287,7 @@ object Advanced {
     * volume grows ~|docs|²/4k; a production deployment uses a 1024+-bin
     * FFT (hash space ≥ 2²⁰) — same plan, finer keys. */
   def q201AudioMatch(s: SparkSession, dir: String): DataFrame =
-    audioMatchFrom(Multimodal.audioLandmarks(s, dir).localCheckpoint())
+    audioMatchFrom(Materialize.pin(Multimodal.audioLandmarks(s, dir)))
 
   /** The q201 match algebra over a ready landmark relation
     * (doc_id, h, frame_idx) — shared by the gate and q212. */
@@ -1413,7 +1413,7 @@ object Advanced {
     * the residual are genuine cross-content hash coincidences the
     * deterministic tie-break resolves identically in both engines. */
   def q202VideoMatch(s: SparkSession, dir: String): DataFrame =
-    videoMatchFrom(Multimodal.videoFrameHashes(s, dir).localCheckpoint())
+    videoMatchFrom(Materialize.pin(Multimodal.videoFrameHashes(s, dir)))
 
   /** The q202 match algebra over a ready frame-hash relation
     * (doc_id, phash, frame_idx) — shared by the gate and q212. */
@@ -1706,7 +1706,7 @@ object Advanced {
         "transform(sequence(1, size(ta) - 1), " +
           "i -> struct(ta[i - 1] AS w1, ta[i] AS w2))")).as("p"))
       .select(col("p.w1").as("w1"), col("p.w2").as("w2"))
-    graft.operators.Materialize.withMaterialized(
+    Materialize.withMaterialized(
       bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))) { c =>
       val left = c.groupBy(col("w1"))
         .agg(sum(col("c12")).as("c1"), count(lit(1)).as("n1p"))
@@ -1779,7 +1779,7 @@ object Advanced {
     val li = Tables.lineitem(s, dir)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
       .distinct()
-    graft.operators.Materialize.withMaterialized(li) { l =>
+    Materialize.withMaterialized(li) { l =>
       val pairs = l.select(col("ok"), col("p").as("pa"))
         .join(l.select(col("ok"), col("p").as("pb")), Seq("ok"))
         .filter(col("pa") < col("pb"))
@@ -2133,7 +2133,7 @@ object Advanced {
         .when(col("hs") === 8, lit("val")).otherwise(lit("test")))
       .withColumn("naive_split", when(col("hn") < 8, lit("train"))
         .when(col("hn") === 8, lit("val")).otherwise(lit("test")))
-    graft.operators.Materialize.withMaterialized(d) { dd =>
+    Materialize.withMaterialized(d) { dd =>
       val leaked = dd.groupBy(col("fp"))
         .agg(count_distinct(col("naive_split")).as("k"))
         .agg(sum(when(col("k") > 1, 1L).otherwise(0L)).as("leaked_naive"))
@@ -2317,7 +2317,7 @@ object Advanced {
       .withColumn("score", abs(col("nt") - col("pred")))
       .withColumn("is_cal",
         pmod(Text.hash60(col("doc_id").cast("string")), lit(2L)) === 0)
-    graft.operators.Materialize.withMaterialized(d) { dd =>
+    Materialize.withMaterialized(d) { dd =>
       val cal = dd.filter(col("is_cal"))
       val nCal = cal.groupBy(col("source")).agg(count(lit(1)).as("n_cal"))
       val w = Window.partitionBy(col("source"))
@@ -2460,7 +2460,7 @@ object Advanced {
             .cast("long"), lit(49L)) * 15L, 1L).otherwise(0L).as("y"))
     val buckets = d.groupBy(col("b"))
       .agg(count(lit(1)).as("n"), sum(col("y")).as("sy"))
-    graft.operators.Materialize.withMaterialized(buckets) { bk =>
+    Materialize.withMaterialized(buckets) { bk =>
       val w = Window.orderBy(col("b"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val pref = bk.select(col("b"), col("n"), col("sy"),
@@ -2817,12 +2817,12 @@ object Advanced {
     * rounds of scan+reduce, no pairwise materialization. */
   def q205Kcenter(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val pts = Tables.embeddings(s, dir)
+    val pts = Materialize.pin(Tables.embeddings(s, dir)
       .select(col("vec_id"),
         expr(s"transform(CAST(embedding AS ARRAY<DOUBLE>), " +
           s"x -> CAST(floor(x * $KcentScale) AS DOUBLE))").as("qv"))
-      .withColumn("sq", graft.functions.dotProduct(col("qv"), col("qv")))
-      .localCheckpoint() // reused KcentK+1 times below
+      .withColumn("sq", graft.functions.dotProduct(col("qv"), col("qv"))))
+      // reused KcentK+1 times below
     def d2To(cqv: Seq[Double], csq: Double) =
       (col("sq") + lit(csq)
         - lit(2.0) * graft.functions.dotProduct(col("qv"), typedlit(cqv)))
@@ -2832,8 +2832,8 @@ object Advanced {
     var centers = Vector[(Int, Long, Seq[Double], Double, Long)](
       (0, c0.getLong(0),
         c0.getAs[scala.collection.Seq[Double]](1).toSeq, c0.getDouble(2), 0L))
-    var cur = pts.withColumn("mind", d2To(centers(0)._3, centers(0)._4))
-      .localCheckpoint()
+    var cur = Materialize.pin(
+      pts.withColumn("mind", d2To(centers(0)._3, centers(0)._4)))
     var r = 1
     while (r < KcentK) {
       val far = cur.orderBy(col("mind").desc, col("vec_id")).limit(1)
@@ -2842,9 +2842,8 @@ object Advanced {
       centers = centers :+ ((r, far.getLong(0),
         far.getAs[scala.collection.Seq[Double]](1).toSeq, far.getDouble(2),
         far.getLong(3)))
-      cur = cur.withColumn("mind",
-          least(col("mind"), d2To(centers(r)._3, centers(r)._4)))
-        .localCheckpoint()
+      cur = Materialize.pin(cur.withColumn("mind",
+          least(col("mind"), d2To(centers(r)._3, centers(r)._4))))
       r += 1
     }
     import s.implicits._

@@ -157,7 +157,7 @@ object AnalyticsQueries {
     // one re-executes the orders row_number window + join from scratch
     // (recompute amplification ≈ 10× the base pipeline). The cross-section-
     // sized result leaves the scope as an eager localCheckpoint.
-    graft.operators.Materialize.withMaterialized(base0) { base =>
+    Materialize.withMaterialized(base0) { base =>
 
     val dims = Seq("f_p1" -> col("p1"), "f_bal" -> col("c_acctbal"))
     val bounds = graft.operators.Winsorize.interpBoundsMulti(base, dims)
@@ -1635,7 +1635,7 @@ object AnalyticsQueries {
     * rows — nothing else touches the fact table. */
   def q114WelchTTest(s: SparkSession, dir: String): DataFrame = {
     val d38 = "decimal(38,0)"
-    val moments = Tables.events(s, dir)
+    val moments = Materialize.pin(Tables.events(s, dir)
       .select(col("event_type"),
         floor(col("value") * 100 + lit(0.5)).cast("long").as("ys"))
       .groupBy(col("event_type")).agg(
@@ -1648,10 +1648,9 @@ object AnalyticsQueries {
         ((col("syy").cast("double")
           - col("sy").cast("double") * col("sy").cast("double")
             / col("n").cast("double"))
-          / (col("n").cast("double") - lit(1.0)) / lit(10000.0)).as("v"))
+          / (col("n").cast("double") - lit(1.0)) / lit(10000.0)).as("v")))
       // bounded (one row per arm) — checkpoint so the control lookup does
       // not re-scan the fact table for a second moments pass
-      .localCheckpoint()
     val control = moments.filter(col("event_type") === ControlGroup)
       .select(col("n").as("n0"), col("mean").as("mean0"), col("v").as("v0"))
     val se2 = col("v") / col("n").cast("double")

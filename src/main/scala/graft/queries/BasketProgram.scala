@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.analytics.Baskets
 import graft.functions.jsRound
+import graft.operators.Materialize
 
 /** q55 — the assembled basket-valuation daily program, end-to-end
   * (refresh-basket-metrics.ts:116-258 run as ONE dataflow): current
@@ -57,7 +58,7 @@ object BasketProgram {
     // (exact decimal) monthly sums — associative, so values are identical
     // to a direct per-year aggregation, but the raw-row shuffle happens
     // once and the second stage shuffles ~12× fewer rows
-    val monthly = li.groupBy(col("l_suppkey").as("code"),
+    val monthly = Materialize.pin(li.groupBy(col("l_suppkey").as("code"),
         last_day(to_date(col("l_shipdate"))).as("day"))
       .agg(
         max(col("l_extendedprice").cast(D2)).as("__maxp"),
@@ -65,13 +66,12 @@ object BasketProgram {
         sum(col("l_quantity").cast(D2)).as("__sumq"),
         sum(col("l_discount").cast(D2)).as("__sumd"),
         sum(col("l_tax").cast(D2)).as("__sumt"),
-        count(lit(1)).as("__n"))
+        count(lit(1)).as("__n")))
       // both grains consume this (bars, fy, fwd — so the monthly plan
       // would be embedded 4+ times downstream); localCheckpoint
       // materializes once AND truncates the subtree out of every
       // downstream analysis/broadcast-planning pass (the q58/q61 lineage
       // lesson applied to a deep program plan)
-      .localCheckpoint()
 
     // monthly last-day bars; close floored to a 2-dp grid so downstream
     // double products stay far from decimal rounding boundaries
@@ -127,7 +127,7 @@ object BasketProgram {
     val cd2 = Baskets.cumSplitFactor(cd1, splits, "forward_disclosed", "day", "cum_fwd")
 
     val sharesAdj = col("shares") / col("cum_fy")
-    val items = cd2.select(
+    val items = Materialize.pin(cd2.select(
       col("basket"), col("day"), col("code"), col("factor"),
       col("official_weight"),
       (col("close") * sharesAdj).as("mcap"),
@@ -137,11 +137,10 @@ object BasketProgram {
       (col("bps") * col("shares")).as("book"),
       col("sales"),
       (col("dividend_annual") * col("shares")).as("dividend_total"),
-      col("close"))
+      col("close")))
       // the harmonic aggregation and the chain both consume items; one
       // shared materialization instead of re-running PIT + joins per leg,
       // truncated for the same reason as `monthly`
-      .localCheckpoint()
 
     val agg = Baskets.aggregateBasketDays(items)
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.operators.Materialize
 import graft.sources.Bucketed
 
 /** q53: the bucketed co-located join program — customer×orders clustered
@@ -43,7 +44,7 @@ object Colocate {
       // so the (customer-sized) result outlives its backing tables. On a
       // real cluster a terminal result like this would be published to a
       // result table instead (checkpoint blocks die with executors).
-      joined(s, cTab, oTab).localCheckpoint(true)
+      Materialize.pin(joined(s, cTab, oTab))
     } finally {
       s.sql(s"DROP TABLE IF EXISTS $cTab")
       s.sql(s"DROP TABLE IF EXISTS $oTab")

@@ -158,12 +158,11 @@ object Curation {
       val topBg = base.select(col("doc_id"), explode(col("bg")).as("v"))
         .groupBy(col("doc_id"), col("v")).agg(count(lit(1)).as("__c"))
         .groupBy(col("doc_id")).agg(max(col("__c")).as("top_bigram_n"))
-      mapSide.join(topBg, Seq("doc_id"))
+      Materialize.pin(mapSide.join(topBg, Seq("doc_id"))
         .withColumn("top_bigram_frac",
           col("top_bigram_n").cast("double") / col("n_bigrams"))
         .withColumn("dup_trigram_frac",
-          lit(1.0) - col("n_distinct_trigrams").cast("double") / col("n_trigrams"))
-        .localCheckpoint()
+          lit(1.0) - col("n_distinct_trigrams").cast("double") / col("n_trigrams")))
     }
   }
 
@@ -592,10 +591,9 @@ object Curation {
       // sequence of eager checkpoints — overlap them from a driver thread
       // pool (guide §2.6); both computations are unchanged
       val branches = Materialize.concurrently(Seq(
-        () => cleanGated(cleanFeatures(withToks),
+        () => Materialize.pin(cleanGated(cleanFeatures(withToks),
             repetitionSignalsFromTokens(withToks.select(col("doc_id"), col("t"))))
-          .filter(col("keep")).select(col("doc_id"))
-          .localCheckpoint(),
+          .filter(col("keep")).select(col("doc_id"))),
         // near-dup drop set (q14/q15/q61's exact pipeline) from the
         // carrier's precomputed hash arrays
         () => {
@@ -605,14 +603,14 @@ object Curation {
             TextQueries.NumHashes)
           val cand = Dedup.minhashCandidates(sig, "doc_id",
             TextQueries.RowsPerBand)
-          val pairs = Dedup.jaccardForCandidatesHashes(cand, h, "doc_id")
+          val pairs = Materialize.pin(
+            Dedup.jaccardForCandidatesHashes(cand, h, "doc_id")
             .filter(col("jaccard") >= TextQueries.JaccardThreshold)
-            .select(col("id1"), col("id2"))
-            .localCheckpoint()
-          Dedup.connectedComponentsAdaptive(pairs)
+            .select(col("id1"), col("id2")))
+          Materialize.pin(Dedup.connectedComponentsAdaptive(pairs)
             .filter(col("doc_id") =!= col("cluster"))
-            .select(col("doc_id"), lit(true).as("__dup"))
-            .localCheckpoint() // cluster-count-sized; pin inside the thread
+            .select(col("doc_id"), lit(true).as("__dup")))
+            // cluster-count-sized; pin inside the thread
         }))
       val (clean, dupDrop) = (branches(0), branches(1))
       // contamination (q68's exact semantics) from the carrier at k=16
@@ -769,8 +767,8 @@ object Curation {
         (Text.hash60(col("bg")) % DsirBuckets).as("bucket"))
     // two consumers (bucket counts + per-doc scoring) — scoped-materialize
     // so normalize + md5 run once over the corpus, not twice (rule 5)
-    graft.operators.Materialize.withMaterialized(bg0)(bg =>
-      q81FromBigrams(s, bg).localCheckpoint())
+    Materialize.withMaterialized(bg0)(bg =>
+      Materialize.pin(q81FromBigrams(s, bg)))
   }
 
   private def q81FromBigrams(s: SparkSession,

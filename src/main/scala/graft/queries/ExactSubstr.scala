@@ -119,7 +119,7 @@ object ExactSubstr {
     * the reassembled (kept-chars-in-order) text — null when every char
     * of the doc lost its keep race. */
   def q211ExactSubstrDedup(s: SparkSession, dir: String): DataFrame = {
-    val docs = normDocs(s, dir).localCheckpoint()
+    val docs = Materialize.pin(normDocs(s, dir))
     applySpans(docs, dupGramPositions(s, docs))
   }
 
@@ -230,7 +230,7 @@ object ExactSubstr {
     * all delta-sized. The gram STRING travels only for delta positions;
     * the base contributes only its (gram, kmin) state rows. */
   def q213IncrementalExactSubstr(s: SparkSession, dir: String): DataFrame = {
-    val docs = normDocs(s, dir).localCheckpoint()
+    val docs = Materialize.pin(normDocs(s, dir))
     val cut = splitId(docs)
     val grams = gramPositions(docs)
     // the standing state: one row per distinct base gram
@@ -520,8 +520,8 @@ object ExactSubstr {
     * ([[writeVocabArtifact]]), not retrained per query. */
   def q215TokenExactSubstrFrom(s: SparkSession, dir: String,
                                vocabPath: String): DataFrame = {
-    val docs = normDocs(s, dir).localCheckpoint()
-    val tok = tokenTable(docs, s.read.parquet(vocabPath)).localCheckpoint()
+    val docs = Materialize.pin(normDocs(s, dir))
+    val tok = Materialize.pin(tokenTable(docs, s.read.parquet(vocabPath)))
     tokenOutput(docs, tok, tokenSpans(tokenDupPositions(tok)))
   }
 
@@ -630,7 +630,7 @@ object ExactSubstr {
     * aggregates. Output one row per doc in `docs`. */
   private def tokenOutput(docs: DataFrame, tok: DataFrame,
                           spansTok0: DataFrame): DataFrame = {
-    val spansTok = spansTok0.localCheckpoint()
+    val spansTok = Materialize.pin(spansTok0)
     val spansChar = spansTok
       .join(tok.select(col("doc_id"), col("ti").as("ts"),
         col("tstart").as("s")), Seq("doc_id", "ts"))
@@ -670,10 +670,9 @@ object ExactSubstr {
   /** q217 reading a PERSISTED vocabulary at an explicit path. */
   def q217IncrTokenExactSubstrFrom(s: SparkSession, dir: String,
                                    vocabPath: String): DataFrame = {
-    val docs = normDocs(s, dir).localCheckpoint()
+    val docs = Materialize.pin(normDocs(s, dir))
     val cut = splitId(docs)
-    val tok = tokenTable(docs, s.read.parquet(vocabPath))
-      .localCheckpoint()
+    val tok = Materialize.pin(tokenTable(docs, s.read.parquet(vocabPath)))
     val grams = tokenGrams(tok)
     val state = grams.filter(col("doc_id") < cut)
       .groupBy(col("gram")).agg(min(col("__k")).as("base_kmin"))

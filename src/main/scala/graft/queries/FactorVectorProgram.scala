@@ -139,13 +139,12 @@ object FactorVectorProgram {
     // similarity search: top-10 vs the lowest-coded vector (similar_stocks)
     val qv = vecs.orderBy(col("code")).limit(1)
       .select(col("code").as("__qcode"), col("vec").as("__qvec"))
-    vecs.crossJoin(broadcast(qv))
+    Materialize.pin(vecs.crossJoin(broadcast(qv))
       .filter(col("code") =!= col("__qcode"))
       .select(col("code"), col("coverage"),
         cosineSim(col("vec"), col("__qvec")).as("cosine_sim"))
       .orderBy(col("cosine_sim").desc_nulls_last, col("code"))
-      .limit(10)
-      .localCheckpoint()
+      .limit(10))
 
     } // withMaterialized(derived)
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.Dedup
+import graft.operators.{Dedup, Materialize}
 
 /** The multimodal near-dup ENDGAME: one dedup program over every
   * modality's pair relation. The per-modality matchers exist as their
@@ -48,8 +48,7 @@ object MultimodalDedup {
     // scan+synthesize+decode stage (operators.Multimodal.allFingerprints),
     // materialized once — the standalone gates q199/q201/q202 each pay
     // their own decode; the composition must not pay it three times over.
-    val fp = graft.operators.Multimodal.allFingerprints(s, dir)
-      .localCheckpoint()
+    val fp = Materialize.pin(graft.operators.Multimodal.allFingerprints(s, dir))
     val img = Advanced.phashPairsFrom(
         fp.filter(col("mod") === "img")
           .select(col("doc_id"), col("h").as("phash")))
@@ -72,10 +71,9 @@ object MultimodalDedup {
     // eager checkpoint: the three matchers each end in their own
     // checkpointed relations, but the union feeds BOTH the CC loop and
     // the incidence rollup — materialize once, read twice
-    val edges = img.unionByName(aud).unionByName(vid)
+    val edges = Materialize.pin(img.unionByName(aud).unionByName(vid)
       .filter(col("id1") =!= col("id2"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val cc = Dedup.connectedComponents(
       edges.select(col("id1"), col("id2")).distinct())
     val inc = edges.select(col("id1").as("doc_id"), col("mod"))

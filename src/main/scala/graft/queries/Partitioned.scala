@@ -141,11 +141,10 @@ object Partitioned {
       // month (even order keys — the partially-written day), newest
       // month absent. Checkpointed: it stands in for a materialized
       // target table, not a live lineage.
-      val state = monthlyAgg(
+      val state = Materialize.pin(monthlyAgg(
           base.filter(col("ship_month") < lit(wmMonth)).unionByName(
             base.filter(col("ship_month") === lit(wmMonth) &&
-              col("l_orderkey") % 2 === 0)))
-        .localCheckpoint(true)
+              col("l_orderkey") % 2 === 0))))
       // the reference's watermark read: max(date) of the target
       val wm = state.agg(max(col("ship_month"))).collect()(0).getString(0)
       val healed = state.filter(col("ship_month") < lit(wm))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.Scd2
+import graft.operators.{Materialize, Scd2}
 
 /** q58 — deterministic SCD2 merge replay (equity-master.ts:501-607 daily
   * sync, run three times): three full snapshots with membership and
@@ -47,8 +47,8 @@ object Scd2Replay {
     // levels five-fold, and Catalyst re-analysis dominates (same lineage
     // blowup as Dedup.connectedComponents). The eager materialization also
     // prevents the five union branches from stampeding a cold cache.
-    val h1 = Scd2.merge(empty, s1, keys, attrs, Days(0)).localCheckpoint()
-    val h2 = Scd2.merge(h1, snap(2), keys, attrs, Days(1)).localCheckpoint()
+    val h1 = Materialize.pin(Scd2.merge(empty, s1, keys, attrs, Days(0)))
+    val h2 = Materialize.pin(Scd2.merge(h1, snap(2), keys, attrs, Days(1)))
     Scd2.merge(h2, snap(3), keys, attrs, Days(2))
       .orderBy(col("code"), col("valid_from"))
   }

@@ -74,15 +74,14 @@ object SuffixArray {
     // ≥ 1 round so the output rank is always a dense rank (r0 is raw
     // code points); ceilLog2(maxLen) rounds guarantee totality
     val rounds = math.max(1, ceilLog2(maxLen.toLong))
-    var r = docs
+    var r = Materialize.pin(docs
       .select(col("doc_id"),
         explode(sequence(lit(0L), length(col("text")).cast("long") - 1L))
           .as("pos"),
         col("text"))
       .select(col("doc_id"), col("pos"),
         ascii(expr("substring(text, CAST(pos + 1 AS INT), 1)")).cast("long")
-          .as("r0"))
-      .localCheckpoint()
+          .as("r0")))
     val wLead = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     var k = 0
     var total = false
@@ -97,7 +96,7 @@ object SuffixArray {
         .drop("__r2")
       if (!keepLevels) r = r.drop(s"r$k")
       if (k % 3 == 2 || k == rounds - 1) {
-        r = r.localCheckpoint()
+        r = Materialize.pin(r)
         // EARLY EXIT, exact by construction: once every doc's ranks are
         // total (max dense rank == suffix count), every further doubling
         // round is the identity map in BOTH engines — the oracle's fixed
@@ -193,15 +192,15 @@ object SuffixArray {
   private def pairRank(s: SparkSession,
                        df: DataFrame): (DataFrame, Long, DataFrame) = {
     import s.implicits._
-    val barrier = df.localCheckpoint()
-    val sorted = barrier
-      .repartitionByRange(s.sparkContext.defaultParallelism,
-        col("a"), col("b"))
-      .sortWithinPartitions(col("a"), col("b"))
-      .select(spark_partition_id().as("pid"), col("doc_id"), col("pos"),
-        col("a"), col("b"))
-      .localCheckpoint()
-    Materialize.release(barrier)
+    val barrier = Materialize.pin(df)
+    val sorted =
+      try Materialize.pin(barrier
+        .repartitionByRange(s.sparkContext.defaultParallelism,
+          col("a"), col("b"))
+        .sortWithinPartitions(col("a"), col("b"))
+        .select(spark_partition_id().as("pid"), col("doc_id"), col("pos"),
+          col("a"), col("b")))
+      finally Materialize.release(barrier)
     val rows = sorted.as[SfxP]
     val counts = rows.mapPartitions { it =>
       var pid = -1
@@ -326,7 +325,7 @@ object SuffixArray {
       ranked = nRanked; distinct = nDistinct; sorted = nSorted
       level += 1
     }
-    val out = ranked.localCheckpoint()
+    val out = Materialize.pin(ranked)
     Materialize.release(sorted)
     out
   }

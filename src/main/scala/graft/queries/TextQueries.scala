@@ -416,7 +416,7 @@ object TextQueries {
     Materialize.withMaterialized(harrs) { h =>
       val ex = h.select(col("doc_id"), explode(col("harr")).as("el"))
       val firstDoc = ex.groupBy(col("el")).agg(min(col("doc_id")).as("fd"))
-      Materialize.sorted(ex.join(firstDoc.hint("shuffle_hash"), Seq("el"))
+      Materialize.sorted(ex.join(firstDoc, Seq("el"))
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_kgrams"),
           count(when(col("fd") === col("doc_id"), lit(1))).as("n_novel"))
@@ -451,10 +451,12 @@ object TextQueries {
     *
     * Scale shape: candidates come from the banded self-join (never
     * all-pairs); the match count is a candidate-bounded join against the
-    * slim wide-signature relation (shuffle_hash — candidate side is a
-    * stats-less checkpoint, PLANS rule 8), the exact side a
-    * candidate-bounded join against the hashed-shingle carrier; the
-    * decile rollup is a ≤10-group aggregation. */
+    * slim wide-signature relation, the exact side a candidate-bounded
+    * join against the hashed-shingle carrier; the decile rollup is a
+    * ≤10-group aggregation. The four lookup sides keep a shuffle_hash
+    * hint by measurement: with them deleted q152 ran 32.7 s at the sf1
+    * equivalent against 32.2 s hinted, outside the hinted runs' 0.1 s
+    * spread (PLANS.md "One pin entry"). */
   def q152LshCalibration(s: SparkSession, dir: String): DataFrame = {
     val n = NumHashes
     Materialize.withMaterialized(Dedup.shingleHashArrays(
@@ -472,7 +474,7 @@ object TextQueries {
         .hint("shuffle_hash")
       val a2 = harrs.select(col("doc_id").as("id2"), col("harr").as("__h2"))
         .hint("shuffle_hash")
-      val paired = cand
+      val paired = Materialize.pin(cand
         .join(s1, Seq("id1")).join(s2, Seq("id2"))
         .withColumn("m", m)
         .select(col("id1"), col("id2"), col("m"))
@@ -481,9 +483,9 @@ object TextQueries {
           graft.functions.SortedIntersectExpr.count(col("__h1"), col("__h2")))
         .withColumn("u", size(col("__h1")).cast("long")
           + size(col("__h2")).cast("long") - col("i"))
-        .select(col("id1"), col("id2"), col("m"), col("i"), col("u"))
-        .localCheckpoint() // candidate-bounded; stops filter/agg pushdown
-                           // from re-evaluating the intersects (rule 8)
+        .select(col("id1"), col("id2"), col("m"), col("i"), col("u")))
+      // candidate-bounded; stops filter/agg pushdown from re-evaluating
+      // the intersects (rule 8)
       paired
         .withColumn("bucket", least(expr(s"m * 10 DIV $n"), lit(9L)))
         .withColumn("est6", expr(s"(2000000 * m + $n) DIV (2 * $n)"))
@@ -713,7 +715,7 @@ FROM reach GROUP BY a ORDER BY doc_id"""
           / (col("nc") * col("ft")).cast("double")) * lit(1e6) + lit(0.5))
         .cast("long")
       val scored = tf
-        .join(ft.hint("shuffle_hash"), Seq("term"))
+        .join(ft, Seq("term"))
         .crossJoin(broadcast(tot))
         .crossJoin(broadcast(nc))
         .withColumn("idf6", idf6)
@@ -1400,7 +1402,7 @@ GROUP BY d.source ORDER BY d.source"""
     // the standing banded relation is read by EVERY micro-batch —
     // materialize it once for the streaming run's whole lifetime (the
     // in-process analog of the bucketed standing table at real scale)
-    val out = graft.operators.Materialize.withMaterialized(
+    val out = Materialize.withMaterialized(
         StreamNearDedup.standingBanded(standing, ShingleK, NumHashes,
           RowsPerBand)) { sBand =>
       // a real deployment sizes the state width to its own batch volume
@@ -1740,6 +1742,9 @@ GROUP BY d.source ORDER BY d.source"""
       col("vd").as("v2"), col("__n").as("__n2"))
     val w = Window.partitionBy(col("id1"))
       .orderBy(col("cosine_sim").desc, col("id2"))
+    // both sides are the whole vector set: shuffle_hash stays by
+    // measurement (q89 at the sf1 equivalent, two runs: 14.1 and 10.8 s
+    // hinted, 16.3 and 12.4 s without; PLANS.md "One pin entry")
     a.hint("shuffle_hash").join(b.hint("shuffle_hash"), Seq("cell"))
       .filter(col("id1") =!= col("id2"))
       .withColumn("cosine_sim",
@@ -1968,10 +1973,9 @@ GROUP BY d.source ORDER BY d.source"""
     * for round counts N and N+1. */
   private[graft] def lpaRun(sym0: DataFrame, nodes: DataFrame,
                             rounds: Int): DataFrame = {
-    val sym = sym0.localCheckpoint()
-    var labels = nodes
-      .select(col("node"), col("node").as("lbl"))
-      .localCheckpoint()
+    val sym = Materialize.pin(sym0)
+    var labels = Materialize.pin(nodes
+      .select(col("node"), col("node").as("lbl")))
     var r = 0
     while (r < rounds) {
       val neigh = sym.join(labels, sym("id2") === labels("node"))
@@ -1983,9 +1987,8 @@ GROUP BY d.source ORDER BY d.source"""
       val pick = counts.withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("id1").as("node"), col("lbl").as("newl"))
-      labels = labels.join(pick, Seq("node"), "left")
-        .select(col("node"), coalesce(col("newl"), col("lbl")).as("lbl"))
-        .localCheckpoint()
+      labels = Materialize.pin(labels.join(pick, Seq("node"), "left")
+        .select(col("node"), coalesce(col("newl"), col("lbl")).as("lbl")))
       r += 1
     }
     labels
@@ -2869,10 +2872,13 @@ GROUP BY d.source ORDER BY d.source"""
     *
     * Scale shape: the quadratic surface stays banded (candidates only);
     * the DP cost per pair is constant ([[LevPrefix]]²); prefix lookups
-    * join by doc_id with shuffle_hash hinted on the corpus side — the
-    * candidate relation descends from a materialized carrier and carries
-    * no stats (PLANS.md rule 8), so the planner must not be allowed to
-    * guess broadcast for the corpus. */
+    * join by doc_id with shuffle_hash hinted on the prefix side. The
+    * hint stays by measurement, not for missing stats (the candidate side
+    * is a pin and carries its measured size): at sf0.1, 9.3 s hinted vs
+    * 23.0 s without (PLANS.md "One pin entry"). The likely cause: without
+    * it the planner broadcasts a side, so [[Materialize.sorted]] reads a
+    * broadcast tail, does not pin it, and the range sort runs the
+    * Levenshtein DP in both of its passes. */
   def q112LevPairs(s: SparkSession, dir: String): DataFrame = {
     // one carrier holds BOTH the hashed-shingle array and the comparison
     // prefix, so the corpus is normalized and scanned once; signatures and

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.operators.Materialize
 
 /** Unigram-LM tokenizer segmentation (the SentencePiece unigram model,
   * Kudo ACL'18 §3, evaluated as hard-Viterbi): a frequency-trained piece
@@ -73,7 +74,7 @@ object Unigram {
       .agg(max(length(col("text")))).collect()(0).getInt(0)
     require(maxLen <= 1024,
       s"document of $maxLen chars exceeds the oracle's 1024-position bound")
-    val counts = pieceCounts(s, dir).localCheckpoint()
+    val counts = Materialize.pin(pieceCounts(s, dir))
     val total = counts.agg(sum(col("cnt"))).collect()(0).getLong(0)
     val w = Window.orderBy(col("cnt").desc, col("piece"))
     val vocabRows = counts

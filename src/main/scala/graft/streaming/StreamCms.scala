@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
-import graft.operators.{CountMin, Incremental}
+import graft.operators.{CountMin, Incremental, Materialize}
 
 /** Streaming Count-Min maintenance — the ninth streaming shape: a
   * standing CMS register grid absorbs each micro-batch of DOCUMENTS via
@@ -38,11 +38,10 @@ object StreamCms {
     def absorb(batch: DataFrame): Unit = synchronized {
       val p = registersPartial(batch)
       state = Some(state match {
-        case None => p.localCheckpoint()
-        case Some(st) => Incremental.mergePartials(st, p,
+        case None => Materialize.pin(p)
+        case Some(st) => Materialize.pin(Incremental.mergePartials(st, p,
             Seq("i", "bucket"), addCols = Seq("rc"),
-            minCols = Seq.empty, maxCols = Seq.empty)
-          .localCheckpoint()
+            minCols = Seq.empty, maxCols = Seq.empty))
       })
     }
     def current: DataFrame = state.getOrElse(

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Materialize
 import graft.queries.ExactSubstr
 
 /** STREAMING corpus dedup maintenance — the thirteenth streaming shape:
@@ -49,8 +50,8 @@ object StreamExactSubstr {
     @volatile private var emitted: List[DataFrame] = Nil
 
     def absorb(batch: Dataset[SDoc]): Unit = synchronized {
-      val docs = batch.toDF().localCheckpoint()
-      val grams = ExactSubstr.gramPositions(docs).localCheckpoint()
+      val docs = Materialize.pin(batch.toDF())
+      val grams = Materialize.pin(ExactSubstr.gramPositions(docs))
       val st = state.getOrElse(emptyState(docs.sparkSession))
       // the batch's emission and its state extension both derive from the
       // SAME checkpointed (grams, st) inputs and write to independent
@@ -59,16 +60,14 @@ object StreamExactSubstr {
       // emission-before-state-append is the torn-batch replay contract
       // and MUST stay sequential).
       val mins = grams.groupBy(col("gram")).agg(min(col("__k")).as("__m"))
-      val both = graft.operators.Materialize.concurrently(Seq(
-        () => ExactSubstr.applySpans(docs,
-          ExactSubstr.absorbDups(grams, st), ordered = false)
-          .localCheckpoint(),
-        () => st
+      val both = Materialize.concurrently(Seq(
+        () => Materialize.pin(ExactSubstr.applySpans(docs,
+          ExactSubstr.absorbDups(grams, st), ordered = false)),
+        () => Materialize.pin(st
           .join(mins, Seq("gram"), "full_outer")
           .select(col("gram"),
             least(coalesce(col("base_kmin"), col("__m")),
-              coalesce(col("__m"), col("base_kmin"))).as("base_kmin"))
-          .localCheckpoint()))
+              coalesce(col("__m"), col("base_kmin"))).as("base_kmin")))))
       emitted = both(0) :: emitted
       state = Some(both(1))
     }
@@ -285,8 +284,8 @@ object StreamExactSubstr {
 
     def absorb(batch: Dataset[SDoc]): Unit = synchronized {
       val s = batch.sparkSession
-      val docs = batch.toDF().localCheckpoint()
-      val grams = ExactSubstr.gramPositions(docs).localCheckpoint()
+      val docs = Materialize.pin(batch.toDF())
+      val grams = Materialize.pin(ExactSubstr.gramPositions(docs))
       // the input materialization above overlapped any queued fold;
       // from here on the batch plans table reads, so the overwrite
       // window must be closed
@@ -316,13 +315,12 @@ object StreamExactSubstr {
       // re-derives the same gen and overwrites the same partition
       // instead of double-appending.
       var mins: DataFrame = null
-      graft.operators.Materialize.concurrently(Seq[() => Unit](
+      Materialize.concurrently(Seq[() => Unit](
         () => out.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .parquet(s"$path/emitted/gen=$gen"),
-        () => mins = grams.groupBy(col("gram"))
+        () => mins = Materialize.pin(grams.groupBy(col("gram"))
           .agg(min(col("__k")).as("base_kmin"))
-          .withColumn("gen", lit(gen))
-          .localCheckpoint()))
+          .withColumn("gen", lit(gen)))))
       if (exists)
         graft.sources.Bucketed.appendBucketed(mins, table, "gram", 16)
       else
@@ -342,9 +340,9 @@ object StreamExactSubstr {
     /** Fold all generations back to one: the state-sized job, amortized
       * over the [[compactEvery]] delta appends since the last fold. */
     private def compact(s: SparkSession, gen: Long): Unit = {
-      val merged = resolved(s.table(table))
-        .withColumn("gen", lit(gen))
-        .localCheckpoint() // lineage reads the table being replaced
+      val merged = Materialize.pin(resolved(s.table(table))
+        .withColumn("gen", lit(gen)))
+        // lineage reads the table being replaced
       graft.sources.Bucketed.writeBucketed(merged, table,
         s"$path/state", "gram", 16)
     }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Incremental
+import graft.operators.{Incremental, Materialize}
 
 /** Streaming materialized-view maintenance — the seventh streaming shape:
   * a standing per-key aggregate absorbs each micro-batch's PARTIALS via
@@ -40,11 +40,11 @@ object StreamMaintain {
     def absorb(batch: DataFrame): Unit = synchronized {
       val p = partials(batch)
       state = Some(state match {
-        case None => p.localCheckpoint()
-        case Some(st) => Incremental.mergePartials(st, p, Seq("eventType"),
+        case None => Materialize.pin(p)
+        case Some(st) => Materialize.pin(Incremental.mergePartials(st, p,
+            Seq("eventType"),
             addCols = Seq("n", "sum_cents"),
-            minCols = Seq("min_cents"), maxCols = Seq("max_cents"))
-          .localCheckpoint()
+            minCols = Seq("min_cents"), maxCols = Seq("max_cents")))
       })
     }
     def current: DataFrame = state.getOrElse(

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Scd2
+import graft.operators.{Materialize, Scd2}
 
 /** Streaming CDC → SCD2 apply — the twelfth streaming shape, and the one
   * a warehouse user asks for first: a stream of dimension snapshots (each
@@ -103,7 +103,7 @@ object StreamScd2 {
       }
       // eager checkpoint per level — same anti-exponential-lineage rule
       // as the q58 batch replay
-      history = Some(Scd2.merge(h, snap, keys, attrs, day).localCheckpoint())
+      history = Some(Materialize.pin(Scd2.merge(h, snap, keys, attrs, day)))
     }
 
     def current: DataFrame = synchronized {

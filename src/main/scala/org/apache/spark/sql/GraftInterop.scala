@@ -1,13 +1,34 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.RDDBlockId
 
-/** Minimal bridge to the `private[sql]` Column ⇄ Expression converters —
-  * the supported extension seam for libraries that define native Catalyst
-  * expressions against Spark 4's split Column API. */
+/** Minimal bridge to `private[sql]` and `private[spark]` members — the
+  * supported extension seam for libraries that define native Catalyst
+  * expressions against Spark 4's split Column API, and build a Dataset
+  * from a plan they made. */
 object GraftInterop {
   def expression(c: Column): Expression =
     classic.ExpressionUtils.expression(c)
   def column(e: Expression): Column =
     classic.ExpressionUtils.column(e)
+
+  /** Bytes the block manager stores for `rddId`, memory plus disk, summed
+    * over every block manager. A synchronous call to the driver's block
+    * manager master: no Spark job. */
+  def storedBytes(s: SparkSession, rddId: Int): Long =
+    s.sparkContext.env.blockManager.master.getStorageStatus.iterator
+      .flatMap(_.rddBlocks.iterator).collect {
+        case (RDDBlockId(`rddId`, _), b) => b.memSize + b.diskSize
+      }.sum
+
+  /** `ckpt` rebuilt over the same `LogicalRDD` (same RDD, partitioning,
+    * ordering and constraints) with `sizeInBytes` as its statistics. */
+  def withSizeInBytes(ckpt: DataFrame, r: LogicalRDD, bytes: Long): DataFrame = {
+    val session = ckpt.sparkSession.asInstanceOf[classic.SparkSession]
+    classic.Dataset.ofRows(session, r.copy()(session,
+      Some(Statistics(sizeInBytes = BigInt(bytes))), Some(r.constraints)))
+  }
 }

@@ -243,6 +243,29 @@ class DedupSpec extends AnyFunSuite {
     assert(loopLabels(999L) == 999L)
   }
 
+  test("both CC algorithms release superseded rounds: a 12-node path leaves as many persistent RDDs as a 2-node graph") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val path = (0L until 11L).map(i => (i, i + 1)).toDF("id1", "id2")
+    val pair = Seq((0L, 1L)).toDF("id1", "id2")
+    def leftBehind(cc: org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame,
+        edges: org.apache.spark.sql.DataFrame): Int = {
+      val before = sc.getPersistentRDDs.keySet
+      val out = cc(edges)
+      assert(out.collect().map(_.getLong(1)).distinct.toSeq == Seq(0L))
+      val n = (sc.getPersistentRDDs.keySet -- before).size
+      // `out` stays reachable until counted: the context cleaner may
+      // unpersist the RDDs of a collected result
+      assert(out.columns.length == 2)
+      n
+    }
+    Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame](
+      Dedup.connectedComponents, Dedup.connectedComponentsStars).foreach {
+      cc => assert(leftBehind(cc, path) == leftBehind(cc, pair))
+    }
+  }
+
   test("star contraction handles a long chain in logarithmic rounds") {
     import spark.implicits._
     // a 300-node path has diameter 299: min-label propagation would need

@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftInterop}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, Sort}
 import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -10,9 +11,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Materialize
 
-/** The sorted-output gate ([[Materialize.sorted]]): the rows and order of
-  * `orderBy`, pinned; a shuffled-join tail is pinned before the sort and
-  * released after it; any other child sorts as it is. */
+/** The one pin entry ([[Materialize.pin]]): a bare checkpoint's rows and
+  * partitioning with the measured size as its statistics. The sorted-output
+  * gate ([[Materialize.sorted]]): the rows and order of `orderBy`, pinned;
+  * a shuffled-join tail is pinned before the sort and released after it;
+  * any other child sorts as it is. The scoped cache
+  * ([[Materialize.withMaterialized]]) is released also when its fill
+  * fails. */
 class MaterializeSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -122,5 +127,107 @@ class MaterializeSpec extends AnyFunSuite {
       val out = Materialize.sorted(df, col(df.columns.head))
       assert(sc.getPersistentRDDs.keySet -- before == Set(ckptRddId(out)))
     }
+  }
+
+  /** The three shapes whose checkpoint estimate is ~100x off: an explode
+    * under-estimated (2000 x 51 rows), a join over-estimated (102 000
+    * output rows), and a filtered range of 1000 ids. */
+  private def explodeShape: DataFrame = spark.range(0, 2000)
+    .select(col("id"), explode(sequence(lit(0L), lit(50L))).as("j"))
+  private def joinShape: DataFrame =
+    spark.range(0, 102000).join(spark.range(0, 102000), Seq("id"))
+  private def rangeShape: DataFrame =
+    spark.range(0, 100000).toDF().filter(col("id") % 100 === 0)
+
+  private def logicalRdd(df: DataFrame): LogicalRDD =
+    df.queryExecution.logical match {
+      case r: LogicalRDD => r
+      case p => fail(s"not a checkpoint: $p")
+    }
+
+  test("a pin's sizeInBytes is the stored bytes of its RDD") {
+    Seq(explodeShape -> 102000L, joinShape -> 102000L, rangeShape -> 1000L)
+      .foreach { case (df, rows) =>
+        val p = Materialize.pin(df)
+        try {
+          val stored = GraftInterop.storedBytes(spark, logicalRdd(p).rdd.id)
+          assert(stored > 0)
+          assert(p.queryExecution.optimizedPlan.stats.sizeInBytes ==
+            BigInt(stored))
+          assert(p.count() == rows)
+        } finally Materialize.release(p)
+      }
+    // an explode's estimate under-states it and a join's over-states it,
+    // each by far more than 10x
+    val e = Materialize.pin(explodeShape)
+    val j = Materialize.pin(joinShape)
+    try {
+      assert(e.queryExecution.optimizedPlan.stats.sizeInBytes >
+        explodeShape.localCheckpoint().queryExecution.optimizedPlan.stats
+          .sizeInBytes * 10)
+      assert(j.queryExecution.optimizedPlan.stats.sizeInBytes * 10 <
+        joinShape.queryExecution.optimizedPlan.stats.sizeInBytes)
+    } finally { Materialize.release(e); Materialize.release(j) }
+  }
+
+  test("a pin has a bare checkpoint's rows and outputPartitioning") {
+    Seq(explodeShape, joinShape, rangeShape).foreach { df =>
+      val bare = df.localCheckpoint()
+      val p = Materialize.pin(df)
+      try {
+        assert(logicalRdd(p).outputPartitioning ==
+          logicalRdd(bare).outputPartitioning)
+        assert(logicalRdd(p).outputOrdering == logicalRdd(bare).outputOrdering)
+        assert(p.collect().toSeq.sortBy(_.toString) ==
+          bare.collect().toSeq.sortBy(_.toString))
+      } finally { Materialize.release(p); Materialize.release(bare) }
+    }
+  }
+
+  test("release(pin(x)) frees its blocks") {
+    val sc = spark.sparkContext
+    val p = Materialize.pin(rangeShape)
+    val id = logicalRdd(p).rdd.id
+    assert(sc.getPersistentRDDs.contains(id))
+    assert(GraftInterop.storedBytes(spark, id) > 0)
+    Materialize.release(p)
+    assert(!sc.getPersistentRDDs.contains(id))
+    val deadline = System.nanoTime + 10L * 1000 * 1000 * 1000
+    while (GraftInterop.storedBytes(spark, id) > 0 &&
+        System.nanoTime < deadline) Thread.sleep(20)
+    assert(GraftInterop.storedBytes(spark, id) == 0)
+  }
+
+  test("under a 1 MB broadcast threshold a join no longer broadcasts the pinned explode") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, (1L << 20).toString)
+    val other = spark.range(0, 500000).select(col("id"), (col("id") % 3).as("m"))
+    def broadcastsCheckpoint(ckpt: DataFrame): Boolean =
+      other.join(ckpt, Seq("id")).queryExecution.sparkPlan
+        .collect { case b: BroadcastHashJoinExec => b }.nonEmpty
+    val bare = explodeShape.localCheckpoint()
+    val p = Materialize.pin(explodeShape)
+    try {
+      assert(logicalRdd(p).computeStats().sizeInBytes > (1L << 20))
+      assert(broadcastsCheckpoint(bare))
+      assert(!broadcastsCheckpoint(p))
+    } finally {
+      prior match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+      Materialize.release(p); Materialize.release(bare)
+    }
+  }
+
+  test("a failed fill leaves nothing in the cache") {
+    val df = spark.range(0, 10)
+      .select(when(col("id") === 7, raise_error(lit("boom")))
+        .otherwise(col("id")).as("x"))
+    val e = intercept[Exception](Materialize.withMaterialized(df)(_.count()))
+    assert(e.getMessage.contains("boom"))
+    // storageLevel is the CacheManager lookup of df's plan: NONE = absent
+    assert(df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
   }
 }

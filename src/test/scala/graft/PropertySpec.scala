@@ -136,18 +136,16 @@ class PropertySpec extends AnyFunSuite {
         df.select("id1", "id2", "jaccard").collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       val exploded = rows(graft.operators.Dedup.jaccardForCandidates(cand, sh, "doc_id"))
-      val arrayed = rows(graft.operators.Dedup.jaccardForCandidatesArrays(cand, arrs, "doc_id"))
-      assert(exploded == arrayed)
       // hashed-carrier formulation: same jaccard values and same minhash
-      // signatures as the string formulation (no 60-bit collisions at
-      // these set sizes)
+      // signatures as the exploded string formulation (no 60-bit
+      // collisions at these set sizes)
       val harrs = graft.operators.Dedup.shingleHashArrays(docs, "doc_id", "text", 3)
       val hashed = rows(graft.operators.Dedup.jaccardForCandidatesHashes(cand, harrs, "doc_id"))
       assert(exploded == hashed)
       def sigRows(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => r.toSeq).toSet
       assert(
-        sigRows(graft.operators.Dedup.minhashSignaturesFromArrays(arrs, "doc_id", 8)) ==
+        sigRows(graft.operators.Dedup.minhashSignatures(sh, "doc_id", 8)) ==
         sigRows(graft.operators.Dedup.minhashSignaturesFromHashes(harrs, "doc_id", 8)))
     }
   }

@@ -2,14 +2,60 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One sorted-output gate: in the engine sources only `Materialize.scala`
-  * may sort a relation and pin it with `localCheckpoint`; every other
+/** One pin entry and one sorted-output gate: in the engine sources only
+  * `Materialize.scala` may call `localCheckpoint`; every other eager
+  * checkpoint calls [[graft.operators.Materialize.pin]], and every
   * sort-and-pin calls [[graft.operators.Materialize.sorted]]. A top-k
   * (`orderBy(...).limit(k)`) is not a range sort and is exempt. */
 class SortedGateLintSpec extends AnyFunSuite {
 
-  /** Index just past the bracket group opening at `open`, skipping
-    * string literals. */
+  /** `src` with comments and the contents of string and char literals
+    * blanked to spaces; newlines are kept, so offsets and line numbers
+    * still hold. */
+  def codeOnly(src: String): String = {
+    val out = src.toCharArray
+    def blank(from: Int, until: Int): Unit =
+      (from until math.min(until, src.length)).foreach { j =>
+        if (out(j) != '\n') out(j) = ' '
+      }
+    var i = 0
+    while (i < src.length) {
+      if (src.startsWith("//", i)) {
+        val end = src.indexOf('\n', i)
+        val e = if (end < 0) src.length else end
+        blank(i, e); i = e
+      } else if (src.startsWith("/*", i)) {
+        var depth = 1
+        var j = i + 2
+        while (depth > 0 && j < src.length) {
+          if (src.startsWith("/*", j)) { depth += 1; j += 2 }
+          else if (src.startsWith("*/", j)) { depth -= 1; j += 2 }
+          else j += 1
+        }
+        blank(i, j); i = j
+      } else if (src.startsWith("\"\"\"", i)) {
+        val end = src.indexOf("\"\"\"", i + 3)
+        val e = if (end < 0) src.length else end + 3
+        blank(i + 3, e - 3); i = e
+      } else if (src(i) == '"') {
+        var j = i + 1
+        while (j < src.length && src(j) != '"' && src(j) != '\n')
+          j += (if (src(j) == '\\') 2 else 1)
+        blank(i + 1, j); i = j + 1
+      } else if (src(i) == '\'' && i + 2 < src.length && src(i + 2) == '\'') {
+        blank(i + 1, i + 2); i += 3
+      } else if (src.startsWith("'\\", i) && i + 3 < src.length &&
+          src(i + 3) == '\'') {
+        blank(i + 1, i + 3); i += 4
+      } else i += 1
+    }
+    new String(out)
+  }
+
+  private def lineOf(s: String, at: Int): Int =
+    s.substring(0, at).count(_ == '\n') + 1
+
+  /** Index just past the bracket group opening at `open`. */
   private def closeOf(s: String, open: Int): Int = {
     var i = open + 1
     var depth = 1
@@ -17,9 +63,6 @@ class SortedGateLintSpec extends AnyFunSuite {
       s(i) match {
         case '(' => depth += 1
         case ')' => depth -= 1
-        case '"' =>
-          i += 1
-          while (i < s.length && s(i) != '"') i += (if (s(i) == '\\') 2 else 1)
         case _ =>
       }
       i += 1
@@ -27,61 +70,77 @@ class SortedGateLintSpec extends AnyFunSuite {
     i
   }
 
-  /** Index of the next code character at or after `from`, past
-    * whitespace and line comments. */
-  private def skipSpace(s: String, from: Int): Int = {
-    var i = from
-    var moved = true
-    while (moved) {
-      moved = false
-      while (i < s.length && s(i).isWhitespace) { i += 1; moved = true }
-      if (s.startsWith("//", i)) {
-        while (i < s.length && s(i) != '\n') i += 1
-        moved = true
-      }
-    }
-    i
+  /** Lines of `src` with a `.localCheckpoint(` call, however the chain is
+    * broken across lines. */
+  def bareCheckpoints(src: String): Seq[Int] = {
+    val code = codeOnly(src)
+    """\.\s*localCheckpoint\s*\(""".r.findAllMatchIn(code)
+      .map(m => lineOf(code, m.start)).toSeq
   }
 
-  /** The method calls chained after each `orderBy(...)` in `src`, with
-    * the 1-based line of the `orderBy`. */
-  private def chainsAfterOrderBy(src: String): Seq[(Int, Seq[String])] =
-    """\borderBy\(""".r.findAllMatchIn(src).map { m =>
-      val calls = Seq.newBuilder[String]
-      var i = skipSpace(src, closeOf(src, m.end - 1))
-      while (i < src.length && src(i) == '.') {
-        val end = src.indexWhere(c => !c.isLetterOrDigit, i + 1)
-        calls += src.substring(i + 1, if (end < 0) src.length else end)
-        i = if (end < 0) src.length else end
-        if (i < src.length && src(i) == '(') i = closeOf(src, i)
-        i = skipSpace(src, i)
+  /** The method names called at the top level of `expr`'s chain. */
+  private def topLevelCalls(expr: String): Seq[String] = {
+    val calls = Seq.newBuilder[String]
+    var i = 0
+    while (i < expr.length) {
+      expr(i) match {
+        case '(' => i = closeOf(expr, i)
+        case '.' =>
+          var j = i + 1
+          while (j < expr.length && expr(j).isWhitespace) j += 1
+          val end = expr.indexWhere(c => !c.isLetterOrDigit, j)
+          val e = if (end < 0) expr.length else end
+          calls += expr.substring(j, e)
+          i = e
+        case _ => i += 1
       }
-      (src.substring(0, m.start).count(_ == '\n') + 1, calls.result())
-    }.toSeq
-
-  /** Lines of `src` with an `orderBy(...)` chain that ends in
-    * `localCheckpoint` and is not a top-k. */
-  def handSortedPins(src: String): Seq[Int] =
-    chainsAfterOrderBy(src).collect {
-      case (line, calls) if calls.lastOption.contains("localCheckpoint") &&
-          !calls.contains("limit") => line
     }
+    calls.result()
+  }
+
+  /** Lines of `src` with a `pin(...)` whose argument is a range sort: its
+    * top-level chain calls `orderBy` with no `limit` after it. */
+  def handSortedPins(src: String): Seq[Int] = {
+    val code = codeOnly(src)
+    """\bpin\s*\(""".r.findAllMatchIn(code).flatMap { m =>
+      val calls = topLevelCalls(
+        code.substring(m.end, closeOf(code, m.end - 1) - 1))
+      val sortAt = calls.lastIndexOf("orderBy")
+      if (sortAt >= 0 && calls.lastIndexOf("limit") < sortAt)
+        Some(lineOf(code, m.start))
+      else None
+    }.toSeq
+  }
 
   test("the scan flags a sort-and-pin and exempts a top-k") {
     assert(handSortedPins(
-      "val a = df.orderBy(col(\"k\"))\n  .localCheckpoint()") == Seq(1))
+      "val a = Materialize.pin(df.orderBy(col(\"k\")))") == Seq(1))
     assert(handSortedPins(
-      "x\n.orderBy(col(\")\").desc) // pin\n  .select(col(\"k\"))" +
-        "\n  .localCheckpoint(true)") == Seq(2))
+      "x\nMaterialize.pin(df\n.orderBy(col(\")\").desc) // pin\n" +
+        "  .select(col(\"k\")))") == Seq(2))
     assert(handSortedPins(
-      "df.orderBy(col(\"k\")).limit(3).localCheckpoint()") == Nil)
+      "Materialize.pin(df.orderBy(col(\"k\")).limit(3))") == Nil)
+    assert(handSortedPins("Materialize.pin(df.withColumn(\"r\", " +
+      "row_number().over(Window.orderBy(col(\"k\")))))") == Nil)
     assert(handSortedPins(
-      "Window.orderBy(col(\"k\")).rowsBetween(-1, 0)") == Nil)
-    assert(handSortedPins("df.orderBy(col(\"k\")).localCheckpoint()\n" +
-      "df.orderBy(col(\"k\"))\n.collect()") == Seq(1))
+      "Materialize.pin(df).orderBy(col(\"k\")).collect()") == Nil)
   }
 
-  test("no engine source but Materialize.scala sorts and pins by hand") {
+  test("the scan flags every localCheckpoint call and skips comments and strings") {
+    assert(bareCheckpoints("val a = df\n  .select(col(\"k\"))\n" +
+      "  .localCheckpoint()") == Seq(3))
+    assert(bareCheckpoints("df.\n  localCheckpoint(true)\nx") == Seq(1))
+    assert(bareCheckpoints("a.localCheckpoint(); b.localCheckpoint ()") ==
+      Seq(1, 1))
+    assert(bareCheckpoints("// df.localCheckpoint()\n" +
+      "/** x.localCheckpoint() /* nested */ y.localCheckpoint() */\n" +
+      "  * z.localCheckpoint()\n" + // not a comment outside a block
+      "val s = \"a.localCheckpoint()\"; val c = '\"'\n" +
+      "s\"\"\"t.localCheckpoint()\"\"\" + df.localCheckpoint()") ==
+      Seq(3, 5))
+  }
+
+  private def engineSources: Seq[(java.io.File, String)] = {
     val root = new java.io.File("src/main/scala")
     def files(d: java.io.File): Seq[java.io.File] =
       Option(d.listFiles).toSeq.flatten.flatMap { f =>
@@ -90,14 +149,28 @@ class SortedGateLintSpec extends AnyFunSuite {
       }
     val all = files(root)
     assert(all.size > 50, s"${all.size} engine sources under $root")
-    val found = all.filter(_.getName != "Materialize.scala").flatMap { f =>
-      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      handSortedPins(src).map(l => s"${f.getPath}:$l")
-    }
+    all.map(f => f ->
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+  }
+
+  /** `scan`'s finds outside `Materialize.scala`, after checking that it
+    * finds the real one inside it. */
+  private def outsideGate(scan: String => Seq[Int]): Seq[String] = {
+    val (gate, others) =
+      engineSources.partition(_._1.getName == "Materialize.scala")
+    assert(gate.size == 1 && scan(gate.head._2).nonEmpty)
+    others.flatMap { case (f, src) => scan(src).map(l => s"${f.getPath}:$l") }
+  }
+
+  test("no engine source but Materialize.scala sorts and pins by hand") {
+    val found = outsideGate(handSortedPins)
     assert(found.isEmpty, "sort-and-pin outside Materialize.sorted: " +
       found.mkString(", "))
-    val gate = all.find(_.getName == "Materialize.scala").get
-    assert(handSortedPins(new String(
-      java.nio.file.Files.readAllBytes(gate.toPath), "UTF-8")).nonEmpty)
+  }
+
+  test("no engine source but Materialize.scala calls localCheckpoint") {
+    val found = outsideGate(bareCheckpoints)
+    assert(found.isEmpty, "localCheckpoint outside Materialize.pin: " +
+      found.mkString(", "))
   }
 }
