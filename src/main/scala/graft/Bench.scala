@@ -24,7 +24,8 @@ import scala.jdk.CollectionConverters._
   *
   * One stability rule ([[suspects]]): after pass 1, a row re-measures
   * once, alone, for wide warm spread or for history against the last
-  * committed artifact; the lower median wins. Load is recorded per row
+  * committed artifact, if that was measured at this run's scale factor
+  * and core count ([[parsePrior]]); the lower median wins. Load is recorded per row
   * (`load`, `loadmax`) for attribution and triggers nothing; the run
   * starts at once, without waiting for a quiet box.
   *
@@ -319,28 +320,41 @@ object Bench {
     }.sortBy(-_._3).map { case (n, w, _) => (n, w) }
 
   /** Prior committed medians, keyed by SHORT name ("q185"), read from
-    * the last committed artifact BEFORE this run overwrites it. Missing
-    * or unparsable file → empty map (first round, renamed artifact). */
-  private def priorMedians(sfDir: String): Map[String, Double] = {
+    * the last committed artifact BEFORE this run overwrites it, with the
+    * ones that may anchor the history trigger ([[parsePrior]]). Missing
+    * or unparsable file → empty (first round, renamed artifact). */
+  private def priorMedians(sfDir: String): (Map[String, Double], Map[String, Double]) = {
     val path = sys.env.getOrElse("SPARK_GRAFT_BENCH_PRIOR",
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_results.json"))
-    try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
+    try parsePrior(new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(path)),
-        java.nio.charset.StandardCharsets.UTF_8)
-      // a prior measured at a DIFFERENT scale factor anchors nothing:
-      // comparing sf1 medians against an sf0.1 artifact would flag
-      // essentially every query and re-fork the 20 heaviest for free
-      val sfOk = "\"sf\":\"([^\"]*)\"".r.findFirstMatchIn(txt)
-        .forall(_.group(1) == sfDir)
-      val qStart = txt.indexOf("\"queries\":{")
-      if (qStart < 0 || !sfOk) Map.empty
-      else {
-        val body = txt.substring(qStart + 11, txt.indexOf('}', qStart))
-        "\"(q[0-9]+)\":(-?[0-9.]+)".r.findAllMatchIn(body)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
-    } catch { case _: Throwable => Map.empty }
+        java.nio.charset.StandardCharsets.UTF_8), sfDir, Session.cpus)
+    catch { case _: Throwable => (Map.empty, Map.empty) }
+  }
+
+  /** A prior artifact's medians by short name, and the medians the
+    * history trigger may compare against. A prior measured at a DIFFERENT
+    * scale factor gives neither: comparing sf1 medians against an sf0.1
+    * artifact would flag essentially every query and re-fork the 20
+    * heaviest for free. A prior whose `"cpus"` is absent or differs from
+    * `cpus` was measured in another regime (the r18 artifact is 8-core
+    * and has no `cpus`; on 4 cores seven of its rows read 1.6–3× and
+    * re-measured as `hist` in every run): its medians still order the
+    * isolated tier and size the shed projection, but trigger nothing. */
+  private[graft] def parsePrior(txt: String, sfDir: String,
+      cpus: Int): (Map[String, Double], Map[String, Double]) = {
+    val sfOk = "\"sf\":\"([^\"]*)\"".r.findFirstMatchIn(txt)
+      .forall(_.group(1) == sfDir)
+    val qStart = txt.indexOf("\"queries\":{")
+    if (qStart < 0 || !sfOk) (Map.empty, Map.empty)
+    else {
+      val body = txt.substring(qStart + 11, txt.indexOf('}', qStart))
+      val medians = "\"(q[0-9]+)\":(-?[0-9.]+)".r.findAllMatchIn(body)
+        .map(m => m.group(1) -> m.group(2).toDouble).toMap
+      val sameCpus = "\"cpus\":([0-9]+)".r.findFirstMatchIn(txt)
+        .exists(_.group(1).toInt == cpus)
+      (medians, if (sameCpus) medians else Map.empty)
+    }
   }
 
   /** The queries to measure: every registered query, or the
@@ -460,7 +474,7 @@ object Bench {
     // read the LAST COMMITTED artifact once, before this run overwrites
     // it — the history anchor for the stability pass and the heavy
     // tier's order
-    val prior = priorMedians(sfDir)
+    val (prior, history) = priorMedians(sfDir)
     val tmp = java.nio.file.Files.createTempDirectory("graft-bench")
     def rmTmp(): Unit = try {
       import java.nio.file._
@@ -510,7 +524,7 @@ object Bench {
         case Some(p) if p.med >= 0 && (r.med < 0 || p.med <= r.med) => p
         case _ => r
       }
-      println(partialLine(live.toSeq, names.size, prior))
+      println(partialLine(live.toSeq, names.size, history))
     }
     val repsConf = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     // projected child cost from the prior committed medians (unknown
@@ -563,7 +577,7 @@ object Bench {
     val pass1 = acc.toSeq
     // STABILITY PASS: re-fork each suspect once, ALONE, and keep the
     // lower median; the cap grows on overflow but stays bounded
-    val sus = suspects(pass1, prior)
+    val sus = suspects(pass1, history)
     val picked = sus.take(if (sus.size > 12) 20 else 12)
     // under a deadline the stability pass runs only if the budget can
     // pay for it — a clean-but-partial artifact beats a kill

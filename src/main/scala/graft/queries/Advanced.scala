@@ -510,37 +510,18 @@ object Advanced {
     * (cf. q92); production replaces MemoryStream with readStream. */
   def q93StreamWindowedAgg(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.WindowedAgg
+    import graft.streaming.{StreamRunner, WindowedAgg}
     import graft.streaming.WindowedAgg.Event
     val evs = Tables.events(s, dir)
       .select(col("ts"), col("user_id"), col("value"))
-      .as[(java.sql.Timestamp, Long, Double)].collect()
+      .as[(java.sql.Timestamp, Long, Double)].collect().toSeq
       .sortBy(_._1.getTime) // in-order arrival: nothing is watermark-late
       .map { case (ts, u, v) => Event(ts, u, v) }
-    val ss = graft.Session.forStream(s)
-    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
-    val mem = MemoryStream[Event]
-    val sink = s"q93_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-    val q = WindowedAgg.tumbling(mem.toDS(), "1 hour", "10 minutes")
-      .writeStream.format("memory").queryName(sink).outputMode("append")
-      .start()
-    try {
-      val third = evs.length / 3
-      Seq(evs.slice(0, third), evs.slice(third, 2 * third),
-          evs.slice(2 * third, evs.length)).foreach { b =>
-        mem.addData(b.toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-      mem.addData(Event(
-        java.sql.Timestamp.valueOf("2030-01-01 00:00:00"), -1L, 0.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    val out = Materialize.sorted(ss.table(sink)
-      .select(col("win_start"), col("userId").as("user_id"),
+    StreamRunner.sorted(s, StreamRunner.slices(evs, 3),
+      Seq(Event(java.sql.Timestamp.valueOf("2030-01-01 00:00:00"), -1L, 0.0)))(
+      WindowedAgg.tumbling(_, "1 hour", "10 minutes"))(
+      _.select(col("win_start"), col("userId").as("user_id"),
         col("n_events"), col("total")), col("win_start"), col("user_id"))
-    ss.catalog.dropTempView(sink)
-    out
   }
 
   val oracleQ93: String =
@@ -562,38 +543,19 @@ object Advanced {
     * register digest bit-for-bit — stream ≡ batch ≡ DuckDB. */
   def q95StreamCardinality(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.StreamCardinality
+    import graft.streaming.{StreamCardinality, StreamRunner}
     import graft.streaming.StreamCardinality.Event
     val evs = Tables.events(s, dir)
       .select(col("ts"), col("user_id"), col("event_type"))
-      .as[(java.sql.Timestamp, Long, String)].collect()
+      .as[(java.sql.Timestamp, Long, String)].collect().toSeq
       .sortBy(_._1.getTime) // in-order arrival: nothing is watermark-late
       .map { case (ts, u, t) => Event(ts, u, t) }
-    val ss = graft.Session.forStream(s)
-    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
-    val mem = MemoryStream[Event]
-    val sink = s"q95_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-    val q = StreamCardinality.windowedDistinct(mem.toDS(), "1 hour", "10 minutes")
-      .writeStream.format("memory").queryName(sink).outputMode("append")
-      .start()
-    try {
-      val third = evs.length / 3
-      Seq(evs.slice(0, third), evs.slice(third, 2 * third),
-          evs.slice(2 * third, evs.length)).foreach { b =>
-        mem.addData(b.toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-      mem.addData(Event(
-        java.sql.Timestamp.valueOf("2030-01-01 00:00:00"), -1L, "zz"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val out = Materialize.sorted(ss.table(sink)
-      .select(col("win_start"), col("eventType").as("event_type"),
+    StreamRunner.sorted(s, StreamRunner.slices(evs, 3),
+      Seq(Event(java.sql.Timestamp.valueOf("2030-01-01 00:00:00"), -1L, "zz")))(
+      StreamCardinality.windowedDistinct(_, "1 hour", "10 minutes"))(
+      _.select(col("win_start"), col("eventType").as("event_type"),
         col("n_events"), col("distinct_users_est"), col("s51")),
       col("win_start"), col("event_type"))
-    ss.catalog.dropTempView(sink)
-    out
   }
 
   /** q82's register replay, per (hour window, event_type): identical HLL
@@ -656,8 +618,7 @@ object Advanced {
   def q96StreamBreadth(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.BreadthStream
+    import graft.streaming.{BreadthStream, StreamRunner}
     import graft.streaming.BreadthStream.Tick
     val wDay = Window.partitionBy(col("user_id"), col("day"))
       .orderBy(col("ts").desc, col("event_id").desc)
@@ -666,33 +627,17 @@ object Advanced {
       .withColumn("rn", row_number().over(wDay))
       .filter(col("rn") === 1)
       .select(col("user_id"), col("day"), col("value").as("close"))
-      .as[(Long, java.sql.Date, Double)].collect()
+      .as[(Long, java.sql.Date, Double)].collect().toSeq
       .sortBy(_._2.getTime) // day order: per-key state sees days ascending
       .map { case (u, d, c) => Tick(u, d, c) }
-    val ss = graft.Session.forStream(s)
-    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
-    val mem = MemoryStream[Tick]
-    val sink = s"q96_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-    val q = BreadthStream.directions(mem.toDS())
-      .writeStream.format("memory").queryName(sink).outputMode("append")
-      .start()
-    try {
-      val third = ticks.length / 3
-      Seq(ticks.slice(0, third), ticks.slice(third, 2 * third),
-          ticks.slice(2 * third, ticks.length)).foreach { b =>
-        mem.addData(b.toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val out = Materialize.sorted(ss.table(sink)
-      .groupBy(col("day"))
-      .agg(count(lit(1)).as("n_users"),
-        sum(when(col("dir") === 1, 1).otherwise(0)).as("advancers"),
-        sum(when(col("dir") === -1, 1).otherwise(0)).as("decliners"),
-        sum(when(col("dir") === 0, 1).otherwise(0)).as("flat_or_first")),
+    StreamRunner.sorted(s, StreamRunner.slices(ticks, 3), Nil)(
+      BreadthStream.directions)(
+      _.groupBy(col("day"))
+        .agg(count(lit(1)).as("n_users"),
+          sum(when(col("dir") === 1, 1).otherwise(0)).as("advancers"),
+          sum(when(col("dir") === -1, 1).otherwise(0)).as("decliners"),
+          sum(when(col("dir") === 0, 1).otherwise(0)).as("flat_or_first")),
       col("day"))
-    ss.catalog.dropTempView(sink)
-    out
   }
 
   val oracleQ96: String =
@@ -769,40 +714,20 @@ object Advanced {
     * oracle. Bounded collect is the test transport (q92 convention). */
   def q105StreamStreamJoin(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.StreamStreamJoin
+    import graft.streaming.{StreamRunner, StreamStreamJoin}
     import graft.streaming.StreamStreamJoin.{Click, View}
     val ev = Tables.events(s, dir)
       .select(col("ts"), col("user_id"), col("event_id"), col("event_type"))
       .filter(col("event_type").isin("click", "view"))
-      .as[(java.sql.Timestamp, Long, Long, String)].collect()
+      .as[(java.sql.Timestamp, Long, Long, String)].collect().toSeq
       .sortBy(_._1.getTime)
     val clicks = ev.collect { case (ts, u, id, "click") => Click(ts, u, id) }
     val views = ev.collect { case (ts, u, id, "view") => View(ts, u, id) }
-    val ss = graft.Session.forStream(s)
-    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
-    val memC = MemoryStream[Click]
-    val memV = MemoryStream[View]
-    val sink = s"q105_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-    val q = StreamStreamJoin.attributed(memC.toDS(), memV.toDS(),
-        AttributionWindowSec, "6 hours")
-      .writeStream.format("memory").queryName(sink).outputMode("append")
-      .start()
-    try {
-      val (tc, tv) = (clicks.length / 3, views.length / 3)
-      for (i <- 0 until 3) {
-        val (c0, c1) = (i * tc, if (i == 2) clicks.length else (i + 1) * tc)
-        val (v0, v1) = (i * tv, if (i == 2) views.length else (i + 1) * tv)
-        memV.addData(views.slice(v0, v1).toIndexedSeq: _*)
-        memC.addData(clicks.slice(c0, c1).toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val out = Materialize.sorted(ss.table(sink)
-      .select(col("user_id"), col("click_id"), col("view_id"), col("lag_sec")),
-      col("click_id"), col("view_id"))
-    ss.catalog.dropTempView(sink)
-    out
+    StreamRunner.sorted2(s, StreamRunner.slices(clicks, 3)
+        .zip(StreamRunner.slices(views, 3)), Nil)(
+      StreamStreamJoin.attributed(_, _, AttributionWindowSec, "6 hours"))(
+      _.select(col("user_id"), col("click_id"), col("view_id"),
+        col("lag_sec")), col("click_id"), col("view_id"))
   }
 
   /** q187 — stream-stream LEFT OUTER interval join run to completion
@@ -820,50 +745,27 @@ object Advanced {
     * convention. Emitted set ≡ the batch LEFT JOIN, hash-matched. */
   def q187StreamOuterJoin(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.StreamStreamJoin
+    import graft.streaming.{StreamRunner, StreamStreamJoin}
     import graft.streaming.StreamStreamJoin.{Click, View}
     val ev = Tables.events(s, dir)
       .select(col("ts"), col("user_id"), col("event_id"), col("event_type"))
       .filter(col("event_type").isin("click", "view"))
-      .as[(java.sql.Timestamp, Long, Long, String)].collect()
+      .as[(java.sql.Timestamp, Long, Long, String)].collect().toSeq
       .sortBy(_._1.getTime)
     val clicks = ev.collect { case (ts, u, id, "click") => Click(ts, u, id) }
     val views = ev.collect { case (ts, u, id, "view") => View(ts, u, id) }
     val maxTs = ev.last._1.getTime
-    def sentinel(k: Int) =
-      new java.sql.Timestamp(maxTs + 86400000L * 1000 * k)
-    val ss = graft.Session.forStream(s)
-    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
-    val memC = MemoryStream[Click]
-    val memV = MemoryStream[View]
-    val sink = s"q187_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-    val q = StreamStreamJoin.attributedLeft(memC.toDS(), memV.toDS(),
-        AttributionWindowSec, "6 hours")
-      .writeStream.format("memory").queryName(sink).outputMode("append")
-      .start()
-    try {
-      val (tc, tv) = (clicks.length / 3, views.length / 3)
-      for (i <- 0 until 3) {
-        val (c0, c1) = (i * tc, if (i == 2) clicks.length else (i + 1) * tc)
-        val (v0, v1) = (i * tv, if (i == 2) views.length else (i + 1) * tv)
-        memV.addData(views.slice(v0, v1).toIndexedSeq: _*)
-        memC.addData(clicks.slice(c0, c1).toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-      // watermark flush: two sentinel batches (jump, then evict+emit)
-      for (k <- 1 to 2) {
-        memC.addData(Click(sentinel(k), -1L, -1L))
-        memV.addData(View(sentinel(k), -1L, -1L))
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val out = Materialize.sorted(ss.table(sink)
-      .filter(col("user_id") >= 0)
-      .select(col("user_id"), col("click_id"), col("view_id"), col("lag_sec")),
-      col("click_id"), col("view_id"))
-    ss.catalog.dropTempView(sink)
-    out
+    // watermark flush: two sentinel batches (jump, then evict+emit)
+    val sentinels = (1 to 2).map { k =>
+      val t = new java.sql.Timestamp(maxTs + 86400000L * 1000 * k)
+      (Click(t, -1L, -1L), View(t, -1L, -1L))
+    }
+    StreamRunner.sorted2(s, StreamRunner.slices(clicks, 3)
+        .zip(StreamRunner.slices(views, 3)), sentinels)(
+      StreamStreamJoin.attributedLeft(_, _, AttributionWindowSec, "6 hours"))(
+      _.filter(col("user_id") >= 0)
+        .select(col("user_id"), col("click_id"), col("view_id"),
+          col("lag_sec")), col("click_id"), col("view_id"))
   }
 
   val oracleQ187: String =
@@ -1511,27 +1413,15 @@ object Advanced {
     * The driver-side collect feeds ONLY the in-process test transport. */
   def q116StreamMaintain(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.StreamMaintain
+    import graft.streaming.{StreamMaintain, StreamRunner}
     import graft.streaming.StreamMaintain.Ev
     val evs = Tables.events(s, dir)
       .select(col("ts"), col("event_type"),
         floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
-      .as[(java.sql.Timestamp, String, Long)].collect()
+      .as[(java.sql.Timestamp, String, Long)].collect().toSeq
       .map { case (ts, et, c) => Ev(ts, et, c) }
-    val ss = graft.Session.forStream(s)
-    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
-    val mem = MemoryStream[Ev]
-    val m = new StreamMaintain.Maintainer
-    val q = StreamMaintain.maintained(mem.toDS(), m).start()
-    try {
-      val third = evs.length / 3
-      Seq(evs.slice(0, third), evs.slice(third, 2 * third),
-          evs.slice(2 * third, evs.length)).foreach { b =>
-        mem.addData(b.toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
+    val m = StreamMaintain.maintainer
+    StreamRunner.foreachBatch(s, StreamRunner.slices(evs, 3))(m.absorb)
     m.current
       .select(col("eventType").as("event_type"), col("n"),
         col("sum_cents"), col("min_cents"), col("max_cents"))

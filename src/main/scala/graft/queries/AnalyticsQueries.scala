@@ -1380,42 +1380,23 @@ object AnalyticsQueries {
     * Gate contract: stream ≡ batch — the oracle is q102's, verbatim. */
   def q157StreamSessions(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.StreamSessions
+    import graft.streaming.{StreamRunner, StreamSessions}
     import graft.streaming.StreamSessions.Event
     val evs = Tables.events(s, dir)
       .select(col("ts"), col("user_id"), col("event_id"), col("value"))
-      .as[(java.sql.Timestamp, Long, Long, Double)].collect()
+      .as[(java.sql.Timestamp, Long, Long, Double)].collect().toSeq
       .sortBy(t => (t._1.getTime, t._3)) // in-order arrival per user
       .map { case (ts, u, e, v) => Event(ts, u, e, v) }
-    val ss = graft.Session.forStream(s)
-    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
-    val mem = MemoryStream[Event]
-    val sink = s"q157_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-    val q = StreamSessions.sessions(mem.toDS(), SessionGapSec)
-      .writeStream.format("memory").queryName(sink).outputMode("append")
-      .start()
-    try {
-      val third = evs.length / 3
-      Seq(evs.slice(0, third), evs.slice(third, 2 * third),
-          evs.slice(2 * third, evs.length)).foreach { b =>
-        mem.addData(b.toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-      mem.addData(Event(
-        java.sql.Timestamp.valueOf("2030-01-01 00:00:00"), -1L, 0L, 0.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    val out = Materialize.sorted(ss.table(sink)
-      .select(col("userId").as("user_id"),
+    StreamRunner.sorted(s, StreamRunner.slices(evs, 3), Seq(Event(
+        java.sql.Timestamp.valueOf("2030-01-01 00:00:00"), -1L, 0L, 0.0)))(
+      StreamSessions.sessions(_, SessionGapSec))(
+      _.select(col("userId").as("user_id"),
         col("sessionIdx").as("session_idx"),
         col("nEvents").as("n_events"),
         timestamp_micros(col("startUs")).as("session_start"),
         timestamp_micros(col("endUs")).as("session_end"),
         expr("(endUs - startUs) DIV 1000000").as("duration_sec"),
         col("sum6").as("value_sum6")), col("user_id"), col("session_idx"))
-    ss.catalog.dropTempView(sink)
-    out
   }
 
   lazy val oracleQ157: String = oracleQ102

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.Materialize
+import graft.operators.{Materialize, Upsert}
 import graft.sources.Bucketed
 
 /** q53: the bucketed co-located join program — customer×orders clustered
@@ -48,13 +48,8 @@ object Colocate {
     } finally {
       s.sql(s"DROP TABLE IF EXISTS $cTab")
       s.sql(s"DROP TABLE IF EXISTS $oTab")
-      deleteRecursively(new java.io.File(root))
+      Upsert.rmTree(new java.io.File(root))
     }
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete()
   }
 
   /** The co-located join + aggregation over already-bucketed tables —

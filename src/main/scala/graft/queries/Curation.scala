@@ -1781,26 +1781,14 @@ object Curation {
     * MemoryStream with readStream. */
   def q143StreamCms(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.StreamCms
+    import graft.streaming.{StreamCms, StreamRunner}
     import graft.streaming.StreamCms.Doc
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"), col("text"))
-      .as[(Long, String)].collect()
+      .as[(Long, String)].collect().toSeq
       .map { case (id, t) => Doc(id, t) }
-    val ss = graft.Session.forStream(s)
-    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
-    val mem = MemoryStream[Doc]
-    val m = new StreamCms.Maintainer
-    val q = StreamCms.maintained(mem.toDS(), m).start()
-    try {
-      val third = docs.length / 3
-      Seq(docs.slice(0, third), docs.slice(third, 2 * third),
-          docs.slice(2 * third, docs.length)).foreach { b =>
-        mem.addData(b.toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
+    val m = StreamCms.maintainer
+    StreamRunner.foreachBatch(s, StreamRunner.slices(docs, 3))(m.absorb)
     m.current.select(col("i"), col("bucket"), col("rc"))
       .orderBy(col("i"), col("bucket"))
   }

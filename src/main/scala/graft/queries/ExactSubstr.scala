@@ -317,23 +317,13 @@ object ExactSubstr {
     * The driver-side collect feeds ONLY the in-process test transport. */
   def q214StreamExactSubstr(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.StreamExactSubstr
+    import graft.streaming.{StreamExactSubstr, StreamRunner}
     import graft.streaming.StreamExactSubstr.SDoc
     val docs = normDocs(s, dir)
-      .orderBy(col("doc_id")).as[SDoc].collect()
-    val ss = graft.Session.forStream(s)
-    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
-    val mem = MemoryStream[SDoc]
+      .orderBy(col("doc_id")).as[SDoc].collect().toSeq
     val a = new StreamExactSubstr.Absorber
-    val q = StreamExactSubstr.applied(mem.toDS(), a).start()
-    try {
-      val quarter = math.max(1, docs.length / 4)
-      docs.grouped(quarter).foreach { b =>
-        mem.addData(b.toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
+    StreamRunner.foreachBatch(s,
+      docs.grouped(math.max(1, docs.length / 4)).toSeq)(a.absorb)
     a.results.orderBy(col("doc_id"))
   }
 
@@ -362,36 +352,28 @@ object ExactSubstr {
     * collect feeds ONLY the in-process MemoryStream test transport. */
   def q216RestartExactSubstr(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.StreamExactSubstr
+    import graft.streaming.{StreamExactSubstr, StreamRunner}
     import graft.streaming.StreamExactSubstr.SDoc
     val docs = normDocs(s, dir)
-      .orderBy(col("doc_id")).as[SDoc].collect()
+      .orderBy(col("doc_id")).as[SDoc].collect().toSeq
     val tmp = java.nio.file.Files.createTempDirectory("graft_q216")
     val table = "graft_q216_state_" +
       tmp.getFileName.toString.replaceAll("[^A-Za-z0-9_]", "_")
-    val ss = graft.Session.forStream(s)
-    ss.sql(s"DROP TABLE IF EXISTS $table")
+    s.sql(s"DROP TABLE IF EXISTS $table")
     try {
-      val quarter = math.max(1, docs.length / 4)
-      val batches = docs.grouped(quarter).toVector
+      val batches = docs.grouped(math.max(1, docs.length / 4)).toSeq
       // one incarnation of the absorber per phase — phase 2's instance
       // is constructed AFTER phase 1's died, seeing only the storage
-      def phase(bs: Seq[Array[SDoc]]): Unit = if (bs.nonEmpty) {
-        implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
-        val mem = MemoryStream[SDoc]
+      def phase(bs: Seq[Seq[SDoc]]): Unit = if (bs.nonEmpty) {
         val a = new StreamExactSubstr.PersistedAbsorber(table, tmp.toString,
           compactEvery = 3)
-        val q = StreamExactSubstr.appliedPersisted(mem.toDS(), a).start()
-        try bs.foreach { b =>
-          mem.addData(b.toIndexedSeq: _*); q.processAllAvailable()
-        } finally { q.stop(); a.flush() }
+        try StreamRunner.foreachBatch(s, bs)(a.absorb) finally a.flush()
       }
       phase(batches.take(2))
       phase(batches.drop(2))
       val out = Materialize.sorted(
-        ss.read.parquet(s"$tmp/emitted").drop("gen"), col("doc_id"))
-      ss.sql(s"DROP TABLE IF EXISTS $table")
+        s.read.parquet(s"$tmp/emitted").drop("gen"), col("doc_id"))
+      s.sql(s"DROP TABLE IF EXISTS $table")
       out
     } finally {
       // tidy the scratch storage; results are checkpointed already

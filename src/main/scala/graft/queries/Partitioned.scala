@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.Materialize
+import graft.operators.{Materialize, Upsert}
 
 /** q194: dynamic partition pruning over a date-partitioned fact layout —
   * the single most important scan optimization for a 100-TB fact table,
@@ -74,12 +74,7 @@ object Partitioned {
       writePartitioned(s, dir, root)
       Materialize.sorted(prunedAgg(s, root, urgentMonths(s, dir)),
         col("ship_month"))
-    } finally deleteRecursively(new java.io.File(root))
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete()
+    } finally Upsert.rmTree(new java.io.File(root))
   }
 
   /** Monthly per-flag partials — exact decimal sums so state ∪ delta
@@ -152,7 +147,7 @@ object Partitioned {
       Materialize.sorted(healed.select(col("ship_month"), col("l_returnflag"),
           col("n_items"), col("sum_qty").cast("double").as("sum_qty")),
         col("ship_month"), col("l_returnflag"))
-    } finally deleteRecursively(new java.io.File(root))
+    } finally Upsert.rmTree(new java.io.File(root))
   }
 
   /** Full recompute over the raw table — healed incremental state must be

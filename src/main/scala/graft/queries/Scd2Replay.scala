@@ -64,8 +64,7 @@ object Scd2Replay {
     */
   def q196StreamScd2(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.StreamScd2
+    import graft.streaming.{StreamRunner, StreamScd2}
     import graft.streaming.StreamScd2.Chg
     // the per-snapshot collect is the MemoryStream test transport (the
     // documented bounded slice that FEEDS the stream, not the operator)
@@ -79,20 +78,11 @@ object Scd2Replay {
         .map { case (code, seg, nat) => Chg(Days(i - 1), code, seg, nat) }
     }
     val (r1, r2, r3) = (rows(1), rows(2), rows(3))
-    val ss = graft.Session.forStream(s)
-    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
-    val mem = MemoryStream[Chg]
-    val m = new StreamScd2.Maintainer(ss)
-    val q = StreamScd2.applied(mem.toDS(), m).start()
-    try {
-      // batch 1: snapshot 1 + the FIRST HALF of snapshot 2 (boundary
-      // spans snapshots); batch 2: rest of 2; batch 3: snapshot 3
-      val (r2a, r2b) = r2.splitAt(r2.length / 2)
-      Seq(r1 ++ r2a, r2b, r3).foreach { b =>
-        mem.addData(b: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
+    val m = new StreamScd2.Maintainer(s)
+    // batch 1: snapshot 1 + the FIRST HALF of snapshot 2 (boundary spans
+    // snapshots); batch 2: rest of 2; batch 3: snapshot 3
+    val (r2a, r2b) = r2.splitAt(r2.length / 2)
+    StreamRunner.foreachBatch(s, Seq(r1 ++ r2a, r2b, r3))(m.absorb)
     m.flush() // snapshot 3 has no successor — explicit end-of-stream
     m.current.orderBy(col("code"), col("valid_from"))
   }

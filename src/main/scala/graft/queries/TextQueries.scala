@@ -1382,8 +1382,7 @@ GROUP BY d.source ORDER BY d.source"""
     * (Kafka/files); the screened plan itself is identical. */
   def q92StreamScreen(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.StreamNearDedup
+    import graft.streaming.{StreamNearDedup, StreamRunner}
     import graft.streaming.StreamNearDedup.Doc
     val docs = Tables.documents(s, dir)
     val isNew = col("doc_id") % 10 >= NewBatchMod
@@ -1391,39 +1390,22 @@ GROUP BY d.source ORDER BY d.source"""
     // deterministic event times ascending in doc_id: batch 2 (higher ids)
     // is strictly later than batch 1, so nothing is watermark-late
     val arriving = docs.filter(isNew)
-      .select(col("doc_id"), col("text")).as[(Long, String)].collect()
+      .select(col("doc_id"), col("text")).as[(Long, String)].collect().toSeq
       .sortBy(_._1)
       .map { case (id, t) =>
         Doc(new java.sql.Timestamp(1704067200000L + id * 1000L), id, t) }
-    val ss = graft.Session.forStream(s)
-    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
-    val mem = MemoryStream[Doc]
-    val sink = s"q92_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
     // the standing banded relation is read by EVERY micro-batch —
     // materialize it once for the streaming run's whole lifetime (the
     // in-process analog of the bucketed standing table at real scale)
-    val out = Materialize.withMaterialized(
+    Materialize.withMaterialized(
         StreamNearDedup.standingBanded(standing, ShingleK, NumHashes,
           RowsPerBand)) { sBand =>
-      // a real deployment sizes the state width to its own batch volume
-      // (it is fixed at the first checkpoint for the query's life)
-      val q = StreamNearDedup.screenBanded(mem.toDS(), sBand, ShingleK,
-          NumHashes, RowsPerBand, JaccardThreshold, lateness = "10 minutes")
-        .writeStream.format("memory").queryName(sink).outputMode("append")
-        .start()
-      try {
-        val (b1, b2) = arriving.splitAt(arriving.length / 2)
-        mem.addData(b1.toIndexedSeq: _*)
-        q.processAllAvailable()
-        mem.addData(b2.toIndexedSeq: _*)
-        q.processAllAvailable()
-      } finally q.stop()
-      Materialize.sorted(ss.table(sink)
-        .select(col("docId").as("new_doc_id"), col("dup_of"), col("jaccard")),
-        col("new_doc_id"), col("dup_of"))
+      StreamRunner.sorted(s, StreamRunner.slices(arriving, 2), Nil)(
+        StreamNearDedup.screenBanded(_, sBand, ShingleK, NumHashes,
+          RowsPerBand, JaccardThreshold, lateness = "10 minutes"))(
+        _.select(col("docId").as("new_doc_id"), col("dup_of"),
+          col("jaccard")), col("new_doc_id"), col("dup_of"))
     }
-    ss.catalog.dropTempView(sink)
-    out
   }
 
   /** The STREAMING ingest exact-dedup ([[graft.streaming.StreamDedup]])
@@ -1440,8 +1422,7 @@ GROUP BY d.source ORDER BY d.source"""
     * dedup for older dups (the documented lambda split). */
   def q94StreamDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.StreamDedup
+    import graft.streaming.{StreamDedup, StreamRunner}
     import graft.streaming.StreamDedup.Doc
     val ranked = Tables.documents(s, dir)
       .withColumn("fp", graft.functions.Text.fingerprint(col("text")))
@@ -1450,24 +1431,13 @@ GROUP BY d.source ORDER BY d.source"""
       .select(col("doc_id"), col("text"), col("occ"))
       .as[(Long, String, Int)].collect()
     val stepMs = (ranked.map(_._1).max + 1) * 1000L + 601000L
-    val batches = ranked.groupBy(_._3).toSeq.sortBy(_._1).map(_._2)
-    val ss = graft.Session.forStream(s)
-    implicit val sq: org.apache.spark.sql.SQLContext = ss.sqlContext
-    val mem = MemoryStream[Doc]
-    val sink = s"q94_sink_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
-    val q = StreamDedup.dedup(mem.toDS(), lateness = "3650 days")
-      .writeStream.format("memory").queryName(sink).outputMode("append")
-      .start()
-    try batches.foreach { b =>
-      mem.addData(b.map { case (id, t, occ) =>
+    val batches = ranked.groupBy(_._3).toSeq.sortBy(_._1).map(_._2.toSeq
+      .map { case (id, t, occ) =>
         Doc(new java.sql.Timestamp(
-          1704067200000L + occ * stepMs + id * 1000L), id, t) }.toIndexedSeq: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    val out = Materialize.sorted(ss.table(sink)
-      .select(col("docId").as("doc_id"), col("fp")), col("doc_id"))
-    ss.catalog.dropTempView(sink)
-    out
+          1704067200000L + occ * stepMs + id * 1000L), id, t) })
+    StreamRunner.sorted(s, batches, Nil)(
+      StreamDedup.dedup(_, lateness = "3650 days"))(
+      _.select(col("docId").as("doc_id"), col("fp")), col("doc_id"))
   }
 
   /** Same contract as batch q09: first doc per content fingerprint. */

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
-import graft.operators.{CountMin, Incremental, Materialize}
+import graft.operators.CountMin
 
 /** Streaming Count-Min maintenance — the ninth streaming shape: a
   * standing CMS register grid absorbs each micro-batch of DOCUMENTS via
@@ -31,26 +31,9 @@ object StreamCms {
         .groupBy(col("tok")).agg(count(lit(1)).as("cnt")),
       "tok", "cnt"))
 
-  /** Standing grid for an in-process run; eager checkpoint per merge so
-    * lineage never chains across batches (the q116 discipline). */
-  final class Maintainer {
-    @volatile private var state: Option[DataFrame] = None
-    def absorb(batch: DataFrame): Unit = synchronized {
-      val p = registersPartial(batch)
-      state = Some(state match {
-        case None => Materialize.pin(p)
-        case Some(st) => Materialize.pin(Incremental.mergePartials(st, p,
-            Seq("i", "bucket"), addCols = Seq("rc"),
-            minCols = Seq.empty, maxCols = Seq.empty))
-      })
-    }
-    def current: DataFrame = state.getOrElse(
-      throw new IllegalStateException("no batches absorbed"))
-  }
-
-  def maintained(docs: Dataset[Doc], m: Maintainer) =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[Doc], _: Long) =>
-        m.absorb(batch.toDF())
-      }
+  /** The standing grid: [[registersPartial]] per batch, counters added
+    * per (row, bucket) — q116's maintainer with the grid's merge. */
+  def maintainer: StreamMaintain.Maintainer =
+    new StreamMaintain.Maintainer(registersPartial, Seq("i", "bucket"),
+      addCols = Seq("rc"), minCols = Nil, maxCols = Nil)
 }

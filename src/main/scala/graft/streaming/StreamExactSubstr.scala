@@ -44,7 +44,10 @@ object StreamExactSubstr {
 
   /** Mutable standing state + accumulated emissions for an in-process
     * run. Each state and emission is eagerly checkpointed so lineage
-    * never chains across batches. */
+    * never chains across batches. A batch releases its input pins and the
+    * state it supersedes once its own state is pinned, and [[results]]
+    * releases the last state, so after a run only the emissions it
+    * returns hold blocks. */
   final class Absorber {
     @volatile private var state: Option[DataFrame] = None
     @volatile private var emitted: List[DataFrame] = Nil
@@ -69,20 +72,21 @@ object StreamExactSubstr {
             least(coalesce(col("base_kmin"), col("__m")),
               coalesce(col("__m"), col("base_kmin"))).as("base_kmin")))))
       emitted = both(0) :: emitted
+      (docs :: grams :: state.toList).foreach(Materialize.release)
       state = Some(both(1))
     }
 
-    def results: DataFrame = emitted match {
-      case Nil => throw new IllegalStateException("no batches absorbed")
-      case hd :: tl => tl.foldLeft(hd)(_ unionByName _)
+    /** The accumulated emissions. Ends the run: the standing state, which
+      * nothing reads after the last batch, is released. */
+    def results: DataFrame = synchronized {
+      state.foreach(Materialize.release)
+      state = None
+      emitted match {
+        case Nil => throw new IllegalStateException("no batches absorbed")
+        case hd :: tl => tl.foldLeft(hd)(_ unionByName _)
+      }
     }
   }
-
-  /** Wire an absorber onto a document stream; caller starts/stops. */
-  def applied(docs: Dataset[SDoc], a: Absorber) =
-    docs.writeStream.foreachBatch {
-      (batch: Dataset[SDoc], _: Long) => a.absorb(batch)
-    }
 
   /** PERSISTED absorber — the restartable production shape of
     * [[Absorber]]: the standing gram-keeper state lives in a BUCKETED
@@ -326,6 +330,7 @@ object StreamExactSubstr {
       else
         graft.sources.Bucketed.writeBucketed(mins, table,
           s"$path/state", "gram", 16)
+      Seq(docs, grams, mins).foreach(Materialize.release)
       genMeta = Some((gen, nGens + 1L))
       if (nGens + 1L >= compactEvery.toLong) {
         // queued, not run: the fold overlaps the NEXT batch's input
@@ -343,8 +348,9 @@ object StreamExactSubstr {
       val merged = Materialize.pin(resolved(s.table(table))
         .withColumn("gen", lit(gen)))
         // lineage reads the table being replaced
-      graft.sources.Bucketed.writeBucketed(merged, table,
+      try graft.sources.Bucketed.writeBucketed(merged, table,
         s"$path/state", "gram", 16)
+      finally Materialize.release(merged)
     }
 
     /** Accumulated emissions across every absorber incarnation that
@@ -352,10 +358,4 @@ object StreamExactSubstr {
     def results(s: SparkSession): DataFrame =
       s.read.parquet(s"$path/emitted").drop("gen")
   }
-
-  /** Wire a persisted absorber onto a document stream. */
-  def appliedPersisted(docs: Dataset[SDoc], a: PersistedAbsorber) =
-    docs.writeStream.foreachBatch {
-      (batch: Dataset[SDoc], _: Long) => a.absorb(batch)
-    }
 }

@@ -32,31 +32,29 @@ object StreamMaintain {
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
         min(col("cents")).as("min_cents"), max(col("cents")).as("max_cents"))
 
-  /** Mutable standing state for an in-process maintenance run. Each merged
-    * state is bounded (key cardinality) and eagerly checkpointed so the
-    * lineage never chains across batches. */
-  final class Maintainer {
+  /** The q116 maintainer: [[partials]] merged per event type. */
+  def maintainer: Maintainer = new Maintainer(partials, Seq("eventType"),
+    addCols = Seq("n", "sum_cents"), minCols = Seq("min_cents"),
+    maxCols = Seq("max_cents"))
+
+  /** Standing state for an in-process maintenance run: each batch's
+    * `partialsOf` merged into the state by [[Incremental.mergePartials]]
+    * over `keys` and the column roles. Each merged state is bounded (key
+    * cardinality) and pinned, so lineage never chains across batches; the
+    * pin it supersedes is released once the new one exists, so only the
+    * current state holds blocks. */
+  final class Maintainer(partialsOf: DataFrame => DataFrame,
+                         keys: Seq[String], addCols: Seq[String],
+                         minCols: Seq[String], maxCols: Seq[String]) {
     @volatile private var state: Option[DataFrame] = None
-    def absorb(batch: DataFrame): Unit = synchronized {
-      val p = partials(batch)
-      state = Some(state match {
-        case None => Materialize.pin(p)
-        case Some(st) => Materialize.pin(Incremental.mergePartials(st, p,
-            Seq("eventType"),
-            addCols = Seq("n", "sum_cents"),
-            minCols = Seq("min_cents"), maxCols = Seq("max_cents")))
-      })
+    def absorb(batch: Dataset[_]): Unit = synchronized {
+      val p = partialsOf(batch.toDF())
+      val next = Materialize.pin(state.fold(p)(st =>
+        Incremental.mergePartials(st, p, keys, addCols, minCols, maxCols)))
+      state.foreach(Materialize.release)
+      state = Some(next)
     }
     def current: DataFrame = state.getOrElse(
       throw new IllegalStateException("no batches absorbed"))
   }
-
-  /** Wire a maintainer onto an event stream: quantize, then merge each
-    * micro-batch's partials into the standing state. Returns the writer —
-    * caller starts/stops the query. */
-  def maintained(events: Dataset[Ev], m: Maintainer) =
-    events.writeStream
-      .foreachBatch { (batch: Dataset[Ev], _: Long) =>
-        m.absorb(batch.toDF())
-      }
 }

@@ -102,8 +102,10 @@ object StreamScd2 {
           .withColumn("is_current", lit(false))
       }
       // eager checkpoint per level — same anti-exponential-lineage rule
-      // as the q58 batch replay
+      // as the q58 batch replay; the level it supersedes is released once
+      // the new one exists
       history = Some(Materialize.pin(Scd2.merge(h, snap, keys, attrs, day)))
+      Materialize.release(h)
     }
 
     def current: DataFrame = synchronized {
@@ -170,9 +172,4 @@ object StreamScd2 {
         mergeOldest()
     }
   }
-
-  /** Wire a maintainer onto a change stream; caller starts/stops. */
-  def applied(changes: Dataset[Chg], m: MaintainerBase) =
-    changes.writeStream
-      .foreachBatch { (batch: Dataset[Chg], _: Long) => m.absorb(batch) }
 }

@@ -1,8 +1,11 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.SparkListenerInterface
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryListenerBus
 import org.apache.spark.storage.RDDBlockId
 
 /** Minimal bridge to `private[sql]` and `private[spark]` members — the
@@ -31,4 +34,22 @@ object GraftInterop {
     classic.Dataset.ofRows(session, r.copy()(session,
       Some(Statistics(sizeInBytes = BigInt(bytes))), Some(r.constraints)))
   }
+
+  /** The streaming-query listener buses on `sc`'s listener bus. Spark
+    * adds one for every session whose query manager is first used
+    * (including the clone each streaming query runs its batches on) and
+    * never removes it. */
+  def streamListenerBuses(sc: SparkContext): Seq[SparkListenerInterface] =
+    sc.listenerBus.findListenersByClass[StreamingQueryListenerBus]()
+
+  /** Removes every streaming-query listener bus not in `keep` that
+    * forwards to no listener of its own. Such a bus delivers nothing; the
+    * one it could still matter to is a session that first used its query
+    * manager after `keep` was taken and adds a listener later, so call
+    * this where no other thread starts streaming at the same time. */
+  def removeIdleStreamBuses(sc: SparkContext,
+      keep: Set[SparkListenerInterface]): Unit =
+    sc.listenerBus.findListenersByClass[StreamingQueryListenerBus]()
+      .filter(b => !keep(b) && b.listeners.isEmpty)
+      .foreach(sc.removeSparkListener)
 }

@@ -4,8 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** `Bench`'s one stability rule ([[Bench.suspects]]): a row re-measures
   * for wide warm spread or for history, never for load; the partial line
-  * flags the history rows with the same predicate; and a query list with
-  * an unknown name is refused. */
+  * flags the history rows with the same predicate; only a prior measured
+  * at the run's core count anchors history; and a query list with an
+  * unknown name is refused. */
 class BenchSpec extends AnyFunSuite {
   import Bench.QRes
 
@@ -65,6 +66,30 @@ class BenchSpec extends AnyFunSuite {
       case (n, why) if why.startsWith("hist") => n.takeWhile(_ != '_') }
     assert(flagged == hist.toSet && flagged == Set("q15", "q206"))
     assert(line.contains("\"partial\":true") && line.contains("\"qn\":10"))
+  }
+
+  test("a prior from another core count orders and sizes but triggers no history") {
+    val sf = "data/sf0.1"
+    def art(extra: String) =
+      s"""{"metric":"total","queries":{"q15":1.5,"q14":1.0},$extra"sf":"$sf"}"""
+    val medians = Map("q15" -> 1.5, "q14" -> 1.0)
+    // no "cpus" (the r18 artifact) and a different count: medians kept,
+    // no history anchor
+    Seq(art(""), art("\"cpus\":8,")).foreach { txt =>
+      val (prior, history) = Bench.parsePrior(txt, sf, 4)
+      assert(prior == medians && history.isEmpty, txt)
+      val done = Seq(iso -> res(3.0, 0.1, 0.05))
+      assert(Bench.suspects(done, history).isEmpty)
+      assert(Bench.partialLine(done, 1, history).contains("\"suspect\":[]"))
+    }
+    // the same count anchors history
+    val (prior, history) = Bench.parsePrior(art("\"cpus\":4,"), sf, 4)
+    assert(prior == medians && history == medians)
+    assert(Bench.suspects(Seq(iso -> res(3.0, 0.1, 0.05)), history) ==
+      Seq(iso -> "hist"))
+    // another scale factor gives neither
+    assert(Bench.parsePrior(art("\"cpus\":4,"), "data/sf1", 4) ==
+      ((Map.empty, Map.empty)))
   }
 
   test("a query list with an unknown or no name is refused, naming it") {

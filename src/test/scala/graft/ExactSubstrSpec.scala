@@ -141,27 +141,17 @@ class ExactSubstrSpec extends AnyFunSuite {
   }
 
   test("streaming absorb is batch-boundary invariant: 1-batch and 3-batch splits equal q211") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.StreamExactSubstr
+    import graft.streaming.{StreamExactSubstr, StreamRunner}
     import graft.streaming.StreamExactSubstr.SDoc
     import spark.implicits._
     val batch = queries.ExactSubstr.q211ExactSubstrDedup(spark, dir)
       .collect().toSeq
     def streamed(nBatches: Int): Seq[org.apache.spark.sql.Row] = {
-      val docs = normDocsDf.orderBy(col("doc_id")).as[SDoc].collect()
-      implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val mem = MemoryStream[SDoc]
+      val docs = normDocsDf.orderBy(col("doc_id")).as[SDoc].collect().toSeq
       val a = new StreamExactSubstr.Absorber
-      val saved = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val q = StreamExactSubstr.applied(mem.toDS(), a).start()
-        try {
-          docs.grouped(math.max(1, docs.length / nBatches)).foreach { b =>
-            mem.addData(b.toIndexedSeq: _*); q.processAllAvailable()
-          }
-        } finally q.stop()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+      // the runner streams at Session.StreamStateWidth (8)
+      StreamRunner.foreachBatch(spark,
+        docs.grouped(math.max(1, docs.length / nBatches)).toSeq)(a.absorb)
       a.results.orderBy(col("doc_id")).collect().toSeq
     }
     assert(streamed(1) == batch, "single-batch stream diverged from q211")

@@ -2,11 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One pin entry and one sorted-output gate: in the engine sources only
-  * `Materialize.scala` may call `localCheckpoint`; every other eager
-  * checkpoint calls [[graft.operators.Materialize.pin]], and every
-  * sort-and-pin calls [[graft.operators.Materialize.sorted]]. A top-k
-  * (`orderBy(...).limit(k)`) is not a range sort and is exempt. */
+/** One pin entry, one sorted-output gate and one stream runner: in the
+  * engine sources only `Materialize.scala` may call `localCheckpoint`;
+  * every other eager checkpoint calls [[graft.operators.Materialize.pin]],
+  * and every sort-and-pin calls [[graft.operators.Materialize.sorted]]. A
+  * top-k (`orderBy(...).limit(k)`) is not a range sort and is exempt. Only
+  * `StreamRunner.scala` may build an in-process stream (a MemoryStream, a
+  * memory sink, a `processAllAvailable` feed loop). */
 class SortedGateLintSpec extends AnyFunSuite {
 
   /** `src` with comments and the contents of string and char literals
@@ -112,6 +114,19 @@ class SortedGateLintSpec extends AnyFunSuite {
     }.toSeq
   }
 
+  /** Lines of `src` that build an in-process stream: a `MemoryStream[`,
+    * a `.format("memory")` sink or a `processAllAvailable(` call. */
+  def streamPlumbing(src: String): Seq[Int] = {
+    val code = codeOnly(src)
+    // literals are blanked in `code`; offsets still hold, so the sink's
+    // format name is read from `src`
+    val sinks = """\.\s*format\s*\(\s*"""".r.findAllMatchIn(code)
+      .filter(m => src.startsWith("\"memory\"", m.end - 1))
+    val calls = """\bMemoryStream\s*\[|\bprocessAllAvailable\s*\(""".r
+      .findAllMatchIn(code)
+    (sinks ++ calls).map(m => lineOf(code, m.start)).toSeq.sorted
+  }
+
   test("the scan flags a sort-and-pin and exempts a top-k") {
     assert(handSortedPins(
       "val a = Materialize.pin(df.orderBy(col(\"k\")))") == Seq(1))
@@ -140,6 +155,16 @@ class SortedGateLintSpec extends AnyFunSuite {
       Seq(3, 5))
   }
 
+  test("the scan flags stream plumbing and skips comments and strings") {
+    assert(streamPlumbing("val m = MemoryStream[Ev]\n" +
+      "q.writeStream\n  .format(\"memory\").start()\n" +
+      "q.processAllAvailable ()") == Seq(1, 3, 4))
+    assert(streamPlumbing("df.write.format(\"parquet\")\n" +
+      "import x.MemoryStream\nval n = \"processAllAvailable()\"\n" +
+      "// MemoryStream[Ev] .format(\"memory\")\n" +
+      "/** q.processAllAvailable() */ MemoryStream [ Doc ]") == Seq(5))
+  }
+
   private def engineSources: Seq[(java.io.File, String)] = {
     val root = new java.io.File("src/main/scala")
     def files(d: java.io.File): Seq[java.io.File] =
@@ -153,24 +178,30 @@ class SortedGateLintSpec extends AnyFunSuite {
       new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
   }
 
-  /** `scan`'s finds outside `Materialize.scala`, after checking that it
-    * finds the real one inside it. */
-  private def outsideGate(scan: String => Seq[Int]): Seq[String] = {
-    val (gate, others) =
-      engineSources.partition(_._1.getName == "Materialize.scala")
+  /** `scan`'s finds outside the source file named `owner`, after
+    * checking that it finds the real one inside it. */
+  private def outsideGate(scan: String => Seq[Int],
+      owner: String): Seq[String] = {
+    val (gate, others) = engineSources.partition(_._1.getName == owner)
     assert(gate.size == 1 && scan(gate.head._2).nonEmpty)
     others.flatMap { case (f, src) => scan(src).map(l => s"${f.getPath}:$l") }
   }
 
   test("no engine source but Materialize.scala sorts and pins by hand") {
-    val found = outsideGate(handSortedPins)
+    val found = outsideGate(handSortedPins, "Materialize.scala")
     assert(found.isEmpty, "sort-and-pin outside Materialize.sorted: " +
       found.mkString(", "))
   }
 
   test("no engine source but Materialize.scala calls localCheckpoint") {
-    val found = outsideGate(bareCheckpoints)
+    val found = outsideGate(bareCheckpoints, "Materialize.scala")
     assert(found.isEmpty, "localCheckpoint outside Materialize.pin: " +
+      found.mkString(", "))
+  }
+
+  test("no engine source but StreamRunner.scala builds an in-process stream") {
+    val found = outsideGate(streamPlumbing, "StreamRunner.scala")
+    assert(found.isEmpty, "stream plumbing outside StreamRunner: " +
       found.mkString(", "))
   }
 }

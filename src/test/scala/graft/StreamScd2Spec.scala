@@ -1,12 +1,11 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Scd2
-import graft.streaming.StreamScd2
+import graft.streaming.{StreamRunner, StreamScd2}
 import graft.streaming.StreamScd2.Chg
 
 /** Pins the streaming CDC→SCD2 contract ([[StreamScd2]], gated as q196):
@@ -57,17 +56,12 @@ class StreamScd2Spec extends AnyFunSuite {
   private def streamReplay(batches: Seq[Seq[Chg]],
                            m: StreamScd2.MaintainerBase): Seq[(Long, String, Long, String, String, Boolean)] = {
     import spark.implicits._
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[Chg]
-    val q = StreamScd2.applied(mem.toDS(), m).start()
-    // flush/canon stay INSIDE the try: if a batch feed throws, the
-    // original exception must propagate, not a confusing secondary
-    // failure from flushing a partially-fed maintainer
-    try {
-      batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-      m.flush()
-      canon(m.current)
-    } finally q.stop()
+    // if a batch feed throws, the runner rethrows it before the flush, so
+    // the original exception propagates, not a secondary failure from
+    // flushing a partially-fed maintainer
+    StreamRunner.foreachBatch(spark, batches)(m.absorb)
+    m.flush()
+    canon(m.current)
   }
 
   private def streamReplay(batches: Seq[Seq[Chg]]): Seq[(Long, String, Long, String, String, Boolean)] =
@@ -155,19 +149,14 @@ class StreamScd2Spec extends AnyFunSuite {
 
   test("half-arrived snapshot is buffered, not merged as delists") {
     import spark.implicits._
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[Chg]
     val m = new StreamScd2.Maintainer(spark)
-    val q = StreamScd2.applied(mem.toDS(), m).start()
-    try {
-      mem.addData(snapRows(1): _*); q.processAllAvailable()
-      // snapshot 1 has no successor yet → nothing merged
-      intercept[IllegalStateException](m.current)
-      // first row of snapshot 2 arrives → snapshot 1 merges COMPLETE;
-      // snapshot 2's missing keys must NOT appear delisted
-      mem.addData(snapRows(2).take(1): _*); q.processAllAvailable()
-      val h1 = canon(m.current)
-      assert(h1.size == 3 && h1.forall(_._6), s"snapshot 1 alone, all current: $h1")
-    } finally q.stop()
+    StreamRunner.foreachBatch(spark, Seq(snapRows(1)))(m.absorb)
+    // snapshot 1 has no successor yet → nothing merged
+    intercept[IllegalStateException](m.current)
+    // first row of snapshot 2 arrives → snapshot 1 merges COMPLETE;
+    // snapshot 2's missing keys must NOT appear delisted
+    StreamRunner.foreachBatch(spark, Seq(snapRows(2).take(1)))(m.absorb)
+    val h1 = canon(m.current)
+    assert(h1.size == 3 && h1.forall(_._6), s"snapshot 1 alone, all current: $h1")
   }
 }

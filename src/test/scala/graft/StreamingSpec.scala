@@ -186,22 +186,15 @@ class StreamingSpec extends AnyFunSuite {
 
   test("stream maintenance: state is invariant to micro-batch boundaries") {
     import spark.implicits._
-    import graft.streaming.StreamMaintain
+    import graft.streaming.{StreamMaintain, StreamRunner}
     import graft.streaming.StreamMaintain.Ev
-    implicit val sc = spark.sqlContext
     val evs = (1 to 40).map { i =>
       Ev(ts(f"2024-01-01 10:${i % 60}%02d:00"),
         if (i % 3 == 0) "a" else "b", (i * 7 % 23).toLong)
     }
     def runWith(chunks: Seq[Seq[Ev]]): Map[String, (Long, Long, Long, Long)] = {
-      val mem = MemoryStream[Ev]
-      val m = new StreamMaintain.Maintainer
-      val q = StreamMaintain.maintained(mem.toDS(), m).start()
-      try {
-        chunks.foreach { c =>
-          mem.addData(c.toIndexedSeq: _*); q.processAllAvailable()
-        }
-      } finally q.stop()
+      val m = StreamMaintain.maintainer
+      StreamRunner.foreachBatch(spark, chunks)(m.absorb)
       m.current.collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     }
@@ -218,20 +211,13 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming CMS registers are invariant to micro-batch boundaries") {
     import spark.implicits._
-    import graft.streaming.StreamCms
+    import graft.streaming.{StreamCms, StreamRunner}
     import graft.streaming.StreamCms.Doc
-    implicit val sc = spark.sqlContext
     val docs = (1 to 30).map(i =>
       Doc(i.toLong, s"tok${i % 7} tok${i % 5} tok${i % 3} shared words"))
     def runWith(chunks: Seq[Seq[Doc]]): Map[(Int, Long), Long] = {
-      val mem = MemoryStream[Doc]
-      val m = new StreamCms.Maintainer
-      val q = StreamCms.maintained(mem.toDS(), m).start()
-      try {
-        chunks.foreach { c =>
-          mem.addData(c.toIndexedSeq: _*); q.processAllAvailable()
-        }
-      } finally q.stop()
+      val m = StreamCms.maintainer
+      StreamRunner.foreachBatch(spark, chunks)(m.absorb)
       m.current.collect().map(r =>
         (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
     }
