@@ -32,7 +32,7 @@ import scala.jdk.CollectionConverters._
   * Env knobs (7): `SPARK_GRAFT_SF_DIR` (data, default sf0.1),
   * `SPARK_GRAFT_BENCH_ONLY` (comma-separated query list; an unknown name
   * exits 2), `SPARK_GRAFT_BENCH_REPS` (default 3),
-  * `SPARK_GRAFT_BENCH_DEADLINE_SEC` ([[deadlineSec]]),
+  * `SPARK_GRAFT_BENCH_DEADLINE_SEC` ([[deadlineOf]]),
   * `SPARK_GRAFT_BENCH_OUT` (the artifact, default `bench_results.json`),
   * `SPARK_GRAFT_BENCH_PRIOR` (the history anchor, default the artifact)
   * and `SPARK_GRAFT_BENCH_MIN` (per-query minima on stderr). Cores come
@@ -93,7 +93,6 @@ object Bench {
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
         val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
         if (ok) dt else -1.0
       }
@@ -374,23 +373,6 @@ object Bench {
         else Right(asked)
     }
 
-  /** Optional wall-clock budget (seconds) for the WHOLE coordinator run
-    * (the round-16 "make the bench fit the driver's harness" ask). When
-    * set, the coordinator (a) sheds reps 3 → 1 for the remaining
-    * children once the projected full-rep finish (plus a reserve for the
-    * stability pass) would overrun the budget — coverage is shed last,
-    * reps first — and (b) skips the stability remeasure pass when the
-    * remaining budget cannot pay for it. Shedding events are recorded in
-    * the JSON (`"shed"` = children forked at reps=1).
-    *
-    * Round-18 (VERDICT #2): the deadline DEFAULTS ON in non-interactive
-    * runs — the driver's bench budget killed the 32-core run in three
-    * of the last five rounds (rc 124) because the env opt-in was never
-    * set, so poisoned first-pass medians survived into the artifact and
-    * the stability pass never ran. stdin-not-a-tty is the driver/CI
-    * signature; SPARK_GRAFT_BENCH_DEADLINE_SEC still overrides (any
-    * value ≤ 0 or unparsable = explicitly unbounded — the
-    * committed-artifact regime). */
   /** 25 min, from the r17 driver evidence: the 8-core run PASSED at
     * ~21.5 min wall with its stability pass, the 32-core run was killed
     * at ≥ ~29 min — the budget sits between. A tighter default (the
@@ -399,18 +381,35 @@ object Bench {
     * per-query artifact the history comparison reads as across-the-board
     * regressions; 25 min sheds only the cheap tail, and only when the
     * box is genuinely slower than projected. */
-  private val DefaultDeadlineSec = 1500L
-  private lazy val deadlineSec: Option[Long] =
-    sys.env.get("SPARK_GRAFT_BENCH_DEADLINE_SEC") match {
-      case Some(v) => scala.util.Try(v.trim.toLong).toOption.filter(_ > 0)
-      case None =>
-        if (System.console() == null) Some(DefaultDeadlineSec) else None
-    }
-  /** True when the implicit non-interactive default, not the env knob,
-    * set the deadline — written into every JSON line so budget-governed
-    * artifacts are told apart from unbounded ones. */
-  private lazy val deadlineDefault: Boolean =
-    deadlineSec.isDefined && !sys.env.contains("SPARK_GRAFT_BENCH_DEADLINE_SEC")
+  val DefaultDeadlineSec = 1500L
+
+  /** Wall-clock budget (seconds) for the WHOLE coordinator run, from the
+    * value of `SPARK_GRAFT_BENCH_DEADLINE_SEC`: unset is
+    * [[DefaultDeadlineSec]], a positive whole number of seconds is that
+    * budget, and anything else (≤ 0 or unparsable) is none — the
+    * unbounded committed-artifact regime. Nothing else decides, so a run
+    * piped to a log and one started from a terminal get the same budget.
+    *
+    * Under a budget the coordinator (a) sheds reps 3 → 1 for the
+    * remaining children once the projected full-rep finish (plus a
+    * reserve for the stability pass) would overrun it — coverage is shed
+    * last, reps first — and (b) skips the stability remeasure pass when
+    * the remaining budget cannot pay for it. Shedding events are recorded
+    * in the JSON (`"shed"` = children forked at reps=1). The default is
+    * on because, while the budget was opt-in, the 32-core run was killed
+    * by its outer time limit in three rounds (rc 124): poisoned
+    * first-pass medians survived into the artifact and the stability
+    * pass never ran. */
+  def deadlineOf(knob: Option[String]): Option[Long] = knob match {
+    case Some(v) => scala.util.Try(v.trim.toLong).toOption.filter(_ > 0)
+    case None => Some(DefaultDeadlineSec)
+  }
+  private val deadlineKnob = sys.env.get("SPARK_GRAFT_BENCH_DEADLINE_SEC")
+  private lazy val deadlineSec: Option[Long] = deadlineOf(deadlineKnob)
+  /** True when the default, not the env knob, set the deadline — written
+    * into every JSON line so budget-governed artifacts are told apart
+    * from unbounded ones. */
+  private lazy val deadlineDefault: Boolean = deadlineKnob.isEmpty
   /** Budget slice the shed decision keeps aside so the stability pass
     * (the spread/history remeasures — what rescued q209-style poisoned
     * medians every round it ran) survives under a deadline: shedding
@@ -462,15 +461,9 @@ object Bench {
       case Right(ns) => ns
       case Left(why) => System.err.println(s"BENCH: $why"); sys.exit(2)
     }
-    System.err.println(deadlineSec match {
-      case Some(d) if deadlineDefault =>
-        s"BENCH: deadline ${d}s (non-interactive default)"
-      case Some(d) => s"BENCH: deadline ${d}s (SPARK_GRAFT_BENCH_DEADLINE_SEC)"
-      case None =>
-        if (sys.env.contains("SPARK_GRAFT_BENCH_DEADLINE_SEC"))
-          "BENCH: deadline none (SPARK_GRAFT_BENCH_DEADLINE_SEC)"
-        else "BENCH: deadline none (interactive)"
-    })
+    System.err.println(s"BENCH: deadline " +
+      deadlineSec.fold("none")(d => s"${d}s") +
+      (if (deadlineDefault) " (default)" else " (SPARK_GRAFT_BENCH_DEADLINE_SEC)"))
     // read the LAST COMMITTED artifact once, before this run overwrites
     // it — the history anchor for the stability pass and the heavy
     // tier's order

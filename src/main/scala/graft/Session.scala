@@ -29,11 +29,7 @@ object Session {
     "spark.sql.shuffle.partitions" -> cpus.toString,
     "spark.sql.session.timeZone" -> "UTC",
     "spark.ui.enabled" -> "false",
-    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheMaxEntries.toString,
-    // let AQE coalesce partitions inside cached (persisted) subtrees —
-    // otherwise persist() freezes small shuffles at the full partition
-    // count and schedules empty tasks (~2x on the LSH pipeline)
-    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheMaxEntries.toString)
 
   /** A `local[cpus]` session with [[settings]], logging at WARN. */
   def local(cpus: Int): SparkSession = {

@@ -18,11 +18,8 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // intra-query persists are intentional reuse; they must not leak
-      // into the next query's session (cache pressure + re-cache warnings).
-      // localCheckpoint() blocks are persistent RDDs, NOT catalog caches —
-      // release them too or they accumulate across the 77-query run
-      spark.catalog.clearCache()
+      // a query's result and intermediate pins are persistent RDDs; release
+      // them or they accumulate across the run
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -77,7 +77,7 @@ object Bpe {
       }
       val enc = Materialize.pin(cur.select(col("word"), col("sp").as("encoded"),
         size(split(col("sp"), " ")).cast("long").as("n_sym"), col("freq")))
-        // vocabulary-sized; must outlive the cache scope
+        // vocabulary-sized; must outlive the scope's pin
       (acc.result(), enc)
     }
     val schema = StructType(Seq(StructField("round", IntegerType, false),

@@ -62,7 +62,7 @@ object Dedup {
   /** Per-doc DISTINCT 60-bit shingle-hash array ([[Text.hash60]] of each
     * k-gram), computed entirely map-side — the scale-preferred carrier for
     * the whole LSH pipeline: signatures fold over it, the verify stage
-    * intersects it, and it is what gets cached/shuffled. Longs are ~2-3×
+    * intersects it, and it is what gets pinned/shuffled. Longs are ~2-3×
     * smaller than the string shingles and intersect faster; md5 is computed
     * once per shingle occurrence here and never again. Distinctness is on
     * the hash (not the string): a 60-bit collision within one ~300-shingle
@@ -111,11 +111,11 @@ object Dedup {
     * 210s vs ~2s on the 500-doc table — and would be fatal at real
     * scale).
     *
-    * Cache lifecycle: `cand0` is scoped-materialized while the
+    * Pin lifecycle: `cand0` is scoped-materialized while the
     * (candidate-sized) result is computed — it feeds both the intersection
     * join and the output join — and the result returns as a
-    * [[Materialize.pin]], so no cache outlives the call and nothing is the
-    * caller's to release. Same contract as [[minhashCandidates]]. */
+    * [[Materialize.pin]], so no other pin outlives the call and nothing is
+    * the caller's to release. Same contract as [[minhashCandidates]]. */
   def jaccardForCandidates(cand0: DataFrame, sh: DataFrame,
                            idCol: String): DataFrame =
     Materialize.withMaterialized(cand0) { cand =>
@@ -239,9 +239,8 @@ object Dedup {
   def minhashCandidates(sig: DataFrame, idCol: String,
                         rowsPerBand: Int): DataFrame =
     // scoped-materialized: the bucket self-join reads the banded relation
-    // from both sides concurrently (stampede guard — see Materialize);
-    // the candidate-sized result leaves the scope as an eager
-    // localCheckpoint, so no cache outlives the call
+    // from both sides; the candidate-sized result leaves the scope as a
+    // pin, so nothing else outlives the call
     Materialize.withMaterialized(
         bandedSignatures(sig, idCol, rowsPerBand)) { banded =>
       Materialize.pin(banded
@@ -259,7 +258,7 @@ object Dedup {
     * standing side's banded relation is a bucketed table maintained
     * incrementally). No id ordering between the sides; each banded
     * relation has a single consumer, so neither needs the self-join's
-    * stampede cache — only the bounded candidate output is materialized
+    * scoped pin — only the bounded candidate output is materialized
     * (eager localCheckpoint, nothing for the caller to release).
     *
     * Scale shape: one bucket equi-join; the batch side is small and
@@ -346,7 +345,8 @@ object Dedup {
     * fans out linearly in block occurrences (a hot boilerplate block
     * costs its occurrence count, never a quadratic pair set — contrast
     * the df-cap discussion in [[containmentPairs]]); the rollup is one
-    * doc-keyed aggregation. Three shuffles total, all combinable. */
+    * doc-keyed aggregation. Three shuffles total, all combinable. The
+    * per-doc result leaves the scope as a [[Materialize.pin]]. */
   def spanDedup(docs: DataFrame, idCol: String, textCol: String,
                 w: Int, posCap: Long): DataFrame = {
     val toks = docs.select(col(idCol),
@@ -366,7 +366,7 @@ object Dedup {
           .otherwise(raise_error(concat(lit(s"spanDedup posCap $posCap " +
             "exceeded at blk="), col("blk").cast("string")))))
       val keep = blk.groupBy(col("bh")).agg(min(col("__k")).as("kmin"))
-      blk.join(keep, Seq("bh"))
+      Materialize.pin(blk.join(keep, Seq("bh"))
         .withColumn("kept", col("__k") === col("kmin"))
         .groupBy(col(idCol))
         .agg(count(lit(1)).as("n_blocks"),
@@ -379,7 +379,7 @@ object Dedup {
           col("n_tokens_kept"),
           when(size(col("karr")) > 0,
             md5(expr("array_join(transform(karr, x -> x.btxt), ' ')")
-              .cast("binary"))).as("kept_fp"))
+              .cast("binary"))).as("kept_fp")))
     }
   }
 
@@ -443,7 +443,7 @@ object Dedup {
     * shuffle), every bucket is ≤ maxDf rows, and the aggregation shuffles
     * only (id1, id2) pairs — the same envelope as the LSH banding join.
     *
-    * Cache lifecycle: `fps0` and the df-filtered exploded relation are
+    * Pin lifecycle: `fps0` and the df-filtered exploded relation are
     * scoped-materialized (the former feeds the explode and both size
     * joins; the latter both sides of the pair self-join); the pair-sized
     * result leaves as an eager localCheckpoint — nothing for the caller
@@ -505,7 +505,7 @@ object Dedup {
 
   /** [[ngramContamination]] over PREBUILT (idCol, harr) k-gram-hash frames
     * — the composition entry point: q76 derives both sides from its one
-    * persisted normalized-text carrier, so the normalize+md5 pass is not
+    * pinned normalized-text carrier, so the normalize+md5 pass is not
     * repeated per stage. Both frames are scoped-materialized here
     * (explode over an unmaterialized transform(...) array re-evaluates
     * the hashing expression per OUTPUT row — O(shingles²) md5 calls per
@@ -513,7 +513,8 @@ object Dedup {
     * an eager localCheckpoint. */
   def ngramContaminationFromHashes(th0: DataFrame, eh0: DataFrame,
                                    idCol: String): DataFrame =
-    Materialize.withMaterialized2(th0, eh0) { (th, eh) =>
+    Materialize.withMaterialized(th0)(th =>
+        Materialize.withMaterialized(eh0) { eh =>
       val evalHashes = eh
         .select(explode(col("harr")).as("__h")).distinct()
       val overlap = th.select(col(idCol), explode(col("harr")).as("__h"))
@@ -527,7 +528,7 @@ object Dedup {
           coalesce(col("__overlap"), lit(0L)).as("overlap_ngrams"))
         .withColumn("contamination",
           col("overlap_ngrams").cast("double") / col("n_ngrams")))
-    }
+    })
 
   /** Connected components over a (small-degree) near-dup edge set by
     * min-label propagation: every vertex repeatedly adopts the smallest
@@ -804,7 +805,7 @@ object Dedup {
     * shuffles are the band join and the candidate distinct, and the
     * verify is one codegen'd projection over candidate rows.
     *
-    * Cache lifecycle: the banded relation is scoped-materialized across
+    * Pin lifecycle: the banded relation is scoped-materialized across
     * the two sides of the self-join; the candidate-sized result leaves as
     * an eager localCheckpoint. Same contract as [[minhashCandidates]]. */
   def simhashNearDupPairs(sh: DataFrame, idCol: String, hashCol: String,

@@ -9,8 +9,10 @@ import org.apache.spark.sql.internal.SQLConf
 
 /** The materialization vocabulary: [[pin]] (the one eager checkpoint),
   * [[sorted]] (the one sort-and-pin), [[release]] (free a pin's blocks),
-  * [[withMaterialized]] (a scoped cache read by several consumers) and
-  * [[concurrently]] (overlap independent action chains).
+  * [[withMaterialized]] (a pin scoped to one block of code) and
+  * [[concurrently]] (overlap independent action chains). The engine
+  * never caches: every materialized relation is a pin, freed by its
+  * handle.
   *
   * Every materialized relation carries its measured size. A bare
   * `localCheckpoint()` copies its origin plan's *estimate* into the
@@ -20,37 +22,27 @@ import org.apache.spark.sql.internal.SQLConf
   * `sizeInBytes` to the bytes its blocks take, and the planner picks
   * broadcast or shuffle from that.
   *
-  * Why scoped caches: a bare `persist()` whose release is a CONTRACT
-  * ("the caller unpersists once consumed") is one forgotten call site away
-  * from a leak — and composed programs like q76 are exactly where a leaked
-  * cache ends up taxing every later stage of a long session.
-  * `withMaterialized` owns the whole lifecycle in one lexical scope:
-  * persist → eager `count()` barrier → body → guaranteed `unpersist` in a
-  * finally, also when the fill itself fails.
+  * Why scopes: a pin whose release is a CONTRACT ("the caller releases
+  * once consumed") is one forgotten call site away from a leak, and
+  * composed programs like q76 are exactly where a leaked relation ends up
+  * taxing every later stage of a long session. `withMaterialized` owns
+  * the whole lifecycle in one lexical scope: pin, body, release in a
+  * finally.
   *
-  * The eager count is load-bearing, not a nicety: two consumers reading a
-  * LAZY cache concurrently (e.g. both sides of a bucket self-join) race the
-  * unpopulated cache and can each recompute the entire upstream lineage
-  * (cache stampede — cost the LSH pipeline 3-4× before the barrier was
-  * added).
-  *
-  * Contract for `body`: anything that must OUTLIVE the scope has to be
-  * materialized inside it — [[pin]] or [[sorted]] for bounded results, or
-  * a sink write. Returning a lazy plan that still references `df` is not
-  * an error, but it silently recomputes `df` from scratch on first use,
-  * which defeats the cache. All Dedup/Similarity operators therefore end
-  * their bodies with a [[pin]] of the (candidate-/result-sized) output.
-  */
+  * Contract for `body`: it reads the handle it is given, never the frame
+  * it scoped (a pin is a new relation; nothing maps the source plan onto
+  * it), and it does not return the handle. Anything that must OUTLIVE
+  * the scope is materialized inside it: [[pin]] or [[sorted]] for
+  * bounded results, a collect, or a sink write. A lazy plan that still
+  * reads the handle fails on the released blocks once the scope has
+  * returned. */
 object Materialize {
 
-  /** Run `body` with `df` persisted and eagerly materialized; always
-    * releases the cache on exit (including on exception). */
+  /** Runs `body` over a [[pin]] of `df` and releases the pin on exit,
+    * also when `body` throws. */
   def withMaterialized[A](df: DataFrame)(body: DataFrame => A): A = {
-    val cached = df.persist()
-    try {
-      cached.count() // eager fill — concurrent consumers must not stampede
-      body(cached)
-    } finally cached.unpersist()
+    val p = pin(df)
+    try body(p) finally release(p)
   }
 
   /** The one eager checkpoint: Spark's own `localCheckpoint()` action,
@@ -58,9 +50,11 @@ object Materialize {
     * ordering) with `sizeInBytes` set to the bytes the block manager
     * stores for that RDD. The size is read on the driver after the
     * action, so a pin runs exactly the jobs of a bare checkpoint. No row
-    * count is set: with CBO off no planner rule reads one. */
+    * count is set: with CBO off no planner rule reads one. A fill that
+    * throws leaves no blocks behind. */
   def pin(df: DataFrame): DataFrame = {
-    val ckpt = df.localCheckpoint()
+    val ckpt = GraftInterop.unpersistIfFails(df.sparkSession.sparkContext)(
+      df.localCheckpoint())
     val r = ckpt.queryExecution.logical.asInstanceOf[LogicalRDD]
     GraftInterop.withSizeInBytes(ckpt, r,
       GraftInterop.storedBytes(ckpt.sparkSession, r.rdd.id))
@@ -111,11 +105,6 @@ object Materialize {
       case Filter(_, child) => shuffledJoinTail(child, conf)
       case _ => false
     }
-
-  /** Two-relation variant (nested scopes, released inner-first). */
-  def withMaterialized2[A](df1: DataFrame, df2: DataFrame)(
-      body: (DataFrame, DataFrame) => A): A =
-    withMaterialized(df1)(a => withMaterialized(df2)(b => body(a, b)))
 
   /** Driver threads [[concurrently]] runs action chains on. */
   private val ConcurrentChains = 4

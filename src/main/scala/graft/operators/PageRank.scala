@@ -41,7 +41,7 @@ object PageRank {
     // materialize the degree-annotated edge list ONCE — without this every
     // iteration re-runs the upstream edge derivation (scan + distinct) and
     // the degree aggregation: 3 iterations cost 3 edge builds. The scoped
-    // persist covers the whole loop; the returned rank is an eager
+    // pin covers the whole loop; the returned rank is an eager
     // checkpoint, so nothing downstream re-reads the edges.
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     Materialize.withMaterialized(edges.join(deg, Seq("src"))) { degE =>

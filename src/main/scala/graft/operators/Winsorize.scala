@@ -10,26 +10,23 @@ object Winsorize {
     * (factor-vectors.ts percentile(), :191-213) — for SEVERAL columns from
     * ONE stacked global sort. The columns are exploded into (dim, value)
     * rows and range-sorted on (dim, value), so each dimension's rows are
-    * contiguous in partition order; one pass records per-partition per-dim
-    * counts (and fills the cache), the driver maps each dimension's ≤4
-    * wanted ranks to (partition, local offset), and a second pass fetches
-    * exactly those values. Total: 3 jobs for ALL dimensions (sort sample,
-    * counts, fetch) and ≤4 doubles per dimension to the driver — never a
+    * contiguous in partition order; the sorted rows are pinned
+    * ([[Materialize.sorted]]), one pass over the pin records per-partition
+    * per-dim counts, the driver maps each dimension's ≤4 wanted ranks to
+    * (partition, local offset), and a second pass fetches exactly those
+    * values. Total: 4 jobs for ALL dimensions (sort sample, pin, counts,
+    * fetch) and ≤4 doubles per dimension to the driver — never a
     * whole-column collect, never a single-partition window, and no
     * per-dimension sort+count+zipWithIndex pipeline (which cost ~5 jobs per
     * dimension). At 100× the cross-section this is still one distributed
     * sort of nDims×nRows skinny rows. */
   def interpBoundsMulti(df: DataFrame, dims: Seq[(String, Column)])
       : Map[String, (Double, Double)] = {
-    val stacked = df.select(explode(array(dims.map { case (d, x) =>
-        struct(lit(d).as("d"), x.cast("double").as("v")) }: _*)).as("s"))
+    val stacked = Materialize.sorted(df.select(explode(array(dims.map {
+        case (d, x) => struct(lit(d).as("d"), x.cast("double").as("v")) }: _*))
+        .as("s"))
       .select(col("s.d").as("d"), col("s.v").as("v"))
-      .na.drop(Seq("v"))
-      // scope-released in the finally below — the one sanctioned variation
-      // on Materialize.withMaterialized: pass 1 doubles as the cache fill
-      // (an eager count() would add a redundant job), and the two passes
-      // are sequential driver-side actions, so no stampede risk
-      .sort(col("d"), col("v")).persist()
+      .na.drop(Seq("v")), col("d"), col("v"))
     try {
       val rdd = stacked.rdd
       // pass 1: per-partition per-dim counts, in encounter order
@@ -69,7 +66,7 @@ object Winsorize {
         }
       }
       val bc = df.sparkSession.sparkContext.broadcast(wantLocal.toMap)
-      // pass 2: fetch only the wanted values (reads the cache)
+      // pass 2: fetch only the wanted values (reads the pin)
       val got: Map[(Int, String, Long), Double] =
         rdd.mapPartitionsWithIndex { (pi, it) =>
           val want = bc.value.getOrElse(pi, Set.empty[(String, Long)])
@@ -103,6 +100,6 @@ object Winsorize {
             d -> (interp(d, l1, h1, i1), interp(d, l2, h2, i2))
         }
       }.toMap
-    } finally stacked.unpersist()
+    } finally Materialize.release(stacked)
   }
 }

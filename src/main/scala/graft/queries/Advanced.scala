@@ -1602,7 +1602,7 @@ object Advanced {
         .agg(sum(col("c12")).as("c1"), count(lit(1)).as("n1p"))
       val cont = c.groupBy(col("w2")).agg(count(lit(1)).as("ncw2"))
       val ntot = c.agg(count(lit(1)).as("ntot"))
-      c.join(left, Seq("w1")).join(cont, Seq("w2"))
+      Materialize.pin(c.join(left, Seq("w1")).join(cont, Seq("w2"))
         .crossJoin(broadcast(ntot))
         .filter(col("c12") >= 3)
         .withColumn("prob_micro",
@@ -1610,8 +1610,7 @@ object Advanced {
             "+ (n1p * 1000000 * ncw2) DIV (c1 * ntot)"))
         .select(col("w1"), col("w2"), col("c12"), col("c1"),
           col("n1p"), col("ncw2"), col("prob_micro"))
-        .orderBy(col("prob_micro").desc, col("w1"), col("w2"))
-        .limit(200)
+        .orderBy(col("prob_micro").desc, col("w1"), col("w2")).limit(200))
     }
   }
 
@@ -1680,15 +1679,14 @@ object Advanced {
       // both rule directions from each unordered pair
       val directed = pairs.select(col("pa").as("a"), col("pb").as("b"), col("c12"))
         .unionByName(pairs.select(col("pb").as("a"), col("pa").as("b"), col("c12")))
-      directed
+      Materialize.pin(directed
         .join(items.select(col("p").as("a"), col("c").as("ca")), Seq("a"))
         .join(items.select(col("p").as("b"), col("c").as("cb")), Seq("b"))
         .crossJoin(broadcast(n))
         .select(col("a"), col("b"), col("c12").as("support"),
           expr("c12 * 1000000 DIV ca").as("conf_micro"),
           expr("(c12 * n * 1000000) DIV (ca * cb)").as("lift_micro"))
-        .orderBy(col("lift_micro").desc, col("a"), col("b"))
-        .limit(200)
+        .orderBy(col("lift_micro").desc, col("a"), col("b")).limit(200))
     }
   }
 
@@ -2027,14 +2025,14 @@ object Advanced {
       val leaked = dd.groupBy(col("fp"))
         .agg(count_distinct(col("naive_split")).as("k"))
         .agg(sum(when(col("k") > 1, 1L).otherwise(0L)).as("leaked_naive"))
-      dd.groupBy(col("split"))
+      Materialize.pin(dd.groupBy(col("split"))
         .agg(count(lit(1)).as("n_docs"),
           count_distinct(col("fp")).as("n_groups"),
           sum(col("nt")).as("n_tokens"))
         .crossJoin(broadcast(leaked))
         .withColumn("dup_docs", col("n_docs") - col("n_groups"))
         .select(col("split"), col("n_docs"), col("n_groups"),
-          col("dup_docs"), col("n_tokens"), col("leaked_naive"))
+          col("dup_docs"), col("n_tokens"), col("leaked_naive")))
         .orderBy(col("split"))
     }
   }
@@ -2217,7 +2215,7 @@ object Advanced {
         // rank = ceil(0.9 * (n_cal + 1)), pure integer
         .filter(col("rk") === expr("(9 * (n_cal + 1) + 9) DIV 10"))
         .select(col("source"), col("n_cal"), col("score").as("qhat"))
-      dd.filter(!col("is_cal"))
+      Materialize.pin(dd.filter(!col("is_cal"))
         .join(broadcast(qhat), Seq("source"))
         .groupBy(col("source"), col("n_cal"), col("qhat"))
         .agg(count(lit(1)).as("n_test"),
@@ -2226,7 +2224,7 @@ object Advanced {
         .withColumn("coverage_micro",
           expr("n_covered * 1000000 DIV n_test"))
         .select(col("source"), col("n_cal"), col("qhat"), col("n_test"),
-          col("n_covered"), col("coverage_micro"))
+          col("n_covered"), col("coverage_micro")))
         .orderBy(col("source"))
     }
   }
@@ -2370,9 +2368,9 @@ object Advanced {
         .groupBy(col("i"), col("j"))
         .agg(min(col("avg_micro")).as("mn"))
         .groupBy(col("i")).agg(max(col("mn")).as("iso_micro"))
-      bk.join(fit, col("b") === col("i"))
+      Materialize.pin(bk.join(fit, col("b") === col("i"))
         .select(col("b").as("bucket"), col("n"),
-          expr("sy * 1000000 DIV n").as("rate_micro"), col("iso_micro"))
+          expr("sy * 1000000 DIV n").as("rate_micro"), col("iso_micro")))
         .orderBy(col("bucket"))
     }
   }

@@ -153,7 +153,7 @@ object AnalyticsQueries {
       .select(col("c_custkey"), col("c_acctbal"), col("p1"))
     // scoped-materialized: the per-dimension bound computations below are
     // ~8 eager actions (sort-sample, counts, rank fetches) and the z-stat
-    // aggs re-run at final-action broadcast time — without the cache each
+    // aggs re-run at final-action broadcast time — without the pin each
     // one re-executes the orders row_number window + join from scratch
     // (recompute amplification ≈ 10× the base pipeline). The cross-section-
     // sized result leaves the scope as an eager localCheckpoint.
@@ -164,7 +164,7 @@ object AnalyticsQueries {
 
     // with the bounds already driver-side scalars, the winsorized columns
     // are plain projections, so ALL dimensions' z parameters come from ONE
-    // aggregation pass over the cached base and ONE broadcast — not a
+    // aggregation pass over the pinned base and ONE broadcast — not a
     // subquery + crossJoin per dimension
     val wz = dims.foldLeft(base) { case (df, (name, x)) =>
       val (loB, hiB) = bounds(name)
@@ -994,7 +994,7 @@ object AnalyticsQueries {
         .agg(sum(col("t") * (col("t") - 1) * (lit(2L) * col("t") + 5))
           .as("tie_term"),
           sum(col("t")).as("n"))
-      sAgg.join(ties, Seq("event_type"))
+      Materialize.pin(sAgg.join(ties, Seq("event_type"))
         .withColumn("var18",
           col("n") * (col("n") - 1) * (lit(2L) * col("n") + 5)
             - col("tie_term"))
@@ -1004,7 +1004,7 @@ object AnalyticsQueries {
               .when(col("s") < 0, (col("s") + 1).cast("double"))
               .otherwise(lit(0.0))
               / sqrt(col("var18").cast("double") / lit(18.0)))
-            .as("z"))
+            .as("z")))
         .orderBy(col("event_type"))
     }
   }
@@ -1067,13 +1067,13 @@ object AnalyticsQueries {
             datediff(col("dj"), col("di")).cast("double")).as("slope"))
       val w = Window.partitionBy(col("event_type"))
         .orderBy(col("slope"), col("di"), col("dj"))
-      slopes
+      Materialize.pin(slopes
         .withColumn("rn", row_number().over(w).cast("long"))
         .withColumn("np", count(lit(1)).over(
           Window.partitionBy(col("event_type"))))
         .filter(col("rn") === expr("(np + 1) DIV 2"))
         .select(col("event_type"), col("np").as("n_pairs"),
-          col("slope").as("theil_sen"))
+          col("slope").as("theil_sen")))
         .orderBy(col("event_type"))
     }
   }
@@ -1328,7 +1328,7 @@ object AnalyticsQueries {
           sum(col("y")).as("sy"), sum(col("x") * col("y")).as("sxy"),
           sum(col("x") * col("x")).as("sxx"),
           sum(col("y") * col("y")).as("syy"))
-      sums.select(col("lag").cast("long").as("lag"), col("n"),
+      Materialize.pin(sums.select(col("lag").cast("long").as("lag"), col("n"),
           col("sxy"),
           when(col("n") * col("sxx") - col("sx") * col("sx") > 0 &&
                col("n") * col("syy") - col("sy") * col("sy") > 0,
@@ -1337,7 +1337,7 @@ object AnalyticsQueries {
                   .cast("double"))
                  * sqrt((col("n") * col("syy") - col("sy") * col("sy"))
                   .cast("double"))))
-            .as("corr"))
+            .as("corr")))
         .orderBy(col("lag"))
     }
   }

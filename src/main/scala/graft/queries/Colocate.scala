@@ -23,7 +23,7 @@ object Colocate {
   /** Write both sides bucketed (unique per-invocation names — same
     * no-shared-mutable-root rule as q45's publish path), join + aggregate
     * co-located, then DROP the tables and delete their files: the result
-    * is materialized into the cache first (customer-sized), so repeated
+    * is pinned first (customer-sized), so repeated
     * gate runs no longer accumulate one bucketed table pair per
     * invocation. */
   def q53BucketedJoin(s: SparkSession, dir: String): DataFrame = {

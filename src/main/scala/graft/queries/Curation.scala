@@ -564,9 +564,9 @@ object Curation {
   def q76TrainingManifest(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     // the k=5 LSH shingle-hash array rides IN the carrier: the md5 sweep
-    // happens once in the same cached pass as normalize/langId/quality,
+    // happens once in the same pinned pass as normalize/langId/quality,
     // and the LSH signature fold + the candidate-verify intersect both
-    // project it straight from the carrier cache — no second
+    // project it straight from the carrier's pin — no second
     // materialization pass. The k=16 contamination grams still derive
     // from __norm separately (md5 k-grams aren't composable across k; a
     // measured 0.5s pass at sf0.1, see PLANS.md q76 stage table).
@@ -2768,14 +2768,14 @@ object Curation {
       val slope =
         (col("m") * col("sxy") - col("sx") * col("sy")).cast("double") /
           (col("m") * col("sxx") - col("sx") * col("sx")).cast("double")
-      curve.groupBy(col("source"))
+      Materialize.pin(curve.groupBy(col("source"))
         .agg(count(lit(1)).as("m"), sum(col("x6")).as("sx"),
           sum(col("y6")).as("sy"), sum(col("x6") * col("y6")).as("sxy"),
           sum(col("x6") * col("x6")).as("sxx"))
         .select(col("source"), col("m").as("n_points"),
           slope.as("beta"),
           ((col("sy").cast("double") - slope * col("sx").cast("double"))
-            / (col("m").cast("double") * lit(1e6))).as("ln_k"))
+            / (col("m").cast("double") * lit(1e6))).as("ln_k")))
         .orderBy(col("source"))
     }
   }
@@ -2923,7 +2923,7 @@ object Curation {
         .select(col("score"), col("tot"))
       val nPer = counts.groupBy(col("source")).agg(sum(col("c")).as("n"))
       val nAll = counts.agg(sum(col("c")).as("nn"))
-      cumSrc
+      Materialize.pin(cumSrc
         .join(globCum, Seq("score"))
         .join(nPer, Seq("source"))
         .crossJoin(broadcast(nAll))
@@ -2933,7 +2933,7 @@ object Curation {
         .agg(max(col("n")).as("n"), max(col("m")).as("m"),
           max(abs(col("i") * col("m") - col("j") * col("n"))).as("d_num"))
         .withColumn("ks",
-          col("d_num").cast("double") / (col("n") * col("m")).cast("double"))
+          col("d_num").cast("double") / (col("n") * col("m")).cast("double")))
         .orderBy(col("source"))
     }
   }
@@ -3176,14 +3176,14 @@ object Curation {
         .agg(count(lit(1)).as("n_mins"),
           max(when(col("rn") === KmvK, col("h"))).as("kth_min"))
       val two60 = "CAST('1152921504606846976' AS DOUBLE)"
-      minima.join(exact, Seq("source"))
+      Materialize.pin(minima.join(exact, Seq("source"))
         .select(col("source"), col("n_mins"), col("kth_min"),
           col("exact_distinct"),
           when(col("kth_min").isNotNull,
             lit((KmvK - 1).toDouble) * expr(two60)
               / col("kth_min").cast("double"))
             .otherwise(col("exact_distinct").cast("double"))
-            .as("est_distinct"))
+            .as("est_distinct")))
         .orderBy(col("source"))
     }
   }
@@ -3277,7 +3277,7 @@ object Curation {
           .join(t.select(col("source").as("s2"), col("h")), Seq("h"))
           .filter(col("s1") < col("s2"))
           .groupBy(col("s1"), col("s2")).agg(count(lit(1)).as("i"))
-        est
+        Materialize.pin(est
           .join(sz.select(col("source").as("s1"), col("sz").as("z1")),
             Seq("s1"))
           .join(sz.select(col("source").as("s2"), col("sz").as("z2")),
@@ -3288,7 +3288,7 @@ object Curation {
               .as("est_jaccard"),
             (coalesce(col("i"), lit(0L)).cast("double") /
               (col("z1") + col("z2") - coalesce(col("i"), lit(0L)))
-                .cast("double")).as("exact_jaccard"))
+                .cast("double")).as("exact_jaccard")))
           .orderBy(col("s1"), col("s2"))
       }
     }

@@ -42,11 +42,10 @@ object Scd2Replay {
     // localCheckpoint (eager) between merges: each merge references its
     // full-outer diff five times (unchanged/changed×2/added/delisted), so
     // an unmaterialized chain re-executes the previous level per branch —
-    // exponential growth by round 3. persist() alone is not enough: it
-    // caches data but each level's LOGICAL plan still embeds all previous
+    // exponential growth by round 3. A cache alone is not enough: it
+    // keeps data but each level's LOGICAL plan still embeds all previous
     // levels five-fold, and Catalyst re-analysis dominates (same lineage
-    // blowup as Dedup.connectedComponents). The eager materialization also
-    // prevents the five union branches from stampeding a cold cache.
+    // blowup as Dedup.connectedComponents).
     val h1 = Materialize.pin(Scd2.merge(empty, s1, keys, attrs, Days(0)))
     val h2 = Materialize.pin(Scd2.merge(h1, snap(2), keys, attrs, Days(1)))
     Scd2.merge(h2, snap(3), keys, attrs, Days(2))

@@ -74,7 +74,7 @@ object TextQueries {
     * near-dup pipeline (candidate generation bounds the quadratic join;
     * the verify join touches only candidates). The whole pipeline rides the
     * hashed-shingle carrier (shingleHashArrays): shingle generation, dedup,
-    * md5 and the MinHash signatures are all map-side, the cached relation
+    * md5 and the MinHash signatures are all map-side, the pinned relation
     * holds long arrays (not strings), and the only shuffles left are the
     * banded bucket self-join and the candidate-verify join. */
   def q15NearDupPairs(s: SparkSession, dir: String): DataFrame =
@@ -486,7 +486,7 @@ object TextQueries {
         .select(col("id1"), col("id2"), col("m"), col("i"), col("u")))
       // candidate-bounded; stops filter/agg pushdown from re-evaluating
       // the intersects (rule 8)
-      paired
+      Materialize.pin(paired
         .withColumn("bucket", least(expr(s"m * 10 DIV $n"), lit(9L)))
         .withColumn("est6", expr(s"(2000000 * m + $n) DIV (2 * $n)"))
         .withColumn("j6", expr("(2000000 * i + u) DIV (2 * u)"))
@@ -496,7 +496,7 @@ object TextQueries {
           sum(col("j6")).as("sum_j6"),
           sum(abs(col("est6") - col("j6"))).as("sum_abs_err6"))
         .withColumn("mae",
-          col("sum_abs_err6").cast("double") / lit(1e6) / col("n_pairs"))
+          col("sum_abs_err6").cast("double") / lit(1e6) / col("n_pairs")))
         .orderBy(col("bucket"))
     }
   }
@@ -1802,7 +1802,8 @@ GROUP BY d.source ORDER BY d.source"""
     // so it is scoped-materialized alongside the vector carrier
     val edges0 = knnGraphRanked(s, dir, BeamDegree)
       .select(col("id1"), col("id2"))
-    Materialize.withMaterialized2(vecs0, edges0) { (vecs, edges) =>
+    Materialize.withMaterialized(vecs0)(vecs =>
+        Materialize.withMaterialized(edges0) { edges =>
       val queries = vecs.filter(col("vec_id") < BeamQueries)
         .select(col("vec_id").as("qid"), col("v").as("qv"),
           col("n").as("qn"))
@@ -1839,7 +1840,7 @@ GROUP BY d.source ORDER BY d.source"""
           coalesce(col("overlap"), lit(0L)).as("overlap"),
           (coalesce(col("overlap"), lit(0L)).cast("double")
             / lit(BeamK.toDouble)).as("recall")), col("query_id"))
-    }
+    })
   }
 
   lazy val oracleQ195: String = {

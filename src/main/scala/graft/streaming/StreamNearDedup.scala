@@ -17,7 +17,7 @@ import graft.operators.Dedup
   *
   * Scale shape: the whole stream side is stateless projections + one
   * stream-static join (supported without watermark state); the standing
-  * side is a static relation the caller should cache — or, at real scale,
+  * side is a static relation the caller should pin — or, at real scale,
   * maintain as a bucketed table keyed on (band, bkey) so each micro-batch
   * joins co-located. The only stateful operator is the final
   * `dropDuplicatesWithinWatermark` that collapses multi-band hits of the

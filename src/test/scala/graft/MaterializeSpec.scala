@@ -15,9 +15,10 @@ import graft.operators.Materialize
   * partitioning with the measured size as its statistics. The sorted-output
   * gate ([[Materialize.sorted]]): the rows and order of `orderBy`, pinned;
   * a shuffled-join tail is pinned before the sort and released after it;
-  * any other child sorts as it is. The scoped cache
-  * ([[Materialize.withMaterialized]]) is released also when its fill
-  * fails. */
+  * any other child sorts as it is. The scope
+  * ([[Materialize.withMaterialized]]) is a pin released on exit, also
+  * when its body throws: it leaves nothing in Spark's cache and no
+  * persistent RDD, and a lazy plan that escapes it fails. */
 class MaterializeSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -225,9 +226,49 @@ class MaterializeSpec extends AnyFunSuite {
     val df = spark.range(0, 10)
       .select(when(col("id") === 7, raise_error(lit("boom")))
         .otherwise(col("id")).as("x"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val e = intercept[Exception](Materialize.withMaterialized(df)(_.count()))
     assert(e.getMessage.contains("boom"))
+    // nor blocks of the partitions that finished before it failed
+    assert(spark.sparkContext.getPersistentRDDs.keySet -- before == Set.empty)
     // storageLevel is the CacheManager lookup of df's plan: NONE = absent
     assert(df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+  }
+
+  private def cacheIsEmpty: Boolean =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty
+
+  test("a withMaterialized scope leaves no cache entry and no persistent RDD, returned or thrown") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    assert(Materialize.withMaterialized(joinShape)(_.count()) == 102000L)
+    assert(sc.getPersistentRDDs.keySet -- before == Set.empty)
+    assert(cacheIsEmpty)
+    val e = intercept[IllegalStateException](
+      Materialize.withMaterialized(explodeShape) { h =>
+        assert(sc.getPersistentRDDs.contains(logicalRdd(h).rdd.id))
+        throw new IllegalStateException("body failed")
+      })
+    assert(e.getMessage == "body failed")
+    assert(sc.getPersistentRDDs.keySet -- before == Set.empty)
+    assert(cacheIsEmpty)
+  }
+
+  test("a withMaterialized handle's sizeInBytes is its stored bytes") {
+    Materialize.withMaterialized(explodeShape) { h =>
+      val stored = GraftInterop.storedBytes(spark, logicalRdd(h).rdd.id)
+      assert(stored > 0)
+      assert(h.queryExecution.optimizedPlan.stats.sizeInBytes == BigInt(stored))
+    }
+  }
+
+  test("a lazy plan over the handle that escapes its scope fails instead of recomputing") {
+    val escaped = Materialize.withMaterialized(rangeShape)(
+      _.filter(col("id") % 200 === 0))
+    val e = intercept[Exception](escaped.collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains("Checkpoint block")), msgs.mkString(" | "))
   }
 }

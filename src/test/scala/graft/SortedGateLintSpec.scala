@@ -8,7 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * and every sort-and-pin calls [[graft.operators.Materialize.sorted]]. A
   * top-k (`orderBy(...).limit(k)`) is not a range sort and is exempt. Only
   * `StreamRunner.scala` may build an in-process stream (a MemoryStream, a
-  * memory sink, a `processAllAvailable` feed loop). */
+  * memory sink, a `processAllAvailable` feed loop). The engine caches
+  * nothing: no source but `Materialize.scala` calls `persist` or `cache`
+  * or names a `StorageLevel` (the between-query `unpersist` sweeps of
+  * `Bench` and `Verify` over `getPersistentRDDs` are not caches). */
 class SortedGateLintSpec extends AnyFunSuite {
 
   /** `src` with comments and the contents of string and char literals
@@ -127,6 +130,14 @@ class SortedGateLintSpec extends AnyFunSuite {
     (sinks ++ calls).map(m => lineOf(code, m.start)).toSeq.sorted
   }
 
+  /** Lines of `src` that cache: a `.persist` or `.cache` call, or a
+    * `StorageLevel` named anywhere. */
+  def cacheCalls(src: String): Seq[Int] = {
+    val code = codeOnly(src)
+    """\.\s*(?:persist|cache)\b|\bStorageLevel\b""".r.findAllMatchIn(code)
+      .map(m => lineOf(code, m.start)).toSeq
+  }
+
   test("the scan flags a sort-and-pin and exempts a top-k") {
     assert(handSortedPins(
       "val a = Materialize.pin(df.orderBy(col(\"k\")))") == Seq(1))
@@ -165,6 +176,16 @@ class SortedGateLintSpec extends AnyFunSuite {
       "/** q.processAllAvailable() */ MemoryStream [ Doc ]") == Seq(5))
   }
 
+  test("the scan flags persist, cache and StorageLevel and skips the rest") {
+    assert(cacheCalls("val a = df.persist()\nb.\n  cache()\n" +
+      "c.persist(StorageLevel.DISK_ONLY)\nimport o.a.s.storage.StorageLevel\n" +
+      "d.cache") == Seq(1, 2, 4, 4, 5, 6))
+    assert(cacheCalls("sc.getPersistentRDDs.values.foreach(_.unpersist(true))\n" +
+      "c.unpersist()\nval k = \"spark.sql.codegen.cache.maxEntries\"\n" +
+      "// df.persist() StorageLevel\n/** x.cache() */ val cached = 1\n" +
+      "cacheManager.lookup(p); df.persisted") == Nil)
+  }
+
   private def engineSources: Seq[(java.io.File, String)] = {
     val root = new java.io.File("src/main/scala")
     def files(d: java.io.File): Seq[java.io.File] =
@@ -197,6 +218,12 @@ class SortedGateLintSpec extends AnyFunSuite {
     val found = outsideGate(bareCheckpoints, "Materialize.scala")
     assert(found.isEmpty, "localCheckpoint outside Materialize.pin: " +
       found.mkString(", "))
+  }
+
+  test("no engine source but Materialize.scala persists, caches or names a StorageLevel") {
+    val found = engineSources.filter(_._1.getName != "Materialize.scala")
+      .flatMap { case (f, src) => cacheCalls(src).map(l => s"${f.getPath}:$l") }
+    assert(found.isEmpty, "cache outside Materialize: " + found.mkString(", "))
   }
 
   test("no engine source but StreamRunner.scala builds an in-process stream") {

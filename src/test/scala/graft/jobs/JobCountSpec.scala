@@ -244,9 +244,10 @@ class JobCountSpec extends AnyFunSuite {
     // output sort, q15 ran 19 jobs here; the sorted-output gate does not
     // pin a filter over the verify checkpoint again. With shuffle_hash
     // hints on the two verify joins (deleted on an A/B, PLANS.md "One pin
-    // entry") it ran 18
+    // entry") it ran 18, and with its two withMaterialized scopes filled
+    // by persist() and an eager count() instead of a pin it ran 16
     val (n, out) = jobs(graft.queries.TextQueries.q15NearDupPairs(spark, sf))
-    assert(n == 16, s"$n jobs for q15 at sf0.01")
+    assert(n == 12, s"$n jobs for q15 at sf0.01")
     assert(out.count() == 25)
   }
 }
